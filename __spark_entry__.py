@@ -1091,27 +1091,9 @@ def q_doc_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidate generation + exact Jaccard verify — the
     scale path (the all-pairs inverted-index join is quadratic on hot
     shingles; candidates bound it)."""
-    from otel_arrow_adapter_spark.functions.dedup import (
-        doc_shingles,
-        jaccard_pairs,
-        lsh_candidates,
-        minhash_signature,
-    )
+    from otel_arrow_adapter_spark.functions.dedup import lsh_jaccard_pairs
 
-    dp = _docs_plus(spark, sf_dir)
-    # ONE shingling pass shared by the minhash and the exact-verify join
-    # distinct=False: minhash's min() is duplicate-insensitive and the
-    # set-based Jaccard verify dedups via collect_set, so the corpus-wide
-    # (doc_id, shingle) distinct shuffle is skipped (guide §2.4)
-    sh = doc_shingles(dp, distinct=False).persist()
-    cand = lsh_candidates(minhash_signature(dp, num_hashes=8, shingles=sh), num_hashes=8, bands=4)
-    pairs = jaccard_pairs(dp, threshold=0.5, candidates=cand, shingles=sh)
-    # jaccard_pairs no longer frees caller caches (ownership stays with the
-    # creator); pairs is already materialized by owned_result, so the two
-    # caches this query created can be released here
-    sh.unpersist()
-    cand.unpersist()
-    return pairs
+    return lsh_jaccard_pairs(_docs_plus(spark, sf_dir), threshold=0.5, num_hashes=8, bands=4)
 
 
 def q_doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1122,23 +1104,10 @@ def q_doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     A~B and B~C must collapse to one kept doc even when A~C was never
     emitted. Oracle: DuckDB recursive CTE computing min reachable doc_id
     over the symmetric edge closure."""
-    from otel_arrow_adapter_spark.functions.dedup import (
-        doc_shingles,
-        dup_clusters,
-        jaccard_pairs,
-        lsh_candidates,
-        minhash_signature,
-    )
+    from otel_arrow_adapter_spark.functions.dedup import dup_clusters, lsh_jaccard_pairs
 
     dp = _docs_plus(spark, sf_dir)
-    # distinct=False: minhash's min() is duplicate-insensitive and the
-    # set-based Jaccard verify dedups via collect_set, so the corpus-wide
-    # (doc_id, shingle) distinct shuffle is skipped (guide §2.4)
-    sh = doc_shingles(dp, distinct=False).persist()
-    cand = lsh_candidates(minhash_signature(dp, num_hashes=8, shingles=sh), num_hashes=8, bands=4)
-    pairs = jaccard_pairs(dp, threshold=0.5, candidates=cand, shingles=sh)
-    sh.unpersist()
-    cand.unpersist()
+    pairs = lsh_jaccard_pairs(dp, threshold=0.5, num_hashes=8, bands=4)
     out = dup_clusters(pairs)
     pairs.unpersist()
     return out
@@ -1153,24 +1122,11 @@ def q_doc_clean_corpus_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join against the drop list shuffles on doc_id — O(dup docs), the
     natural scale shape. Oracle: recursive-CTE closure + the shared
     quality/token scoring SQL."""
-    from otel_arrow_adapter_spark.functions.dedup import (
-        doc_shingles,
-        dup_clusters,
-        jaccard_pairs,
-        lsh_candidates,
-        minhash_signature,
-    )
+    from otel_arrow_adapter_spark.functions.dedup import dup_clusters, lsh_jaccard_pairs
     from otel_arrow_adapter_spark.functions.text import quality_score, token_count
 
     dp = _docs_plus(spark, sf_dir)
-    # distinct=False: minhash's min() is duplicate-insensitive and the
-    # set-based Jaccard verify dedups via collect_set, so the corpus-wide
-    # (doc_id, shingle) distinct shuffle is skipped (guide §2.4)
-    sh = doc_shingles(dp, distinct=False).persist()
-    cand = lsh_candidates(minhash_signature(dp, num_hashes=8, shingles=sh), num_hashes=8, bands=4)
-    pairs = jaccard_pairs(dp, threshold=0.5, candidates=cand, shingles=sh)
-    sh.unpersist()
-    cand.unpersist()
+    pairs = lsh_jaccard_pairs(dp, threshold=0.5, num_hashes=8, bands=4)
     clusters = dup_clusters(pairs)
     pairs.unpersist()
     drop = clusters.where(~F.col("is_rep")).select("doc_id")
@@ -2146,23 +2102,10 @@ def q_doc_leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     components, then every cluster member follows the CLUSTER's md5 draw
     (split key = component min doc id) — near-duplicates can never
     straddle the split boundary. val_frac=0.2."""
-    from otel_arrow_adapter_spark.functions.dedup import (
-        doc_shingles,
-        jaccard_pairs,
-        leakage_free_split,
-        lsh_candidates,
-        minhash_signature,
-    )
+    from otel_arrow_adapter_spark.functions.dedup import leakage_free_split, lsh_jaccard_pairs
 
     dp = _docs_plus(spark, sf_dir)
-    # distinct=False: minhash's min() is duplicate-insensitive and the
-    # set-based Jaccard verify dedups via collect_set, so the corpus-wide
-    # (doc_id, shingle) distinct shuffle is skipped (guide §2.4)
-    sh = doc_shingles(dp, distinct=False).persist()
-    cand = lsh_candidates(minhash_signature(dp, num_hashes=8, shingles=sh), num_hashes=8, bands=4)
-    pairs = jaccard_pairs(dp, threshold=0.5, candidates=cand, shingles=sh)
-    sh.unpersist()
-    cand.unpersist()
+    pairs = lsh_jaccard_pairs(dp, threshold=0.5, num_hashes=8, bands=4)
     out = leakage_free_split(dp, pairs, val_frac=0.2)
     pairs.unpersist()
     return out

@@ -21,7 +21,7 @@ byte-identical signatures.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..caching import free_local_checkpoint as _free_local_checkpoint
@@ -60,8 +60,6 @@ def doc_shingles(
     hash-partitions on doc_id — the same key the downstream minhash
     groupBy needs, so the sort-based shingling is effectively free at
     scale (one shuffle serves both)."""
-    from pyspark.sql import Window
-
     from .text import normalize_text
 
     toks = docs.select(
@@ -251,6 +249,32 @@ def jaccard_pairs(
     return owned_result(out, *owned)
 
 
+def lsh_jaccard_pairs(
+    docs: DataFrame,
+    threshold: float = 0.5,
+    num_hashes: int = DEFAULT_NUM_HASHES,
+    bands: int = DEFAULT_BANDS,
+    k: int = 3,
+) -> DataFrame:
+    """Verified near-dup pairs (doc_a, doc_b, jaccard): MinHash-LSH
+    candidates checked by exact shingle Jaccard — the front half of every
+    dedup chain. ONE shingling pass feeds both the minhash and the verify;
+    non-distinct, because minhash's min() is duplicate-insensitive and the
+    set-based verify dedups via collect_set, so the corpus-wide
+    (doc_id, shingle) distinct shuffle is skipped (guide §2.4). The shingle
+    and candidate caches are freed before returning, on error too; the
+    caller owns the materialized pairs."""
+    sh = doc_shingles(docs, k, distinct=False).persist()
+    try:
+        cand = lsh_candidates(minhash_signature(docs, num_hashes, k, shingles=sh), num_hashes, bands)
+        try:
+            return jaccard_pairs(docs, threshold, k, candidates=cand, shingles=sh)
+        finally:
+            cand.unpersist()
+    finally:
+        sh.unpersist()
+
+
 def incremental_dedup(
     batch: DataFrame,
     index: DataFrame,
@@ -404,10 +428,11 @@ def dup_clusters(
 
     Shape per round: one edges⋈labels join + one groupBy(dst).min —
     both shuffle on doc_id, so AQE coalesces them into the same exchange
-    footprint; labels are persisted per round and the previous round's
-    cache released (resident state = 2 x one row per doc, same discipline
-    as kmeans_train).  Convergence = a changed-label count per round
-    (a join of two cached per-doc frames), bounded by ``max_iters``.
+    footprint; labels are checkpointed per round and the previous round's
+    checkpoint released (resident state = 2 x one row per doc, same
+    discipline as kmeans_train).  Convergence = a changed-label count per
+    round, observed (``pyspark.sql.Observation``) on the round's own
+    checkpoint job — no extra count job — bounded by ``max_iters``.
     Rounds needed = component diameter: near-dup clusters are dense and
     shallow (a dup group is near-clique), so 3-5 rounds in practice; for
     adversarially long chain graphs the known upgrade is
@@ -474,27 +499,23 @@ def dup_clusters(
     # second step. Stopping when the LAST step changed nothing is exact:
     # min-label propagation is monotone, a no-change step is a fixed point.
     for _ in range(max(1, max_iters // 2)):
-        nxt = _propagate(_propagate(labels)).localCheckpoint(eager=True)
-        changed = nxt.where(F.col("label") != F.col("_prev")).count()
+        obs = Observation()
+        nxt = (
+            _propagate(_propagate(labels))
+            .observe(obs, F.count(F.when(F.col("label") != F.col("_prev"), 1)).alias("changed"))
+            .localCheckpoint(eager=True)
+        )
         _free_local_checkpoint(labels)
         labels = nxt
-        if changed == 0:
+        if obs.get["changed"] == 0:
             break
-    sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
-    out = (
-        labels.join(F.broadcast(sizes), "label")
-        .select(
-            F.col("doc_id").alias(id_name),
-            F.col("label").alias("cluster_id"),
-            "cluster_size",
-            (F.col("doc_id") == F.col("label")).alias("is_rep"),
-        )
+    out = labels.select(
+        F.col("doc_id").alias(id_name),
+        F.col("label").alias("cluster_id"),
+        F.count(F.lit(1)).over(Window.partitionBy("label")).alias("cluster_size"),
+        (F.col("doc_id") == F.col("label")).alias("is_rep"),
     )
-    out = out.persist()
-    out.count()
-    _free_local_checkpoint(edges)
-    _free_local_checkpoint(labels)
-    return out
+    return owned_result(out, edges, labels)
 
 
 def leakage_free_split(
@@ -516,21 +537,23 @@ def leakage_free_split(
     (O(component diameter) rounds); the cluster map is O(dup docs) — tiny
     next to the corpus — and joins back on doc_id; the draw itself is a
     pure md5 expression (reproducible across engines and re-runs, no RNG
-    state). Returns (doc_id, split_key, split)."""
-    cmap = dup_clusters(pairs, id_name=id_col).select(id_col, "cluster_id")
-    joined = docs.select(id_col).join(cmap, id_col, "left")
+    state). Returns (doc_id, split_key, split), materialized: the caller
+    owns it and calls ``unpersist()`` when done."""
+    clusters = dup_clusters(pairs, id_name=id_col)
+    joined = docs.select(id_col).join(clusters.select(id_col, "cluster_id"), id_col, "left")
     key = F.coalesce(F.col("cluster_id"), F.col(id_col))
     u = F.pmod(
         F.conv(F.substring(F.md5(key.cast("string")), 1, 12), 16, 10).cast("long"),
         F.lit(denom),
     )
-    return joined.select(
+    out = joined.select(
         id_col,
         key.alias("split_key"),
         F.when(u < int(val_frac * denom), F.lit("val"))
         .otherwise(F.lit("train"))
         .alias("split"),
     )
+    return owned_result(out, clusters)
 
 
 
@@ -671,8 +694,6 @@ def dup_spans(
     offset, span length in tokens, and the number of k-gram anchors
     merged into the span.
     """
-    from pyspark.sql import Window
-
     from .text import normalize_text
 
     toks = docs.select(

@@ -536,13 +536,14 @@ def exp_histogram_rollup_pair(
     from otel_arrow_adapter_spark.caching import free_local_checkpoint
 
     (mb_t, sc_t), (mb_f, sc_f) = true_spec, false_spec
-    factor = 1 << (sc_t - sc_f)
-    if sc_t < sc_f or mb_t != mb_f * factor:
+    # scale order first: a negative shift count would raise a cryptic error
+    if sc_t < sc_f or mb_t != mb_f << (sc_t - sc_f):
         raise ValueError(
             f"false_spec {false_spec} is not a lossless downscale of "
             f"true_spec {true_spec}: need max_buckets_t = max_buckets_f * "
             f"2^(scale_t - scale_f)"
         )
+    factor = 1 << (sc_t - sc_f)
     dense = exp_histogram_rollup(
         points.withColumn("_gate", gate),
         max_buckets=mb_t,

@@ -12,6 +12,12 @@ setting here is chosen to also be correct at cluster scale:
   maxRecordsPerBatch plays the role of the reference's batch unit
   (/root/reference/pkg/otel/arrow_record/producer.go:328-422 per-batch IPC).
 - UTC session timezone for DuckDB-oracle parity.
+- Generated-code cache sized to the measured working set
+  (``CODEGEN_CACHE_ENTRIES``). Spark keeps 100 compiled whole-stage
+  classes by default; one pass of the four dedup-chain queries needs ~240
+  and one pass over the query registry ~1.7 k, so with the default the
+  classes evict each other in a cycle and every repeated operation
+  recompiles (Janino, then the JIT) what it compiled last time.
 """
 
 from __future__ import annotations
@@ -19,6 +25,16 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Distinct generated classes one operation compiles on a cold cache
+# (CodegenMetrics compilation count), pyspark 4.1.2:
+#   one pass of the four dedup-chain queries   240 (sf0.001, local[4])
+#   one ingest pipeline run                      47 (local[4])
+#   one pass over every registered query      1,696 (sf0.001, local[4])
+#                                             1,698 (sf0.01, local[8])
+# The smallest power of two above the largest count keeps the whole
+# registry compiled for the life of a session.
+CODEGEN_CACHE_ENTRIES = 2048
 
 
 def get_spark(
@@ -51,6 +67,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -494,6 +494,8 @@ def test_no_lingering_caches_after_queries(spark):
         "doc_lsh_candidates",
         "doc_jaccard_pairs",
         "doc_dup_clusters",
+        "doc_clean_corpus_near",
+        "doc_leakage_free_split",
         "doc_incremental_dedup",
         "doc_simhash_near_dups",
         "emb_kmeans_centroids",

@@ -171,6 +171,7 @@ def test_exp_histogram_rollup_pair_matches_two_calls(spark):
     for a key yields only the true-side row)."""
     from pyspark.sql import functions as F
 
+    from otel_arrow_adapter_spark.caching import free_local_checkpoint
     from otel_arrow_adapter_spark.operators.metrics_dp import (
         exp_histogram_rollup,
         exp_histogram_rollup_pair,
@@ -193,7 +194,18 @@ def test_exp_histogram_rollup_pair_matches_two_calls(spark):
     got = {tuple(r[k] for k in key): r.asDict() for r in fused.collect()}
     want = {tuple(r[k] for k in key): r.asDict() for r in ref.collect()}
     assert got == want
-    fused.unpersist()
+    free_local_checkpoint(fused)
+
+
+def test_exp_histogram_rollup_pair_rejects_inverted_scales(spark):
+    """A coarse spec at a HIGHER scale than the fine one is not a
+    downscale: rejected with the spec message, not a shift-count error."""
+    from pyspark.sql import functions as F
+
+    from otel_arrow_adapter_spark.operators.metrics_dp import exp_histogram_rollup_pair
+
+    with pytest.raises(ValueError, match="is not a lossless downscale"):
+        exp_histogram_rollup_pair(spark.range(1), F.lit(True), (18, 0), (36, 1))
 
 
 def test_exp_histogram_rollup_floors_doubles(spark):

@@ -95,20 +95,9 @@ def emb_at_scale(spark: SparkSession, replicas: int) -> DataFrame:
 
 
 def op_dup_clusters(docs: DataFrame) -> int:
-    from otel_arrow_adapter_spark.functions.dedup import (
-        doc_shingles,
-        dup_clusters,
-        jaccard_pairs,
-        lsh_candidates,
-        minhash_signature,
-    )
+    from otel_arrow_adapter_spark.functions.dedup import dup_clusters, lsh_jaccard_pairs
 
-    dp = docs_plus(docs)
-    sh = doc_shingles(dp, distinct=False).persist()
-    cand = lsh_candidates(minhash_signature(dp, num_hashes=8, shingles=sh), num_hashes=8, bands=4)
-    pairs = jaccard_pairs(dp, threshold=0.5, candidates=cand, shingles=sh)
-    sh.unpersist()
-    cand.unpersist()
+    pairs = lsh_jaccard_pairs(docs_plus(docs), threshold=0.5, num_hashes=8, bands=4)
     out = dup_clusters(pairs)
     pairs.unpersist()
     n = out.count()
