@@ -54,10 +54,6 @@ def _attrs(h: Column, d: Column) -> Column:
     )
 
 
-def _empty(element_fields: str) -> Column:
-    return F.array().cast(f"array<struct<{element_fields}>>")
-
-
 def synthesize_metrics_nested(
     spark: SparkSession, n_metrics: int = 300, seed: int = 42, partitions: int | None = None
 ) -> DataFrame:

@@ -27,10 +27,3 @@ def seed_hash(col: Column, seed: int) -> Column:
         10,
     ).cast("long")
 
-
-def seed_hash_sql(expr: str, seed: int) -> str:
-    """DuckDB side: the identical value for the identical input expression."""
-    return (
-        f"CAST(CAST('0x' || substr(md5(CAST({expr} AS VARCHAR) || ':{seed}'), 1, 15)"
-        " AS UBIGINT) AS BIGINT)"
-    )

@@ -24,9 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from ..caching import free_local_checkpoint as _free_local_checkpoint
-from ..caching import is_materialized as _is_materialized
-from ..caching import owned_result
+from ..caching import free_local_checkpoint, is_materialized, owned_result
 from .text import fingerprint, shingles
 
 DEFAULT_NUM_HASHES = 8
@@ -186,7 +184,7 @@ def jaccard_pairs(
     owned: list[DataFrame] = []
     sh = doc_shingles(docs, k, distinct=False) if shingles is None else shingles
     if candidates is not None:
-        if not _is_materialized(candidates):
+        if not is_materialized(candidates):
             candidates = candidates.persist()  # used 3x: doc-id set + 2 pair joins
             owned.append(candidates)
         cand_docs = (
@@ -452,7 +450,7 @@ def dup_clusters(
     (~0.6 s) and the final plan is a constant ~44 chars.  The checkpointed
     RDD lives at RDD level, invisible to Dataset.unpersist — each round
     frees the previous round's via the LogicalRDD handle
-    (``_free_local_checkpoint``), keeping resident state = edges + 2×one
+    (``free_local_checkpoint``), keeping resident state = edges + 2×one
     row per doc, same discipline as kmeans_train.
     """
     sym = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")).unionByName(
@@ -505,7 +503,7 @@ def dup_clusters(
             .observe(obs, F.count(F.when(F.col("label") != F.col("_prev"), 1)).alias("changed"))
             .localCheckpoint(eager=True)
         )
-        _free_local_checkpoint(labels)
+        free_local_checkpoint(labels)
         labels = nxt
         if obs.get["changed"] == 0:
             break

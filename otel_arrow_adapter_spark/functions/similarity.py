@@ -76,13 +76,45 @@ def cosine_topk(
     )
 
 
+def _sign_bits(vec_col: str, start: int, m: int) -> Column:
+    """Sign-bit string ("1" for >= 0) of dimensions [start, start + m)."""
+    return F.concat(*[
+        F.when(F.element_at(F.col(vec_col), start + i + 1) >= 0, F.lit("1")).otherwise(
+            F.lit("0")
+        )
+        for i in range(m)
+    ])
+
+
+def _bucket_pairs(
+    left: DataFrame,
+    right: DataFrame,
+    on: str | list[str] | Column,
+    threshold: float,
+    vec_col: str,
+    distinct: bool = True,
+) -> DataFrame:
+    """The shared candidate-join-and-verify body of the ANN pair finders:
+    join the bucket sides (aliased ``l``/``r``) on ``on``, keep each
+    unordered pair once (``l.vec_id < r.vec_id``), and keep it when the
+    rounded cosine clears ``threshold``. ``distinct`` drops the repeats
+    that multi-probe and multi-table joins produce."""
+    pairs = (
+        left.alias("l").join(right.alias("r"), on)
+        .where(F.col("l.vec_id") < F.col("r.vec_id"))
+        .select(
+            F.col("l.vec_id").alias("vec_a"),
+            F.col("r.vec_id").alias("vec_b"),
+            F.round(cosine(F.col(f"l.{vec_col}"), F.col(f"r.{vec_col}")), 6).alias("cos_sim"),
+        )
+        .where(F.col("cos_sim") >= threshold)
+    )
+    return pairs.distinct() if distinct else pairs
+
+
 def sign_lsh_buckets(embeddings: DataFrame, m: int = 8, vec_col: str = "embedding") -> DataFrame:
     """Bucket id = sign-bit string of the first m dimensions."""
-    bits = [
-        F.when(F.element_at(F.col(vec_col), i + 1) >= 0, F.lit("1")).otherwise(F.lit("0"))
-        for i in range(m)
-    ]
-    return embeddings.withColumn("bucket", F.concat(*bits))
+    return embeddings.withColumn("bucket", _sign_bits(vec_col, 0, m))
 
 
 def ann_pairs(
@@ -93,17 +125,7 @@ def ann_pairs(
 ) -> DataFrame:
     """Approximate near-neighbor pairs: same sign-LSH bucket + cosine >= t."""
     b = sign_lsh_buckets(embeddings, m, vec_col).select("vec_id", "bucket", vec_col)
-    l, r = b.alias("l"), b.alias("r")
-    return (
-        l.join(r, on="bucket")
-        .where(F.col("l.vec_id") < F.col("r.vec_id"))
-        .select(
-            F.col("l.vec_id").alias("vec_a"),
-            F.col("r.vec_id").alias("vec_b"),
-            F.round(cosine(F.col(f"l.{vec_col}"), F.col(f"r.{vec_col}")), 6).alias("cos_sim"),
-        )
-        .where(F.col("cos_sim") >= threshold)
-    )
+    return _bucket_pairs(b, b, "bucket", threshold, vec_col, distinct=False)
 
 
 def seed_centroids(
@@ -306,18 +328,7 @@ def ann_pairs_multiprobe(
         for i in range(m)
     ]
     probes = b.select("vec_id", vec_col, F.explode(F.array(*flips)).alias("probe"))
-    l, r = b.alias("l"), probes.alias("r")
-    return (
-        l.join(r, F.col("l.bucket") == F.col("r.probe"))
-        .where(F.col("l.vec_id") < F.col("r.vec_id"))
-        .select(
-            F.col("l.vec_id").alias("vec_a"),
-            F.col("r.vec_id").alias("vec_b"),
-            F.round(cosine(F.col(f"l.{vec_col}"), F.col(f"r.{vec_col}")), 6).alias("cos_sim"),
-        )
-        .where(F.col("cos_sim") >= threshold)
-        .distinct()
-    )
+    return _bucket_pairs(b, probes, F.col("l.bucket") == F.col("r.probe"), threshold, vec_col)
 
 
 def sign_lsh_banded_buckets(
@@ -327,17 +338,10 @@ def sign_lsh_banded_buckets(
     DISJOINT dimension block [t*m, (t+1)*m). Requires m * n_tables <= dim.
     Pure comparisons on stored values (no arithmetic), so buckets are
     bit-reproducible on any engine."""
-    tables = []
-    for t in range(n_tables):
-        bits = [
-            F.when(F.element_at(F.col(vec_col), t * m + i + 1) >= 0, F.lit("1")).otherwise(
-                F.lit("0")
-            )
-            for i in range(m)
-        ]
-        tables.append(
-            F.struct(F.lit(t).cast("int").alias("table"), F.concat(*bits).alias("bucket"))
-        )
+    tables = [
+        F.struct(F.lit(t).cast("int").alias("table"), _sign_bits(vec_col, t * m, m).alias("bucket"))
+        for t in range(n_tables)
+    ]
     return embeddings.select(
         "vec_id", vec_col, F.explode(F.array(*tables)).alias("tb")
     ).select("vec_id", vec_col, F.col("tb.table").alias("table"), F.col("tb.bucket").alias("bucket"))
@@ -368,18 +372,7 @@ def ann_pairs_banded(
       regime — that's ivf_search territory.
     Cost is bounded at L x the single-table join; never all-pairs."""
     b = sign_lsh_banded_buckets(embeddings, m, n_tables, vec_col)
-    l, r = b.alias("l"), b.alias("r")
-    return (
-        l.join(r, on=["table", "bucket"])
-        .where(F.col("l.vec_id") < F.col("r.vec_id"))
-        .select(
-            F.col("l.vec_id").alias("vec_a"),
-            F.col("r.vec_id").alias("vec_b"),
-            F.round(cosine(F.col(f"l.{vec_col}"), F.col(f"r.{vec_col}")), 6).alias("cos_sim"),
-        )
-        .where(F.col("cos_sim") >= threshold)
-        .distinct()
-    )
+    return _bucket_pairs(b, b, ["table", "bucket"], threshold, vec_col)
 
 
 def projected_buckets(
@@ -437,18 +430,7 @@ def ann_pairs_projected(
     expl = b.select(
         "vec_id", vec_col, F.posexplode("buckets").alias("table", "bucket")
     )
-    l, r = expl.alias("l"), expl.alias("r")
-    return (
-        l.join(r, on=["table", "bucket"])
-        .where(F.col("l.vec_id") < F.col("r.vec_id"))
-        .select(
-            F.col("l.vec_id").alias("vec_a"),
-            F.col("r.vec_id").alias("vec_b"),
-            F.round(cosine(F.col(f"l.{vec_col}"), F.col(f"r.{vec_col}")), 6).alias("cos_sim"),
-        )
-        .where(F.col("cos_sim") >= threshold)
-        .distinct()
-    )
+    return _bucket_pairs(expl, expl, ["table", "bucket"], threshold, vec_col)
 
 
 def brute_force_pairs(

@@ -88,22 +88,3 @@ def stable_turn_order(df: DataFrame) -> DataFrame:
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     return df.withColumn("turn_order", F.row_number().over(w))
 
-
-def change_detect_ids(df: DataFrame, order_cols: tuple[str, ...], group_col: str, out_col: str) -> DataFrame:
-    """W3: first-seen change detection -> running group id.
-
-    Reference idiom: ``if resLogsID != prev { resID++ }``
-    (/root/reference/pkg/otel/logs/arrow/logs.go:230-247). Spark form:
-    flag := group != lag(group); id := running sum of flags. Scoped per
-    conv_id so the window parallelizes across conversations.
-    """
-    w = Window.partitionBy("conv_id").orderBy(*order_cols)
-    changed = (
-        F.when(F.lag(group_col).over(w).isNull(), F.lit(1))
-        .when(F.col(group_col).eqNullSafe(F.lag(group_col).over(w)), F.lit(0))
-        .otherwise(F.lit(1))
-    )
-    return df.withColumn(
-        out_col,
-        F.sum(changed).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-    )

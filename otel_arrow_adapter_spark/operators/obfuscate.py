@@ -34,16 +34,3 @@ def obfuscate_strings(
         out = out.withColumn(c, F.when(F.col(c).isNotNull(), tok))
     return out
 
-
-def deobfuscate_strings(df: DataFrame, cols: list[str], key: str = "0123456789abcdef") -> DataFrame:
-    """Inverse of aes mode."""
-    out = df
-    for c in cols:
-        out = out.withColumn(
-            c,
-            F.when(
-                F.col(c).isNotNull(),
-                F.aes_decrypt(F.unbase64(F.col(c)), F.lit(key), F.lit("ECB")).cast("string"),
-            ),
-        )
-    return out

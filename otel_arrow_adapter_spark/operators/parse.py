@@ -40,19 +40,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Regexes shared with the DuckDB oracles in __spark_entry__.py — keep RE2-safe
-# (no lookbehind) so both engines accept them.
-RE_LOG_TS = r"ts_us=([0-9]+)"
-RE_LOG_LEVEL = r" level=([A-Z]+)"
+# Body extraction pattern. The DuckDB oracles in __spark_entry__.py spell the
+# same pattern inline — keep it RE2-safe (no lookbehind) so both engines
+# accept it.
 RE_LOG_MSG = r' msg="([^"]*)"'
-RE_LOG_CODE = r" code=([0-9]+)"
-RE_LOG_RETRY = r" retry=(true|false)"
-RE_METRIC_NAME = r"^name=([a-z_]+)"
-RE_METRIC_VALUE = r" value=(-?[0-9]+)"
-RE_METRIC_UNIT = r" unit=([a-z%]+)"
-RE_TRACE_SPAN = r"^span=([0-9a-f]{16})"
-RE_TRACE_PARENT = r" parent=([0-9a-f]{8})"
-RE_TRACE_DUR = r" dur_ms=([0-9]+)"
 
 # OTLP severity numbers (public OTel spec).
 SEVERITY_NUMBER = {"TRACE": 1, "DEBUG": 5, "INFO": 9, "WARN": 13, "ERROR": 17, "FATAL": 21}

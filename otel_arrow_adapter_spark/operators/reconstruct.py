@@ -21,39 +21,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def attrs_store(attrs: DataFrame, parent_cols: tuple[str, ...] = ("conv_id", "turn_idx")) -> DataFrame:
-    """J1: long attrs -> one row per parent with map<key, string-rendered value>.
-
-    Values are rendered to strings through the same type dispatch the
-    reference uses when rebuilding pcommon.Map (attributes.go:158-208) —
-    exactly one value column is non-null per row (union invariant).
-    """
-    value = F.coalesce(
-        F.col("str"),
-        F.col("int").cast("string"),
-        F.col("double").cast("string"),
-        F.col("bool").cast("string"),
-    )
-    return (
-        attrs.groupBy(*parent_cols)
-        .agg(
-            F.map_from_entries(
-                F.array_sort(F.collect_list(F.struct(F.col("key"), value.alias("value"))))
-            ).alias("attrs")
-        )
-    )
-
-
-def join_attrs(main: DataFrame, store: DataFrame, parent_cols: tuple[str, ...] = ("conv_id", "turn_idx")) -> DataFrame:
-    """J2: main ⋈ attrs store on the surrogate key (left join — parents
-    without attributes keep an empty map, like the reference's store miss
-    returning an empty pcommon.Map)."""
-    out = main.join(store, on=list(parent_cols), how="left")
-    return out.withColumn(
-        "attrs", F.coalesce(F.col("attrs"), F.map_from_arrays(F.array(), F.array()))
-    )
-
-
 def _sink_checks() -> dict[str, list]:
     """sink -> [(condition that must hold, error label)] — the decode-side
     validation of pkg/otel/logs/otlp/logs.go:145-154 (ID length checks,

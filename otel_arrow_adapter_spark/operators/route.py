@@ -114,7 +114,6 @@ SORT_STRATEGIES = {
         "quarantine": ["res_id", "scope_id", "error", "conv_id", "turn_idx"],
     },
 }
-SINK_SORT_KEYS = SORT_STRATEGIES["default"]
 
 
 def sink_sort_exprs(df: DataFrame, strategy: dict[str, list[str]]) -> list[Column]:

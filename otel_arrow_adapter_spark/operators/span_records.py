@@ -23,18 +23,15 @@ in SQL while exercising the same star-schema wiring:
 All pure column expressions; the explode is per-row (no shuffle), the
 wiring is two grouped joins on the span's natural key.
 
-Sorts (O6): EVENT_SORT_KEYS follows the EventsByNameParentId default
-(name, parent), LINK_SORT_KEYS by parent — applied by the caller's
-sortWithinPartitions before writes.
+Sorts (O6): no event or link sink is written, so the reference's
+EventsByNameParentId (name, parent) and by-parent link sorts have no
+write to apply to; a future writer would sortWithinPartitions on them.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-EVENT_SORT_KEYS = ["event_name", "span_hex"]
-LINK_SORT_KEYS = ["span_hex"]
 
 SPAN_KEY = ("conv_id", "turn_idx", "span_hex")
 

@@ -9,4 +9,4 @@ from .otlp_pb import (  # noqa: F401
     read_pb_metrics,
     read_pb_spans,
 )
-from .readers import read_table, read_transcripts  # noqa: F401
+from .readers import read_transcripts  # noqa: F401

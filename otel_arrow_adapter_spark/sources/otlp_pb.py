@@ -26,16 +26,21 @@ Spark plumbing: ``spark.read.format("binaryFile")`` gives (path, content)
 rows — one per capture file — and a mapInPandas decoder flattens each
 file's request into log-record rows. Parallelism unit = file, exactly the
 reference's dataset granularity; no per-row Python beyond the per-FILE
-decode, which is the irreducible work. An encoder is included (the file
-exporter's capture analog) so round-trips are testable end-to-end.
+decode, which is the irreducible work. Encoders plus ``write_pb_capture``
+(the file exporter's capture analog, one request file per partition) make
+round-trips testable end-to-end.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 import struct
-from typing import Iterator
+from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 PB_LOG_SCHEMA = (
     "path string, res_idx int, scope_name string, scope_version string, "
@@ -136,10 +141,6 @@ def _decode_any_value(buf: bytes, lo: int, hi: int) -> str | None:
         if f == 7:  # bytes_value
             return bytes(buf[v[0]:v[1]]).hex()
     return None
-
-
-def _count_attrs(buf: bytes, lo: int, hi: int) -> int:
-    return sum(1 for f, _, _ in _iter_fields(buf, lo, hi) if f == 1)
 
 
 def _decode_kv(buf: bytes, lo: int, hi: int) -> tuple[str | None, str | None]:
@@ -801,117 +802,96 @@ def encode_export_metrics_request(points: list[dict]) -> bytes:
     return bytes(out)
 
 
-def read_pb_metrics(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed metrics-capture load (binaryFile + mapInPandas, one
-    ExportMetricsServiceRequest per file; decode errors quarantine)."""
-    import pandas as pd  # noqa: PLC0415 — worker-side import
-
-    cols = [
-        "path", "res_idx", "scope_name", "metric_name", "metric_unit",
-        "metric_type", "temporality", "is_monotonic",
-        "start_time_unix_nano", "time_unix_nano", "value_double",
-        "value_int", "count", "sum", "bucket_counts", "explicit_bounds",
-        "n_attrs", "scale", "zero_count", "positive_offset",
-        "positive_bucket_counts", "negative_offset",
-        "negative_bucket_counts", "quantiles", "attrs",
-    ]
-
-    def decode(batches):
-        for pdf in batches:
-            rows: list[dict] = []
-            for path_, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    rows.extend(decode_export_metrics_request(bytes(content), path_))
-                except Exception as e:  # noqa: BLE001 — quarantine, don't crash
-                    rows.append(
-                        {"path": path_, "res_idx": -1,
-                         "metric_name": f"__decode_error__: {e}", "n_attrs": 0,
-                         "attrs": {}}
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    binary = spark.read.format("binaryFile").option("pathGlobFilter", "*.pb").load(path)
-    return binary.select("path", "content").mapInPandas(decode, PB_METRIC_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # Spark plumbing
 # ---------------------------------------------------------------------------
 
-def read_pb_logs(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed .pb dataset load: binaryFile scan (one row per capture
-    file, Spark splits files across tasks) -> mapInPandas decode. Malformed
-    files yield zero rows with the error surfaced in the ``body`` of a
-    single path-tagged quarantine row — error-not-crash, the reader
-    counterpart of logs.go:145-154."""
-    import pandas as pd  # noqa: PLC0415 — worker-side import
+def write_pb_capture(
+    df: DataFrame,
+    out_dir: str,
+    to_record: Callable[[dict], dict],
+    encode: Callable[[list[dict]], bytes],
+) -> int:
+    """Distributed .pb capture writer (the file exporter's analog): one
+    mapInPandas task per partition maps each row (nulls as None) through
+    ``to_record`` and writes ``encode(records)`` as ONE request file.
+    ``out_dir`` is cleared first, and files are named by PARTITION ID, not
+    uuid: a retried or speculatively re-executed task overwrites its own
+    file instead of duplicating the partition's records. Workers write to
+    local paths (driver-local tmp in local mode; shared storage on a
+    cluster). Returns the number of records written."""
+    shutil.rmtree(out_dir, ignore_errors=True)
+    os.makedirs(out_dir, exist_ok=True)
+
+    def write(batches):
+        import pandas as pd  # noqa: PLC0415 — worker-side import
+        from pyspark import TaskContext  # noqa: PLC0415
+
+        recs = []
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            clean = pdf.astype(object).where(pdf.notna(), None)
+            recs.extend(to_record(r) for r in clean.to_dict("records"))
+        if recs:
+            pid = TaskContext.get().partitionId()
+            with open(os.path.join(out_dir, f"part-{pid:05d}.pb"), "wb") as f:
+                f.write(encode(recs))
+        yield pd.DataFrame({"n": [len(recs)]})
+
+    return df.mapInPandas(write, "n long").agg(F.sum("n")).first()[0] or 0
+
+
+def _read_pb(
+    spark: SparkSession,
+    path: str,
+    decode_request: Callable[[bytes, str], list[dict]],
+    schema: str,
+    error_row: dict,
+    error_col: str,
+) -> DataFrame:
+    """binaryFile scan (one row per capture file, Spark splits files across
+    tasks) -> mapInPandas decode. A malformed file yields one path-tagged
+    quarantine row (``res_idx`` -1, the error text in ``error_col``, the
+    rest of ``error_row``) — error-not-crash, the reader counterpart of
+    logs.go:145-154."""
+    cols = StructType.fromDDL(schema).names
 
     def decode(batches):
+        import pandas as pd  # noqa: PLC0415 — worker-side import
+
         for pdf in batches:
             rows: list[dict] = []
             for path_, content in zip(pdf["path"], pdf["content"]):
                 try:
-                    rows.extend(decode_export_logs_request(bytes(content), path_))
+                    rows.extend(decode_request(bytes(content), path_))
                 except Exception as e:  # noqa: BLE001 — quarantine, don't crash
-                    rows.append(
-                        {
-                            "path": path_,
-                            "res_idx": -1,
-                            "body": f"__decode_error__: {e}",
-                            "n_res_attrs": 0,
-                            "n_attrs": 0,
-                            "res_attrs": {},
-                            "attrs": {},
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "path", "res_idx", "scope_name", "scope_version",
-                    "time_unix_nano", "observed_time_unix_nano",
-                    "severity_number", "severity_text", "body",
-                    "trace_id", "span_id", "n_res_attrs", "n_attrs",
-                    "res_attrs", "attrs",
-                ],
-            )
-
-    binary = spark.read.format("binaryFile").option("pathGlobFilter", "*.pb").load(path)
-    return binary.select("path", "content").mapInPandas(decode, PB_LOG_SCHEMA)
-
-
-def read_pb_spans(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed trace-capture load: same binaryFile + mapInPandas shape
-    as read_pb_logs, one ExportTraceServiceRequest per file."""
-    import pandas as pd  # noqa: PLC0415 — worker-side import
-
-    cols = [
-        "path", "res_idx", "scope_name", "trace_id", "span_id",
-        "parent_span_id", "name", "kind", "start_time_unix_nano",
-        "end_time_unix_nano", "status_code", "n_attrs", "n_events", "n_links",
-        "attrs", "events", "links",
-    ]
-
-    def decode(batches):
-        for pdf in batches:
-            rows: list[dict] = []
-            for path_, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    rows.extend(decode_export_trace_request(bytes(content), path_))
-                except Exception as e:  # noqa: BLE001 — quarantine, don't crash
-                    rows.append(
-                        {
-                            "path": path_,
-                            "res_idx": -1,
-                            "name": f"__decode_error__: {e}",
-                            "n_attrs": 0,
-                            "n_events": 0,
-                            "n_links": 0,
-                            "attrs": {},
-                            "events": [],
-                            "links": [],
-                        }
-                    )
+                    rows.append({"path": path_, "res_idx": -1,
+                                 error_col: f"__decode_error__: {e}", **error_row})
             yield pd.DataFrame(rows, columns=cols)
 
     binary = spark.read.format("binaryFile").option("pathGlobFilter", "*.pb").load(path)
-    return binary.select("path", "content").mapInPandas(decode, PB_SPAN_SCHEMA)
+    return binary.select("path", "content").mapInPandas(decode, schema)
+
+
+def read_pb_metrics(spark: SparkSession, path: str) -> DataFrame:
+    """Distributed metrics-capture load (one ExportMetricsServiceRequest
+    per file; decode errors quarantine with the error in ``metric_name``)."""
+    return _read_pb(spark, path, decode_export_metrics_request, PB_METRIC_SCHEMA,
+                    {"n_attrs": 0, "attrs": {}}, "metric_name")
+
+
+def read_pb_logs(spark: SparkSession, path: str) -> DataFrame:
+    """Distributed .pb dataset load (one ExportLogsServiceRequest per
+    file). Malformed files yield zero rows with the error surfaced in the
+    ``body`` of a single path-tagged quarantine row."""
+    return _read_pb(spark, path, decode_export_logs_request, PB_LOG_SCHEMA,
+                    {"n_res_attrs": 0, "n_attrs": 0, "res_attrs": {}, "attrs": {}}, "body")
+
+
+def read_pb_spans(spark: SparkSession, path: str) -> DataFrame:
+    """Distributed trace-capture load (one ExportTraceServiceRequest per
+    file; decode errors quarantine with the error in ``name``)."""
+    return _read_pb(spark, path, decode_export_trace_request, PB_SPAN_SCHEMA,
+                    {"n_attrs": 0, "n_events": 0, "n_links": 0, "attrs": {},
+                     "events": [], "links": []}, "name")

@@ -25,11 +25,6 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one driver-provided testdata table (parquet)."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
     """Read a transcripts table: Iceberg identifier if configured, else a
     parquet path. S6 file-receiver analog (replay source)."""

@@ -87,6 +87,41 @@ def test_pb_spark_reader(spark, tmp_path):
     assert all(r["time_unix_nano"] == 1_700_000_000_000_000_000 for r in infos)
 
 
+def test_write_pb_capture_retry_idempotent(spark, tmp_path):
+    """A re-run into the same directory (what a retried or speculative task
+    does per partition) leaves one file per non-empty partition and no
+    duplicate records: files are named by partition id, not uuid, and the
+    directory starts empty."""
+    from pyspark.sql import functions as F
+
+    from otel_arrow_adapter_spark.sources.otlp_pb import (
+        encode_export_logs_request,
+        read_pb_logs,
+        write_pb_capture,
+    )
+
+    # 5 partitions of 8 ids each; the filter leaves partitions 3 and 4 empty
+    df = spark.range(0, 40, numPartitions=5).where(F.col("id") < 24).select(
+        F.concat(F.lit("rec-"), F.col("id").cast("string")).alias("body"),
+        (F.col("id") * 1000).alias("time_unix_nano"),
+    )
+    non_empty = df.select(F.spark_partition_id()).distinct().count()
+    out = tmp_path / "capture"
+    out.mkdir()
+    (out / "stale.pb").write_bytes(encode_export_logs_request([{"body": "stale"}]))
+
+    def to_record(r):
+        return {"res_idx": 0, "body": r["body"], "time_unix_nano": int(r["time_unix_nano"])}
+
+    for _ in range(2):
+        assert write_pb_capture(df, str(out), to_record, encode_export_logs_request) == 24
+    files = sorted(p.name for p in out.iterdir() if p.suffix == ".pb")
+    assert non_empty == 3
+    assert files == [f"part-{i:05d}.pb" for i in range(non_empty)]
+    bodies = [r["body"] for r in read_pb_logs(spark, str(out)).collect()]
+    assert sorted(bodies) == sorted(f"rec-{i}" for i in range(24))
+
+
 def test_pb_wire_roundtrip_property():
     """Property form: arbitrary record sets (unicode text, optional fields
     absent at random, extreme timestamps) survive encode∘decode exactly."""

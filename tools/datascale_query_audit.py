@@ -1,5 +1,4 @@
-"""Full-query-surface 10x data-scale audit (session-2 extension of
-tools/datascale_curation_10x.py, which covers 4 heavy hitters).
+"""Full-query-surface 10x data-scale audit.
 
 Builds deterministic 10x replicas of the sf0.1 inputs under /tmp and
 times EVERY registered query against both sizes with bench_extra.py's
@@ -9,7 +8,7 @@ ratio}. A ratio near 1 means the query is fixed-overhead-bound at sf0.1;
 near 10 means data-bound and linear; >10 flags a superlinear scale bug —
 EXCEPT for the emb_ann_pairs* family, see below.
 
-Replica construction (no RNG state, mirrors datascale_curation_10x):
+Replica construction (no RNG state):
 - events x10: replica i offsets event_id by i*10M and user_id by i*1M,
   so the per-user turn-index window scales linearly (10x users, same
   turns/user).
@@ -33,6 +32,10 @@ re-measured at ~2.0 fresh; the emb_ann_pairs* ratios are real but
 measure the quadratic-pairs construction above, confirmed by output
 counts (1x 645/4,199 pairs -> 10x 113,650/504,060).
 
+The replica directory is reused only when its ``_BUILT`` sentinel exists;
+``build_10x`` writes it after its last artifact, so a build that died
+half-way is rebuilt instead of silently timed.
+
 Usage: python tools/datascale_query_audit.py [name1,name2,...]
 """
 
@@ -51,6 +54,7 @@ from pyspark.sql import functions as F  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 OUT_DIR = os.environ.get("OAAS_AUDIT_10X_DIR", "/tmp/oaas_audit_10x")
+BUILT = os.path.join(OUT_DIR, "_BUILT")
 REPLICAS = 10
 
 _VOWELS = "aeiou"
@@ -115,6 +119,8 @@ def build_10x(spark: SparkSession) -> None:
         dst = os.path.join(OUT_DIR, f)
         if not os.path.exists(dst):
             os.symlink(os.path.join(SF_DIR, f), dst)
+    with open(BUILT, "w") as f:
+        f.write(SF_DIR + "\n")
 
 
 def time_query(spark: SparkSession, fn, sf_dir: str, repeats: int = 2) -> float:
@@ -136,7 +142,7 @@ def main() -> None:
 
     only = sys.argv[1].split(",") if len(sys.argv) > 1 else None
     spark = get_spark(app_name="oaas-audit-10x", cores=CPUS, shuffle_partitions=CPUS)
-    if not os.path.exists(f"{OUT_DIR}/events.parquet"):
+    if not os.path.exists(BUILT):
         build_10x(spark)
     rows = {}
     for name, fn in entrymod.queries().items():
