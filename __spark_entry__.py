@@ -14,6 +14,7 @@ from __future__ import annotations
 import os
 import sys
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F, Window as W
@@ -598,6 +599,7 @@ def q_pipeline_metrics_exp_hist_merge(spark: SparkSession, sf_dir: str) -> DataF
     ALL points — equality holds iff downscaling is lossless (coarse
     boundaries are a subset of fine ones), so the whole merge path is
     value-checked, not just row-counted."""
+    from otel_arrow_adapter_spark.caching import materialize_scope, owned_result
     from otel_arrow_adapter_spark.operators.metrics_dp import (
         exp_histogram_rollup_pair,
         merge_exp_histograms,
@@ -609,35 +611,31 @@ def q_pipeline_metrics_exp_hist_merge(spark: SparkSession, sf_dir: str) -> DataF
     # one gated pass builds BOTH scale families (the two separate rollups
     # were two full scans of the fact); merge references its input 4x
     # (min-scale dim, scalars, both bucket families) so the tiny per-key
-    # union comes back eagerly checkpointed — each reference reads a flat
+    # union comes back materialized — each reference reads a flat
     # 4-row RDD instead of re-planning the scan->parse->rollup lineage
     # (the round-start plan repeated the parquet scan 24x,
     # plans/r06/*_before.txt)
-    from otel_arrow_adapter_spark.caching import owned_result
-
-    both = exp_histogram_rollup_pair(
-        pts,
-        F.col("turn_idx") % 2 == 0,
-        (36, 1),
-        (18, 0),
-        value_col="value_delta",
-    )
-    merged = merge_exp_histograms(both)
-    out = merged.select(
-        "metric_name",
-        "metric_unit",
-        "count",
-        "sum",
-        "scale",
-        "zero_count",
-        "positive_offset",
-        F.array_join("positive_bucket_counts", ",").alias("positive_bucket_counts"),
-        "negative_offset",
-        F.array_join("negative_bucket_counts", ",").alias("negative_bucket_counts"),
-        "min",
-        "max",
-    )
-    return owned_result(out, both)
+    with materialize_scope() as m:
+        both = m.own(
+            exp_histogram_rollup_pair(
+                pts, F.col("turn_idx") % 2 == 0, (36, 1), (18, 0), value_col="value_delta"
+            )
+        )
+        out = merge_exp_histograms(both).select(
+            "metric_name",
+            "metric_unit",
+            "count",
+            "sum",
+            "scale",
+            "zero_count",
+            "positive_offset",
+            F.array_join("positive_bucket_counts", ",").alias("positive_bucket_counts"),
+            "negative_offset",
+            F.array_join("negative_bucket_counts", ",").alias("negative_bucket_counts"),
+            "min",
+            "max",
+        )
+        return owned_result(out)
 
 
 def q_pipeline_metrics_temporality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -692,6 +690,22 @@ def q_pipeline_metrics_multivariate(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
+def _record_counts(
+    encode: Callable[[DataFrame], dict[str, DataFrame]], nested: DataFrame
+) -> DataFrame:
+    """(record, n_rows) for every record table ``encode(nested)`` emits,
+    over ``nested`` materialized once: the per-record count branches would
+    otherwise each re-run the generator's shuffles."""
+    from otel_arrow_adapter_spark.caching import materialize_scope, owned_result
+
+    with materialize_scope() as m:
+        parts = [
+            df.agg(F.count(F.lit(1)).alias("n_rows")).select(F.lit(name).alias("record"), "n_rows")
+            for name, df in sorted(encode(m.keep(nested)).items())
+        ]
+        return owned_result(reduce(DataFrame.unionByName, parts))
+
+
 def q_pipeline_metrics_dp_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full star-schema encode over the nested generator: per-record row
     counts (A4 analog). The generator is md5-seeded (datagen/seeds.py), so
@@ -700,24 +714,7 @@ def q_pipeline_metrics_dp_records(spark: SparkSession, sf_dir: str) -> DataFrame
     from otel_arrow_adapter_spark.datagen.metrics import synthesize_metrics_nested
     from otel_arrow_adapter_spark.operators.metrics_dp import encode_metrics
 
-    # persist: 9 per-record count branches would otherwise each re-run the
-    # generator's shuffles; the cached 300-row nested table makes each
-    # branch a local explode+agg
-    from otel_arrow_adapter_spark.caching import owned_result
-
-    # localCheckpoint, not persist: the 9 count branches each re-analyze
-    # nested's plan per action; a flat LogicalRDD makes every branch's
-    # analysis constant-size (measured 6.1s -> 2.7s for this query)
-    nested = synthesize_metrics_nested(spark, n_metrics=300).localCheckpoint(eager=True)
-    records = encode_metrics(nested)
-    parts = [
-        df.agg(F.count(F.lit(1)).alias("n_rows")).select(F.lit(name).alias("record"), "n_rows")
-        for name, df in sorted(records.items())
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return owned_result(out, nested)
+    return _record_counts(encode_metrics, synthesize_metrics_nested(spark, n_metrics=300))
 
 
 # ---------------------------------------------------------------------------
@@ -771,19 +768,7 @@ def q_pipeline_trace_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     from otel_arrow_adapter_spark.datagen.traces import synthesize_traces_nested
     from otel_arrow_adapter_spark.operators.span_records import encode_traces
 
-    from otel_arrow_adapter_spark.caching import owned_result
-
-    # localCheckpoint, not persist — same rationale as metrics_dp_records
-    nested = synthesize_traces_nested(spark, n_spans=300).localCheckpoint(eager=True)
-    records = encode_traces(nested)
-    parts = [
-        df.agg(F.count(F.lit(1)).alias("n_rows")).select(F.lit(name).alias("record"), "n_rows")
-        for name, df in sorted(records.items())
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return owned_result(out, nested)
+    return _record_counts(encode_traces, synthesize_traces_nested(spark, n_spans=300))
 
 
 # ---------------------------------------------------------------------------
@@ -1110,13 +1095,11 @@ def q_doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     A~B and B~C must collapse to one kept doc even when A~C was never
     emitted. Oracle: DuckDB recursive CTE computing min reachable doc_id
     over the symmetric edge closure."""
-    from otel_arrow_adapter_spark.functions.dedup import dup_clusters, lsh_jaccard_pairs
+    from otel_arrow_adapter_spark.caching import materialize_scope
+    from otel_arrow_adapter_spark.functions.dedup import dup_clusters
 
-    dp = _docs_plus(spark, sf_dir)
-    pairs = lsh_jaccard_pairs(dp, threshold=0.5, num_hashes=8, bands=4)
-    out = dup_clusters(pairs)
-    pairs.unpersist()
-    return out
+    with materialize_scope() as m:
+        return dup_clusters(m.own(q_doc_jaccard_pairs(spark, sf_dir)))
 
 
 def q_doc_clean_corpus_near(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1128,26 +1111,22 @@ def q_doc_clean_corpus_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join against the drop list shuffles on doc_id — O(dup docs), the
     natural scale shape. Oracle: recursive-CTE closure + the shared
     quality/token scoring SQL."""
-    from otel_arrow_adapter_spark.functions.dedup import dup_clusters, lsh_jaccard_pairs
+    from otel_arrow_adapter_spark.caching import materialize_scope, owned_result
     from otel_arrow_adapter_spark.functions.text import quality_score, token_count
 
-    dp = _docs_plus(spark, sf_dir)
-    pairs = lsh_jaccard_pairs(dp, threshold=0.5, num_hashes=8, bands=4)
-    clusters = dup_clusters(pairs)
-    pairs.unpersist()
-    drop = clusters.where(~F.col("is_rep")).select("doc_id")
-    kept = dp.join(drop, "doc_id", "left_anti")
-    scored = kept.select(
-        "doc_id",
-        token_count(F.col("text")).alias("n_tokens"),
-        quality_score(F.col("text")).alias("q"),
-    )
-    out = scored.where(F.col("q") >= 0.5).select(
-        "doc_id", "n_tokens", F.round("q", 6).alias("quality")
-    )
-    from otel_arrow_adapter_spark.caching import owned_result
-
-    return owned_result(out, clusters)
+    with materialize_scope() as m:
+        clusters = m.own(q_doc_dup_clusters(spark, sf_dir))
+        drop = clusters.where(~F.col("is_rep")).select("doc_id")
+        kept = _docs_plus(spark, sf_dir).join(drop, "doc_id", "left_anti")
+        scored = kept.select(
+            "doc_id",
+            token_count(F.col("text")).alias("n_tokens"),
+            quality_score(F.col("text")).alias("q"),
+        )
+        out = scored.where(F.col("q") >= 0.5).select(
+            "doc_id", "n_tokens", F.round("q", 6).alias("quality")
+        )
+        return owned_result(out)
 
 
 def q_doc_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1378,15 +1357,13 @@ def q_emb_ivf_search_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     composed in one lineage. The oracle replays the training iterations
     (unnormalized: cosine ranking is scale-invariant) then the probe +
     exact rescore; final scores are computed from raw stored vectors."""
+    from otel_arrow_adapter_spark.caching import materialize_scope, owned_result
     from otel_arrow_adapter_spark.functions.similarity import ivf_search, kmeans_train
 
     e = _embeddings(spark, sf_dir)
-    from otel_arrow_adapter_spark.caching import owned_result
-
-    cents = kmeans_train(e, n_centroids=5, iters=2)
-    return owned_result(
-        ivf_search(e, query_vec_id=0, k=10, n_probe=2, centroids=cents), cents
-    )
+    with materialize_scope() as m:
+        cents = m.own(kmeans_train(e, n_centroids=5, iters=2))
+        return owned_result(ivf_search(e, query_vec_id=0, k=10, n_probe=2, centroids=cents))
 
 
 def q_emb_ann_pairs_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1410,17 +1387,12 @@ def q_emb_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     components — the same min-label propagation as doc_dup_clusters, shown
     generic over any pair finder. Oracle: recursive-CTE closure over the
     exact SQL replay of the banded candidate + cosine-verify pipeline."""
+    from otel_arrow_adapter_spark.caching import materialize_scope
     from otel_arrow_adapter_spark.functions.dedup import dup_clusters
-    from otel_arrow_adapter_spark.functions.similarity import ann_pairs_banded
 
-    e = _embeddings(spark, sf_dir).select("vec_id", "embedding")
-    dup = e.where(F.col("vec_id") % 5 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
-    )
-    pairs = ann_pairs_banded(e.unionByName(dup), threshold=0.9, m=16, n_tables=4).persist()
-    out = dup_clusters(pairs, a_col="vec_a", b_col="vec_b", id_name="vec_id")
-    pairs.unpersist()
-    return out
+    with materialize_scope() as m:
+        pairs = m.keep(q_emb_ann_pairs_banded(spark, sf_dir))
+        return dup_clusters(pairs, a_col="vec_a", b_col="vec_b", id_name="vec_id")
 
 
 def q_emb_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1443,18 +1415,18 @@ def q_emb_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         assign_to_centroids,
         kmeans_train,
     )
+    from otel_arrow_adapter_spark.caching import materialize_scope, owned_result
 
     e = _embeddings(spark, sf_dir)
-    from otel_arrow_adapter_spark.caching import owned_result
-
-    cents = kmeans_train(e, n_centroids=5, iters=2)
-    census = assign_to_centroids(e, cents).groupBy("centroid_id").agg(
-        F.count(F.lit(1)).alias("n_vecs")
-    )
-    out = census.join(
-        cents.select("centroid_id", F.size("c_vec").alias("dim")), "centroid_id"
-    ).select("centroid_id", "n_vecs", "dim")
-    return owned_result(out, cents)
+    with materialize_scope() as m:
+        cents = m.own(kmeans_train(e, n_centroids=5, iters=2))
+        census = assign_to_centroids(e, cents).groupBy("centroid_id").agg(
+            F.count(F.lit(1)).alias("n_vecs")
+        )
+        out = census.join(
+            cents.select("centroid_id", F.size("c_vec").alias("dim")), "centroid_id"
+        ).select("centroid_id", "n_vecs", "dim")
+        return owned_result(out)
 
 
 def q_pipeline_delta_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1959,13 +1931,12 @@ def q_doc_leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     components, then every cluster member follows the CLUSTER's md5 draw
     (split key = component min doc id) — near-duplicates can never
     straddle the split boundary. val_frac=0.2."""
-    from otel_arrow_adapter_spark.functions.dedup import leakage_free_split, lsh_jaccard_pairs
+    from otel_arrow_adapter_spark.caching import materialize_scope
+    from otel_arrow_adapter_spark.functions.dedup import leakage_free_split
 
-    dp = _docs_plus(spark, sf_dir)
-    pairs = lsh_jaccard_pairs(dp, threshold=0.5, num_hashes=8, bands=4)
-    out = leakage_free_split(dp, pairs, val_frac=0.2)
-    pairs.unpersist()
-    return out
+    with materialize_scope() as m:
+        pairs = m.own(q_doc_jaccard_pairs(spark, sf_dir))
+        return leakage_free_split(_docs_plus(spark, sf_dir), pairs, val_frac=0.2)
 
 
 def q_doc_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -11,8 +11,7 @@ frequencies, which is Heaps-sublinear in corpus size. Here that means:
   count is another map-side-combined groupBy, and the argmax merge is a
   1-row TakeOrderedAndProject collect (control-plane O(1) per round, like
   the pipeline's per-sink reads). Each round's re-segmented word table is
-  eagerly localCheckpoint-ed and the previous round's RDD freed — flat
-  plans at any merge count (the dup_clusters/kmeans_train lesson).
+  materialized and the previous round's freed.
 - ``bpe_apply``: Arrow-batched pandas UDF; merges ship in the closure as
   a rank dict, each batch tokenizes once, BPE-encodes only its UNIQUE
   words (memoized), then maps counts back — per-batch cost is bounded by
@@ -30,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..caching import free_local_checkpoint
+from ..caching import materialize_scope
 from .text import normalize_text, tokens
 
 
@@ -75,16 +74,15 @@ def bpe_train(
     ranked merge list (the tokenizer artifact, like ``pca_project``'s
     components a driver-side object whose size is independent of corpus
     size). Stops early when no pair reaches ``min_pair_count``."""
-    w = (
-        word_counts(docs, text_col)
-        # split only BETWEEN characters: not at start, and followed by one
-        # (a bare "(?!^)" also matches at end-of-string and appends a
-        # corrupting empty symbol)
-        .select(F.split(F.col("word"), r"(?!^)(?=.)").alias("syms"), "n")
-        .localCheckpoint(eager=True)
-    )
     merges: list[tuple[str, str]] = []
-    try:
+    with materialize_scope() as m:
+        w = m.keep(
+            word_counts(docs, text_col)
+            # split only BETWEEN characters: not at start, and followed by one
+            # (a bare "(?!^)" also matches at end-of-string and appends a
+            # corrupting empty symbol)
+            .select(F.split(F.col("word"), r"(?!^)(?=.)").alias("syms"), "n")
+        )
         for _ in range(n_merges):
             sz = F.size("syms")
             pairs = w.where(sz >= 2).select(
@@ -107,14 +105,12 @@ def bpe_train(
                 break
             a, b = best[0]["a"], best[0]["b"]
             merges.append((a, b))
-            nxt = w.mapInPandas(
+            nxt = m.keep(w.mapInPandas(
                 lambda it, a=a, b=b: _merge_pair_in_syms(it, a, b),
                 "syms array<string>, n long",
-            ).localCheckpoint(eager=True)
-            free_local_checkpoint(w)
+            ))
+            m.free(w)
             w = nxt
-    finally:
-        free_local_checkpoint(w)
     return merges
 
 

@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from ..caching import free_local_checkpoint, is_materialized, owned_result
+from ..caching import materialize_scope, owned_result
 from .text import fingerprint, shingles
 
 DEFAULT_NUM_HASHES = 8
@@ -89,7 +89,7 @@ def minhash_signature(
     a single map-side-combined shuffle; the aggregation also acts as a
     pipeline breaker so downstream banding doesn't re-expand the shingle
     expressions (projection collapse would otherwise duplicate them).
-    Pass a (persisted) ``shingles`` table to share one shingling pass with
+    Pass a (materialized) ``shingles`` table to share one shingling pass with
     other consumers (jaccard verify) — shingling is the expensive half."""
     sh = doc_shingles(docs, k) if shingles is None else shingles
     aggs = []
@@ -134,21 +134,20 @@ def lsh_candidates(
 
     A pair is a candidate if ANY band matches (standard LSH OR-construction).
     """
-    stacked = banded_buckets(signatures, num_hashes, bands)
-    # materialize before the self-join: both sides reuse ONE evaluation of
-    # the signature lineage instead of recomputing it (at scale: one scan,
-    # not two — and Catalyst's join-key null filters would otherwise be
-    # pushed into duplicated upstream subtrees)
-    stacked = stacked.persist()
-    a, b = stacked.alias("a"), stacked.alias("b")
-    pairs = (
-        a.join(b, on=["band", "bucket"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    # candidate pairs are the keeper; the banded long table is scaffolding
-    return owned_result(pairs, stacked)
+    with materialize_scope() as m:
+        # materialize before the self-join: both sides reuse ONE evaluation
+        # of the signature lineage instead of recomputing it (at scale: one
+        # scan, not two — and Catalyst's join-key null filters would
+        # otherwise be pushed into duplicated upstream subtrees)
+        stacked = m.keep(banded_buckets(signatures, num_hashes, bands))
+        a, b = stacked.alias("a"), stacked.alias("b")
+        pairs = (
+            a.join(b, on=["band", "bucket"])
+            .where(F.col("a.doc_id") < F.col("b.doc_id"))
+            .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+            .distinct()
+        )
+        return owned_result(pairs)
 
 
 def jaccard_pairs(
@@ -175,76 +174,74 @@ def jaccard_pairs(
     (bounded-length) arrays, and it measured ~1.4x faster end-to-end at
     sf0.1 (guide §2.3/§2.4: fewer shuffled bytes, one less shuffle).
 
-    Cache ownership: only caches THIS function creates are released when
-    the verified pairs materialize. Caller-supplied ``shingles`` /
-    ``candidates`` frames are never persisted or unpersisted here — a
-    caller sharing one shingle table across several calls keeps its cache
-    (cache the passed frames yourself; an uncached ``shingles`` with no
-    ``candidates`` is re-evaluated per use)."""
-    owned: list[DataFrame] = []
+    Ownership: only what THIS function materializes is released when the
+    verified pairs materialize. Caller-supplied ``shingles`` /
+    ``candidates`` frames that are already materialized are used as they
+    are and never released here — a caller sharing one shingle table
+    across several calls keeps it (materialize the passed frames yourself;
+    an unmaterialized ``shingles`` with no ``candidates`` is re-evaluated
+    per use)."""
     sh = doc_shingles(docs, k, distinct=False) if shingles is None else shingles
-    if candidates is not None:
-        if not is_materialized(candidates):
-            candidates = candidates.persist()  # used 3x: doc-id set + 2 pair joins
-            owned.append(candidates)
-        cand_docs = (
-            candidates.select(F.col("doc_a").alias("doc_id"))
-            .unionByName(candidates.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
+    with materialize_scope() as m:
+        if candidates is not None:
+            candidates = m.keep(candidates)  # used 3x: doc-id set + 2 pair joins
+            cand_docs = (
+                candidates.select(F.col("doc_a").alias("doc_id"))
+                .unionByName(candidates.select(F.col("doc_b").alias("doc_id")))
+                .distinct()
+            )
+            sets = (
+                sh.join(cand_docs, on="doc_id", how="left_semi")
+                .groupBy("doc_id")
+                .agg(F.collect_set("shingle").alias("_sh"))
+            )
+            out = (
+                candidates.join(
+                    sets.select(F.col("doc_id").alias("doc_a"), F.col("_sh").alias("_sh_a")),
+                    "doc_a",
+                )
+                .join(
+                    sets.select(F.col("doc_id").alias("doc_b"), F.col("_sh").alias("_sh_b")),
+                    "doc_b",
+                )
+                .withColumn("n_common", F.size(F.array_intersect("_sh_a", "_sh_b")))
+                .withColumn(
+                    "jaccard",
+                    F.round(
+                        F.col("n_common")
+                        / (F.size("_sh_a") + F.size("_sh_b") - F.col("n_common")),
+                        6,
+                    ),
+                )
+                .where(F.col("jaccard") >= threshold)
+                .select("doc_a", "doc_b", "jaccard")
+            )
+            return owned_result(out)
+        # No candidates: the exact inverted-index path (test/ground-truth scale).
+        # distinct() is idempotent, so a shared non-distinct shingle table is
+        # handled identically to a pre-distinct one.
+        sh = m.keep(sh.distinct())  # used 3x: both join sides + sizes
+        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+        a, b = sh.alias("a"), sh.alias("b")
+        common = (
+            a.join(b, on="shingle")
+            .where(F.col("a.doc_id") < F.col("b.doc_id"))
+            .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+            .agg(F.count(F.lit(1)).alias("n_common"))
         )
-        sets = (
-            sh.join(cand_docs, on="doc_id", how="left_semi")
-            .groupBy("doc_id")
-            .agg(F.collect_set("shingle").alias("_sh"))
-        )
+        sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
+        sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
         out = (
-            candidates.join(
-                sets.select(F.col("doc_id").alias("doc_a"), F.col("_sh").alias("_sh_a")),
-                "doc_a",
-            )
-            .join(
-                sets.select(F.col("doc_id").alias("doc_b"), F.col("_sh").alias("_sh_b")),
-                "doc_b",
-            )
-            .withColumn("n_common", F.size(F.array_intersect("_sh_a", "_sh_b")))
+            common.join(sa, "doc_a")
+            .join(sb, "doc_b")
             .withColumn(
                 "jaccard",
-                F.round(
-                    F.col("n_common")
-                    / (F.size("_sh_a") + F.size("_sh_b") - F.col("n_common")),
-                    6,
-                ),
+                F.round(F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6),
             )
             .where(F.col("jaccard") >= threshold)
             .select("doc_a", "doc_b", "jaccard")
         )
-        return owned_result(out, *owned)
-    # No candidates: the exact inverted-index path (test/ground-truth scale).
-    # distinct() is idempotent, so a shared non-distinct shingle table is
-    # handled identically to a pre-distinct one.
-    sh = sh.distinct().persist()  # used 3x: both join sides + sizes
-    owned.append(sh)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    common = (
-        a.join(b, on="shingle")
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    out = (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-    return owned_result(out, *owned)
+        return owned_result(out)
 
 
 def lsh_jaccard_pairs(
@@ -260,17 +257,13 @@ def lsh_jaccard_pairs(
     non-distinct, because minhash's min() is duplicate-insensitive and the
     set-based verify dedups via collect_set, so the corpus-wide
     (doc_id, shingle) distinct shuffle is skipped (guide §2.4). The shingle
-    and candidate caches are freed before returning, on error too; the
+    table and the candidates are freed before returning, on error too; the
     caller owns the materialized pairs."""
-    sh = doc_shingles(docs, k, distinct=False).persist()
-    try:
-        cand = lsh_candidates(minhash_signature(docs, num_hashes, k, shingles=sh), num_hashes, bands)
-        try:
-            return jaccard_pairs(docs, threshold, k, candidates=cand, shingles=sh)
-        finally:
-            cand.unpersist()
-    finally:
-        sh.unpersist()
+    with materialize_scope() as m:
+        sh = m.keep(doc_shingles(docs, k, distinct=False))
+        sig = minhash_signature(docs, num_hashes, k, shingles=sh)
+        cand = m.own(lsh_candidates(sig, num_hashes, bands))
+        return jaccard_pairs(docs, threshold, k, candidates=cand, shingles=sh)
 
 
 def incremental_dedup(
@@ -300,111 +293,98 @@ def incremental_dedup(
     Here both sides derive inline from the given frames; nothing below is
     pair-quadratic — the only self-comparison is the fingerprint
     keep-first groupBy."""
-    # fingerprints + the exact/batch-dup verdicts are each referenced by
-    # several downstream materializations (survivors' anti-joins AND the
-    # final classification join). Un-checkpointed, every reference
-    # re-derived the whole batch union (4 scans of the source) and re-ran
-    # the md5 fingerprint over the FULL text — the expensive per-row op of
-    # the exact stage — 3-4x per run. The verdict frames are O(batch)
-    # doc_id rows; checkpoint them once and every consumer reads a flat
-    # RDD (guide §1.2 via the same mechanism as caching.owned_result).
-    fp_b = batch.select(
-        "doc_id", fingerprint(F.col(text_col)).alias("fp")
-    ).localCheckpoint(eager=True)
-    fp_i = index.select(fingerprint(F.col(text_col)).alias("fp")).distinct()
-    exact = (
-        fp_b.join(fp_i, "fp", "left_semi")
-        .select("doc_id")
-        .withColumn("r_exact", F.lit(True))
-        .localCheckpoint(eager=True)
-    )
-    keeper = fp_b.groupBy("fp").agg(F.min("doc_id").alias("_keeper"))
-    bdup = (
-        fp_b.join(keeper, "fp")
-        .where(F.col("doc_id") != F.col("_keeper"))
-        .select("doc_id")
-        .withColumn("r_batch", F.lit(True))
-        .localCheckpoint(eager=True)
-    )
-    # near-dup vs the index — computed only for docs that SURVIVED the
-    # exact stages (classic order: exact first, near on survivors). This
-    # is also the hot-bucket guard: a text repeated 10^4 times in the
-    # increment contributes ONE survivor to the band join instead of 10^4
-    # docs sharing every band bucket and shingle. (The index side is the
-    # already-deduped corpus by construction — one doc per fingerprint.)
-    survivors = (
-        batch.join(exact.select("doc_id"), "doc_id", "left_anti")
-        .join(bdup.select("doc_id"), "doc_id", "left_anti")
-    )
-    # ONE shingle pass per side, shared by minhash AND the Jaccard verify
-    # (shingling is the expensive half — same sharing contract as
-    # minhash_signature's ``shingles`` parameter). Non-distinct: minhash's
-    # min() is duplicate-insensitive and the set verify dedups via
-    # collect_set, so the corpus-wide (doc_id, shingle) distinct shuffle
-    # is skipped entirely (guide §2.4).
-    # localCheckpoint (eager), not persist: each is consumed by several
-    # downstream materializations whose plans would otherwise re-analyze
-    # the whole upstream per action (see caching.owned_result); the
-    # truncated frames keep every later analysis constant-size
-    sh_surv = doc_shingles(survivors, k, text_col, distinct=False).localCheckpoint(eager=True)
-    sh_idx = doc_shingles(index, k, text_col, distinct=False).localCheckpoint(eager=True)
-    bb = banded_buckets(
-        minhash_signature(survivors, num_hashes, k, shingles=sh_surv), num_hashes, bands
-    )
-    bi = banded_buckets(
-        minhash_signature(index, num_hashes, k, shingles=sh_idx), num_hashes, bands
-    ).select(F.col("doc_id").alias("index_doc"), "band", "bucket")
-    cand = (
-        bb.join(bi, ["band", "bucket"]).select("doc_id", "index_doc").distinct()
-        .localCheckpoint(eager=True)
-    )
-    # Jaccard verify: one distinct shingle SET per candidate doc (both
-    # sides), then a map-side array_intersect per candidate pair — no
-    # shingle-grain join exists here at all (the former inverted-index
-    # form was quadratic in hot-shingle buckets; see jaccard_pairs)
-    sets_b = (
-        sh_surv.join(cand.select("doc_id").distinct(), "doc_id", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.collect_set("shingle").alias("_sh_b"))
-    )
-    sets_i = (
-        sh_idx.join(
-            cand.select(F.col("index_doc").alias("doc_id")).distinct(), "doc_id", "left_semi"
+    with materialize_scope() as m:
+        # fingerprints + the exact/batch-dup verdicts are each referenced by
+        # several downstream materializations (survivors' anti-joins AND the
+        # final classification join). Unmaterialized, every reference
+        # re-derived the whole batch union (4 scans of the source) and re-ran
+        # the md5 fingerprint over the FULL text — the expensive per-row op of
+        # the exact stage — 3-4x per run. The verdict frames are O(batch)
+        # doc_id rows; materialize them once.
+        fp_b = m.keep(batch.select("doc_id", fingerprint(F.col(text_col)).alias("fp")))
+        fp_i = index.select(fingerprint(F.col(text_col)).alias("fp")).distinct()
+        exact = m.keep(
+            fp_b.join(fp_i, "fp", "left_semi").select("doc_id").withColumn("r_exact", F.lit(True))
         )
-        .groupBy("doc_id")
-        .agg(F.collect_set("shingle").alias("_sh_i"))
-        .select(F.col("doc_id").alias("index_doc"), "_sh_i")
-    )
-    near = (
-        cand.join(sets_b, "doc_id")
-        .join(sets_i, "index_doc")
-        .withColumn("n_common", F.size(F.array_intersect("_sh_b", "_sh_i")))
-        .where(
-            F.round(
-                F.col("n_common")
-                / (F.size("_sh_b") + F.size("_sh_i") - F.col("n_common")),
-                6,
+        keeper = fp_b.groupBy("fp").agg(F.min("doc_id").alias("_keeper"))
+        bdup = m.keep(
+            fp_b.join(keeper, "fp")
+            .where(F.col("doc_id") != F.col("_keeper"))
+            .select("doc_id")
+            .withColumn("r_batch", F.lit(True))
+        )
+        # near-dup vs the index — computed only for docs that SURVIVED the
+        # exact stages (classic order: exact first, near on survivors). This
+        # is also the hot-bucket guard: a text repeated 10^4 times in the
+        # increment contributes ONE survivor to the band join instead of 10^4
+        # docs sharing every band bucket and shingle. (The index side is the
+        # already-deduped corpus by construction — one doc per fingerprint.)
+        survivors = (
+            batch.join(exact.select("doc_id"), "doc_id", "left_anti")
+            .join(bdup.select("doc_id"), "doc_id", "left_anti")
+        )
+        # ONE shingle pass per side, shared by minhash AND the Jaccard verify
+        # (shingling is the expensive half — same sharing contract as
+        # minhash_signature's ``shingles`` parameter). Non-distinct: minhash's
+        # min() is duplicate-insensitive and the set verify dedups via
+        # collect_set, so the corpus-wide (doc_id, shingle) distinct shuffle
+        # is skipped entirely (guide §2.4).
+        sh_surv = m.keep(doc_shingles(survivors, k, text_col, distinct=False))
+        sh_idx = m.keep(doc_shingles(index, k, text_col, distinct=False))
+        bb = banded_buckets(
+            minhash_signature(survivors, num_hashes, k, shingles=sh_surv), num_hashes, bands
+        )
+        bi = banded_buckets(
+            minhash_signature(index, num_hashes, k, shingles=sh_idx), num_hashes, bands
+        ).select(F.col("doc_id").alias("index_doc"), "band", "bucket")
+        cand = m.keep(bb.join(bi, ["band", "bucket"]).select("doc_id", "index_doc").distinct())
+        # Jaccard verify: one distinct shingle SET per candidate doc (both
+        # sides), then a map-side array_intersect per candidate pair — no
+        # shingle-grain join exists here at all (the former inverted-index
+        # form was quadratic in hot-shingle buckets; see jaccard_pairs)
+        sets_b = (
+            sh_surv.join(cand.select("doc_id").distinct(), "doc_id", "left_semi")
+            .groupBy("doc_id")
+            .agg(F.collect_set("shingle").alias("_sh_b"))
+        )
+        sets_i = (
+            sh_idx.join(
+                cand.select(F.col("index_doc").alias("doc_id")).distinct(), "doc_id", "left_semi"
             )
-            >= threshold
+            .groupBy("doc_id")
+            .agg(F.collect_set("shingle").alias("_sh_i"))
+            .select(F.col("doc_id").alias("index_doc"), "_sh_i")
         )
-        .select("doc_id")
-        .distinct()
-        .withColumn("r_near", F.lit(True))
-    )
-    reason = (
-        F.when(F.col("r_exact"), F.lit("exact_dup"))
-        .when(F.col("r_batch"), F.lit("batch_dup"))
-        .when(F.col("r_near"), F.lit("near_dup"))
-        .otherwise(F.lit("new"))
-    )
-    out = (
-        batch.select("doc_id")
-        .join(exact, "doc_id", "left")
-        .join(bdup, "doc_id", "left")
-        .join(near, "doc_id", "left")
-        .select("doc_id", reason.alias("reason"), (reason == "new").alias("keep"))
-    )
-    return owned_result(out, cand, sh_surv, sh_idx, fp_b, exact, bdup)
+        near = (
+            cand.join(sets_b, "doc_id")
+            .join(sets_i, "index_doc")
+            .withColumn("n_common", F.size(F.array_intersect("_sh_b", "_sh_i")))
+            .where(
+                F.round(
+                    F.col("n_common")
+                    / (F.size("_sh_b") + F.size("_sh_i") - F.col("n_common")),
+                    6,
+                )
+                >= threshold
+            )
+            .select("doc_id")
+            .distinct()
+            .withColumn("r_near", F.lit(True))
+        )
+        reason = (
+            F.when(F.col("r_exact"), F.lit("exact_dup"))
+            .when(F.col("r_batch"), F.lit("batch_dup"))
+            .when(F.col("r_near"), F.lit("near_dup"))
+            .otherwise(F.lit("new"))
+        )
+        out = (
+            batch.select("doc_id")
+            .join(exact, "doc_id", "left")
+            .join(bdup, "doc_id", "left")
+            .join(near, "doc_id", "left")
+            .select("doc_id", reason.alias("reason"), (reason == "new").alias("keep"))
+        )
+        return owned_result(out)
 
 
 def dup_clusters(
@@ -426,32 +406,16 @@ def dup_clusters(
 
     Shape per round: one edges⋈labels join + one groupBy(dst).min —
     both shuffle on doc_id, so AQE coalesces them into the same exchange
-    footprint; labels are checkpointed per round and the previous round's
-    checkpoint released (resident state = 2 x one row per doc, same
+    footprint; labels are materialized per round and the previous round's
+    released (resident state = edges + 2 x one row per doc, same
     discipline as kmeans_train).  Convergence = a changed-label count per
     round, observed (``pyspark.sql.Observation``) on the round's own
-    checkpoint job — no extra count job — bounded by ``max_iters``.
+    materialization job — no extra count job — bounded by ``max_iters``.
     Rounds needed = component diameter: near-dup clusters are dense and
     shallow (a dup group is near-clique), so 3-5 rounds in practice; for
     adversarially long chain graphs the known upgrade is
     large-star/small-star path doubling (O(log d)) — not worth its extra
     shuffles for dedup workloads.
-
-    Lineage discipline — the part persist() alone cannot give you: each
-    round's labels frame is ``localCheckpoint(eager=True)``-truncated, so
-    every iteration starts from a flat LogicalRDD instead of a plan that
-    nests the previous round's.  persist() truncates EXECUTION but not the
-    plan tree; with plain caching the per-round plan nests one
-    InMemoryRelation-of-AdaptiveSparkPlan deeper each round and plan
-    rendering for the SQL listener grows superlinearly — measured on a
-    13-node chain: round cost climbs 1.1 s → 9.7 s by round 10
-    (generateTreeString dominates; at cluster scale this is a driver OOM).
-    With checkpoint truncation the same chain runs every round flat
-    (~0.6 s) and the final plan is a constant ~44 chars.  The checkpointed
-    RDD lives at RDD level, invisible to Dataset.unpersist — each round
-    frees the previous round's via the LogicalRDD handle
-    (``free_local_checkpoint``), keeping resident state = edges + 2×one
-    row per doc, same discipline as kmeans_train.
     """
     sym = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")).unionByName(
         pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
@@ -461,59 +425,52 @@ def dup_clusters(
     # sym is symmetric, so its src column already covers every node — the
     # self-loops derive from sym directly and the final distinct dedups
     # them, skipping a separate nodes-distinct shuffle (guide §2.4).
-    # localCheckpoint, NOT persist: a persisted edges frame still EMBEDS
-    # the whole pair-finder plan (LSH -> Jaccard, hundreds of nodes), and
-    # every round's query re-analyzes that tree even though execution hits
-    # the cache — measured ~8 s of pure Catalyst planning per round at
-    # sf0.1 vs <1 s once the lineage is cut to a flat LogicalRDD.
-    edges = (
-        sym.unionByName(sym.select(F.col("src"), F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # initial labels derive from the FLAT edges (self-loop rows are exactly
-    # the node set), so no plan ever references the pair finder again; no
-    # checkpoint of its own needed — round 0's checkpoint truncates it
-    labels = edges.where(F.col("src") == F.col("dst")).select(
-        F.col("src").alias("doc_id"), F.col("src").alias("label")
-    )
+    with materialize_scope() as m:
+        edges = m.keep(
+            sym.unionByName(sym.select(F.col("src"), F.col("src").alias("dst"))).distinct()
+        )
+        # initial labels derive from the FLAT edges (self-loop rows are exactly
+        # the node set), so no plan ever references the pair finder again; not
+        # materialized itself — round 0's materialization truncates it
+        labels = edges.where(F.col("src") == F.col("dst")).select(
+            F.col("src").alias("doc_id"), F.col("src").alias("label")
+        )
 
-    def _propagate(lbl: DataFrame) -> DataFrame:
-        # The self-loop row (src==dst) carries dst's PREVIOUS label through
-        # the same shuffle, so one groupBy yields both the new label and the
-        # convergence flag — no separate labels⋈labels diff join per round.
-        return (
-            edges.join(lbl, edges.src == lbl.doc_id)
-            .groupBy(F.col("dst").alias("doc_id"))
-            .agg(
-                F.min("label").alias("label"),
-                F.min(F.when(F.col("src") == F.col("dst"), F.col("label"))).alias("_prev"),
+        def _propagate(lbl: DataFrame) -> DataFrame:
+            # The self-loop row (src==dst) carries dst's PREVIOUS label through
+            # the same shuffle, so one groupBy yields both the new label and the
+            # convergence flag — no separate labels⋈labels diff join per round.
+            return (
+                edges.join(lbl, edges.src == lbl.doc_id)
+                .groupBy(F.col("dst").alias("doc_id"))
+                .agg(
+                    F.min("label").alias("label"),
+                    F.min(F.when(F.col("src") == F.col("dst"), F.col("label"))).alias("_prev"),
+                )
             )
-        )
 
-    # Two propagation steps per materialization: the shuffles per step are
-    # inherent (they ARE the label propagation), but checkpoint + count jobs
-    # are pure per-round overhead — halved by checking convergence every
-    # second step. Stopping when the LAST step changed nothing is exact:
-    # min-label propagation is monotone, a no-change step is a fixed point.
-    for _ in range(max(1, max_iters // 2)):
-        obs = Observation()
-        nxt = (
-            _propagate(_propagate(labels))
-            .observe(obs, F.count(F.when(F.col("label") != F.col("_prev"), 1)).alias("changed"))
-            .localCheckpoint(eager=True)
+        # Two propagation steps per materialization: the shuffles per step are
+        # inherent (they ARE the label propagation), but materialization jobs
+        # are pure per-round overhead — halved by checking convergence every
+        # second step. Stopping when the LAST step changed nothing is exact:
+        # min-label propagation is monotone, a no-change step is a fixed point.
+        for _ in range(max(1, max_iters // 2)):
+            obs = Observation()
+            nxt = m.keep(
+                _propagate(_propagate(labels))
+                .observe(obs, F.count(F.when(F.col("label") != F.col("_prev"), 1)).alias("changed"))
+            )
+            m.free(labels)
+            labels = nxt
+            if obs.get["changed"] == 0:
+                break
+        out = labels.select(
+            F.col("doc_id").alias(id_name),
+            F.col("label").alias("cluster_id"),
+            F.count(F.lit(1)).over(Window.partitionBy("label")).alias("cluster_size"),
+            (F.col("doc_id") == F.col("label")).alias("is_rep"),
         )
-        free_local_checkpoint(labels)
-        labels = nxt
-        if obs.get["changed"] == 0:
-            break
-    out = labels.select(
-        F.col("doc_id").alias(id_name),
-        F.col("label").alias("cluster_id"),
-        F.count(F.lit(1)).over(Window.partitionBy("label")).alias("cluster_size"),
-        (F.col("doc_id") == F.col("label")).alias("is_rep"),
-    )
-    return owned_result(out, edges, labels)
+        return owned_result(out)
 
 
 def leakage_free_split(
@@ -537,21 +494,22 @@ def leakage_free_split(
     pure md5 expression (reproducible across engines and re-runs, no RNG
     state). Returns (doc_id, split_key, split), materialized: the caller
     owns it and calls ``unpersist()`` when done."""
-    clusters = dup_clusters(pairs, id_name=id_col)
-    joined = docs.select(id_col).join(clusters.select(id_col, "cluster_id"), id_col, "left")
     key = F.coalesce(F.col("cluster_id"), F.col(id_col))
     u = F.pmod(
         F.conv(F.substring(F.md5(key.cast("string")), 1, 12), 16, 10).cast("long"),
         F.lit(denom),
     )
-    out = joined.select(
-        id_col,
-        key.alias("split_key"),
-        F.when(u < int(val_frac * denom), F.lit("val"))
-        .otherwise(F.lit("train"))
-        .alias("split"),
-    )
-    return owned_result(out, clusters)
+    with materialize_scope() as m:
+        clusters = m.own(dup_clusters(pairs, id_name=id_col))
+        joined = docs.select(id_col).join(clusters.select(id_col, "cluster_id"), id_col, "left")
+        out = joined.select(
+            id_col,
+            key.alias("split_key"),
+            F.when(u < int(val_frac * denom), F.lit("val"))
+            .otherwise(F.lit("train"))
+            .alias("split"),
+        )
+        return owned_result(out)
 
 
 
@@ -617,50 +575,51 @@ def simhash_near_dups(
     than the cap (the standard super-frequent-block guard; recall for
     pairs ONLY covered by a dropped block is sacrificed, exact-duplicate
     pairs still surface through their other 3 chunks unless all are hot)."""
-    # persist: the 16-byte-per-doc signature table is the thing you'd keep
-    # in cluster memory at 100 TB; without it the self-join evaluates the
-    # pandas UDF lineage once per side per union branch (measured 12x evals
-    # -> 18s instead of ~2s at sf0.1)
-    sig = simhash(docs).persist()
-    chunks = sig.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("chunk_idx"),
-                    F.shiftrightunsigned(F.col("simhash"), i * 16).bitwiseAND(F.lit(0xFFFF)).alias("chunk"),
-                )
-                for i in range(4)
-            ])
-        ).alias("c"),
-    ).select("doc_id", "simhash", "c.chunk_idx", "c.chunk")
-    if max_bucket_size is not None:
-        small = (
-            chunks.groupBy("chunk_idx", "chunk")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") <= max_bucket_size)
-            .select("chunk_idx", "chunk")
+    # materialize: the 16-byte-per-doc signature table is the thing you'd
+    # keep in cluster memory at 100 TB; without it the self-join evaluates
+    # the pandas UDF lineage once per side per union branch (measured 12x
+    # evals -> 18s instead of ~2s at sf0.1)
+    with materialize_scope() as m:
+        sig = m.keep(simhash(docs))
+        chunks = sig.select(
+            "doc_id",
+            "simhash",
+            F.explode(
+                F.array(*[
+                    F.struct(
+                        F.lit(i).alias("chunk_idx"),
+                        F.shiftrightunsigned(F.col("simhash"), i * 16).bitwiseAND(F.lit(0xFFFF)).alias("chunk"),
+                    )
+                    for i in range(4)
+                ])
+            ).alias("c"),
+        ).select("doc_id", "simhash", "c.chunk_idx", "c.chunk")
+        if max_bucket_size is not None:
+            small = (
+                chunks.groupBy("chunk_idx", "chunk")
+                .agg(F.count(F.lit(1)).alias("_n"))
+                .where(F.col("_n") <= max_bucket_size)
+                .select("chunk_idx", "chunk")
+            )
+            chunks = chunks.join(small, ["chunk_idx", "chunk"], "left_semi")
+        a, b = chunks.alias("a"), chunks.alias("b")
+        cand = (
+            a.join(b, on=["chunk_idx", "chunk"])
+            .where(F.col("a.doc_id") < F.col("b.doc_id"))
+            .select(
+                F.col("a.doc_id").alias("doc_a"),
+                F.col("b.doc_id").alias("doc_b"),
+                F.col("a.simhash").alias("sig_a"),
+                F.col("b.simhash").alias("sig_b"),
+            )
+            .distinct()
         )
-        chunks = chunks.join(small, ["chunk_idx", "chunk"], "left_semi")
-    a, b = chunks.alias("a"), chunks.alias("b")
-    cand = (
-        a.join(b, on=["chunk_idx", "chunk"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sig_a"),
-            F.col("b.simhash").alias("sig_b"),
+        out = (
+            cand.withColumn("hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))))
+            .where(F.col("hamming") <= max_hamming)
+            .select("doc_a", "doc_b", "hamming")
         )
-        .distinct()
-    )
-    out = (
-        cand.withColumn("hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))))
-        .where(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
-    )
-    return owned_result(out, sig)
+        return owned_result(out)
 
 
 def dup_spans(

@@ -246,56 +246,47 @@ def kmeans_train(
     Per iteration: broadcast k centroids, argmax-assign (one shuffle on
     vec_id), recompute means by (centroid, dim) — posexplode to dim grain
     so the mean is a plain map-side-combined agg, never a whole-vector
-    reduce on one task. Each iteration's centroids are eagerly
-    ``localCheckpoint``-ed (the same one k-row job the next iteration's
-    broadcast would trigger anyway) and the PREVIOUS iteration's RDD is
-    freed immediately: resident footprint is 2 x k x dim instead of
-    iters x k x dim, with no driver-side collect of vector data.
-    Checkpoint, not persist: a persisted frame still EMBEDS the previous
-    iteration's plan, so round plans (and Catalyst re-analysis cost) grow
-    with iteration depth — the same pathology fixed in dup_clusters;
-    truncation keeps every round's plan flat. The caller owns the
-    returned (persisted, flat-lineage) centroids and should unpersist
-    when done."""
-    from ..caching import free_local_checkpoint
+    reduce on one task. Each iteration's centroids are materialized (the
+    same one k-row job the next iteration's broadcast would trigger
+    anyway) and the PREVIOUS iteration's freed immediately: resident
+    footprint is 2 x k x dim instead of iters x k x dim, with no
+    driver-side collect of vector data. The last iteration's centroids
+    are the caller's owned result; ``unpersist()`` them when done."""
+    from ..caching import materialize_scope, owned_result
+
     cents = seed_centroids(embeddings, n_centroids, vec_col)
     # normalize so dot-product ranking == cosine ranking
     cents = cents.select(
         "centroid_id", F.transform("c_vec", lambda x: x / norm(F.col("c_vec"))).alias("c_vec")
     )
-    prev: DataFrame | None = None
-    for _ in range(iters):
-        assigned = assign_to_centroids(embeddings, cents, vec_col).select(
-            "vec_id", "centroid_id"
-        )
-        by_dim = (
-            embeddings.join(assigned, "vec_id")
-            .select("centroid_id", F.posexplode(vec_col).alias("dim", "x"))
-            .groupBy("centroid_id", "dim")
-            .agg(F.avg("x").alias("m"))
-        )
-        new_cents = (
-            by_dim.groupBy("centroid_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "m"))), lambda s: s["m"]
-                ).alias("c_vec")
+    with materialize_scope() as m:
+        for i in range(iters):
+            assigned = assign_to_centroids(embeddings, cents, vec_col).select(
+                "vec_id", "centroid_id"
             )
-        )
-        new_cents = new_cents.select(
-            "centroid_id",
-            F.transform("c_vec", lambda x: x / norm(F.col("c_vec"))).alias("c_vec"),
-        )
-        cents = new_cents.localCheckpoint(eager=True)
-        if prev is not None:
-            free_local_checkpoint(prev)
-        prev = cents
-    # hand the caller a Dataset-level cache (unpersist() works on it) and
-    # free the final checkpoint's RDD-level twin
-    out = cents.persist()
-    out.count()
-    free_local_checkpoint(cents)
-    return out
+            by_dim = (
+                embeddings.join(assigned, "vec_id")
+                .select("centroid_id", F.posexplode(vec_col).alias("dim", "x"))
+                .groupBy("centroid_id", "dim")
+                .agg(F.avg("x").alias("m"))
+            )
+            new_cents = (
+                by_dim.groupBy("centroid_id")
+                .agg(
+                    F.transform(
+                        F.array_sort(F.collect_list(F.struct("dim", "m"))), lambda s: s["m"]
+                    ).alias("c_vec")
+                )
+            )
+            new_cents = new_cents.select(
+                "centroid_id",
+                F.transform("c_vec", lambda x: x / norm(F.col("c_vec"))).alias("c_vec"),
+            )
+            if i + 1 < iters:  # the last round becomes the caller's result
+                new_cents = m.keep(new_cents)
+                m.free(cents)
+            cents = new_cents
+        return owned_result(cents)
 
 
 def kmeans_inertia(
@@ -863,51 +854,46 @@ def pq_train_codebooks(
     dim) grain via posexplode + avg — the same never-a-whole-vector-reduce
     shape as :func:`kmeans_train`. Empty codes keep their previous
     codeword (left-join coalesce), so the codebook stays exactly m x k.
-    Rounds are ``localCheckpoint``-ed flat (persist would re-analyze the
-    growing plan every round — see kmeans_train's docstring); the caller
-    owns the returned persisted frame."""
-    from ..caching import free_local_checkpoint
+    Each round is materialized and the previous one freed; the last
+    round's codebooks are the caller's owned result (``unpersist()``
+    them when done)."""
+    from ..caching import materialize_scope, owned_result
 
     sv = pq_subvectors(embeddings, m, dim, vec_col)
     cb = pq_codebooks(embeddings, m, n_codes, dim, vec_col)
-    prev: DataFrame | None = None
-    for _ in range(iters):
-        scored = sv.join(F.broadcast(cb), "sub").select(
-            "vec_id",
-            "sub",
-            "code_id",
-            F.round(_l2sq(F.col("subvec"), F.col("c_vec")), 6).alias("dist"),
-        )
-        best = scored.groupBy("vec_id", "sub").agg(
-            F.min(F.struct("dist", "code_id")).alias("_b")
-        )
-        assigned = best.select(
-            "vec_id", "sub", F.col("_b.code_id").alias("code_id")
-        )
-        by_dim = (
-            sv.join(assigned, ["vec_id", "sub"])
-            .select("sub", "code_id", F.posexplode("subvec").alias("d", "x"))
-            .groupBy("sub", "code_id", "d")
-            .agg(F.avg("x").alias("cm"))
-        )
-        means = by_dim.groupBy("sub", "code_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("d", "cm"))), lambda s: s["cm"]
-            ).alias("new_vec")
-        )
-        new_cb = (
-            cb.join(means, ["sub", "code_id"], "left")
-            .select("sub", "code_id", F.coalesce("new_vec", "c_vec").alias("c_vec"))
-            .localCheckpoint(eager=True)
-        )
-        if prev is not None:
-            free_local_checkpoint(prev)
-        prev = new_cb
-        cb = new_cb
-    out = cb.persist()
-    out.count()
-    free_local_checkpoint(cb)
-    return out
+    with materialize_scope() as scope:
+        for i in range(iters):
+            scored = sv.join(F.broadcast(cb), "sub").select(
+                "vec_id",
+                "sub",
+                "code_id",
+                F.round(_l2sq(F.col("subvec"), F.col("c_vec")), 6).alias("dist"),
+            )
+            best = scored.groupBy("vec_id", "sub").agg(
+                F.min(F.struct("dist", "code_id")).alias("_b")
+            )
+            assigned = best.select(
+                "vec_id", "sub", F.col("_b.code_id").alias("code_id")
+            )
+            by_dim = (
+                sv.join(assigned, ["vec_id", "sub"])
+                .select("sub", "code_id", F.posexplode("subvec").alias("d", "x"))
+                .groupBy("sub", "code_id", "d")
+                .agg(F.avg("x").alias("cm"))
+            )
+            means = by_dim.groupBy("sub", "code_id").agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("d", "cm"))), lambda s: s["cm"]
+                ).alias("new_vec")
+            )
+            new_cb = cb.join(means, ["sub", "code_id"], "left").select(
+                "sub", "code_id", F.coalesce("new_vec", "c_vec").alias("c_vec")
+            )
+            if i + 1 < iters:  # the last round becomes the caller's result
+                new_cb = scope.keep(new_cb)
+                scope.free(cb)
+            cb = new_cb
+        return owned_result(cb)
 
 
 def embedding_moments(embeddings: DataFrame, vec_col: str = "embedding") -> DataFrame:

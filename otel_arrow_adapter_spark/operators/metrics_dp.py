@@ -528,12 +528,11 @@ def exp_histogram_rollup_pair(
     what ``false_spec`` must satisfy (same covered value range:
     ``max_buckets_t = max_buckets_f * 2^(scale_t - scale_f)``).
 
-    Returns the union eagerly ``localCheckpoint``-ed (the caller owns it,
-    same contract as the frames fed to ``merge_exp_histograms`` before);
-    the intermediate per-(key, gate) fine aggregate is freed here.
+    Returns the union as an owned result (the caller ``unpersist()``-s
+    it); the intermediate per-(key, gate) fine aggregate is freed here.
     Row-presence semantics match the two-call form: a family row exists
     iff its subset contains at least one input row."""
-    from otel_arrow_adapter_spark.caching import free_local_checkpoint
+    from otel_arrow_adapter_spark.caching import materialize_scope, owned_result
 
     (mb_t, sc_t), (mb_f, sc_f) = true_spec, false_spec
     # scale order first: a negative shift count would raise a cryptic error
@@ -544,39 +543,38 @@ def exp_histogram_rollup_pair(
             f"2^(scale_t - scale_f)"
         )
     factor = 1 << (sc_t - sc_f)
-    dense = exp_histogram_rollup(
-        points.withColumn("_gate", gate),
-        max_buckets=mb_t,
-        value_col=value_col,
-        keys=(*keys, "_gate"),
-        scale=sc_t,
-        trim=False,
-    ).localCheckpoint(eager=True)
+    with materialize_scope() as m:
+        dense = m.keep(exp_histogram_rollup(
+            points.withColumn("_gate", gate),
+            max_buckets=mb_t,
+            value_col=value_col,
+            keys=(*keys, "_gate"),
+            scale=sc_t,
+            trim=False,
+        ))
 
-    def family(is_true: bool) -> DataFrame:
-        pos, neg = F.col("positive_bucket_counts"), F.col("negative_bucket_counts")
-        if not is_true:
-            pos = downscale_exp_buckets(pos, F.lit(factor))
-            neg = downscale_exp_buckets(neg, F.lit(factor))
-        pos_off, pos_arr = trim_exp_buckets(pos)
-        neg_off, neg_arr = trim_exp_buckets(neg)
-        return dense.where(F.col("_gate") == is_true).select(
-            *keys,
-            "count",
-            "sum",
-            F.lit(sc_t if is_true else sc_f).cast("int").alias("scale"),
-            "zero_count",
-            pos_off.alias("positive_offset"),
-            pos_arr.alias("positive_bucket_counts"),
-            neg_off.alias("negative_offset"),
-            neg_arr.alias("negative_bucket_counts"),
-            "min",
-            "max",
-        )
+        def family(is_true: bool) -> DataFrame:
+            pos, neg = F.col("positive_bucket_counts"), F.col("negative_bucket_counts")
+            if not is_true:
+                pos = downscale_exp_buckets(pos, F.lit(factor))
+                neg = downscale_exp_buckets(neg, F.lit(factor))
+            pos_off, pos_arr = trim_exp_buckets(pos)
+            neg_off, neg_arr = trim_exp_buckets(neg)
+            return dense.where(F.col("_gate") == is_true).select(
+                *keys,
+                "count",
+                "sum",
+                F.lit(sc_t if is_true else sc_f).cast("int").alias("scale"),
+                "zero_count",
+                pos_off.alias("positive_offset"),
+                pos_arr.alias("positive_bucket_counts"),
+                neg_off.alias("negative_offset"),
+                neg_arr.alias("negative_bucket_counts"),
+                "min",
+                "max",
+            )
 
-    both = family(True).unionByName(family(False)).localCheckpoint(eager=True)
-    free_local_checkpoint(dense)
-    return both
+        return owned_result(family(True).unionByName(family(False)))
 
 
 def trim_exp_buckets(counts: Column) -> tuple[Column, Column]:

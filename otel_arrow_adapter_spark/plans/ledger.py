@@ -6,18 +6,21 @@ ledger row per processed partition range: a restart skips ranges whose
 status is 'done'. Metrics mirror ProducerStats counters
 (/root/reference/pkg/otel/stats/stats.go:26-43).
 
-Implementation: a parquet directory of small ledger rows written with
-dynamic overwrite per partition_key — append-only in effect, last write
-wins per key. On Iceberg this would be a MERGE; parquet keeps the sandbox
-dependency-free with the same protocol.
+Implementation: one JSON-lines file, ``<path>/ledger.jsonl``, with one
+row appended per record — the last row per partition_key wins. It is read
+and written through the Hadoop FileSystem resolved from the path's
+scheme, so a file:// or hdfs:// out_dir keeps its ledger under that
+out_dir, like a bare path does. On Iceberg this would be a MERGE; a
+small file keeps the sandbox dependency-free with the same protocol.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import time
 import uuid
+
+from pyspark.sql import SparkSession
 
 
 class Ledger:
@@ -31,14 +34,23 @@ class Ledger:
     def __init__(self, path: str, run_id: str | None = None):
         self.path = path
         self.run_id = run_id or f"run-{uuid.uuid4().hex[:8]}"
-        os.makedirs(path, exist_ok=True)
-        self._file = os.path.join(path, "ledger.jsonl")
+        spark = SparkSession.active()
+        self._jvm = spark._jvm
+        self._file = self._jvm.org.apache.hadoop.fs.Path(f"{path}/ledger.jsonl")
+        fs = self._file.getFileSystem(spark._jsc.hadoopConfiguration())
+        # the checksummed local FS keeps a .crc beside the file, which a
+        # hand-edited ledger (forgetting a bucket to redo it) would fail
+        self._fs = fs.getRawFileSystem() if fs.getScheme() == "file" else fs
+        if not self._fs.exists(self._file):
+            self._fs.create(self._file, False).close()
 
     def _rows(self) -> list[dict]:
-        if not os.path.exists(self._file):
-            return []
-        with open(self._file) as f:
-            return [json.loads(line) for line in f if line.strip()]
+        stream = self._fs.open(self._file)
+        try:
+            text = self._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        finally:
+            stream.close()
+        return [json.loads(line) for line in text.splitlines() if line.strip()]
 
     def done_keys(self) -> set[str]:
         state: dict[str, str] = {}
@@ -55,5 +67,8 @@ class Ledger:
             "ts": time.time(),
             "metrics": metrics or {},
         }
-        with open(self._file, "a") as f:
-            f.write(json.dumps(row) + "\n")
+        out = self._fs.append(self._file)
+        try:
+            out.write((json.dumps(row) + "\n").encode())
+        finally:
+            out.close()

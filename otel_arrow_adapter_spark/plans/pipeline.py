@@ -23,6 +23,7 @@ from ..operators.parse_arrow import parse_turns_arrow
 from ..operators.normalize import assign_surrogate_ids
 from ..operators.enrich import enrich_with_catalog
 from ..operators.route import label_sinks, read_sinks, write_routed
+from ..caching import materialize_scope
 from .ledger import Ledger
 
 
@@ -216,8 +217,8 @@ def replay_quarantine(
         relabeled = relabeled.withColumn(
             "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets))
         )
-    relabeled = relabeled.persist()
-    try:
+    with materialize_scope() as m:
+        relabeled = m.keep(relabeled)
         counts = relabeled.groupBy("sink").agg(F.count(F.lit(1)).alias("n_rows"))
         extra = ("bucket",) if bucketed else ()
         remainder = relabeled.where(F.col("sink") == "quarantine")
@@ -258,6 +259,4 @@ def replay_quarantine(
         counts.withColumn("run_id", F.lit(run_id)).write.mode("append").parquet(
             f"{out_dir}/replay_counts"
         )
-    finally:
-        relabeled.unpersist()
     return spark.read.parquet(f"{out_dir}/replay_counts").where(F.col("run_id") == run_id)

@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -42,3 +43,14 @@ def catalog(spark):
 def small_catalog(spark):
     """Catalog missing tool-6 -> exercises unknown-tool quarantine."""
     return synthesize_tool_catalog(spark, n_tools=6)
+
+
+@contextlib.contextmanager
+def no_new_persistent_rdds(spark, label):
+    """Assert the block leaves no NEW persistent RDD in the session (RDDs
+    that existed before it, e.g. fixture caches, are not counted)."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    yield
+    leaked = set(jsc.getPersistentRDDs().keys()) - before
+    assert not leaked, (label, leaked)

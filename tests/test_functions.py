@@ -2,6 +2,7 @@
 
 import pyspark.sql.functions as F
 import pytest
+from conftest import no_new_persistent_rdds
 
 from otel_arrow_adapter_spark.functions.dedup import (
     exact_duplicates,
@@ -482,14 +483,14 @@ def test_dup_clusters_chain_linear_plan_growth(spark):
 
 
 def test_no_lingering_caches_after_queries(spark):
-    """Cache-lifecycle contract (caching.owned_result): every query whose
-    plan persists intermediates frees them once its result materializes —
-    after the consuming action + result.unpersist(), the session holds no
-    NEW persistent RDDs (pre-existing fixture caches are excluded)."""
+    """Cache-lifecycle contract (caching.materialize_scope): every query
+    whose plan materializes intermediates frees them once its result
+    materializes — after the consuming action + result.unpersist(), the
+    session holds no NEW persistent RDDs (pre-existing fixture caches are
+    excluded)."""
     import __spark_entry__ as entry
 
     sf_dir = "/root/testdata/sf0.001"
-    sc = spark.sparkContext
     for name in [
         "doc_lsh_candidates",
         "doc_jaccard_pairs",
@@ -498,18 +499,107 @@ def test_no_lingering_caches_after_queries(spark):
         "doc_leakage_free_split",
         "doc_incremental_dedup",
         "doc_simhash_near_dups",
+        "emb_dup_clusters",
         "emb_kmeans_centroids",
         "emb_ivf_search_trained",
         "pipeline_metrics_dp_records",
         "pipeline_metrics_exp_hist_merge",
         "pipeline_trace_records",
     ]:
-        before = set(sc._jsc.getPersistentRDDs().keys())
-        res = entry.QUERIES[name](spark, sf_dir)
-        res.collect()  # the consuming action
-        res.unpersist()
-        after = set(sc._jsc.getPersistentRDDs().keys())
-        assert after - before == set(), (name, after - before)
+        with no_new_persistent_rdds(spark, name):
+            res = entry.QUERIES[name](spark, sf_dir)
+            res.collect()  # the consuming action
+            res.unpersist()
+
+
+def test_no_lingering_caches_after_iterative_trainers(spark, emb):
+    """The iterative trainers free every round: nothing of ``bpe_train``
+    outlives the call, nothing of ``pq_train_codebooks`` outlives the
+    result's ``unpersist()``."""
+    from otel_arrow_adapter_spark.functions.bpe import bpe_train
+    from otel_arrow_adapter_spark.functions.similarity import pq_train_codebooks
+
+    docs = spark.createDataFrame(
+        [(i, "low lower newest widest " * (i + 1)) for i in range(4)], "doc_id long, text string"
+    )
+    with no_new_persistent_rdds(spark, "bpe_train"):
+        assert bpe_train(docs, n_merges=4)
+    emb.count()  # the fixture's own cache is not the trainer's
+    with no_new_persistent_rdds(spark, "pq_train_codebooks"):
+        trained = pq_train_codebooks(emb, m=8, n_codes=8, iters=2, dim=64)
+        assert trained.count() == 8 * 8
+        trained.unpersist()
+
+
+def _injected(*_a, **_kw):
+    raise RuntimeError("injected failure")
+
+
+def test_incremental_dedup_frees_on_error(spark, monkeypatch):
+    """A failure after five intermediates are materialized (fingerprints,
+    both verdicts, both shingle tables) leaves none of them behind."""
+    import otel_arrow_adapter_spark.functions.dedup as dedup
+
+    docs = spark.createDataFrame(
+        [(i, f"doc {i % 6} alpha beta gamma delta") for i in range(12)], "doc_id long, text string"
+    )
+    monkeypatch.setattr(dedup, "banded_buckets", _injected)
+    with no_new_persistent_rdds(spark, "incremental_dedup"):
+        with pytest.raises(RuntimeError, match="injected"):
+            dedup.incremental_dedup(docs.where("doc_id < 8"), docs.where("doc_id >= 4"))
+
+
+def test_dup_clusters_frees_on_error(spark, monkeypatch):
+    """A failure reading a round's convergence count leaves neither the
+    edges nor the round behind."""
+    from pyspark.sql import Observation
+
+    import otel_arrow_adapter_spark.functions.dedup as dedup
+
+    class FailingObservation(Observation):
+        @property
+        def get(self):
+            _injected()
+
+    monkeypatch.setattr(dedup, "Observation", FailingObservation)
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "doc_a long, doc_b long")
+    with no_new_persistent_rdds(spark, "dup_clusters"):
+        with pytest.raises(RuntimeError, match="injected"):
+            dedup.dup_clusters(pairs)
+
+
+def test_kmeans_train_frees_on_error(spark, emb, monkeypatch):
+    """A failure in the second Lloyd round does not leave the first
+    round's centroids behind."""
+    import otel_arrow_adapter_spark.functions.similarity as sim
+
+    real, calls = sim.assign_to_centroids, []
+
+    def second_call_fails(*a, **kw):
+        calls.append(1)
+        return _injected() if len(calls) == 2 else real(*a, **kw)
+
+    monkeypatch.setattr(sim, "assign_to_centroids", second_call_fails)
+    emb.count()  # the fixture's own cache is not the trainer's
+    with no_new_persistent_rdds(spark, "kmeans_train"):
+        with pytest.raises(RuntimeError, match="injected"):
+            sim.kmeans_train(emb, n_centroids=5, iters=3)
+    assert len(calls) == 2
+
+
+def test_materialize_scope_frees_a_failed_job(spark):
+    """A job that fails inside ``keep`` leaves neither its own partial
+    checkpoint nor the scope's earlier ones behind."""
+    from otel_arrow_adapter_spark.caching import materialize_scope
+
+    bad = spark.range(100).select(
+        F.when(F.col("id") == 50, F.raise_error(F.lit("injected failure"))).otherwise(F.col("id"))
+    )
+    with no_new_persistent_rdds(spark, "keep"):
+        with pytest.raises(Exception, match="injected"):
+            with materialize_scope() as m:
+                m.keep(spark.range(10))
+                m.keep(bad)
 
 
 def test_repetition_scores_known_answer(spark):

@@ -171,7 +171,6 @@ def test_exp_histogram_rollup_pair_matches_two_calls(spark):
     for a key yields only the true-side row)."""
     from pyspark.sql import functions as F
 
-    from otel_arrow_adapter_spark.caching import free_local_checkpoint
     from otel_arrow_adapter_spark.operators.metrics_dp import (
         exp_histogram_rollup,
         exp_histogram_rollup_pair,
@@ -194,7 +193,7 @@ def test_exp_histogram_rollup_pair_matches_two_calls(spark):
     got = {tuple(r[k] for k in key): r.asDict() for r in fused.collect()}
     want = {tuple(r[k] for k in key): r.asDict() for r in ref.collect()}
     assert got == want
-    free_local_checkpoint(fused)
+    fused.unpersist()
 
 
 def test_exp_histogram_rollup_pair_rejects_inverted_scales(spark):

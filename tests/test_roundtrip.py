@@ -5,6 +5,7 @@ order-insensitively, and per-turn text must match under stable ordering."""
 
 import pyspark.sql.functions as F
 import pytest
+from conftest import no_new_persistent_rdds
 
 from otel_arrow_adapter_spark.operators import reconstruct_turns
 from otel_arrow_adapter_spark.operators.normalize import stable_turn_order
@@ -301,6 +302,35 @@ def test_compact_routed_preserves_rows(spark, transcripts, small_catalog, tmp_pa
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
+def test_resumable_ledger_under_file_uri(
+    spark, transcripts, small_catalog, tmp_path, monkeypatch
+):
+    """A file:// out_dir keeps its ledger under that out_dir (not in a
+    ``file:`` directory under the working directory), and a resume run
+    reads it back and skips every done bucket."""
+    import json
+
+    import otel_arrow_adapter_spark.plans.pipeline as pmod
+
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    calls = []
+    real_write = pmod.write_routed
+    monkeypatch.setattr(
+        pmod, "write_routed", lambda *a, **kw: (calls.append(1), real_write(*a, **kw))[1]
+    )
+    out = tmp_path / "out_uri"
+    run_pipeline(spark, transcripts, small_catalog, out.as_uri(), run_id="u1", n_buckets=2)
+    ledger = out / "_ledger" / "ledger.jsonl"
+    assert ledger.is_file()
+    assert not any(cwd.iterdir())
+    rows = [json.loads(line) for line in ledger.read_text().splitlines()]
+    assert {r["partition_key"] for r in rows if r["status"] == "done"} == {"bucket=0", "bucket=1"}
+    run_pipeline(spark, transcripts, small_catalog, out.as_uri(), run_id="u2", n_buckets=2)
+    assert len(calls) == 1  # the resume found both buckets done: no write
+
+
 def test_replay_quarantine_recovers_rows(spark, transcripts, small_catalog, catalog, tmp_path):
     """Dead-letter replay: after the catalog gains the missing tool, the
     previously-quarantined unknown-tool rows move to their signal sinks,
@@ -314,7 +344,8 @@ def test_replay_quarantine_recovers_rows(spark, transcripts, small_catalog, cata
     n_total = before.count()
     n_quar_before = before.where(F.col("sink") == "quarantine").count()
     # full catalog covers tool-6 -> unknown-tool rows become routable
-    replay_quarantine(spark, catalog, out, run_id="rp1")
+    with no_new_persistent_rdds(spark, "replay_quarantine"):
+        replay_quarantine(spark, catalog, out, run_id="rp1")
     after = spark.read.parquet(f"{out}/routed")
     assert after.count() == n_total  # no loss, no duplication
     n_quar_after = after.where(F.col("sink") == "quarantine").count()
