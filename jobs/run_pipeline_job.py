@@ -6,13 +6,17 @@
       --conf spark.sql.adaptive.enabled=true \
       --conf spark.sql.adaptive.skewJoin.enabled=true \
       --conf spark.sql.shuffle.partitions=<2-3x total cores> \
+      --conf spark.driver.defaultJavaOptions="-XX:Tier4InvocationThreshold=25000 -XX:Tier4MinInvocationThreshold=3000 -XX:Tier4CompileThreshold=75000 -XX:Tier4BackEdgeThreshold=200000" \
       jobs/run_pipeline_job.py \
       --input  <parquet dir | iceberg table> \
       --output <dir> \
       --catalog-tools 45 --buckets 64 --salt-buckets 16 --resume
 
 Master/memory/executors come from spark-submit (cluster mode); nothing in
-the job pins local mode. The same module runs the sandbox bench via
+the job pins local mode. spark-submit starts the driver JVM before any
+Python runs, so the driver's JIT thresholds
+(``session.DRIVER_JIT_OPTIONS``) are passed there, as above. The same
+module runs the sandbox bench via
 ``otel_arrow_adapter_spark.session.get_spark`` instead — see bench.py.
 
 Sizing guidance at 10^12 turns (SURVEY.md §7): input as Iceberg partitioned

@@ -18,6 +18,13 @@ setting here is chosen to also be correct at cluster scale:
   and one pass over the query registry ~1.7 k, so with the default the
   classes evict each other in a cycle and every repeated operation
   recompiles (Janino, then the JIT) what it compiled last time.
+- Driver JIT thresholds (``DRIVER_JIT_OPTIONS``): HotSpot's tier-4 (C2)
+  thresholds at 5x their defaults. Spark's planner and scheduler code has a
+  flat profile, so with the defaults thousands of lukewarm methods are
+  C2-compiled during the first operations of a session; raised, they stay
+  on C1 code while truly hot loops still reach C2. Set as
+  ``spark.driver.defaultJavaOptions``, which Spark puts ahead of a
+  caller's ``spark.driver.extraJavaOptions``.
 """
 
 from __future__ import annotations
@@ -35,6 +42,36 @@ from pyspark.sql import SparkSession
 # The smallest power of two above the largest count keeps the whole
 # registry compiled for the life of a session.
 CODEGEN_CACHE_ENTRIES = 2048
+
+# HotSpot tier-4 (C2) thresholds at 5x the JDK 17 defaults (5000, 600,
+# 15000, 40000). JIT work per operation, `jstat -compiler` deltas on the
+# perfbench JVM (seed 1101, local[4], pyspark 4.1.2, JDK 17; compile
+# seconds summed over the 3 compiler threads), methods / compile s,
+# default -> these:
+#   dedup pass 1 (warm-up)          18,588 / 40.9   ->  16,964 / 25.0
+#   dedup pass 2 (the timed one)     4,133 / 13.7   ->   3,461 /  4.3
+#   dedup pass 3                     2,789 /  7.2   ->   2,323 /  3.6
+#   dedup pass 4                     1,695 /  5.5   ->   1,532 /  4.6
+#   ingest operation 7 (first timed)   945 /  2.3   ->     731 /  1.8
+# Rejected (perfbench, against this setting's dedup cpu_s median of 14.9 s
+# over seeds 911-915):
+#   -XX:TieredStopAtLevel=1 (C1 only): dedup's second pass 20.0 -> 11.0
+#     CPU s, but a steady ingest operation 4.43 -> 5.62 CPU s (+27%) and
+#     1.9 -> 3.1 s wall: the parse/write loops need C2.
+#   -XX:CompileThresholdScaling=3 (every tier): dedup cpu_s median 17.0 s
+#     over the same seeds.
+#   10x tier-4 thresholds: dedup 17.6 CPU s in one profiling run, no better
+#     than 5x, and steady ingest operations slower (5-6.7 CPU s).
+# Like the codegen cache size, these apply only to a JVM that get_spark
+# launches: a driver JVM that is already running (spark-submit, a notebook,
+# a vanilla getOrCreate before this) keeps its own; pass them there with
+# --conf spark.driver.defaultJavaOptions="...".
+DRIVER_JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=25000 "
+    "-XX:Tier4MinInvocationThreshold=3000 "
+    "-XX:Tier4CompileThreshold=75000 "
+    "-XX:Tier4BackEdgeThreshold=200000"
+)
 
 
 def get_spark(
@@ -68,6 +105,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.driver.defaultJavaOptions", DRIVER_JIT_OPTIONS)
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -2,9 +2,13 @@
 (``session.CODEGEN_CACHE_ENTRIES``) holds the dedup chain's working set, so
 a repeated pass finds its whole-stage classes compiled instead of
 recompiling them. With Spark's default 100-entry cache the chain's ~240
-classes evict each other in a cycle and every pass recompiles them all."""
+classes evict each other in a cycle and every pass recompiles them all.
+The session's JVM also runs with the raised C2 thresholds
+(``session.DRIVER_JIT_OPTIONS``)."""
 
 from conftest import SF_DIR
+
+from otel_arrow_adapter_spark.session import DRIVER_JIT_OPTIONS
 
 DEDUP_QUERIES = (
     "doc_dup_clusters",
@@ -34,3 +38,10 @@ def test_repeated_dedup_pass_reuses_generated_code(spark):
     first = _dedup_pass(spark)
     second = _dedup_pass(spark)
     assert second < 0.1 * first, (first, second)
+
+
+def test_driver_jvm_runs_with_jit_thresholds(spark):
+    mx = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+    args = set(mx.getInputArguments())
+    missing = [o for o in DRIVER_JIT_OPTIONS.split() if o not in args]
+    assert not missing, (missing, sorted(args))

@@ -37,6 +37,9 @@ The replica directory is reused only when its ``_BUILT`` sentinel exists;
 half-way is rebuilt instead of silently timed.
 
 Usage: python tools/datascale_query_audit.py [name1,name2,...]
+
+With a name list, only those queries are re-timed: their rows replace
+their own in the committed JSON and every other row is kept.
 """
 
 from __future__ import annotations
@@ -56,6 +59,8 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 OUT_DIR = os.environ.get("OAAS_AUDIT_10X_DIR", "/tmp/oaas_audit_10x")
 BUILT = os.path.join(OUT_DIR, "_BUILT")
 REPLICAS = 10
+AUDIT_JSON = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                          "BENCH", "datascale_query_audit_10x.json")
 
 _VOWELS = "aeiou"
 _ROTS = ["aeiou", "eioua", "iouae", "ouaei", "uaeio",
@@ -136,6 +141,13 @@ def time_query(spark: SparkSession, fn, sf_dir: str, repeats: int = 2) -> float:
     return round(best, 3)
 
 
+def merge_audit(old: dict, new: dict) -> dict:
+    """``old`` with the re-timed rows of ``new`` replacing their own and
+    every other row kept, so a run over a name subset does not drop the
+    rest of the audit."""
+    return {**old, **new, "queries": {**old["queries"], **new["queries"]}}
+
+
 def main() -> None:
     from otel_arrow_adapter_spark.session import get_spark
     import __spark_entry__ as entrymod
@@ -155,11 +167,12 @@ def main() -> None:
         print(f"  {name}: 1x {s1} 10x {s10} ratio {rows[name]['ratio']}", file=sys.stderr)
     spark.sparkContext.setJobDescription(None)
     out = {"replicas": REPLICAS, "sf_1x": SF_DIR, "queries": rows}
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                        "BENCH", "datascale_query_audit_10x.json")
-    with open(path, "w") as f:
+    if only and os.path.exists(AUDIT_JSON):
+        with open(AUDIT_JSON) as f:
+            out = merge_audit(json.load(f), out)
+    with open(AUDIT_JSON, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
-    print(json.dumps({"n_queries": len(rows), "out": path}))
+    print(json.dumps({"n_queries": len(rows), "out": AUDIT_JSON}))
 
 
 if __name__ == "__main__":
