@@ -2,46 +2,36 @@
 
 ``entry(spark)`` runs the flagship parse->enrich->route->aggregate counts.
 ``queries()`` exposes one callable per implemented operator (SURVEY.md §2);
-``oracle_sql()`` gives the DuckDB-equivalent SQL over the pre-registered
-views. Pipeline queries operate on the canonical ``transcripts`` table
-derived deterministically from the ``events`` view (same SQL both engines —
-see otel_arrow_adapter_spark/datagen/transcripts.py), so every pipeline
-stage is oracle-checkable.
+the bodies live in the ``otel_arrow_adapter_spark.queries`` family modules
+and ``QUERIES`` fixes their names and order. ``oracle_sql()`` gives the
+DuckDB-equivalent SQL over the pre-registered views. Pipeline queries
+operate on the canonical ``transcripts`` table derived deterministically
+from the ``events`` view (same SQL both engines — see
+otel_arrow_adapter_spark/datagen/transcripts.py), so every pipeline stage
+is oracle-checkable.
 """
-
 from __future__ import annotations
 
 import os
 import sys
 from collections.abc import Callable
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F, Window as W
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from otel_arrow_adapter_spark.datagen import (  # noqa: E402
-    synthesize_tool_catalog,
-    transcripts_from_events,
-)
 from otel_arrow_adapter_spark.datagen.transcripts import duckdb_transcripts_cte  # noqa: E402
-from otel_arrow_adapter_spark.operators import (  # noqa: E402
-    melt_attributes,
-    parse_turns,
-    route_signals,
-)
-from otel_arrow_adapter_spark.operators.parse import SEVERITY_NUMBER  # noqa: E402
-from otel_arrow_adapter_spark.operators.enrich import enrich_with_catalog  # noqa: E402
-from otel_arrow_adapter_spark.operators.encode import (  # noqa: E402
-    delta_encode_parent_ids,
-    with_encode_order,
-)
 from otel_arrow_adapter_spark.operators.metrics_dp import exp2_lower_bound  # noqa: E402
-from otel_arrow_adapter_spark.operators.normalize import (  # noqa: E402
-    assign_surrogate_ids,
-    stable_turn_order,
+from otel_arrow_adapter_spark.queries import (  # noqa: E402
+    capture,
+    docs,
+    embeddings,
+    metrics,
+    pipeline,
+    tables,
 )
+from otel_arrow_adapter_spark.queries.pipeline import N_CATALOG_TOOLS  # noqa: E402
+from otel_arrow_adapter_spark.shipping import ensure_shipped  # noqa: E402
 
 
 def _exp_hist_bucket_sql(max_buckets: int, scale: int) -> tuple[str, str]:
@@ -101,8 +91,6 @@ def _exp_quantile_edges_sql(max_buckets: int, scale: int) -> tuple[str, str]:
     return " ".join(lo) + " END", " ".join(hi) + " END"
 
 
-N_CATALOG_TOOLS = 6  # tool-6 exists in data but not in catalog -> quarantine
-
 # DuckDB prelude shared by all pipeline oracles: transcripts CTE + catalog.
 _CTE = (
     duckdb_transcripts_cte()
@@ -126,809 +114,6 @@ classified AS (
 )
 """.format(n=N_CATALOG_TOOLS)
 )
-
-
-def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return transcripts_from_events(spark, sf_dir)
-
-
-def _parsed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return parse_turns(_transcripts(spark, sf_dir))
-
-
-def _routed(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    parsed = assign_surrogate_ids(_parsed(spark, sf_dir))
-    cat = synthesize_tool_catalog(spark, n_tools=N_CATALOG_TOOLS)
-    return route_signals(enrich_with_catalog(parsed, cat))
-
-
-# ---------------------------------------------------------------------------
-# Pipeline queries (operators from SURVEY.md §2 over transcripts)
-# ---------------------------------------------------------------------------
-
-def q_pipeline_sink_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4/R1: per-sink aggregate counts (the north-rule surface) —
-    one labeled projection + one groupBy (single scan)."""
-    from otel_arrow_adapter_spark.plans import build_labeled
-
-    cat = synthesize_tool_catalog(spark, n_tools=N_CATALOG_TOOLS)
-    labeled = build_labeled(_transcripts(spark, sf_dir), cat)
-    return labeled.groupBy("sink").agg(
-        F.count(F.lit(1)).alias("n_rows"), F.countDistinct("conv_id").alias("n_convs")
-    )
-
-
-def q_pipeline_parse_logs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P1-P6: parsed log-like turns with typed fields."""
-    return (
-        _parsed(spark, sf_dir)
-        .where(F.col("signal_type") == "log")
-        .select(
-            "conv_id",
-            "turn_idx",
-            "log_ts_us",
-            "severity_text",
-            "severity_number",
-            "msg",
-            "code",
-            "retry",
-        )
-    )
-
-
-def q_pipeline_parse_logs_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P1-P6 via the vectorized Arrow-UDF parse (mapInArrow + RE2) — same
-    oracle as the JVM expression parse: both physical paths must agree
-    (reference discipline: profiler.go:278-295 cross-protocol equality)."""
-    from otel_arrow_adapter_spark.operators.parse_arrow import parse_turns_arrow
-
-    return (
-        parse_turns_arrow(_transcripts(spark, sf_dir))
-        .where(F.col("signal_type") == "log")
-        .select(
-            "conv_id",
-            "turn_idx",
-            "log_ts_us",
-            "severity_text",
-            "severity_number",
-            "msg",
-            "code",
-            "retry",
-        )
-    )
-
-
-def q_pipeline_parse_logs_grok(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P1-P6 via the grok fallback (pandas-UDF named-macro parse) — third
-    physical path, same oracle as the JVM and Arrow parses."""
-    from otel_arrow_adapter_spark.functions.grok import grok_parse
-
-    t = _transcripts(spark, sf_dir)
-    logs = t.where(F.col("text").rlike(r"^ts_us=[0-9]+ level="))
-    pat = (
-        r'ts_us=%{POSINT:log_ts_us} level=%{LOGLEVEL:severity_text}'
-        r'(?: msg="%{DATA:msg}")?(?: code=%{POSINT:code})?(?: retry=%{BOOL:retry})?$'
-    )
-    parsed = grok_parse(logs, pat)
-    sev_num = F.element_at(
-        F.create_map(*[y for k, v in SEVERITY_NUMBER.items() for y in (F.lit(k), F.lit(v))]),
-        F.col("severity_text"),
-    )
-    return parsed.select(
-        "conv_id",
-        "turn_idx",
-        F.col("log_ts_us").try_cast("long").alias("log_ts_us"),
-        "severity_text",
-        sev_num.cast("int").alias("severity_number"),
-        "msg",
-        F.col("code").try_cast("long").alias("code"),
-        (F.col("retry") == "true").alias("retry"),
-    )
-
-
-def q_pipeline_parse_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _parsed(spark, sf_dir)
-        .where(F.col("signal_type") == "metric")
-        .select("conv_id", "turn_idx", "metric_name", "metric_value", "metric_unit")
-    )
-
-
-def q_pipeline_parse_traces(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _parsed(spark, sf_dir)
-        .where(F.col("signal_type") == "trace")
-        .select("conv_id", "turn_idx", "span_hex", "parent_hex", "dur_ms")
-    )
-
-
-def q_pipeline_enrich_services(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J4: broadcast enrichment; per-service turn counts."""
-    cat = synthesize_tool_catalog(spark, n_tools=N_CATALOG_TOOLS)
-    enriched = enrich_with_catalog(_parsed(spark, sf_dir), cat)
-    return (
-        enriched.where(F.col("service_name").isNotNull())
-        .groupBy("service_name")
-        .agg(F.count(F.lit(1)).alias("n_turns"), F.countDistinct("conv_id").alias("n_convs"))
-    )
-
-
-def q_pipeline_enrich_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temporal (as-of / SCD2) enrichment: each turn resolves the catalog
-    version in effect at its timestamp. Zero fact-side shuffle: versions
-    collapse to one broadcast row per tool carrying a sorted array; the
-    as-of lookup is a pure array expression (operators/enrich.py)."""
-    from otel_arrow_adapter_spark.datagen.transcripts import (
-        synthesize_tool_catalog_versions,
-    )
-    from otel_arrow_adapter_spark.operators.enrich import enrich_asof
-
-    t = _transcripts(spark, sf_dir).where(F.col("tool").isNotNull())
-    vers = synthesize_tool_catalog_versions(spark, n_tools=7)
-    return (
-        enrich_asof(t, vers)
-        .groupBy("service_name")
-        .agg(F.count(F.lit(1)).alias("n_turns"), F.countDistinct("conv_id").alias("n_convs"))
-    )
-
-
-def q_pipeline_attrs_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P3/P4/P8: long attrs table — the full AnyValue union (6 type tags:
-    str/int/double/bool/bytes/ser; bytes surfaced as hex for the
-    engine-portable value hash, ser is the JSON-serialized nested value)."""
-    attrs = melt_attributes(_parsed(spark, sf_dir))
-    return attrs.select(
-        "conv_id",
-        "turn_idx",
-        "key",
-        F.col("type").cast("int").alias("type"),
-        "str",
-        "int",
-        "double",
-        "bool",
-        F.hex("bytes").alias("bytes_hex"),
-        "ser",
-    )
-
-
-def q_pipeline_stable_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W4: stable turn ordering window."""
-    return stable_turn_order(_transcripts(spark, sf_dir)).select(
-        "conv_id", "turn_idx", "turn_order"
-    )
-
-
-def q_conv_sft_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SFT (prompt, completion) pair mining from chat logs: each user turn
-    paired with the immediately following assistant turn under stable turn
-    ordering — ONE window shuffle on conv_id (the ordering invariant's own
-    partitioning), token counts per side. Oracle: the same LEAD window in
-    DuckDB."""
-    from otel_arrow_adapter_spark.functions.conversations import sft_pairs
-
-    return sft_pairs(_transcripts(spark, sf_dir))
-
-
-def q_conv_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conversation-structure quality filter (the pre-SFT gate): turn-count
-    bounds, both-roles-present, role-alternation rate >= 0.5 — flagged, not
-    filtered. One window + one groupBy, both on conv_id (the stable-order
-    invariant's own partitioning, reused). Oracle: the same LEAD window +
-    aggregate in DuckDB with BIGINT-cast sums."""
-    from otel_arrow_adapter_spark.functions.conversations import conv_quality
-
-    return conv_quality(_transcripts(spark, sf_dir))
-
-
-def q_conv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conversation-LEVEL dedup groups (a duplicated conversation
-    duplicates every turn — turn/doc-grain dedup undercounts): digit-
-    stripped template fingerprint summed from position-encoded per-turn
-    md5 terms, so no conversation is ever materialized (no collect_list,
-    no window); keep-first = min conv_id per (fp, n_turns) group. Oracle:
-    identical two-level GROUP BY in DuckDB ('0x'||hex UBIGINT terms)."""
-    from otel_arrow_adapter_spark.functions.conversations import conv_dedup
-
-    return conv_dedup(_transcripts(spark, sf_dir))
-
-
-def q_pipeline_dict_tool(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E3: dictionary table for the tool column (sorted codes)."""
-    from otel_arrow_adapter_spark.operators.normalize import ranked_dim
-
-    t = _transcripts(spark, sf_dir)
-    # windowless rank over the distinct tool set (O(#tools))
-    return ranked_dim(
-        t.where(F.col("tool").isNotNull()), ("tool",), "tool_code", id_type="int", start=0
-    )
-
-
-def q_pipeline_delta_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E2: parent-id delta-group encoding over the melted attrs.
-
-    n_buckets=16 scopes window state to (key, bucket) — the batch analog —
-    so no single task ever owns a whole attribute key (~6 keys would mean
-    <=6 window tasks for 10^12 rows otherwise). parent_id and enc_bucket
-    are md5-derived (engine-portable) so the DuckDB oracle replays the
-    full encode — window, group detection, deltas — exactly."""
-    md5_long = F.conv(F.substring(F.md5("conv_id"), 1, 12), 16, 10).cast("long")
-    attrs = melt_attributes(_parsed(spark, sf_dir)).withColumn(
-        "parent_id",
-        (F.pmod(md5_long, F.lit(100000)) * 1000 + F.col("turn_idx")).cast("long"),
-    )
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.col("parent_id").cast("string")), 1, 12), 16, 10).cast(
-            "long"
-        ),
-        F.lit(16),
-    ).cast("int")
-    attrs = attrs.withColumn("enc_bucket", bucket)
-    enc = delta_encode_parent_ids(with_encode_order(attrs, n_buckets=16), n_buckets=16)
-    # aggregate (stable surface): per key, #groups and delta checksum
-    return enc.groupBy("key").agg(
-        F.sum(F.col("group_start").cast("long")).alias("n_groups"),
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.when(~F.col("group_start"), F.col("parent_id_delta")).otherwise(F.lit(0))).alias(
-            "delta_sum"
-        ),
-        F.min(F.col("parent_id_delta")).alias("min_delta"),
-    )
-
-
-def q_pipeline_route_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P9/R1: quarantine rows with error labels (error-not-crash)."""
-    return _routed(spark, sf_dir)["quarantine"].select("conv_id", "turn_idx", "error")
-
-
-def q_pipeline_severity_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2-style analytics: per-severity counts over parsed logs.
-
-    Integer-only surface: sum_code + n_code as BIGINTs instead of a rounded
-    double mean — round(sum/count, 4) lands exactly on half-way decimal
-    boundaries for integer codes, where round() tie-breaking differs across
-    engines/versions; the mean is a trivial client-side division of two
-    exactly-reproducible integers."""
-    return (
-        _parsed(spark, sf_dir)
-        .where(F.col("signal_type") == "log")
-        .groupBy("severity_text")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(F.col("retry"), 1).otherwise(0)).alias("n_retry"),
-            F.sum("code").alias("sum_code"),
-            F.count("code").alias("n_code"),
-        )
-    )
-
-
-def q_pipeline_change_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W3: first-seen change detection — running signal-segment id per conv."""
-    parsed = _parsed(spark, sf_dir)
-    w = W.partitionBy("conv_id").orderBy("turn_idx")
-    changed = (
-        F.when(F.lag("signal_type").over(w).isNull(), 1)
-        .when(F.col("signal_type") == F.lag("signal_type").over(w), 0)
-        .otherwise(1)
-    )
-    seg = F.sum(changed).over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
-    return parsed.select(
-        "conv_id", "turn_idx", "signal_type", seg.cast("long").alias("segment_id")
-    )
-
-
-def q_pipeline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S2/J1-J3 round-trip: route to per-sink views, reconstruct the original
-    relation from the union of sinks. Oracle = the transcripts table itself —
-    the driver's value-hash IS the routed-row equality gate (the analog of
-    assert.Equiv, /root/reference/pkg/otel/assert/equiv.go:107-157)."""
-    from otel_arrow_adapter_spark.operators.reconstruct import reconstruct_turns
-
-    return reconstruct_turns(_routed(spark, sf_dir)).select(
-        "conv_id", "turn_idx", "role", "text", "tool"
-    )
-
-
-def q_pipeline_obfuscate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P7: deterministic string obfuscation (hash mode) over log messages."""
-    from otel_arrow_adapter_spark.operators.obfuscate import obfuscate_strings
-
-    logs = _parsed(spark, sf_dir).where(F.col("signal_type") == "log")
-    return obfuscate_strings(logs, ["msg"], mode="hash").select(
-        "conv_id", "turn_idx", F.col("msg").alias("msg_token")
-    )
-
-
-def q_pipeline_schema_analyzer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2: per-column schema statistics (exact mode at oracle SF; approx
-    HyperLogLog mode is the 10^12-row path)."""
-    from otel_arrow_adapter_spark.operators.aggregate import schema_analyzer
-
-    t = _transcripts(spark, sf_dir).select("conv_id", "turn_idx", "role", "text", "tool")
-    out = schema_analyzer(t, approx=False)
-    return out.select(
-        "column", "n_distinct", F.round("null_frac", 6).alias("null_frac"),
-        "min_value", "max_value", "n_rows",
-    )
-
-
-def q_pipeline_field_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2 analyzer depth: per-field top-5 value distributions over the
-    transcript dimensions (role, tool) — each column's top-k is a
-    map-side-combined groupBy + TakeOrderedAndProject, never a global
-    window."""
-    from otel_arrow_adapter_spark.operators.aggregate import field_frequencies
-
-    return field_frequencies(_transcripts(spark, sf_dir), ["role", "tool"], k=5)
-
-
-def q_pipeline_weighted_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R2: weighted traffic splitting to exporter sets (8/5/3 sixteenths)."""
-    from otel_arrow_adapter_spark.operators.route import weighted_split
-
-    split = weighted_split(
-        _transcripts(spark, sf_dir), {"exp-a": 8, "exp-b": 5, "exp-c": 3}
-    )
-    return split.groupBy("exporter").agg(
-        F.count(F.lit(1)).alias("n_rows"), F.countDistinct("conv_id").alias("n_convs")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Metrics data-point star schema (O5/J3: NumberDP/HistogramDP/SummaryDP +
-# exemplars as related records, pkg/otel/metrics/arrow/related_data.go:82-156)
-# ---------------------------------------------------------------------------
-
-HIST_BOUNDS = [50.0, 500.0, 5000.0, 50000.0]
-
-
-def _metric_points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _parsed(spark, sf_dir).where(F.col("signal_type") == "metric")
-
-
-def q_pipeline_metrics_number_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NumberDP related record: points keyed by a surrogate parent metric id
-    (number_data_point.go:36-47 shape; parent = the main METRICS record)."""
-    from otel_arrow_adapter_spark.operators.normalize import ranked_dim
-
-    pts = _metric_points(spark, sf_dir)
-    dim = ranked_dim(pts, ("metric_name", "metric_unit"), "metric_id").select(
-        F.col("metric_name").alias("__d_name"),
-        F.col("metric_unit").alias("__d_unit"),
-        "metric_id",
-    )
-    # null-safe join: metric_unit is optional (the synthetic generator drops
-    # it ~1/3 of the time) — a plain equi-join would silently drop unit-less
-    # points while the oracle's dense_rank keeps them
-    cond = F.col("metric_name").eqNullSafe(F.col("__d_name")) & F.col(
-        "metric_unit"
-    ).eqNullSafe(F.col("__d_unit"))
-    return pts.join(F.broadcast(dim), cond).select(
-        "metric_id", "conv_id", "turn_idx", F.col("metric_value").alias("int_value")
-    )
-
-
-def q_pipeline_metrics_hist_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HistogramDP rollup: bucket_counts (array<long>) over explicit bounds +
-    count/sum/min/max (histogram_dp.go:50-66 shape). Arrays compared as
-    JSON (engine-portable for integer arrays)."""
-    from otel_arrow_adapter_spark.operators.metrics_dp import histogram_rollup
-
-    hist = histogram_rollup(_metric_points(spark, sf_dir), bounds=HIST_BOUNDS)
-    return hist.select(
-        "metric_name",
-        "metric_unit",
-        "count",
-        "sum",
-        "min",
-        "max",
-        F.to_json("bucket_counts").alias("bucket_counts"),
-    )
-
-
-def _exp_hist_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """18-bucket exp-histogram rollup of each metric point's signed delta
-    from a 1000-unit baseline: the exp_hist_dp query's rollup and the
-    input of both metrics capture round-trips."""
-    from otel_arrow_adapter_spark.operators.metrics_dp import exp_histogram_rollup
-
-    pts = _metric_points(spark, sf_dir).withColumn(
-        "value_delta", F.col("metric_value") - F.lit(1000)
-    )
-    return exp_histogram_rollup(pts, max_buckets=18, value_col="value_delta")
-
-
-def q_pipeline_metrics_exp_hist_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ExpHistogramDP rollup with positive AND mirrored negative bucket
-    families (ehistogram_dp.go:47-64,60 shape) over a signed value (the
-    point's delta from a 1000-unit baseline — signed metrics are exactly
-    where the negative family matters). Bucket indices are explicit integer
-    boundary comparisons and every output is integer-typed; arrays are
-    rendered with array_join (to_json whitespace and double formatting are
-    engine-version-dependent)."""
-    return _exp_hist_delta(spark, sf_dir).select(
-        "metric_name",
-        "metric_unit",
-        "count",
-        "sum",
-        "scale",
-        "zero_count",
-        "positive_offset",
-        F.array_join("positive_bucket_counts", ",").alias("positive_bucket_counts"),
-        "negative_offset",
-        F.array_join("negative_bucket_counts", ",").alias("negative_bucket_counts"),
-        "min",
-        "max",
-    )
-
-
-def q_pipeline_metrics_exp_hist_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ExpHistogramDP rollup at NONZERO base-2 scale (scale=1: bucket base
-    sqrt(2), twice the resolution of scale 0 — the int32 scale field the
-    reference transports per point, ehistogram_dp.go:57,81). Boundaries are
-    exact integers from nested isqrt (metrics_dp.exp2_lower_bound), so both
-    engines bucket by integer comparison only; 36 buckets cover the same
-    value range as the scale-0/18 family."""
-    from otel_arrow_adapter_spark.operators.metrics_dp import exp_histogram_rollup
-
-    pts = _metric_points(spark, sf_dir).withColumn(
-        "value_delta", F.col("metric_value") - F.lit(1000)
-    )
-    eh = exp_histogram_rollup(pts, max_buckets=36, value_col="value_delta", scale=1)
-    return eh.select(
-        "metric_name",
-        "metric_unit",
-        "count",
-        "sum",
-        "scale",
-        "zero_count",
-        "positive_offset",
-        F.array_join("positive_bucket_counts", ",").alias("positive_bucket_counts"),
-        "negative_offset",
-        F.array_join("negative_bucket_counts", ",").alias("negative_bucket_counts"),
-        "min",
-        "max",
-    )
-
-
-def q_pipeline_metrics_exp_hist_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Downscale-and-merge across heterogeneous scales (OTLP exp-histogram
-    merge semantics over the reference's per-point int32 scale field):
-    even turns roll up at scale 1 (36 buckets), odd turns at scale 0 (18),
-    then merge_exp_histograms downscales the fine family onto the coarse
-    one and sums element-wise. The oracle is the DIRECT scale-0 rollup over
-    ALL points — equality holds iff downscaling is lossless (coarse
-    boundaries are a subset of fine ones), so the whole merge path is
-    value-checked, not just row-counted."""
-    from otel_arrow_adapter_spark.caching import materialize_scope, owned_result
-    from otel_arrow_adapter_spark.operators.metrics_dp import (
-        exp_histogram_rollup_pair,
-        merge_exp_histograms,
-    )
-
-    pts = _metric_points(spark, sf_dir).withColumn(
-        "value_delta", F.col("metric_value") - F.lit(1000)
-    )
-    # one gated pass builds BOTH scale families (the two separate rollups
-    # were two full scans of the fact); merge references its input 4x
-    # (min-scale dim, scalars, both bucket families) so the tiny per-key
-    # union comes back materialized — each reference reads a flat
-    # 4-row RDD instead of re-planning the scan->parse->rollup lineage
-    # (the round-start plan repeated the parquet scan 24x,
-    # plans/r06/*_before.txt)
-    with materialize_scope() as m:
-        both = m.own(
-            exp_histogram_rollup_pair(
-                pts, F.col("turn_idx") % 2 == 0, (36, 1), (18, 0), value_col="value_delta"
-            )
-        )
-        out = merge_exp_histograms(both).select(
-            "metric_name",
-            "metric_unit",
-            "count",
-            "sum",
-            "scale",
-            "zero_count",
-            "positive_offset",
-            F.array_join("positive_bucket_counts", ",").alias("positive_bucket_counts"),
-            "negative_offset",
-            F.array_join("negative_bucket_counts", ",").alias("negative_bucket_counts"),
-            "min",
-            "max",
-        )
-        return owned_result(out)
-
-
-def q_pipeline_metrics_temporality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temporality conversion (cumulative -> delta, the collector's
-    cumulativetodelta semantics incl. counter-reset restart): per-series
-    lag window — parallel across (metric, unit, conversation) series,
-    never global."""
-    from otel_arrow_adapter_spark.operators.metrics_dp import cumulative_to_delta
-
-    return cumulative_to_delta(_metric_points(spark, sf_dir)).select(
-        "conv_id", "turn_idx", "metric_name", "metric_unit", "delta"
-    )
-
-
-def q_pipeline_metrics_summary_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SummaryDP rollup: count/sum + exact quantile values
-    (summary_dp.go:36 shape; percentile_approx is the 10^12-row path)."""
-    from otel_arrow_adapter_spark.operators.metrics_dp import summary_rollup
-
-    return summary_rollup(_metric_points(spark, sf_dir), quantiles=[0.5, 0.9, 0.99])
-
-
-def q_pipeline_metrics_exemplars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exemplar selection: top-2 max-value points per metric with source
-    linkage (exemplar.go:36-44 carries span/trace ids; transcripts link
-    back to conv_id/turn_idx). Window partitioned by metric keys."""
-    from otel_arrow_adapter_spark.operators.metrics_dp import top_exemplars
-
-    return top_exemplars(_metric_points(spark, sf_dir), k=2).select(
-        "metric_name", "metric_unit", "exemplar_value", "conv_id", "turn_idx", "rank"
-    )
-
-
-def q_pipeline_metrics_multivariate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multivariate metrics rollup: the wide layout (K values per
-    (resource, ts) sharing one attrs row — the reference's x7.97 flagship,
-    docs/benchmarks.md:73) must reproduce univariate semantics exactly:
-    per-variable count/sum/min/max + resource reach through the exploded
-    view. The measured wide-vs-long compression factor is recorded by
-    bench.py in BENCH/BASELINE.md."""
-    from otel_arrow_adapter_spark.datagen.metrics import synthesize_metrics_multivariate
-    from otel_arrow_adapter_spark.operators.metrics_dp import explode_univariate
-
-    wide = synthesize_metrics_multivariate(spark, n_resources=20, n_ts=50)
-    uni = explode_univariate(wide)
-    return uni.groupBy("metric_name").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("value").alias("sum_value"),
-        F.min("value").alias("min_value"),
-        F.max("value").alias("max_value"),
-        F.countDistinct("res_id").alias("n_res"),
-    )
-
-
-def _record_counts(
-    encode: Callable[[DataFrame], dict[str, DataFrame]], nested: DataFrame
-) -> DataFrame:
-    """(record, n_rows) for every record table ``encode(nested)`` emits,
-    over ``nested`` materialized once: the per-record count branches would
-    otherwise each re-run the generator's shuffles."""
-    from otel_arrow_adapter_spark.caching import materialize_scope, owned_result
-
-    with materialize_scope() as m:
-        parts = [
-            df.agg(F.count(F.lit(1)).alias("n_rows")).select(F.lit(name).alias("record"), "n_rows")
-            for name, df in sorted(encode(m.keep(nested)).items())
-        ]
-        return owned_result(reduce(DataFrame.unionByName, parts))
-
-
-def q_pipeline_metrics_dp_records(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full star-schema encode over the nested generator: per-record row
-    counts (A4 analog). The generator is md5-seeded (datagen/seeds.py), so
-    the DuckDB oracle replays it and recomputes every count; encode∘decode
-    == id is pytest-gated (test_metrics_dp.py::test_metrics_roundtrip)."""
-    from otel_arrow_adapter_spark.datagen.metrics import synthesize_metrics_nested
-    from otel_arrow_adapter_spark.operators.metrics_dp import encode_metrics
-
-    return _record_counts(encode_metrics, synthesize_metrics_nested(spark, n_metrics=300))
-
-
-# ---------------------------------------------------------------------------
-# Span events/links related records (O6, J3: event.go:46-52, link.go:47-55)
-# ---------------------------------------------------------------------------
-
-def _trace_points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _parsed(spark, sf_dir).where(F.col("signal_type") == "trace")
-
-
-def q_pipeline_span_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPAN_EVENTS related record: start/end lifecycle events per span."""
-    from otel_arrow_adapter_spark.operators.span_records import span_events
-
-    return span_events(_trace_points(spark, sf_dir))
-
-
-def q_pipeline_span_links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPAN_LINKS related record: link to the conversation-parent span."""
-    from otel_arrow_adapter_spark.operators.span_records import span_links
-
-    return span_links(_trace_points(spark, sf_dir))
-
-
-def q_pipeline_span_event_wiring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3 decode-side wiring: children grouped and re-attached per span —
-    the reconstruct analog of the reference's related-data store lookups."""
-    from otel_arrow_adapter_spark.operators.span_records import (
-        span_events,
-        span_links,
-        wire_span_children,
-    )
-
-    traces = _trace_points(spark, sf_dir)
-    wired = wire_span_children(traces, span_events(traces), span_links(traces))
-    return wired.select(
-        "conv_id",
-        "turn_idx",
-        "span_hex",
-        "n_events",
-        "n_links",
-        (F.col("last_event_ts_us") - F.col("first_event_ts_us")).alias("span_us"),
-    )
-
-
-def q_pipeline_trace_records(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full trace star-schema encode over the nested generator: per-record
-    row counts. The generator is md5-seeded (datagen/seeds.py), so the
-    DuckDB oracle replays it; encode∘decode == id is pytest-gated
-    (test_span_records.py::test_traces_star_roundtrip)."""
-    from otel_arrow_adapter_spark.datagen.traces import synthesize_traces_nested
-    from otel_arrow_adapter_spark.operators.span_records import encode_traces
-
-    return _record_counts(encode_traces, synthesize_traces_nested(spark, n_spans=300))
-
-
-# ---------------------------------------------------------------------------
-# Analytics queries over driver tables (agg/join/window coverage)
-# ---------------------------------------------------------------------------
-
-def q_q1_lineitem_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.where(F.col("l_shipdate") <= "1998-09-02")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("l_quantity").alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-def q_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: 3-way join (dim filter pushed to both scans) +
-    aggregate + distributed top-k via orderBy+limit (TakeOrdered)."""
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet").where(
-        F.col("c_mktsegment") == "BUILDING"
-    )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").where(F.col("o_orderdate") < "1995-03-15")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").where(
-        F.col("l_shipdate") > "1995-03-15"
-    )
-    return (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias(
-                "revenue"
-            )
-        )
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(10)
-        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-    )
-
-
-def q_q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: 6-way join with small dims broadcast, revenue per
-    nation (region filter pruned through two broadcast hops)."""
-    r = spark.read.parquet(f"{sf_dir}/region.parquet").where(F.col("r_name") == "ASIA")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    s = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
-        .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .where(F.col("c_nationkey") == F.col("s_nationkey"))
-        .join(F.broadcast(n), F.col("s_nationkey") == n["n_nationkey"])
-        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias(
-                "revenue"
-            ),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
-
-
-def q_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape: HAVING-filtered aggregate driving the join back
-    onto orders/customer, then top-k. No forced broadcasts: the heavy-
-    hitter aggregate's size is data-dependent (selective HAVING, but
-    millions of rows at SF-100k) and customer scales with SF — AQE
-    converts to broadcast at runtime exactly when a side is actually
-    small, which is the 100 TB-safe default."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("sum_qty"))
-        .where(F.col("sum_qty") > 150)
-    )
-    return (
-        o.join(big, o["o_orderkey"] == big["l_orderkey"])
-        .join(c, o["o_custkey"] == c["c_custkey"])
-        .select(
-            "c_name",
-            "c_custkey",
-            "o_orderkey",
-            "o_orderdate",
-            F.round("o_totalprice", 2).alias("o_totalprice"),
-            F.col("sum_qty").cast("long").alias("sum_qty"),
-        )
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(20)
-    )
-
-
-def q_pipeline_sink_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP aggregation over (sink, severity): per-combination counts
-    plus per-sink and grand totals in one pass (§2.6 — the reference has
-    no grouping-sets machinery; Spark's rollup is the built-in). grouping
-    ids disambiguate the NULL subtotal rows engine-portably."""
-    from otel_arrow_adapter_spark.plans import build_labeled
-
-    cat = synthesize_tool_catalog(spark, n_tools=N_CATALOG_TOOLS)
-    labeled = build_labeled(_transcripts(spark, sf_dir), cat)
-    # project BEFORE rollup: the grouping-sets Expand replicates every row
-    # once per grouping set, so it must see only the grouping columns —
-    # expanding the full wide payload row measured 3.5x slower
-    return (
-        labeled.select("sink", "severity_text")
-        .rollup("sink", "severity_text")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.grouping("sink").cast("int").alias("g_sink"),
-            F.grouping("severity_text").cast("int").alias("g_sev"),
-        )
-        .select("sink", "severity_text", "g_sink", "g_sev", "n")
-    )
-
-
-def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sessionization (gap > 30 min) — classic lag+cumsum idiom (W3)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_micros(F.col("ts").cast("timestamp")) - F.unix_micros(
-        F.lag(F.col("ts").cast("timestamp")).over(w)
-    )
-    new_sess = F.when(gap.isNull() | (gap > 30 * 60 * 1_000_000), 1).otherwise(0)
-    sess = F.sum(new_sess).over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
-    per_event = ev.select("user_id", "event_id", sess.alias("session_id"))
-    return per_event.groupBy("user_id").agg(
-        F.max("session_id").cast("long").alias("n_sessions"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Training-data operators (documents / embeddings)
-# ---------------------------------------------------------------------------
-
-def _docs_plus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents + deterministic duplicates: exact copies (doc_id%10==0,
-    +100000) and near copies with a token tail (doc_id%7==0, +200000) —
-    so dedup operators have something to find."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    exact = d.where(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 100000).alias("doc_id"), "text"
-    )
-    near = d.where(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + 200000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" near duplicate tail")).alias("text"),
-    )
-    return d.unionByName(exact).unionByName(near)
 
 
 _DOCS_PLUS_SQL = """
@@ -1025,1292 +210,112 @@ pairs AS (
 )"""
 
 
-def q_doc_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whitespace token count + BPE-ish pre-tokenizer count (letter runs /
-    digit runs / single punctuation — the LLM-token estimate) + chars."""
-    from otel_arrow_adapter_spark.functions.text import bpe_token_count, token_count
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return d.select(
-        "doc_id",
-        token_count(F.col("text")).alias("n_tokens"),
-        bpe_token_count(F.col("text")).alias("n_bpe_tokens"),
-        F.length("text").cast("long").alias("n_chars_actual"),
-    )
-
-
-def q_doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from otel_arrow_adapter_spark.functions.text import lang_id, stopword_ratio
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return d.select(
-        "doc_id",
-        lang_id(F.col("text")).alias("lang_pred"),
-        F.round(stopword_ratio(F.col("text")), 6).alias("stopword_ratio"),
-    )
-
-
-def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from otel_arrow_adapter_spark.functions.text import fingerprint
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return d.select("doc_id", fingerprint(F.col("text")).alias("fp"))
-
-
-def q_doc_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from otel_arrow_adapter_spark.functions.dedup import exact_duplicates
-
-    return exact_duplicates(_docs_plus(spark, sf_dir)).select(
-        "fp", "n_docs", F.col("doc_ids").cast("string").alias("doc_ids")
-    )
-
-
-def q_doc_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from otel_arrow_adapter_spark.functions.dedup import minhash_signature
-
-    return minhash_signature(_docs_plus(spark, sf_dir), num_hashes=4)
-
-
-def q_doc_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from otel_arrow_adapter_spark.functions.dedup import lsh_candidates, minhash_signature
-
-    sig = minhash_signature(_docs_plus(spark, sf_dir), num_hashes=8)
-    return lsh_candidates(sig, num_hashes=8, bands=4)
-
-
-def q_doc_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH candidate generation + exact Jaccard verify — the
-    scale path (the all-pairs inverted-index join is quadratic on hot
-    shingles; candidates bound it)."""
-    from otel_arrow_adapter_spark.functions.dedup import lsh_jaccard_pairs
-
-    return lsh_jaccard_pairs(_docs_plus(spark, sf_dir), threshold=0.5, num_hashes=8, bands=4)
-
-
-def q_doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full dedup resolution chain: MinHash-LSH candidates -> exact
-    Jaccard verify -> CONNECTED COMPONENTS over the verified pairs
-    (iterative min-label propagation) -> one cluster id + kept
-    representative per doc. Pair finders alone can't drive keep-one-copy:
-    A~B and B~C must collapse to one kept doc even when A~C was never
-    emitted. Oracle: DuckDB recursive CTE computing min reachable doc_id
-    over the symmetric edge closure."""
-    from otel_arrow_adapter_spark.caching import materialize_scope
-    from otel_arrow_adapter_spark.functions.dedup import dup_clusters
-
-    with materialize_scope() as m:
-        return dup_clusters(m.own(q_doc_jaccard_pairs(spark, sf_dir)))
-
-
-def q_doc_clean_corpus_near(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The NEAR-duplicate cleaning pass a pretraining corpus actually runs
-    (doc_clean_corpus catches verbatim copies only; this catches the
-    boilerplate/near-copy tail): MinHash-LSH candidates -> exact Jaccard
-    verify -> connected components -> drop every cluster member except the
-    min-id representative -> quality filter -> per-doc token stats. The
-    anti-join against the drop list shuffles on doc_id — O(dup docs), the
-    natural scale shape. Oracle: recursive-CTE closure + the shared
-    quality/token scoring SQL."""
-    from otel_arrow_adapter_spark.caching import materialize_scope, owned_result
-    from otel_arrow_adapter_spark.functions.text import quality_score, token_count
-
-    with materialize_scope() as m:
-        clusters = m.own(q_doc_dup_clusters(spark, sf_dir))
-        drop = clusters.where(~F.col("is_rep")).select("doc_id")
-        kept = _docs_plus(spark, sf_dir).join(drop, "doc_id", "left_anti")
-        scored = kept.select(
-            "doc_id",
-            token_count(F.col("text")).alias("n_tokens"),
-            quality_score(F.col("text")).alias("q"),
-        )
-        out = scored.where(F.col("q") >= 0.5).select(
-            "doc_id", "n_tokens", F.round("q", 6).alias("quality")
-        )
-        return owned_result(out)
-
-
-def q_doc_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-level boilerplate: word 3-grams present in >= 5 distinct
-    documents (the CCNet/RefinedWeb repeated-chrome target). One explode +
-    one map-side-combined groupBy on the gram string — shuffled rows ≈
-    distinct grams, never total occurrences."""
-    from otel_arrow_adapter_spark.functions.text import boilerplate_ngrams
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return boilerplate_ngrams(d, n=3, min_docs=5)
-
-
-def q_doc_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style per-doc repetition filters at token grain: duplicate
-    2-gram fraction + most-frequent-2-gram share, keep = dup fraction
-    <= 0.2. Pure array expressions, zero shuffle, zero Python."""
-    from otel_arrow_adapter_spark.functions.text import repetition_scores
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return repetition_scores(d, n=2)
-
-
-def _docs_with_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents with deterministic synthetic PII appended (the testdata
-    corpus is PII-free, so the redaction query plants known instances as a
-    pure function of doc_id; the oracle replays the identical augmentation
-    in SQL). doc_id%5 -> an email, %7 -> a phone, %11 -> an IPv4."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    email = F.concat(F.lit(" contact user"), did.cast("string"), F.lit("@example.com"))
-    phone = F.concat(
-        F.lit(" call 555-"),
-        F.lpad(F.pmod(did * 7, F.lit(1000)).cast("string"), 3, "0"),
-        F.lit("-"),
-        F.lpad(F.pmod(did * 31, F.lit(10000)).cast("string"), 4, "0"),
-    )
-    ip = F.concat(
-        F.lit(" from 10."),
-        F.pmod(did, F.lit(256)).cast("string"),
-        F.lit("."),
-        F.pmod(did * 3, F.lit(256)).cast("string"),
-        F.lit("."),
-        F.pmod(did * 5, F.lit(256)).cast("string"),
-    )
-    text = F.concat(
-        F.col("text"),
-        F.when(F.pmod(did, F.lit(5)) == 0, email).otherwise(F.lit("")),
-        F.when(F.pmod(did, F.lit(7)) == 0, phone).otherwise(F.lit("")),
-        F.when(F.pmod(did, F.lit(11)) == 0, ip).otherwise(F.lit("")),
-    )
-    return d.select("doc_id", text.alias("text"), "lang")
-
-
-def q_doc_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrub (StarCoder-style pre-training pass): mask emails / IPv4s /
-    phone numbers with typed placeholders + per-category audit counts.
-    Chained JVM-side regexp_replace, zero Python, zero shuffle; the same
-    RE2-safe regexes replay verbatim in the DuckDB oracle."""
-    from otel_arrow_adapter_spark.functions.text import pii_counts, redact_pii
-
-    d = _docs_with_pii(spark, sf_dir)
-    counts = pii_counts(F.col("text"))
-    return d.select(
-        "doc_id",
-        counts["email"].alias("n_emails"),
-        counts["phone"].alias("n_phones"),
-        counts["ip"].alias("n_ips"),
-        redact_pii(F.col("text")).alias("redacted"),
-    )
-
-
-def q_doc_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination (the GPT-3 n-gram-overlap protocol, n=8):
-    corpus docs sharing any word 8-gram with the eval set. Eval set =
-    documents with doc_id%10==0 (so docs_plus's planted exact copies and
-    the %70 near-dup tails are guaranteed hits). Broadcast-join shape:
-    the fact side never sort-merges."""
-    from otel_arrow_adapter_spark.functions.dedup import ngram_contamination
-
-    bench = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
-        F.pmod(F.col("doc_id"), F.lit(10)) == 0
-    )
-    return ngram_contamination(_docs_plus(spark, sf_dir), bench, n=8)
-
-
-def q_doc_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Domain-mixture sampling: deterministic md5-hash keep/drop with
-    per-language rates (en 50%, de/fr 25%, es/zh 10%) — reproducible
-    membership as a pure function of doc_id, a plain pushed-down filter
-    (no RNG state, no shuffle, rejected rows never materialize)."""
-    from otel_arrow_adapter_spark.functions.text import stratified_sample
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    rates = {"en": 0.5, "de": 0.25, "fr": 0.25, "es": 0.1, "zh": 0.1}
-    return stratified_sample(d, "lang", rates).select("doc_id", "lang")
-
-
-def q_doc_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-LM quality proxy (CCNet-style perplexity filter, unigram
-    order): mean token log-probability under the corpus's own unigram
-    distribution. Vocab build = one map-side-combined groupBy over token
-    TYPES; scoring = broadcast join + one doc-grain groupBy. Oracle: the
-    identical ln(n_tok/n_total) average in DuckDB."""
-    from otel_arrow_adapter_spark.functions.text import unigram_logprob
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return unigram_logprob(d)
-
-
-def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The embeddings table with its float vectors cast to array<double>."""
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-
-
-def q_emb_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """int8 scalar-quantized brute-force top-10: per-dim symmetric scales
-    (O(dim) global state, broadcast back), floor(x/s*127+0.5) codes,
-    cosine over reconstructions — what a quantized vector store serves.
-    Engine-portable arithmetic (floor half-up), full SQL replay."""
-    from otel_arrow_adapter_spark.functions.similarity import quantized_cosine_topk
-
-    e = _embeddings(spark, sf_dir)
-    return quantized_cosine_topk(e, query_vec_id=0, k=10, bits=8)
-
-
-def q_doc_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs (pandas-UDF bit-voting signature ->
-    16-bit-chunk pigeonhole blocking, never all-pairs). Oracle: DuckDB
-    recomputes the md5 bit votes in SQL and takes all pairs with
-    bit_count(xor) <= 3 — chunk blocking is LOSSLESS at this distance
-    (hamming <= 3 over 4 chunks forces one equal chunk), so the outputs
-    must match exactly."""
-    from otel_arrow_adapter_spark.functions.dedup import simhash_near_dups
-
-    return simhash_near_dups(_docs_plus(spark, sf_dir), max_hamming=3)
-
-
-def q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from otel_arrow_adapter_spark.functions.text import quality_score
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return d.select("doc_id", quality_score(F.col("text")).alias("quality"))
-
-
-def q_doc_pack_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing (concat-and-chunk, the LLM pretraining regime):
-    per-doc start offset and first/last training-chunk ids within its
-    deterministic md5 shard's concatenated token stream. The running
-    offset window partitions by shard — never the whole corpus in one
-    task."""
-    from otel_arrow_adapter_spark.functions.text import pack_offsets, token_count
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", token_count(F.col("text")).alias("n_tokens")
-    )
-    return pack_offsets(d, budget=512, n_shards=16)
-
-
-def q_doc_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed training-data cleaning pass (the shape every corpus runs
-    before training): quality filter -> exact-dedup keeping the first
-    (min doc_id) copy per fingerprint -> per-doc token stats. ONE shuffle
-    total: dedup is groupBy(fp).min(struct(doc_id, ...)) — keep-first as a
-    map-side-combined aggregate, no join back."""
-    from otel_arrow_adapter_spark.functions.text import (
-        fingerprint,
-        quality_score,
-        token_count,
-    )
-
-    d = _docs_plus(spark, sf_dir)
-    scored = d.select(
-        "doc_id",
-        quality_score(F.col("text")).alias("q"),
-        fingerprint(F.col("text")).alias("fp"),
-        token_count(F.col("text")).alias("n_tokens"),
-    )
-    kept = scored.where(F.col("q") >= 0.5)
-    agg = kept.groupBy("fp").agg(F.min(F.struct("doc_id", "n_tokens", "q")).alias("s"))
-    return agg.select(
-        F.col("s.doc_id").alias("doc_id"),
-        F.col("s.n_tokens").alias("n_tokens"),
-        F.round("s.q", 6).alias("quality"),
-    )
-
-
-def q_emb_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from otel_arrow_adapter_spark.functions.similarity import cosine_topk
-
-    e = _embeddings(spark, sf_dir)
-    return cosine_topk(e, query_vec_id=0, k=10)
-
-
-def q_emb_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from otel_arrow_adapter_spark.functions.similarity import ivf_assign
-
-    e = _embeddings(spark, sf_dir)
-    return (
-        ivf_assign(e, n_centroids=10)
-        .groupBy("centroid_id")
-        .agg(F.count(F.lit(1)).alias("n_vecs"), F.round(F.avg("cos_sim"), 4).alias("avg_sim"))
-    )
-
-
-def q_emb_ann_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from otel_arrow_adapter_spark.functions.similarity import ann_pairs
-
-    e = _embeddings(spark, sf_dir)
-    return ann_pairs(e, threshold=0.25, m=8)
-
-
-def q_emb_ann_pairs_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-probe sign-LSH: candidates = bucket hamming <= 1 (exact side
-    joins the probe side's exact+flip keys) — higher recall than the
-    exact-bucket join at the same m, still never all-pairs."""
-    from otel_arrow_adapter_spark.functions.similarity import ann_pairs_multiprobe
-
-    e = _embeddings(spark, sf_dir)
-    return ann_pairs_multiprobe(e, threshold=0.25, m=8)
-
-
-def q_emb_ivf_search_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF end-to-end: Lloyd-trained coarse centroids (2 iterations, 5
-    seeds) feeding the probed top-k search — train -> index -> search
-    composed in one lineage. The oracle replays the training iterations
-    (unnormalized: cosine ranking is scale-invariant) then the probe +
-    exact rescore; final scores are computed from raw stored vectors."""
-    from otel_arrow_adapter_spark.caching import materialize_scope, owned_result
-    from otel_arrow_adapter_spark.functions.similarity import ivf_search, kmeans_train
-
-    e = _embeddings(spark, sf_dir)
-    with materialize_scope() as m:
-        cents = m.own(kmeans_train(e, n_centroids=5, iters=2))
-        return owned_result(ivf_search(e, query_vec_id=0, k=10, n_probe=2, centroids=cents))
-
-
-def q_emb_ann_pairs_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale-real ANN: multi-table banded sign-LSH (m=16 bits x 4 disjoint
-    dimension blocks = all 64 dims), near-duplicate threshold 0.9, over the
-    embeddings plus planted exact duplicates (every 5th vector re-labeled
-    +100000) so the near-dup regime is actually exercised. Axis signs are
-    pure comparisons on stored values — bit-portable to the oracle."""
-    from otel_arrow_adapter_spark.functions.similarity import ann_pairs_banded
-
-    e = _embeddings(spark, sf_dir).select("vec_id", "embedding")
-    dup = e.where(F.col("vec_id") % 5 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
-    )
-    return ann_pairs_banded(e.unionByName(dup), threshold=0.9, m=16, n_tables=4)
-
-
-def q_emb_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-space duplicate CLUSTERS: banded sign-LSH near-dup pairs
-    (cos >= 0.9, incl. planted exact duplicates) resolved into connected
-    components — the same min-label propagation as doc_dup_clusters, shown
-    generic over any pair finder. Oracle: recursive-CTE closure over the
-    exact SQL replay of the banded candidate + cosine-verify pipeline."""
-    from otel_arrow_adapter_spark.caching import materialize_scope
-    from otel_arrow_adapter_spark.functions.dedup import dup_clusters
-
-    with materialize_scope() as m:
-        pairs = m.keep(q_emb_ann_pairs_banded(spark, sf_dir))
-        return dup_clusters(pairs, a_col="vec_a", b_col="vec_b", id_name="vec_id")
-
-
-def q_emb_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF top-k search: probe the 2 nearest of 10 coarse centroids, exact
-    cosine only inside those clusters (scanned fraction ~ n_probe/n_list)."""
-    from otel_arrow_adapter_spark.functions.similarity import ivf_search
-
-    e = _embeddings(spark, sf_dir)
-    return ivf_search(e, query_vec_id=0, k=10, n_centroids=10, n_probe=2)
-
-
-def q_emb_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed Lloyd k-means (2 iterations, 5 seed centroids) + final
-    assignment census. The DuckDB oracle replays both Lloyd iterations in
-    SQL — cosine is scale-invariant, so it can skip the L2-normalization
-    step and assignments still match. Integer outputs (cluster sizes, dim)
-    keep the value hash robust to last-ulp float accumulation differences;
-    convergence/normalization are pytest-gated (test_kmeans_*)."""
-    from otel_arrow_adapter_spark.functions.similarity import (
-        assign_to_centroids,
-        kmeans_train,
-    )
-    from otel_arrow_adapter_spark.caching import materialize_scope, owned_result
-
-    e = _embeddings(spark, sf_dir)
-    with materialize_scope() as m:
-        cents = m.own(kmeans_train(e, n_centroids=5, iters=2))
-        census = assign_to_centroids(e, cents).groupBy("centroid_id").agg(
-            F.count(F.lit(1)).alias("n_vecs")
-        )
-        out = census.join(
-            cents.select("centroid_id", F.size("c_vec").alias("dim")), "centroid_id"
-        ).select("centroid_id", "n_vecs", "dim")
-        return owned_result(out)
-
-
-def q_pipeline_delta_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E1: delta encoding of sorted surrogate IDs + the maxDelta<=1
-    monotonicity invariant (the reference panics on violation as a sort-bug
-    detector, builder/uint.go:261-265; here it's an asserted column).
-
-    Two-phase so no window ever sees the fact table in one partition:
-    within a res_id run (the table sorted by res_id first) every
-    consecutive delta is 0 by construction, so only the run-head delta is
-    informative — phase 1 is a distributed groupBy(res_id); phase 2 runs
-    the lag window over the aggregated dimension table (O(#resources)
-    rows, never O(turns))."""
-    parsed = assign_surrogate_ids(_parsed(spark, sf_dir))
-    per_res = parsed.groupBy("res_id").agg(F.count(F.lit(1)).alias("n_rows"))
-    # phase 2 runs windowlessly on the aggregated dimension (O(#resources)):
-    # sorted array + posexplode, prev id = arr[pos-1]
-    agg = per_res.agg(F.sort_array(F.collect_list(F.struct("res_id", "n_rows"))).alias("_v"))
-    exploded = agg.select(F.posexplode("_v").alias("_pos", "_s"), F.col("_v"))
-    prev = F.when(F.col("_pos") > 0, F.col("_v")[F.col("_pos") - 1]["res_id"]).otherwise(F.lit(0))
-    head_delta = F.col("_s.res_id") - prev
-    return exploded.select(
-        F.col("_s.res_id").alias("res_id"),
-        F.col("_s.n_rows").alias("n_rows"),
-        # in-run deltas are all 0 and head_delta >= 1 (dense ascending ids),
-        # so the run's max/sum of deltas both equal the head delta
-        head_delta.alias("max_delta"),
-        head_delta.alias("delta_sum"),
-    )
-
-
-def q_events_latency_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3: benchmark-style summary stats — exact percentiles per group
-    (the reference's profiler reports mean/p50-p99,
-    pkg/benchmark/profiler.go:254-269). percentile_approx is the 10^12-row
-    path; exact percentile here so the DuckDB oracle matches bit-for-bit."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    pct = F.percentile("value", F.array(F.lit(0.5), F.lit(0.95), F.lit(0.99)))
-    return ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.avg("value"), 6).alias("mean_value"),
-        F.round(pct.getItem(0), 6).alias("p50"),
-        F.round(pct.getItem(1), 6).alias("p95"),
-        F.round(pct.getItem(2), 6).alias("p99"),
-    )
-
-
-def q_events_latency_quantiles_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3 at the 10^12-row regime: quantiles FROM the mergeable
-    exponential-histogram sketch (DDSketch-style) instead of an exact
-    per-group sort — rollup is one map-side-combined shuffle to
-    O(max_buckets) counts per group, the quantile walk is a window over
-    O(groups x buckets) slot rows, and sketches from different partitions/
-    days merge exactly (merge_exp_histograms). The [est_lo, est_hi] bracket
-    provably contains the true quantile; the oracle maps the exact rank-q
-    value to the same integer bucket edges, so the estimates match
-    bit-for-bit. Value domain [0, ~600] -> max_buckets=12, no overflow."""
-    from otel_arrow_adapter_spark.operators.metrics_dp import (
-        exp_hist_quantiles,
-        exp_histogram_rollup,
-    )
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").where(F.col("value").isNotNull())
-    eh = exp_histogram_rollup(
-        ev, max_buckets=12, value_col="value", keys=("event_type",), scale=0
-    )
-    return exp_hist_quantiles(
-        eh, (0.5, 0.95, 0.99), keys=("event_type",), scale=0, max_buckets=12
-    )
-
-
-def q_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: video frame sampling (explode over n_frames) on
-    the deterministic synthetic media table; decode itself is stubbed (the
-    container has no codecs) but the schema/partitioning/explode are real."""
-    from otel_arrow_adapter_spark.functions.multimodal import frame_sample, synthesize_media
-
-    media = synthesize_media(spark, n=200)
-    return frame_sample(media, every_n=2).select("media_id", "frame_idx")
-
-
-def _capture_dir(name: str, sf_dir: str) -> str:
-    """A capture round-trip's directory: deterministic per sf_dir under the
-    temp dir, so repeated runs reuse (and the writers clear) one directory
-    instead of accumulating mkdtemp leftovers."""
-    import hashlib
-    import tempfile
-
-    return os.path.join(
-        tempfile.gettempdir(), f"{name}_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}"
-    )
-
-
-def _exp_hist_decoded(decoded: DataFrame) -> DataFrame:
-    """The decoded exp-hist fields both metrics capture round-trips return."""
-    return decoded.where(F.col("res_idx") >= 0).select(
-        "metric_name",
-        "metric_unit",
-        "count",
-        F.col("sum").cast("double").alias("sum"),
-        "scale",
-        "zero_count",
-        "positive_offset",
-        F.coalesce("positive_bucket_counts", F.lit("")).alias("positive_bucket_counts"),
-        "negative_offset",
-        F.coalesce("negative_bucket_counts", F.lit("")).alias("negative_bucket_counts"),
-        "n_attrs",
-        F.col("attrs")["unit"].alias("attr_unit"),
-    )
-
-
-def _span_rollup(dec: DataFrame) -> DataFrame:
-    """Per-kind rollup over the DECODED span values (event names and
-    times, link ids, the conv attr) that both traces capture round-trips
-    return."""
-    mod = 1_000_003
-    first_link = F.try_element_at("links", F.lit(1))
-    return dec.groupBy(F.col("kind").cast("int").alias("kind")).agg(
-        F.count(F.lit(1)).alias("n_spans"),
-        F.sum(F.size("events")).cast("long").alias("n_events"),
-        F.sum(
-            F.size(F.filter("events", lambda e: e["name"] == F.lit("span.end")))
-        ).cast("long").alias("n_end_events"),
-        F.sum(F.col("start_time_unix_nano") % mod).cast("long").alias("sum_start_mod"),
-        F.sum(
-            F.aggregate(
-                "events",
-                F.lit(0).cast("long"),
-                lambda a, e: a + e["time_unix_nano"] % mod,
-            )
-        ).cast("long").alias("sum_event_ts_mod"),
-        F.sum(F.coalesce(F.col("status_code"), F.lit(0))).cast("long").alias("sum_status"),
-        F.sum(F.size("links")).cast("long").alias("n_links"),
-        F.countDistinct(first_link["trace_id"]).alias("n_link_traces"),
-        F.max(first_link["span_id"]).alias("max_link_span"),
-        F.max("name").alias("max_name"),
-        F.sum(
-            F.when(
-                F.try_element_at("attrs", F.lit("conv"))
-                == F.regexp_replace("name", "^op-", ""),
-                1,
-            ).otherwise(0)
-        ).cast("long").alias("n_attr_conv_match"),
-    )
-
-
-def q_pipeline_pb_capture_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S8 end-to-end, oracle-gated: log-classified turns -> OTLP .pb
-    capture files (``write_pb_capture``: one ExportLogsServiceRequest file
-    per partition — the reference's dataset format,
-    real_logs_dataset.go:109-124) -> read_pb_logs wire decode -> severity
-    rollup. The oracle replays the rollup straight from the transcripts,
-    so equality holds iff encode∘decode == id on every frame (wire format
-    included)."""
-    from otel_arrow_adapter_spark.sources.otlp_pb import (
-        encode_export_logs_request,
-        read_pb_logs,
-        write_pb_capture,
-    )
-
-    logs = (
-        _parsed(spark, sf_dir)
-        .where(F.col("signal_type") == "log")
-        .select(
-            "severity_text",
-            "severity_number",
-            F.col("msg").alias("body"),
-            (F.col("log_ts_us") * 1000).alias("time_unix_nano"),
-        )
-    )
-
-    def to_record(r: dict) -> dict:
-        return {
-            "res_idx": 0,
-            "severity_text": r["severity_text"],
-            "severity_number": None
-            if r["severity_number"] is None
-            else int(r["severity_number"]),
-            "body": r["body"],
-            "time_unix_nano": None
-            if r["time_unix_nano"] is None
-            else int(r["time_unix_nano"]),
-        }
-
-    out = _capture_dir("oaas_pb_capture", sf_dir)
-    write_pb_capture(logs, out, to_record, encode_export_logs_request)
-    decoded = read_pb_logs(spark, out)
-    return decoded.groupBy("severity_text").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count("body").alias("n_body"),
-        # modular sum: raw nanosecond sums overflow int64 at a few thousand
-        # rows; the mod keeps the checksum integer-exact on both engines
-        F.sum(F.col("time_unix_nano") % F.lit(1_000_003)).cast("long").alias("sum_ts_mod"),
-        F.max("time_unix_nano").cast("long").alias("max_ts"),
-        F.max("severity_number").cast("int").alias("max_sev"),
-    )
-
-
-def q_pipeline_pb_metrics_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S8 metrics fidelity, oracle-gated (VERDICT r4 next-round #4 done
-    criterion): metric-classified turns -> exp-histogram rollup WITH sparse
-    bucket offsets -> OTLP .pb capture (ExponentialHistogramDataPoint:
-    zigzag scale, zero_count, offset-bearing positive/negative buckets,
-    one attribute per DP) -> read_pb_metrics wire decode -> the decoded
-    fields themselves. The oracle computes the same rollup straight from
-    the transcripts in SQL, so equality holds iff pb encode∘decode == id
-    on every exp-hist field INCLUDING offsets and the attr VALUE (the
-    reader surfaces DP attr key/values as a map, not just a count) — the
-    r4 ADVICE failure (exp-hist DPs decoded with the NumberDP layout)
-    would turn every row into garbage here."""
-    from otel_arrow_adapter_spark.sources.otlp_pb import (
-        encode_export_metrics_request,
-        read_pb_metrics,
-        write_pb_capture,
-    )
-
-    eh = _exp_hist_delta(spark, sf_dir).select(
-        "metric_name",
-        "metric_unit",
-        "count",
-        "sum",
-        "scale",
-        "zero_count",
-        "positive_offset",
-        F.array_join("positive_bucket_counts", ",").alias("pos_csv"),
-        "negative_offset",
-        F.array_join("negative_bucket_counts", ",").alias("neg_csv"),
-    )
-
-    def to_record(r: dict) -> dict:
-        return {
-            "res_idx": 0,
-            "metric_name": r["metric_name"],
-            "metric_unit": r["metric_unit"],
-            "metric_type": "exponential_histogram",
-            "time_unix_nano": 1_700_000_000_000_000_000,
-            "count": int(r["count"]),
-            "sum": float(r["sum"]),
-            "scale": int(r["scale"]),
-            "zero_count": int(r["zero_count"]),
-            "positive_offset": int(r["positive_offset"]),
-            "positive_bucket_counts": r["pos_csv"] or None,
-            "negative_offset": int(r["negative_offset"]),
-            "negative_bucket_counts": r["neg_csv"] or None,
-            "attrs": {"unit": r["metric_unit"] or ""},
-        }
-
-    out = _capture_dir("oaas_pb_mcapture", sf_dir)
-    write_pb_capture(eh, out, to_record, encode_export_metrics_request)
-    return _exp_hist_decoded(read_pb_metrics(spark, out))
-
-
-def q_pipeline_otlp_json_metrics_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The protojson sibling of pipeline_pb_metrics_roundtrip, ZERO
-    Python: the same offset-bearing exp-histogram rollup is captured as
-    line-sharded ExportMetricsServiceRequest JSON (uint64-as-string,
-    positive/negative DataPointBuckets with offsets) via to_json, decoded
-    with from_json, and the decoded fields returned. Shares the .pb
-    sibling's oracle verbatim — equality iff protojson encode∘decode == id
-    on every exp-hist field including offsets and the attr value."""
-    from otel_arrow_adapter_spark.sources.otlp_json import (
-        read_otlp_json_metrics,
-        write_otlp_json_metrics,
-    )
-
-    eh = _exp_hist_delta(spark, sf_dir).select(
-        F.lit(0).alias("res_idx"),
-        "metric_name",
-        F.coalesce("metric_unit", F.lit("")).alias("metric_unit"),
-        F.lit("exponential_histogram").alias("metric_type"),
-        F.lit(1_700_000_000_000_000_000).alias("time_unix_nano"),
-        "count",
-        F.col("sum").cast("double").alias("sum"),
-        "scale",
-        "zero_count",
-        "positive_offset",
-        F.nullif(F.array_join("positive_bucket_counts", ","), F.lit("")).alias(
-            "positive_bucket_counts"
-        ),
-        "negative_offset",
-        F.nullif(F.array_join("negative_bucket_counts", ","), F.lit("")).alias(
-            "negative_bucket_counts"
-        ),
-        F.create_map(
-            F.lit("unit"), F.coalesce("metric_unit", F.lit(""))
-        ).alias("attrs"),
-    )
-    out = _capture_dir("oaas_json_mcapture", sf_dir)
-    write_otlp_json_metrics(eh, out)  # overwrite mode: idempotent re-runs
-    return _exp_hist_decoded(read_otlp_json_metrics(spark, out))
-
-
-def q_pipeline_otlp_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S7/S8 OTLP-JSON capture fidelity, oracle-gated, ZERO Python in the
-    data path: log-classified turns (+ a tool attribute) -> line-sharded
-    ExportLogsServiceRequest capture via to_json (protojson rendering,
-    requests sharded at resource grain) -> from_json decode -> severity
-    rollup over the DECODED values including the attr map. The protojson
-    sibling of pipeline_pb_capture_roundtrip — same oracle family (replayed
-    straight from the transcripts), so equality holds iff
-    encode∘decode == id; unlike the .pb path there is no mapInPandas
-    anywhere, both codec directions are JVM Jackson inside the plan."""
-    from otel_arrow_adapter_spark.sources.otlp_json import (
-        read_otlp_json_logs,
-        write_otlp_json_logs,
-    )
-
-    logs = (
-        _parsed(spark, sf_dir)
-        .where(F.col("signal_type") == "log")
-        .select(
-            F.pmod(F.xxhash64("conv_id"), F.lit(8)).cast("int").alias("res_idx"),
-            (F.col("log_ts_us") * 1000).alias("time_unix_nano"),
-            "severity_number",
-            "severity_text",
-            F.col("msg").alias("body"),
-            F.when(
-                F.col("tool").isNotNull(), F.create_map(F.lit("tool"), F.col("tool"))
-            ).alias("attrs"),
-        )
-    )
-    out = _capture_dir("oaas_json_capture", sf_dir)
-    write_otlp_json_logs(logs, out)  # overwrite mode: idempotent re-runs
-    dec = read_otlp_json_logs(spark, out).where(F.col("res_idx") >= 0)
-    return dec.groupBy("severity_text").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count("body").alias("n_body"),
-        F.sum(F.col("time_unix_nano") % F.lit(1_000_003)).cast("long").alias("sum_ts_mod"),
-        F.max("time_unix_nano").cast("long").alias("max_ts"),
-        F.max("severity_number").cast("int").alias("max_sev"),
-        F.count(F.try_element_at("attrs", F.lit("tool"))).cast("long").alias("n_tool"),
-        F.max(F.try_element_at("attrs", F.lit("tool"))).alias("max_tool"),
-    )
-
-
-def q_pipeline_pb_traces_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S8 traces fidelity, oracle-gated: trace-classified turns -> span rows
-    with lifecycle events, a parent link and one attribute -> OTLP .pb
-    capture (``write_pb_capture``: one ExportTraceServiceRequest file per
-    partition — real_traces_dataset.go family) -> read_pb_spans wire
-    decode -> a rollup computed from the DECODED event/link/attr VALUES
-    (not the reader's convenience counts). The oracle replays the same
-    rollup straight from the transcripts, so equality holds iff pb
-    encode∘decode == id on ids, kind, status, both timestamps, event
-    names+times, link trace/span ids and the attr value."""
-    from otel_arrow_adapter_spark.sources.otlp_pb import (
-        encode_export_trace_request,
-        read_pb_spans,
-        write_pb_capture,
-    )
-
-    spans_in = (
-        _trace_points(spark, sf_dir)
-        .select(
-            "conv_id",
-            F.md5(F.col("conv_id")).alias("trace_hex"),
-            F.col("span_hex"),
-            F.when(
-                F.col("parent_hex").isNotNull(), F.lpad("parent_hex", 16, "0")
-            ).alias("parent16"),
-            F.concat(F.lit("op-"), F.col("conv_id")).alias("name"),
-            (F.col("turn_idx") % 4 + 1).cast("int").alias("kind"),
-            (F.unix_micros(F.col("ts").cast("timestamp")) * 1000).alias("start_ns"),
-            F.col("dur_ms").cast("long").alias("dur_ms"),
-        )
-    )
-
-    def to_record(r: dict) -> dict:
-        start_ns = int(r["start_ns"])
-        dur = None if r["dur_ms"] is None else int(r["dur_ms"])
-        events = [{"time_unix_nano": start_ns, "name": "span.start"}]
-        end_ns = None
-        status = None
-        if dur is not None:
-            end_ns = start_ns + dur * 1_000_000
-            events.append({"time_unix_nano": end_ns, "name": "span.end"})
-            status = dur % 3
-        links = (
-            []
-            if r["parent16"] is None
-            else [{"trace_id": r["trace_hex"], "span_id": r["parent16"]}]
-        )
-        return {
-            "res_idx": 0,
-            "trace_id": r["trace_hex"],
-            "span_id": r["span_hex"],
-            "parent_span_id": r["parent16"],
-            "name": r["name"],
-            "kind": int(r["kind"]),
-            "start_time_unix_nano": start_ns,
-            "end_time_unix_nano": end_ns,
-            "status_code": status,
-            "attrs": {"conv": r["conv_id"]},
-            "events": events,
-            "links": links,
-        }
-
-    out = _capture_dir("oaas_pb_tcapture", sf_dir)
-    write_pb_capture(spans_in, out, to_record, encode_export_trace_request)
-    return _span_rollup(read_pb_spans(spark, out).where(F.col("res_idx") >= 0))
-
-
-def q_pipeline_otlp_json_traces_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The protojson sibling of pipeline_pb_traces_roundtrip, ZERO Python
-    anywhere: the same span rows (lifecycle events, parent link, conv
-    attr) are built as pure column expressions, captured as line-sharded
-    ExportTraceServiceRequest JSON via to_json, decoded with from_json,
-    and rolled up from the DECODED values. Shares the .pb sibling's oracle
-    verbatim — equality holds iff protojson encode∘decode == id on ids,
-    kind, status, both timestamps, event names+times, link ids and the
-    attr value."""
-    from otel_arrow_adapter_spark.sources.otlp_json import (
-        read_otlp_json_spans,
-        write_otlp_json_spans,
-    )
-
-    tp = _trace_points(spark, sf_dir)
-    start_ns = F.unix_micros(F.col("ts").cast("timestamp")) * 1000
-    dur = F.col("dur_ms").cast("long")
-    end_ns = F.when(dur.isNotNull(), start_ns + dur * 1_000_000)
-    trace_hex = F.md5(F.col("conv_id"))
-    parent16 = F.when(F.col("parent_hex").isNotNull(), F.lpad("parent_hex", 16, "0"))
-    ev = F.struct(start_ns.alias("time_unix_nano"), F.lit("span.start").alias("name"))
-    ev_end = F.struct(end_ns.alias("time_unix_nano"), F.lit("span.end").alias("name"))
-    spans_in = tp.select(
-        # shard the capture across 8 resource groups (same scheme as the
-        # logs sibling): res_idx=0 put EVERY span into one collect_list
-        # group = one write task building one giant request line, and one
-        # read task parsing it — measured 2.6x wall at 10x events while
-        # every sibling stayed ~1.2-1.3x. The reader derives res_idx as
-        # the position WITHIN each request (0 for all good rows either
-        # way) and the final rollup groups by kind only, so results are
-        # identical; only the request sharding changes.
-        F.pmod(F.xxhash64("conv_id"), F.lit(8)).cast("int").alias("res_idx"),
-        trace_hex.alias("trace_id"),
-        F.col("span_hex").alias("span_id"),
-        parent16.alias("parent_span_id"),
-        F.concat(F.lit("op-"), F.col("conv_id")).alias("name"),
-        (F.col("turn_idx") % 4 + 1).cast("int").alias("kind"),
-        start_ns.alias("start_time_unix_nano"),
-        end_ns.alias("end_time_unix_nano"),
-        F.when(dur.isNotNull(), (dur % 3).cast("int")).alias("status_code"),
-        F.create_map(F.lit("conv"), F.col("conv_id")).alias("attrs"),
-        F.when(dur.isNotNull(), F.array(ev, ev_end)).otherwise(F.array(ev)).alias("events"),
-        F.when(
-            parent16.isNotNull(),
-            F.array(F.struct(trace_hex.alias("trace_id"), parent16.alias("span_id"))),
-        ).otherwise(
-            F.array().cast("array<struct<trace_id:string,span_id:string>>")
-        ).alias("links"),
-    )
-    out = _capture_dir("oaas_json_tcapture", sf_dir)
-    write_otlp_json_spans(spans_in, out)  # overwrite mode: idempotent re-runs
-    return _span_rollup(read_otlp_json_spans(spark, out).where(F.col("res_idx") >= 0))
-
-
-def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal feature extraction via mapInPandas (decode STUBBED with a
-    deterministic payload-hash fake — real PIL/ffmpeg swap-in point). The
-    fake is exact integer/65535.0 double arithmetic, so even the stub is
-    DuckDB-oracle-checked (sha256∘sha256 replayed in SQL); the Spark-side
-    plumbing under test — schema, Arrow batches, mapInPandas — is real."""
-    from otel_arrow_adapter_spark.functions.multimodal import extract_features, synthesize_media
-
-    media = synthesize_media(spark, n=200)
-    feats = extract_features(media)
-    joined = feats.join(media.select("media_id", F.col("meta.mime").alias("mime")), "media_id")
-    return joined.select(
-        "media_id",
-        "mime",
-        F.round(F.aggregate("features", F.lit(0.0), lambda a, x: a + x * x), 6).alias("sq_norm"),
-    )
-
-
-def q_doc_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ExactSubstr-style duplicate spans (Lee et al. 2021): maximal token
-    runs shared verbatim by >= 2 documents, found by anchoring word
-    5-grams and merging overlapping duplicated anchors. Gram filter =
-    one map-side-combined groupBy; span merge = per-doc islands window."""
-    from otel_arrow_adapter_spark.functions.dedup import dup_spans
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return dup_spans(d, k=5, min_docs=2)
-
-
-def q_emb_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023): cluster embeddings (seed centroids,
-    oracle-checkable), then drop vectors whose cosine to an earlier
-    cluster-mate (ascending centroid-similarity scan order) >= 0.35 —
-    the kept representative of each duplicate group is its least-central
-    member. Cluster-bounded pairwise, never all-pairs. The synthetic
-    embeddings are near-orthogonal, hence the low threshold (real model
-    embeddings use ~0.95)."""
-    from otel_arrow_adapter_spark.functions.similarity import semdedup
-
-    e = _embeddings(spark, sf_dir)
-    return semdedup(e, n_clusters=10, threshold=0.35)
-
-
-def q_doc_leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Leakage-free train/val split: LSH -> Jaccard verify -> connected
-    components, then every cluster member follows the CLUSTER's md5 draw
-    (split key = component min doc id) — near-duplicates can never
-    straddle the split boundary. val_frac=0.2."""
-    from otel_arrow_adapter_spark.caching import materialize_scope
-    from otel_arrow_adapter_spark.functions.dedup import leakage_free_split
-
-    with materialize_scope() as m:
-        pairs = m.own(q_doc_jaccard_pairs(spark, sf_dir))
-        return leakage_free_split(_docs_plus(spark, sf_dir), pairs, val_frac=0.2)
-
-
-def q_doc_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-budget mixture: admit docs per language in deterministic md5
-    order until the language's token budget fills (en 6000, de/fr 2000,
-    zh 1500; es unbudgeted -> excluded). One cumulative-sum window per
-    stratum + a plain filter."""
-    from otel_arrow_adapter_spark.functions.text import token_budget_sample
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    budgets = {"en": 6000, "de": 2000, "fr": 2000, "zh": 1500}
-    return token_budget_sample(d, budgets)
-
-
-def q_doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus length profile per language: log2 token-count buckets with
-    per-stratum doc shares. One map-side-combined groupBy; the share
-    window runs over the tiny aggregate only."""
-    from otel_arrow_adapter_spark.functions.text import length_histogram
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return length_histogram(d, stratum_col="lang")
-
-
-def q_doc_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR (Xie et al. 2023) importance weights: per-doc unigram
-    log-likelihood ratio of a target-domain model (here: the English
-    subset) vs the raw-corpus model, add-0.5 smoothing over the union
-    vocabulary. Two type-grain vocab groupBys + one broadcast join +
-    one doc-grain groupBy."""
-    from otel_arrow_adapter_spark.functions.text import dsir_weights
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return dsir_weights(d, d.where(F.col("lang") == "en"), alpha=0.5)
-
-
-def q_doc_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc top-3 tf-idf terms (idf = ln(N/df)): term counts and df
-    table are map-side-combined groupBys, df joins back broadcast, top-k
-    is one per-doc row_number window ranked on the ROUNDED score with a
-    term tie-break (engine-portable determinism)."""
-    from otel_arrow_adapter_spark.functions.text import tfidf_top_terms
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return tfidf_top_terms(d, top_k=3)
-
-
-def q_doc_shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic epoch shuffle: every doc gets a stable (shard, pos)
-    address as a pure function of (seed, doc_id) — md5 shard assignment +
-    md5 intra-shard sort key. One hash shuffle + per-shard row_number;
-    reproducible across engines and re-runs, reshuffles by changing the
-    seed string only."""
-    from otel_arrow_adapter_spark.functions.text import shard_shuffle
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return shard_shuffle(d, n_shards=16, seed="epoch0")
-
-
-def q_doc_quantile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Relative quality gate: flag the bottom 20% of docs per language by
-    quality score. Thresholds = one stratum-grain exact percentile
-    broadcast back; keep flag = codegen'd comparison on the rounded
-    threshold (tie decisions identical across engines)."""
-    from otel_arrow_adapter_spark.functions.text import quantile_filter
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return quantile_filter(d, frac=0.2, stratum_col="lang")
-
-
-def q_doc_source_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source corpus health dashboard over documents + planted exact
-    copies (doc_id%10==0, inheriting source/lang): doc count, exact-dup
-    rate, mean quality, mean tokens, language spread. One fingerprint
-    shuffle + a co-partitioned narrow join + a tiny source rollup."""
-    from otel_arrow_adapter_spark.functions.text import source_profile
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text", "lang", "source"
-    )
-    plus = d.unionByName(
-        d.where(F.col("doc_id") % 10 == 0).withColumn("doc_id", F.col("doc_id") + 100000)
-    )
-    return source_profile(plus)
-
-
-def q_emb_pca_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed PCA fit statistics: mean + population covariance of the
-    64-dim embedding corpus via per-partition numpy partials (count,
-    sums, X^T X upper triangle) and one 2080-key groupBy — the shuffle
-    moves d*(d+1)/2 rows per partition, never the vectors."""
-    from otel_arrow_adapter_spark.functions.similarity import embedding_moments
-
-    e = _embeddings(spark, sf_dir)
-    return embedding_moments(e)
-
-
-def q_doc_chunk_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RAG-style sliding-window chunking: 32-token windows advancing by
-    24 (8-token overlap), one row per (doc, chunk) with exact token
-    offsets. Zero shuffles, zero Python — a codegen'd map-only pass."""
-    from otel_arrow_adapter_spark.functions.text import chunk_spans
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return chunk_spans(d, chunk_size=32, stride=24)
-
-
-def q_doc_token_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min sketch frequencies (Cormode/Muthukrishnan 2005) vs exact:
-    4x256 CMS over the token stream, point estimates for the exact top-20
-    tokens — (tok, exact_n, cms_n), cms_n >= exact_n by construction.
-    Sketch = one map-side-combined groupBy bounded at depth*width cells
-    per partition; lookup = broadcast join. Completes the sketch family
-    (HLL distinct / DDSketch quantiles / CMS frequencies)."""
-    from otel_arrow_adapter_spark.functions.sketches import cms_lookup, count_min_sketch
-    from otel_arrow_adapter_spark.functions.text import normalize_text, tokens
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = d.select(F.explode(tokens(normalize_text(F.col("text")))).alias("tok"))
-    top = (
-        toks.groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("exact_n"))
-        .orderBy(F.desc("exact_n"), F.asc("tok"))
-        .limit(20)
-    )
-    sketch = count_min_sketch(toks, key_col="tok", depth=4, width=256)
-    return top.join(cms_lookup(sketch, top.select("tok"), key_col="tok"), "tok").select(
-        "tok", "exact_n", "cms_n"
-    )
-
-
-def q_doc_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental-ingestion dedup gate (the daily-increment production
-    pattern): index = doc_id%3==0 docs; batch = the rest PLUS planted
-    exact copies of index docs (+100000), near-dups of index docs
-    (+200000, tail appended) and batch-internal copies (+300000). Each
-    batch doc classified exact_dup / batch_dup / near_dup / new —
-    fingerprint semi-join, keep-first groupBy, LSH band join vs the index
-    + shingle-Jaccard verify. Never pair-quadratic."""
-    from otel_arrow_adapter_spark.functions.dedup import incremental_dedup
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    index = d.where(F.col("doc_id") % 3 == 0)
-    batch = (
-        d.where(F.col("doc_id") % 3 != 0)
-        .unionByName(
-            d.where(F.col("doc_id") % 9 == 0).select(
-                (F.col("doc_id") + 100000).alias("doc_id"), "text"
-            )
-        )
-        .unionByName(
-            d.where(F.col("doc_id") % 15 == 0).select(
-                (F.col("doc_id") + 200000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" near duplicate tail")).alias("text"),
-            )
-        )
-        .unionByName(
-            d.where((F.col("doc_id") % 3 != 0) & (F.col("doc_id") % 7 == 1)).select(
-                (F.col("doc_id") + 300000).alias("doc_id"), "text"
-            )
-        )
-    )
-    return incremental_dedup(batch, index, threshold=0.7)
-
-
-def q_doc_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 keyword retrieval (Lucene idf variant) for query terms
-    (spark, join, window): corpus stats and per-term idf are broadcast;
-    the tf table is isin-filtered BEFORE any join so post-stats work is
-    query-sized; top-k is TakeOrderedAndProject. Scores rounded to 6 so
-    both engines rank identically."""
-    from otel_arrow_adapter_spark.functions.text import bm25_topk
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return bm25_topk(d, query_terms=("spark", "join", "window"), k=20)
-
-
-def q_doc_source_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source KL(P_source || P_corpus) over unigram distributions —
-    the corpus-drift monitor (crawl regressions, template floods). One
-    (source, token-type) groupBy, corpus vocab broadcast back."""
-    from otel_arrow_adapter_spark.functions.text import source_kl_drift
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return source_kl_drift(d, stratum_col="source")
-
-
-def q_emb_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVFADC (FAISS's billion-vector default, Jégou et al. 2011): coarse
-    IVF probe of 2/10 lists, then asymmetric-distance PQ scoring ONLY
-    inside them — scanned fraction ~ n_probe/n_list AND each item is 8
-    codes instead of 64 floats. Broadcast centroids/LUT, semi-join list
-    restriction, one groupBy(vec_id), TakeOrderedAndProject."""
-    from otel_arrow_adapter_spark.functions.similarity import ivfpq_search
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return ivfpq_search(
-        e, query_vec_id=0, k=10, n_centroids=10, n_probe=2, m=8, n_codes=16, dim=64
-    )
-
-
-def q_doc_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bigram-LM quality score with Stupid Backoff (Brants et al. 2007),
-    the KenLM-shaped perplexity filter: LM trained on the doc_id%10!=0
-    reference subset, ALL docs scored — unseen bigrams back off to
-    alpha*c(w2)/N, unseen unigrams floor at -20. Unigram counts broadcast
-    (Heaps-sublinear types); the bigram score join is a same-key shuffle
-    join (broadcast would not hold at open-web scale)."""
-    from otel_arrow_adapter_spark.functions.text import bigram_logprob
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return bigram_logprob(d, lm_docs=d.where(F.col("doc_id") % 10 != 0))
-
-
-def q_emb_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization encode (Jégou et al. 2011) + codebook
-    utilization: 8 subspaces x 16 seed codewords, L2-argmin codes, grouped
-    to (sub, code_id, n_vecs). Broadcast codebook + one map-side-combined
-    groupBy — the 32x-compression storage path of a 10^9-vector index.
-    Oracle: identical slice/argmin arithmetic via range() joins."""
-    from otel_arrow_adapter_spark.functions.similarity import pq_code_histogram
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return pq_code_histogram(e, m=8, n_codes=16, dim=64)
-
-
-def q_emb_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ asymmetric-distance (ADC) top-10 for query vec 0: broadcast
-    m x k lookup table of query-subvector dot codeword, scores = one
-    groupBy(vec_id) sum over the CODES table (32x smaller than the raw
-    vectors — why PQ serves billion-vector indexes from RAM)."""
-    from otel_arrow_adapter_spark.functions.similarity import pq_search_adc
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return pq_search_adc(e, query_vec_id=0, k=10, m=8, n_codes=16, dim=64)
-
-
-# Ordering matters: the driver samples the FIRST 50 entries for its
-# oracle-correctness gate (CORRECTNESS_r{N}.json).  Queries that have never
-# (or not recently) been behind that gate come first; the long-stable
-# parse/metrics family (driver-green in r1-r3, unchanged code) rotates to
-# the tail.  See VERDICT.md r3 item 2.
+# Order matters: the driver samples the first 50 entries, in order, for its
+# oracle-correctness gate.
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # Ordering = driver-gate rotation (the external gate samples the FIRST
-    # 50 of 64; tools/oracle_check.py always runs all 64 locally). Round-5
-    # policy: (a) the 14 queries outside the r4 sample come first so every
-    # registry name has a driver row <= 1 round old, (b) queries whose code
-    # changed this round stay inside the sample, (c) the unsampled tail is
-    # exclusively r4-driver-green queries whose code paths are UNTOUCHED
-    # this round (similarity.py ANN family, entry-internal TPC-H/events).
-    # -- NEW in r5, never driver-gated: first --
-    "doc_token_cms": q_doc_token_cms,
-    "doc_incremental_dedup": q_doc_incremental_dedup,
-    "doc_bm25_topk": q_doc_bm25_topk,
-    "doc_source_kl_drift": q_doc_source_kl_drift,
-    "emb_ivfpq_search": q_emb_ivfpq_search,
-    "doc_bigram_logprob": q_doc_bigram_logprob,
-    "emb_pq_codes": q_emb_pq_codes,
-    "emb_pq_search": q_emb_pq_search,
-    "emb_pca_moments": q_emb_pca_moments,
-    "doc_quantile_filter": q_doc_quantile_filter,
-    "doc_dup_spans": q_doc_dup_spans,
-    "emb_semdedup": q_emb_semdedup,
-    "doc_shard_shuffle": q_doc_shard_shuffle,
-    "doc_dsir_weights": q_doc_dsir_weights,
-    "doc_leakage_free_split": q_doc_leakage_free_split,
-    "doc_token_budget_sample": q_doc_token_budget_sample,
-    "pipeline_pb_traces_roundtrip": q_pipeline_pb_traces_roundtrip,
-    # -- outside the r4 sample (driver-green r3) --
-    "pipeline_parse_logs": q_pipeline_parse_logs,
-    "pipeline_parse_logs_arrow": q_pipeline_parse_logs_arrow,
-    "pipeline_parse_logs_grok": q_pipeline_parse_logs_grok,
-    "pipeline_parse_metrics": q_pipeline_parse_metrics,
-    "pipeline_parse_traces": q_pipeline_parse_traces,
-    "pipeline_metrics_number_dp": q_pipeline_metrics_number_dp,
-    "pipeline_metrics_hist_dp": q_pipeline_metrics_hist_dp,
-    "pipeline_metrics_exp_hist_dp": q_pipeline_metrics_exp_hist_dp,
-    "pipeline_metrics_summary_dp": q_pipeline_metrics_summary_dp,
-    "pipeline_metrics_temporality": q_pipeline_metrics_temporality,
-    "pipeline_metrics_exemplars": q_pipeline_metrics_exemplars,
-    "doc_clean_corpus": q_doc_clean_corpus,
-    "doc_minhash_sig": q_doc_minhash_sig,
-    # -- code changed in r5 (exp-hist offsets, pb capture idempotency) --
-    "pipeline_metrics_exp_hist_scale": q_pipeline_metrics_exp_hist_scale,
-    "pipeline_metrics_exp_hist_merge": q_pipeline_metrics_exp_hist_merge,
-    "pipeline_pb_capture_roundtrip": q_pipeline_pb_capture_roundtrip,
-    "pipeline_pb_metrics_roundtrip": q_pipeline_pb_metrics_roundtrip,
-    "pipeline_otlp_json_roundtrip": q_pipeline_otlp_json_roundtrip,
-    "pipeline_otlp_json_traces_roundtrip": q_pipeline_otlp_json_traces_roundtrip,
-    "pipeline_otlp_json_metrics_roundtrip": q_pipeline_otlp_json_metrics_roundtrip,
-    # -- corpus-curation additions (new in late r5: never driver-gated) --
-    "doc_pii_redact": q_doc_pii_redact,
-    "doc_decontaminate": q_doc_decontaminate,
-    "doc_stratified_sample": q_doc_stratified_sample,
-    # -- r6 gate rotation (the r4/r5 ADVICE item the registry comment
-    # below ordered: "Rotate all of them to the head in r6"): the 10
-    # never/stale-gated queries move INSIDE the driver's 50-slot sample
-    # (registry positions 41-50). Every one is locally oracle-green in
-    # ORACLE_FULL_r06.log; the 10 queries they displace are all r5
-    # driver-green (rows in CORRECTNESS_r05.json), so after this round
-    # every registered name has a driver row in r5 ∪ r6. Queries
-    # previously outside the sample: doc_simhash_near_dups /
-    # doc_dedup_exact (newest driver rows r4), doc_pack_offsets (r3),
-    # and the 7 never-gated (doc_source_profile, doc_chunk_spans,
-    # doc_tfidf_terms, doc_length_histogram, doc_repetition_scores,
-    # emb_quantized_topk, events_latency_quantiles_sketch). --
-    "doc_simhash_near_dups": q_doc_simhash_near_dups,
-    "doc_dedup_exact": q_doc_dedup_exact,
-    "doc_source_profile": q_doc_source_profile,
-    "doc_pack_offsets": q_doc_pack_offsets,
-    "doc_chunk_spans": q_doc_chunk_spans,
-    "doc_tfidf_terms": q_doc_tfidf_terms,
-    "doc_length_histogram": q_doc_length_histogram,
-    "doc_repetition_scores": q_doc_repetition_scores,
-    "emb_quantized_topk": q_emb_quantized_topk,
-    "events_latency_quantiles_sketch": q_events_latency_quantiles_sketch,
-    # -- displaced out of the sample by the r6 rotation, all r5
-    # driver-green (dedup family: jaccard/lsh cache-ownership fix landed
-    # in r5) --
-    "doc_unigram_logprob": q_doc_unigram_logprob,
-    "doc_lsh_candidates": q_doc_lsh_candidates,
-    "doc_jaccard_pairs": q_doc_jaccard_pairs,
-    "doc_dup_clusters": q_doc_dup_clusters,
-    "doc_clean_corpus_near": q_doc_clean_corpus_near,
-    "doc_boilerplate_ngrams": q_doc_boilerplate_ngrams,
-    "emb_dup_clusters": q_emb_dup_clusters,
-    "conv_sft_pairs": q_conv_sft_pairs,
-    "conv_quality": q_conv_quality,
-    "conv_dedup": q_conv_dedup,
-    # -- the rest --
-    "pipeline_severity_rollup": q_pipeline_severity_rollup,
-    "pipeline_sink_counts": q_pipeline_sink_counts,
-    "pipeline_enrich_services": q_pipeline_enrich_services,
-    "pipeline_enrich_asof": q_pipeline_enrich_asof,
-    "pipeline_attrs_melt": q_pipeline_attrs_melt,
-    "pipeline_stable_order": q_pipeline_stable_order,
-    "pipeline_dict_tool": q_pipeline_dict_tool,
-    "pipeline_delta_encode": q_pipeline_delta_encode,
-    "pipeline_route_quarantine": q_pipeline_route_quarantine,
-    "pipeline_roundtrip": q_pipeline_roundtrip,
-    "pipeline_obfuscate": q_pipeline_obfuscate,
-    "pipeline_schema_analyzer": q_pipeline_schema_analyzer,
-    "pipeline_weighted_split": q_pipeline_weighted_split,
-    "pipeline_field_frequencies": q_pipeline_field_frequencies,
-    "pipeline_delta_ids": q_pipeline_delta_ids,
-    "pipeline_metrics_dp_records": q_pipeline_metrics_dp_records,
-    "pipeline_metrics_multivariate": q_pipeline_metrics_multivariate,
-    "pipeline_span_events": q_pipeline_span_events,
-    "pipeline_span_links": q_pipeline_span_links,
-    "pipeline_span_event_wiring": q_pipeline_span_event_wiring,
-    "pipeline_trace_records": q_pipeline_trace_records,
-    "media_frame_sample": q_media_frame_sample,
-    "media_features": q_media_features,
-    "pipeline_change_detect": q_pipeline_change_detect,
-    "pipeline_sink_rollup": q_pipeline_sink_rollup,
-    "doc_token_count": q_doc_token_count,
-    "doc_lang_id": q_doc_lang_id,
-    "doc_fingerprint": q_doc_fingerprint,
-    # -- unsampled tail: r4-driver-green, code paths untouched in r5 --
-    "doc_quality": q_doc_quality,
-    "emb_cosine_topk": q_emb_cosine_topk,
-    "emb_ivf_assign": q_emb_ivf_assign,
-    "emb_ann_pairs": q_emb_ann_pairs,
-    "emb_ann_pairs_multiprobe": q_emb_ann_pairs_multiprobe,
-    "emb_ivf_search": q_emb_ivf_search,
-    "emb_ann_pairs_banded": q_emb_ann_pairs_banded,
-    "emb_ivf_search_trained": q_emb_ivf_search_trained,
-    "emb_kmeans_centroids": q_emb_kmeans_centroids,
-    "q1_lineitem_agg": q_q1_lineitem_agg,
-    "q3_shipping_priority": q_q3_shipping_priority,
-    "q5_region_revenue": q_q5_region_revenue,
-    "q18_large_orders": q_q18_large_orders,
-    "events_sessionize": q_events_sessionize,
-    "events_latency_quantiles": q_events_latency_quantiles,
+    "doc_token_cms": docs.q_doc_token_cms,
+    "doc_incremental_dedup": docs.q_doc_incremental_dedup,
+    "doc_bm25_topk": docs.q_doc_bm25_topk,
+    "doc_source_kl_drift": docs.q_doc_source_kl_drift,
+    "emb_ivfpq_search": embeddings.q_emb_ivfpq_search,
+    "doc_bigram_logprob": docs.q_doc_bigram_logprob,
+    "emb_pq_codes": embeddings.q_emb_pq_codes,
+    "emb_pq_search": embeddings.q_emb_pq_search,
+    "emb_pca_moments": embeddings.q_emb_pca_moments,
+    "doc_quantile_filter": docs.q_doc_quantile_filter,
+    "doc_dup_spans": docs.q_doc_dup_spans,
+    "emb_semdedup": embeddings.q_emb_semdedup,
+    "doc_shard_shuffle": docs.q_doc_shard_shuffle,
+    "doc_dsir_weights": docs.q_doc_dsir_weights,
+    "doc_leakage_free_split": docs.q_doc_leakage_free_split,
+    "doc_token_budget_sample": docs.q_doc_token_budget_sample,
+    "pipeline_pb_traces_roundtrip": capture.q_pipeline_pb_traces_roundtrip,
+    "pipeline_parse_logs": pipeline.q_pipeline_parse_logs,
+    "pipeline_parse_logs_arrow": pipeline.q_pipeline_parse_logs_arrow,
+    "pipeline_parse_logs_grok": pipeline.q_pipeline_parse_logs_grok,
+    "pipeline_parse_metrics": pipeline.q_pipeline_parse_metrics,
+    "pipeline_parse_traces": pipeline.q_pipeline_parse_traces,
+    "pipeline_metrics_number_dp": metrics.q_pipeline_metrics_number_dp,
+    "pipeline_metrics_hist_dp": metrics.q_pipeline_metrics_hist_dp,
+    "pipeline_metrics_exp_hist_dp": metrics.q_pipeline_metrics_exp_hist_dp,
+    "pipeline_metrics_summary_dp": metrics.q_pipeline_metrics_summary_dp,
+    "pipeline_metrics_temporality": metrics.q_pipeline_metrics_temporality,
+    "pipeline_metrics_exemplars": metrics.q_pipeline_metrics_exemplars,
+    "doc_clean_corpus": docs.q_doc_clean_corpus,
+    "doc_minhash_sig": docs.q_doc_minhash_sig,
+    "pipeline_metrics_exp_hist_scale": metrics.q_pipeline_metrics_exp_hist_scale,
+    "pipeline_metrics_exp_hist_merge": metrics.q_pipeline_metrics_exp_hist_merge,
+    "pipeline_pb_capture_roundtrip": capture.q_pipeline_pb_capture_roundtrip,
+    "pipeline_pb_metrics_roundtrip": capture.q_pipeline_pb_metrics_roundtrip,
+    "pipeline_otlp_json_roundtrip": capture.q_pipeline_otlp_json_roundtrip,
+    "pipeline_otlp_json_traces_roundtrip": capture.q_pipeline_otlp_json_traces_roundtrip,
+    "pipeline_otlp_json_metrics_roundtrip": capture.q_pipeline_otlp_json_metrics_roundtrip,
+    "doc_pii_redact": docs.q_doc_pii_redact,
+    "doc_decontaminate": docs.q_doc_decontaminate,
+    "doc_stratified_sample": docs.q_doc_stratified_sample,
+    "doc_simhash_near_dups": docs.q_doc_simhash_near_dups,
+    "doc_dedup_exact": docs.q_doc_dedup_exact,
+    "doc_source_profile": docs.q_doc_source_profile,
+    "doc_pack_offsets": docs.q_doc_pack_offsets,
+    "doc_chunk_spans": docs.q_doc_chunk_spans,
+    "doc_tfidf_terms": docs.q_doc_tfidf_terms,
+    "doc_length_histogram": docs.q_doc_length_histogram,
+    "doc_repetition_scores": docs.q_doc_repetition_scores,
+    "emb_quantized_topk": embeddings.q_emb_quantized_topk,
+    "events_latency_quantiles_sketch": tables.q_events_latency_quantiles_sketch,
+    "doc_unigram_logprob": docs.q_doc_unigram_logprob,
+    "doc_lsh_candidates": docs.q_doc_lsh_candidates,
+    "doc_jaccard_pairs": docs.q_doc_jaccard_pairs,
+    "doc_dup_clusters": docs.q_doc_dup_clusters,
+    "doc_clean_corpus_near": docs.q_doc_clean_corpus_near,
+    "doc_boilerplate_ngrams": docs.q_doc_boilerplate_ngrams,
+    "emb_dup_clusters": embeddings.q_emb_dup_clusters,
+    "conv_sft_pairs": pipeline.q_conv_sft_pairs,
+    "conv_quality": pipeline.q_conv_quality,
+    "conv_dedup": pipeline.q_conv_dedup,
+    "pipeline_severity_rollup": pipeline.q_pipeline_severity_rollup,
+    "pipeline_sink_counts": pipeline.q_pipeline_sink_counts,
+    "pipeline_enrich_services": pipeline.q_pipeline_enrich_services,
+    "pipeline_enrich_asof": pipeline.q_pipeline_enrich_asof,
+    "pipeline_attrs_melt": pipeline.q_pipeline_attrs_melt,
+    "pipeline_stable_order": pipeline.q_pipeline_stable_order,
+    "pipeline_dict_tool": pipeline.q_pipeline_dict_tool,
+    "pipeline_delta_encode": pipeline.q_pipeline_delta_encode,
+    "pipeline_route_quarantine": pipeline.q_pipeline_route_quarantine,
+    "pipeline_roundtrip": pipeline.q_pipeline_roundtrip,
+    "pipeline_obfuscate": pipeline.q_pipeline_obfuscate,
+    "pipeline_schema_analyzer": pipeline.q_pipeline_schema_analyzer,
+    "pipeline_weighted_split": pipeline.q_pipeline_weighted_split,
+    "pipeline_field_frequencies": pipeline.q_pipeline_field_frequencies,
+    "pipeline_delta_ids": pipeline.q_pipeline_delta_ids,
+    "pipeline_metrics_dp_records": metrics.q_pipeline_metrics_dp_records,
+    "pipeline_metrics_multivariate": metrics.q_pipeline_metrics_multivariate,
+    "pipeline_span_events": pipeline.q_pipeline_span_events,
+    "pipeline_span_links": pipeline.q_pipeline_span_links,
+    "pipeline_span_event_wiring": pipeline.q_pipeline_span_event_wiring,
+    "pipeline_trace_records": pipeline.q_pipeline_trace_records,
+    "media_frame_sample": tables.q_media_frame_sample,
+    "media_features": tables.q_media_features,
+    "pipeline_change_detect": pipeline.q_pipeline_change_detect,
+    "pipeline_sink_rollup": pipeline.q_pipeline_sink_rollup,
+    "doc_token_count": docs.q_doc_token_count,
+    "doc_lang_id": docs.q_doc_lang_id,
+    "doc_fingerprint": docs.q_doc_fingerprint,
+    "doc_quality": docs.q_doc_quality,
+    "emb_cosine_topk": embeddings.q_emb_cosine_topk,
+    "emb_ivf_assign": embeddings.q_emb_ivf_assign,
+    "emb_ann_pairs": embeddings.q_emb_ann_pairs,
+    "emb_ann_pairs_multiprobe": embeddings.q_emb_ann_pairs_multiprobe,
+    "emb_ivf_search": embeddings.q_emb_ivf_search,
+    "emb_ann_pairs_banded": embeddings.q_emb_ann_pairs_banded,
+    "emb_ivf_search_trained": embeddings.q_emb_ivf_search_trained,
+    "emb_kmeans_centroids": embeddings.q_emb_kmeans_centroids,
+    "q1_lineitem_agg": tables.q_q1_lineitem_agg,
+    "q3_shipping_priority": tables.q_q3_shipping_priority,
+    "q5_region_revenue": tables.q_q5_region_revenue,
+    "q18_large_orders": tables.q_q18_large_orders,
+    "events_sessionize": tables.q_events_sessionize,
+    "events_latency_quantiles": tables.q_events_latency_quantiles,
 }
 
 
@@ -4500,7 +2505,7 @@ FROM adc ORDER BY rank LIMIT 10
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: parse -> enrich -> route -> per-sink aggregate counts."""
-    return q_pipeline_sink_counts(spark, "/root/testdata/sf0.001")
+    return pipeline.q_pipeline_sink_counts(spark, "/root/testdata/sf0.001")
 
 
 def _shipped(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSession, str], DataFrame]:
@@ -4509,8 +2514,6 @@ def _shipped(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSes
     the grading driver may run from a cwd where the repo isn't importable."""
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from otel_arrow_adapter_spark.shipping import ensure_shipped
-
         ensure_shipped(spark)
         return fn(spark, sf_dir)
 

@@ -150,6 +150,50 @@ def lsh_candidates(
         return owned_result(pairs)
 
 
+def _verify_pairs(
+    pairs: DataFrame,
+    a_col: str,
+    b_col: str,
+    threshold: float,
+    sh_a: DataFrame,
+    sh_b: DataFrame | None = None,
+) -> DataFrame:
+    """Set-form exact Jaccard verify of candidate ``pairs``: each side's
+    shingle rows are LEFT-SEMI-joined to that side's candidate doc ids and
+    rolled up into one DISTINCT shingle SET per doc (collect_set), both
+    sets are joined onto each pair, and n_common is a map-side
+    array_intersect. Returns the pairs whose rounded ``jaccard`` reaches
+    ``threshold``. With one shingle table (``sh_b`` None) both sides share
+    one set frame over the union of candidate docs."""
+
+    def sets(sh: DataFrame, ids: DataFrame) -> DataFrame:
+        return (
+            sh.join(ids.distinct(), "doc_id", "left_semi")
+            .groupBy("doc_id")
+            .agg(F.collect_set("shingle").alias("_sh"))
+        )
+
+    ids_a = pairs.select(F.col(a_col).alias("doc_id"))
+    ids_b = pairs.select(F.col(b_col).alias("doc_id"))
+    if sh_b is None:
+        set_a = set_b = sets(sh_a, ids_a.unionByName(ids_b))
+    else:
+        set_a, set_b = sets(sh_a, ids_a), sets(sh_b, ids_b)
+    return (
+        pairs.join(set_a.select(F.col("doc_id").alias(a_col), F.col("_sh").alias("_sh_a")), a_col)
+        .join(set_b.select(F.col("doc_id").alias(b_col), F.col("_sh").alias("_sh_b")), b_col)
+        .withColumn("n_common", F.size(F.array_intersect("_sh_a", "_sh_b")))
+        .withColumn(
+            "jaccard",
+            F.round(
+                F.col("n_common") / (F.size("_sh_a") + F.size("_sh_b") - F.col("n_common")),
+                6,
+            ),
+        )
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
 def jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.5,
@@ -185,36 +229,8 @@ def jaccard_pairs(
     with materialize_scope() as m:
         if candidates is not None:
             candidates = m.keep(candidates)  # used 3x: doc-id set + 2 pair joins
-            cand_docs = (
-                candidates.select(F.col("doc_a").alias("doc_id"))
-                .unionByName(candidates.select(F.col("doc_b").alias("doc_id")))
-                .distinct()
-            )
-            sets = (
-                sh.join(cand_docs, on="doc_id", how="left_semi")
-                .groupBy("doc_id")
-                .agg(F.collect_set("shingle").alias("_sh"))
-            )
-            out = (
-                candidates.join(
-                    sets.select(F.col("doc_id").alias("doc_a"), F.col("_sh").alias("_sh_a")),
-                    "doc_a",
-                )
-                .join(
-                    sets.select(F.col("doc_id").alias("doc_b"), F.col("_sh").alias("_sh_b")),
-                    "doc_b",
-                )
-                .withColumn("n_common", F.size(F.array_intersect("_sh_a", "_sh_b")))
-                .withColumn(
-                    "jaccard",
-                    F.round(
-                        F.col("n_common")
-                        / (F.size("_sh_a") + F.size("_sh_b") - F.col("n_common")),
-                        6,
-                    ),
-                )
-                .where(F.col("jaccard") >= threshold)
-                .select("doc_a", "doc_b", "jaccard")
+            out = _verify_pairs(candidates, "doc_a", "doc_b", threshold, sh).select(
+                "doc_a", "doc_b", "jaccard"
             )
             return owned_result(out)
         # No candidates: the exact inverted-index path (test/ground-truth scale).
@@ -338,35 +354,10 @@ def incremental_dedup(
             minhash_signature(index, num_hashes, k, shingles=sh_idx), num_hashes, bands
         ).select(F.col("doc_id").alias("index_doc"), "band", "bucket")
         cand = m.keep(bb.join(bi, ["band", "bucket"]).select("doc_id", "index_doc").distinct())
-        # Jaccard verify: one distinct shingle SET per candidate doc (both
-        # sides), then a map-side array_intersect per candidate pair — no
-        # shingle-grain join exists here at all (the former inverted-index
-        # form was quadratic in hot-shingle buckets; see jaccard_pairs)
-        sets_b = (
-            sh_surv.join(cand.select("doc_id").distinct(), "doc_id", "left_semi")
-            .groupBy("doc_id")
-            .agg(F.collect_set("shingle").alias("_sh_b"))
-        )
-        sets_i = (
-            sh_idx.join(
-                cand.select(F.col("index_doc").alias("doc_id")).distinct(), "doc_id", "left_semi"
-            )
-            .groupBy("doc_id")
-            .agg(F.collect_set("shingle").alias("_sh_i"))
-            .select(F.col("doc_id").alias("index_doc"), "_sh_i")
-        )
+        # Jaccard verify in set form (see _verify_pairs): no shingle-grain
+        # join exists here at all
         near = (
-            cand.join(sets_b, "doc_id")
-            .join(sets_i, "index_doc")
-            .withColumn("n_common", F.size(F.array_intersect("_sh_b", "_sh_i")))
-            .where(
-                F.round(
-                    F.col("n_common")
-                    / (F.size("_sh_b") + F.size("_sh_i") - F.col("n_common")),
-                    6,
-                )
-                >= threshold
-            )
+            _verify_pairs(cand, "doc_id", "index_doc", threshold, sh_surv, sh_idx)
             .select("doc_id")
             .distinct()
             .withColumn("r_near", F.lit(True))

@@ -28,6 +28,8 @@ union of sinks.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -412,24 +414,36 @@ def compact_routed(
     loop is over the 4 sinks; every rewrite is a distributed job. Returns
     {sink: (files_before, files_after)} so callers can ledger the win.
     Production target is Iceberg's own metadata-driven rewrite; this
-    file-level form carries the same semantics for parquet dirs."""
-    import math
-    import os
+    file-level form carries the same semantics for parquet dirs. Files are
+    listed and sized through the Hadoop FileSystem resolved from
+    ``out_dir``, so a ``file://`` or ``hdfs://`` URI compacts the same sinks
+    a bare path does. A bucket-partitioned table (``run_pipeline`` with
+    ``n_buckets``, laid out bucket=*/sink=*) raises ``ValueError``."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    fs = hpath(out_dir).getFileSystem(spark._jsc.hadoopConfiguration())
+
+    def parquet_sizes(d: str) -> list[int]:
+        it = fs.listFiles(hpath(d), True)
+        sizes = []
+        while it.hasNext():
+            st = it.next()
+            if st.getPath().getName().endswith(".parquet"):
+                sizes.append(st.getLen())
+        return sizes
 
     base = f"{out_dir}/{subdir}"
+    if fs.globStatus(hpath(f"{base}/bucket=*")):
+        raise ValueError(
+            f"{base} is bucket-partitioned (bucket=*/sink=*); compact_routed "
+            "rewrites sink=* partitions only"
+        )
     result: dict[str, tuple[int, int]] = {}
     for sink in SINKS:
         d = f"{base}/sink={sink}"
-        if not os.path.isdir(d):
+        if not fs.isDirectory(hpath(d)):
             continue
-        files = [
-            os.path.join(r, f)
-            for r, _, fs in os.walk(d)
-            for f in fs
-            if f.endswith(".parquet")
-        ]
-        total = sum(os.path.getsize(f) for f in files)
-        n = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
+        files = parquet_sizes(d)
+        n = max(1, math.ceil(sum(files) / (target_mb * 1024 * 1024)))
         df = spark.read.parquet(d)
         keys = [c for c in SORT_STRATEGIES[sort_strategy][sink] if c in df.columns]
         dest = f"{out_dir}/{subdir}_compacted/sink={sink}"
@@ -440,11 +454,6 @@ def compact_routed(
             .option("compression", "zstd")
             .parquet(dest)
         )
-        after = sum(
-            1
-            for r, _, fs in os.walk(dest)
-            for f in fs
-            if f.endswith(".parquet")
-        )
+        after = len(parquet_sizes(dest))
         result[sink] = (len(files), after)
     return result

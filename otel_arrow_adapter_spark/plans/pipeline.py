@@ -25,6 +25,7 @@ from ..operators.enrich import enrich_with_catalog
 from ..operators.route import label_sinks, read_sinks, write_routed
 from ..caching import materialize_scope
 from .ledger import Ledger
+from .stats import ProducerStats
 
 
 def build_labeled(
@@ -92,56 +93,50 @@ def run_pipeline(
     if n_buckets <= 0:
         labeled = build_labeled(transcripts, catalog, id_mode, salt_buckets, parse_impl)
         write_routed(labeled, out_dir, suppress_text=suppress_text)
-        routed = spark.read.parquet(f"{out_dir}/routed")
-        counts = counts_from_routed(routed, run_id)
-        counts.write.mode("overwrite").parquet(f"{out_dir}/sink_counts")
-        return spark.read.parquet(f"{out_dir}/sink_counts")
-
-    # Resumable mode: ONE pass over the input for ALL remaining buckets.
-    # (A per-bucket loop re-scans the source n_buckets times — at 100 TB
-    # with 64 buckets that's 64 full input scans for one job.) The bucket
-    # is a layout partition of a single dynamic-partition write; a resume
-    # filters undone buckets at the SCAN (one predicate) and dynamic
-    # overwrite touches only the partitions it writes, so done buckets'
-    # files are never rewritten — no loss, no duplication.
-    ledger = Ledger(f"{out_dir}/_ledger", run_id)
-    done = ledger.done_keys() if resume else set()
-    todo = [b for b in range(n_buckets) if f"bucket={b}" not in done]
-    bucket = F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets))
-    if todo:
-        for b in todo:
-            ledger.record(f"bucket={b}", "started")
-        part = transcripts if len(todo) == n_buckets else transcripts.where(
-            bucket.isin([int(b) for b in todo])
-        )
-        labeled = build_labeled(part, catalog, id_mode, salt_buckets, parse_impl)
-        labeled = labeled.withColumn("bucket", bucket)
-        write_routed(
-            labeled, out_dir, extra_partition_cols=("bucket",), suppress_text=suppress_text
-        )
-        # ledger metrics from ONE scan of the (columnar, pruned) output —
-        # the ProducerStats analog (stats.go:26-43), per (bucket, sink)
-        stats = (
-            spark.read.parquet(f"{out_dir}/routed")
-            .where(F.col("bucket").isin([int(b) for b in todo]))
-            .groupBy("bucket", "sink")
-            .count()
-            .collect()
-        )
-        per_bucket: dict[int, dict[str, int]] = {b: {} for b in todo}
-        for r in stats:
-            per_bucket.setdefault(r["bucket"], {})[r["sink"]] = r["count"]
-        for b in todo:
-            metrics = per_bucket.get(b, {})
-            ledger.record(f"bucket={b}", "done", sum(metrics.values()), metrics)
-        # ProducerStats batch counters (stats.go:29-34: *BatchesProduced):
-        # one "batch" = one (bucket, sink) partition written this run
-        from .stats import ProducerStats
-
-        pstats = ProducerStats()
-        for r in stats:
-            pstats.inc(f"{r['sink']}_batches_produced")
-        pstats.flush_to_ledger(ledger)
+    else:
+        # Resumable mode: ONE pass over the input for ALL remaining buckets.
+        # (A per-bucket loop re-scans the source n_buckets times — at 100 TB
+        # with 64 buckets that's 64 full input scans for one job.) The bucket
+        # is a layout partition of a single dynamic-partition write; a resume
+        # filters undone buckets at the SCAN (one predicate) and dynamic
+        # overwrite touches only the partitions it writes, so done buckets'
+        # files are never rewritten — no loss, no duplication.
+        ledger = Ledger(f"{out_dir}/_ledger", run_id)
+        done = ledger.done_keys() if resume else set()
+        todo = [b for b in range(n_buckets) if f"bucket={b}" not in done]
+        bucket = F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets))
+        if todo:
+            for b in todo:
+                ledger.record(f"bucket={b}", "started")
+            part = transcripts if len(todo) == n_buckets else transcripts.where(
+                bucket.isin([int(b) for b in todo])
+            )
+            labeled = build_labeled(part, catalog, id_mode, salt_buckets, parse_impl)
+            labeled = labeled.withColumn("bucket", bucket)
+            write_routed(
+                labeled, out_dir, extra_partition_cols=("bucket",), suppress_text=suppress_text
+            )
+            # ledger metrics from ONE scan of the (columnar, pruned) output —
+            # the ProducerStats analog (stats.go:26-43), per (bucket, sink)
+            stats = (
+                spark.read.parquet(f"{out_dir}/routed")
+                .where(F.col("bucket").isin([int(b) for b in todo]))
+                .groupBy("bucket", "sink")
+                .count()
+                .collect()
+            )
+            per_bucket: dict[int, dict[str, int]] = {b: {} for b in todo}
+            for r in stats:
+                per_bucket.setdefault(r["bucket"], {})[r["sink"]] = r["count"]
+            for b in todo:
+                metrics = per_bucket.get(b, {})
+                ledger.record(f"bucket={b}", "done", sum(metrics.values()), metrics)
+            # ProducerStats batch counters (stats.go:29-34: *BatchesProduced):
+            # one "batch" = one (bucket, sink) partition written this run
+            pstats = ProducerStats()
+            for r in stats:
+                pstats.inc(f"{r['sink']}_batches_produced")
+            pstats.flush_to_ledger(ledger)
 
     routed = spark.read.parquet(f"{out_dir}/routed")
     counts = counts_from_routed(routed, run_id)

@@ -37,6 +37,7 @@ import os
 import shutil
 import struct
 from typing import Callable, Iterator
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -818,8 +819,15 @@ def write_pb_capture(
     ``out_dir`` is cleared first, and files are named by PARTITION ID, not
     uuid: a retried or speculatively re-executed task overwrites its own
     file instead of duplicating the partition's records. Workers write to
-    local paths (driver-local tmp in local mode; shared storage on a
-    cluster). Returns the number of records written."""
+    local paths with ``open()`` (driver-local tmp in local mode; shared
+    storage on a cluster), so ``out_dir`` is a bare path or a ``file://``
+    URI; any other scheme raises ``ValueError``. Returns the number of
+    records written."""
+    url = urlparse(out_dir)
+    if url.scheme == "file" and url.netloc in ("", "localhost"):
+        out_dir = url.path
+    elif url.scheme:
+        raise ValueError(f"write_pb_capture writes local files; got {out_dir!r}")
     shutil.rmtree(out_dir, ignore_errors=True)
     os.makedirs(out_dir, exist_ok=True)
 

@@ -6,10 +6,11 @@ micro-batch = BatchArrowRecords, checkpoint = ack, watermark = the
 reference's pacing/replay timer (file_reader.go replay source ~ file
 streaming source here).
 
-Streaming constraints shape the operator choices: surrogate IDs use the
-content-hash mode (pure projection — dense_rank needs a global window,
-which streaming forbids), and per-sink counts become a watermarked windowed
-aggregation.
+Streaming constraints shape the operator choices: a stream is labeled with
+``plans.build_labeled(stream, catalog, id_mode="hash")``, because
+content-hash surrogate IDs are a pure projection while dense ranks need a
+global aggregate, which streaming forbids; and per-sink counts become a
+watermarked windowed aggregation.
 """
 
 from __future__ import annotations
@@ -17,11 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from ..operators.enrich import enrich_with_catalog
-from ..operators.normalize import assign_surrogate_ids
-from ..operators.parse import parse_turns
-from ..operators.route import label_sinks
 
 TRANSCRIPT_SCHEMA = T.StructType(
     [
@@ -86,16 +82,6 @@ def read_paced_replay(
         .drop("timestamp")
         .join(ticked, "replay_tick")
     )
-
-
-def build_stream(stream: DataFrame, catalog: DataFrame | None = None) -> DataFrame:
-    """parse -> hash surrogate ids -> enrich -> label: all projections +
-    one broadcast join — fully streaming-compatible."""
-    parsed = parse_turns(stream)
-    parsed = assign_surrogate_ids(parsed, mode="hash")
-    if catalog is not None:
-        parsed = enrich_with_catalog(parsed, catalog)
-    return label_sinks(parsed)
 
 
 def windowed_sink_counts(labeled: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:

@@ -122,6 +122,40 @@ def test_write_pb_capture_retry_idempotent(spark, tmp_path):
     assert sorted(bodies) == sorted(f"rec-{i}" for i in range(24))
 
 
+def test_write_pb_capture_file_uri(spark, tmp_path, monkeypatch):
+    """A file:// out_dir is written where the URI points (not into a
+    ``file:`` directory under the working directory), so the reader finds
+    it under the same URI; a scheme the workers cannot open() is refused."""
+    from pyspark.sql import functions as F
+
+    from otel_arrow_adapter_spark.sources.otlp_pb import (
+        encode_export_logs_request,
+        read_pb_logs,
+        write_pb_capture,
+    )
+
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    df = spark.range(0, 6, numPartitions=2).select(
+        F.concat(F.lit("rec-"), F.col("id").cast("string")).alias("body"),
+        (F.col("id") * 1000).alias("time_unix_nano"),
+    )
+
+    def to_record(r):
+        return {"res_idx": 0, "body": r["body"], "time_unix_nano": int(r["time_unix_nano"])}
+
+    out = tmp_path / "capture"
+    uri = f"file://{out}"
+    assert write_pb_capture(df, uri, to_record, encode_export_logs_request) == 6
+    assert list(cwd.iterdir()) == []
+    assert sorted(p.name for p in out.iterdir()) == ["part-00000.pb", "part-00001.pb"]
+    bodies = [r["body"] for r in read_pb_logs(spark, uri).collect()]
+    assert sorted(bodies) == [f"rec-{i}" for i in range(6)]
+    with pytest.raises(ValueError, match="local files"):
+        write_pb_capture(df, "hdfs://nn:8020/capture", to_record, encode_export_logs_request)
+
+
 def test_pb_wire_roundtrip_property():
     """Property form: arbitrary record sets (unicode text, optional fields
     absent at random, extreme timestamps) survive encode∘decode exactly."""

@@ -302,6 +302,35 @@ def test_compact_routed_preserves_rows(spark, transcripts, small_catalog, tmp_pa
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
+def test_compact_routed_under_file_uri(spark, transcripts, small_catalog, tmp_path):
+    """A file:// out_dir compacts every sink of the run, as a bare path does
+    (a local-filesystem listing of the URI finds nothing and skips them)."""
+    from otel_arrow_adapter_spark.operators.route import compact_routed
+
+    out = str(tmp_path / "out_compact_uri")
+    run_pipeline(spark, transcripts, small_catalog, out, run_id="c")
+    stats = compact_routed(spark, f"file://{out}", target_mb=512)
+    assert set(stats) == {"logs", "metrics", "traces", "quarantine"}
+    for sink, (before, after) in stats.items():
+        assert after == 1 and before >= after, (sink, before, after)
+        a = spark.read.parquet(f"{out}/routed/sink={sink}")
+        b = spark.read.parquet(f"{out}/routed_compacted/sink={sink}")
+        assert a.count() == b.count()
+
+
+def test_compact_routed_rejects_bucketed_run(spark, transcripts, small_catalog, tmp_path):
+    """A bucketed run's routed table (bucket=*/sink=*) is refused loudly
+    instead of compacting nothing."""
+    import pytest
+
+    from otel_arrow_adapter_spark.operators.route import compact_routed
+
+    out = str(tmp_path / "out_compact_bucketed")
+    run_pipeline(spark, transcripts, small_catalog, out, run_id="cb", n_buckets=2)
+    with pytest.raises(ValueError, match="bucket-partitioned"):
+        compact_routed(spark, out)
+
+
 def test_resumable_ledger_under_file_uri(
     spark, transcripts, small_catalog, tmp_path, monkeypatch
 ):

@@ -3,8 +3,8 @@ analog) and watermarked windowed counts."""
 
 import pyspark.sql.functions as F
 
+from otel_arrow_adapter_spark.plans import build_labeled
 from otel_arrow_adapter_spark.streaming.stream import (
-    build_stream,
     read_transcript_stream,
     start_routed_stream,
     windowed_sink_counts,
@@ -18,7 +18,7 @@ def test_stream_routes_all_rows(spark, transcripts, small_catalog, tmp_path):
     transcripts.repartition(4).write.parquet(src)
 
     stream = read_transcript_stream(spark, src, max_files=2)
-    labeled = build_stream(stream, small_catalog)
+    labeled = build_labeled(stream, small_catalog, id_mode="hash")
     q = start_routed_stream(labeled, out, ckpt, trigger_sec=1)
     q.processAllAvailable()
     q.stop()
@@ -38,7 +38,9 @@ def test_stream_windowed_counts(spark, transcripts, tmp_path):
     src = str(tmp_path / "src2")
     transcripts.repartition(2).write.parquet(src)
     stream = read_transcript_stream(spark, src)
-    agg = windowed_sink_counts(build_stream(stream), window="1 day", watermark="1 day")
+    agg = windowed_sink_counts(
+        build_labeled(stream, id_mode="hash"), window="1 day", watermark="1 day"
+    )
     q = (
         agg.writeStream.format("memory")
         .queryName("wc")
@@ -59,7 +61,7 @@ def test_stream_stateful_conversation_stats(spark, transcripts, small_catalog, t
     src = str(tmp_path / "src3")
     transcripts.repartition(4).write.parquet(src)
     stream = read_transcript_stream(spark, src, max_files=1)
-    stats = conversation_stats_stateful(build_stream(stream, small_catalog))
+    stats = conversation_stats_stateful(build_labeled(stream, small_catalog, id_mode="hash"))
     q = stats.writeStream.format("memory").queryName("cs").outputMode("update").start()
     q.processAllAvailable()
     q.stop()
@@ -269,7 +271,7 @@ def test_paced_replay_feeds_full_pipeline(spark, small_catalog, tmp_path):
     ).write.parquet(src)
 
     stream = read_paced_replay(spark, src, speed=1.0).drop("replay_tick")
-    labeled = build_stream(stream, small_catalog)
+    labeled = build_labeled(stream, small_catalog, id_mode="hash")
     q = start_routed_stream(labeled, out, ckpt, trigger_sec=1)
     import time
 
@@ -301,7 +303,7 @@ def test_stream_session_windows(spark, transcripts, tmp_path):
     # files arrive in arbitrary ts order: the watermark must cover the
     # whole dataset span or cross-batch "late" turns are dropped
     agg = session_windowed_activity(
-        build_stream(stream), gap="10 minutes", watermark="3650 days"
+        build_labeled(stream, id_mode="hash"), gap="10 minutes", watermark="3650 days"
     )
     q = (
         agg.writeStream.format("memory")
@@ -379,7 +381,9 @@ def test_stream_late_data_dropped_beyond_watermark(spark, tmp_path):
     # batch = 10:00 - 1h = 09:00, so the 00:00 window is finalized
     write_batch([(0, 5), (10, 0)], part=0)
     stream = read_transcript_stream(spark, src, max_files=1)
-    agg = windowed_sink_counts(build_stream(stream), window="1 hour", watermark="1 hour")
+    agg = windowed_sink_counts(
+        build_labeled(stream, id_mode="hash"), window="1 hour", watermark="1 hour"
+    )
     q = (
         agg.writeStream.format("memory")
         .queryName("late_wc")
