@@ -1,16 +1,28 @@
 """Similarity search over an embedding column (array<float>).
 
-- ``cosine_topk``: brute-force top-k vs a query vector — native
-  ``zip_with`` + ``aggregate`` dot product (JVM, no Python), one pass,
-  the exact baseline.
-- ``sign_lsh_buckets`` / ``ann_pairs``: the scale path — axis-sign LSH
-  (bucket = sign bits of the first m dimensions; an axis-aligned
-  random-hyperplane LSH that is engine-portable), candidates only within
-  a bucket, cosine verify. At 10^9 vectors the bucket join replaces the
-  O(n^2) cross join.
-- ``ivf_assign``: IVF-style coarse quantization against a broadcast
-  centroid table (here: seeded sample vectors) — one broadcast cross join
-  of n x k, argmin by window.
+Operator families, native column expressions unless noted:
+
+- exact top-k: ``cosine_topk`` (brute force against one query vector)
+  and ``quantized_cosine_topk`` (the same over int8-SQ reconstructions
+  from ``quantize_embeddings``);
+- sign-LSH pair finders: ``ann_pairs``, ``ann_pairs_multiprobe``,
+  ``ann_pairs_banded`` and ``ann_pairs_projected`` (pandas-UDF
+  projection buckets), with ``brute_force_pairs`` as recall ground truth;
+- IVF: ``ivf_assign`` (coarse assignment to seed or ``kmeans_train``
+  centroids: one broadcast n x k scoring and a groupBy struct-max
+  argmax, no window), ``ivf_search`` and ``semdedup``;
+- PQ: ``pq_codebooks``/``pq_train_codebooks``, ``pq_encode``,
+  ``pq_code_histogram``, ``pq_search_adc``, ``ivfpq_search`` and
+  ``pq_search_rescored``;
+- ``embedding_moments`` and ``pca_project`` (mapInPandas).
+
+Shared cores, one body per decision: ``_query_vec`` + ``_query_scored``
+(rounded cosine of candidates against one broadcast query vector),
+``_bucket_pairs`` (candidate join + cosine verify of the pair finders),
+``_probed_ids`` (the IVF probe), ``_adc_scores`` (PQ lookup-table
+scoring), ``_pq_nearest`` (the PQ L2 argmin) and ``_lloyd_means`` (the
+k-means centroid update). Every top-k ends in
+``operators.normalize.top_k``, the windowless rank.
 """
 
 from __future__ import annotations
@@ -19,6 +31,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..operators.normalize import top_k
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -37,6 +51,25 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def _query_vec(vectors: DataFrame, query_vec_id: int, vec_col: str) -> DataFrame:
+    """The one-row ``q_vec`` frame of the query vector."""
+    return vectors.where(F.col("vec_id") == query_vec_id).select(F.col(vec_col).alias("q_vec"))
+
+
+def _query_scored(
+    candidates: DataFrame,
+    q: DataFrame,
+    vec_col: str,
+    key: str = "vec_id",
+    score: str = "cos_sim",
+) -> DataFrame:
+    """(key, score): each candidate's cosine to the broadcast query vector
+    ``q``, rounded like every other score so oracle ranking ties agree."""
+    return candidates.crossJoin(F.broadcast(q)).select(
+        key, F.round(cosine(F.col(vec_col), F.col("q_vec")), 6).alias(score)
+    )
+
+
 def cosine_topk(
     embeddings: DataFrame,
     query_vec_id: int = 0,
@@ -45,35 +78,9 @@ def cosine_topk(
 ) -> DataFrame:
     """Top-k neighbors of one vector by cosine (excluding itself);
     deterministic tie-break by vec_id."""
-    q = embeddings.where(F.col("vec_id") == query_vec_id).select(
-        F.col(vec_col).alias("q_vec")
-    )
-    scored = (
-        embeddings.where(F.col("vec_id") != query_vec_id)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(cosine(F.col(vec_col), F.col("q_vec")), 6).alias("cos_sim"),
-        )
-    )
-    # orderBy+limit compiles to TakeOrderedAndProject — distributed partial
-    # top-k per partition, k rows to the driver — instead of a global
-    # single-partition row_number window over all n scores. Rank is then
-    # assigned windowlessly on the k survivors (collect+sort+posexplode of
-    # an O(k) array): no WindowExec at all in the plan.
-    top = scored.orderBy(F.desc("cos_sim"), F.asc("vec_id")).limit(k)
-    arr = F.sort_array(
-        F.collect_list(F.struct((-F.col("cos_sim")).alias("_neg"), "vec_id", "cos_sim"))
-    )
-    return (
-        top.agg(arr.alias("_v"))
-        .select(F.posexplode("_v").alias("_pos", "_s"))
-        .select(
-            F.col("_s.vec_id").alias("vec_id"),
-            F.col("_s.cos_sim").alias("cos_sim"),
-            (F.col("_pos") + 1).cast("int").alias("rank"),
-        )
-    )
+    q = _query_vec(embeddings, query_vec_id, vec_col)
+    scored = _query_scored(embeddings.where(F.col("vec_id") != query_vec_id), q, vec_col)
+    return top_k(scored, "cos_sim", "vec_id", k)
 
 
 def _sign_bits(vec_col: str, start: int, m: int) -> Column:
@@ -244,49 +251,49 @@ def kmeans_train(
     centroids are L2-normalized means, so dot == cosine ranking).
 
     Per iteration: broadcast k centroids, argmax-assign (one shuffle on
-    vec_id), recompute means by (centroid, dim) — posexplode to dim grain
-    so the mean is a plain map-side-combined agg, never a whole-vector
-    reduce on one task. Each iteration's centroids are materialized (the
-    same one k-row job the next iteration's broadcast would trigger
-    anyway) and the PREVIOUS iteration's freed immediately: resident
+    vec_id), recompute means by (centroid, dim) (:func:`_lloyd_means`).
+    Each iteration's centroids are materialized (the same one k-row job
+    the next iteration's broadcast would trigger anyway) and the
+    PREVIOUS iteration's freed immediately: resident
     footprint is 2 x k x dim instead of iters x k x dim, with no
     driver-side collect of vector data. The last iteration's centroids
     are the caller's owned result; ``unpersist()`` them when done."""
     from ..caching import materialize_scope, owned_result
 
-    cents = seed_centroids(embeddings, n_centroids, vec_col)
-    # normalize so dot-product ranking == cosine ranking
-    cents = cents.select(
-        "centroid_id", F.transform("c_vec", lambda x: x / norm(F.col("c_vec"))).alias("c_vec")
-    )
+    def unit(cents: DataFrame) -> DataFrame:
+        # normalize so dot-product ranking == cosine ranking
+        return cents.select(
+            "centroid_id", F.transform("c_vec", lambda x: x / norm(F.col("c_vec"))).alias("c_vec")
+        )
+
+    cents = unit(seed_centroids(embeddings, n_centroids, vec_col))
     with materialize_scope() as m:
         for i in range(iters):
             assigned = assign_to_centroids(embeddings, cents, vec_col).select(
                 "vec_id", "centroid_id"
             )
-            by_dim = (
-                embeddings.join(assigned, "vec_id")
-                .select("centroid_id", F.posexplode(vec_col).alias("dim", "x"))
-                .groupBy("centroid_id", "dim")
-                .agg(F.avg("x").alias("m"))
-            )
-            new_cents = (
-                by_dim.groupBy("centroid_id")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("dim", "m"))), lambda s: s["m"]
-                    ).alias("c_vec")
-                )
-            )
-            new_cents = new_cents.select(
-                "centroid_id",
-                F.transform("c_vec", lambda x: x / norm(F.col("c_vec"))).alias("c_vec"),
-            )
+            members = embeddings.join(assigned, "vec_id")
+            new_cents = unit(_lloyd_means(members, ["centroid_id"], vec_col, "c_vec"))
             if i + 1 < iters:  # the last round becomes the caller's result
                 new_cents = m.keep(new_cents)
                 m.free(cents)
             cents = new_cents
         return owned_result(cents)
+
+
+def _lloyd_means(members: DataFrame, keys: list[str], vec_col: str, out: str) -> DataFrame:
+    """The Lloyd update: per ``keys`` group of ``members``, the mean of
+    ``vec_col`` as vector ``out``. posexplode to dim grain so the mean is a
+    plain map-side-combined agg, never a whole-vector reduce on one task;
+    the dims are then collected back in order."""
+    by_dim = (
+        members.select(*keys, F.posexplode(vec_col).alias("dim", "x"))
+        .groupBy(*keys, "dim")
+        .agg(F.avg("x").alias("m"))
+    )
+    return by_dim.groupBy(*keys).agg(
+        F.transform(F.array_sort(F.collect_list(F.struct("dim", "m"))), lambda s: s["m"]).alias(out)
+    )
 
 
 def kmeans_inertia(
@@ -443,6 +450,29 @@ def brute_force_pairs(
     )
 
 
+def _probed_ids(
+    embeddings: DataFrame,
+    q: DataFrame,
+    n_centroids: int,
+    n_probe: int,
+    vec_col: str,
+    centroids: DataFrame | None,
+) -> DataFrame:
+    """The IVF probe: ``vec_id`` of every vector in the query's ``n_probe``
+    nearest inverted lists, against seed (default) or given centroids.
+    Centroid scoring is a broadcast; the list restriction a broadcast
+    semi-join."""
+    cents = centroids if centroids is not None else seed_centroids(embeddings, n_centroids, vec_col)
+    probes = (
+        _query_scored(cents, q, "c_vec", key="centroid_id", score="qc")
+        .orderBy(F.desc("qc"), F.asc("centroid_id"))
+        .limit(n_probe)
+        .select("centroid_id")
+    )
+    assigned = assign_to_centroids(embeddings, cents, vec_col).select("vec_id", "centroid_id")
+    return assigned.join(F.broadcast(probes), "centroid_id", "left_semi").select("vec_id")
+
+
 def ivf_search(
     embeddings: DataFrame,
     query_vec_id: int = 0,
@@ -456,39 +486,12 @@ def ivf_search(
     ONLY inside those clusters — the 10^9-vector scale path (scanned
     fraction ≈ n_probe / n_centroids). With n_probe == n_centroids this
     degrades to exact brute-force (recall test anchor)."""
-    cents = centroids if centroids is not None else seed_centroids(embeddings, n_centroids, vec_col)
-    assigned = assign_to_centroids(embeddings, cents, vec_col).select("vec_id", "centroid_id")
-    q = embeddings.where(F.col("vec_id") == query_vec_id).select(
-        F.col(vec_col).alias("q_vec")
+    q = _query_vec(embeddings, query_vec_id, vec_col)
+    probed = _probed_ids(embeddings, q, n_centroids, n_probe, vec_col, centroids)
+    candidates = embeddings.join(probed, "vec_id", "left_semi").where(
+        F.col("vec_id") != query_vec_id
     )
-    probes = (
-        cents.crossJoin(F.broadcast(q))
-        # rounded like every other score so oracle ranking ties agree
-        .select("centroid_id", F.round(cosine(F.col("c_vec"), F.col("q_vec")), 6).alias("qc"))
-        .orderBy(F.desc("qc"), F.asc("centroid_id"))
-        .limit(n_probe)
-        .select("centroid_id")
-    )
-    in_probed = assigned.join(F.broadcast(probes), "centroid_id", "left_semi")
-    scored = (
-        embeddings.join(in_probed, "vec_id", "left_semi")
-        .where(F.col("vec_id") != query_vec_id)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", F.round(cosine(F.col(vec_col), F.col("q_vec")), 6).alias("cos_sim"))
-    )
-    top = scored.orderBy(F.desc("cos_sim"), F.asc("vec_id")).limit(k)
-    arr = F.sort_array(
-        F.collect_list(F.struct((-F.col("cos_sim")).alias("_neg"), "vec_id", "cos_sim"))
-    )
-    return (
-        top.agg(arr.alias("_v"))
-        .select(F.posexplode("_v").alias("_pos", "_s"))
-        .select(
-            F.col("_s.vec_id").alias("vec_id"),
-            F.col("_s.cos_sim").alias("cos_sim"),
-            (F.col("_pos") + 1).cast("int").alias("rank"),
-        )
-    )
+    return top_k(_query_scored(candidates, q, vec_col), "cos_sim", "vec_id", k)
 
 
 def quantize_embeddings(
@@ -544,25 +547,9 @@ def quantized_cosine_topk(
     r = quantize_embeddings(embeddings, bits=bits, vec_col=vec_col).select(
         "vec_id", recon.alias("rvec")
     )
-    q = r.where(F.col("vec_id") == query_vec_id).select(F.col("rvec").alias("q_vec"))
-    scored = (
-        r.where(F.col("vec_id") != query_vec_id)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", F.round(cosine(F.col("rvec"), F.col("q_vec")), 6).alias("cos_sim"))
-    )
-    top = scored.orderBy(F.desc("cos_sim"), F.asc("vec_id")).limit(k)
-    arr = F.sort_array(
-        F.collect_list(F.struct((-F.col("cos_sim")).alias("_neg"), "vec_id", "cos_sim"))
-    )
-    return (
-        top.agg(arr.alias("_v"))
-        .select(F.posexplode("_v").alias("_pos", "_s"))
-        .select(
-            F.col("_s.vec_id").alias("vec_id"),
-            F.col("_s.cos_sim").alias("cos_sim"),
-            (F.col("_pos") + 1).cast("int").alias("rank"),
-        )
-    )
+    q = _query_vec(r, query_vec_id, "rvec")
+    scored = _query_scored(r.where(F.col("vec_id") != query_vec_id), q, "rvec")
+    return top_k(scored, "cos_sim", "vec_id", k)
 
 
 def _l2sq(a: Column, b: Column) -> Column:
@@ -615,6 +602,27 @@ def pq_codebooks(
     ).select("sub", F.col("vec_id").cast("int").alias("code_id"), F.col("subvec").alias("c_vec"))
 
 
+def _pq_nearest(sv: DataFrame, codebooks: DataFrame) -> DataFrame:
+    """(vec_id, sub, code_id, dist): each subvector's L2-nearest codeword —
+    broadcast codebook scoring, then one map-side-combined groupBy on
+    (vec_id, sub). Deterministic argmin: min over (dist, code_id) breaks
+    ties toward the smaller code id (mirrors the oracle's ORDER BY dist,
+    code_id)."""
+    scored = sv.join(F.broadcast(codebooks), "sub").select(
+        "vec_id",
+        "sub",
+        "code_id",
+        F.round(_l2sq(F.col("subvec"), F.col("c_vec")), 6).alias("dist"),
+    )
+    best = scored.groupBy("vec_id", "sub").agg(F.min(F.struct("dist", "code_id")).alias("_b"))
+    return best.select(
+        "vec_id",
+        "sub",
+        F.col("_b.code_id").alias("code_id"),
+        F.col("_b.dist").alias("dist"),
+    )
+
+
 def pq_encode(
     embeddings: DataFrame,
     codebooks: DataFrame,
@@ -633,24 +641,7 @@ def pq_encode(
     windows, no UDFs; distances are codegen'd zip_with folds. Storage
     story: m codes x log2(k) bits replaces dim floats (here 8 bytes vs
     256 — the 32x compression PQ exists for)."""
-    sv = pq_subvectors(embeddings, m, dim, vec_col)
-    scored = sv.join(F.broadcast(codebooks), "sub").select(
-        "vec_id",
-        "sub",
-        "code_id",
-        F.round(_l2sq(F.col("subvec"), F.col("c_vec")), 6).alias("dist"),
-    )
-    # deterministic argmin: min over (dist, code_id) breaks ties toward the
-    # smaller code id (mirrors the oracle's ORDER BY dist, code_id)
-    best = scored.groupBy("vec_id", "sub").agg(
-        F.min(F.struct("dist", "code_id")).alias("_b")
-    )
-    return best.select(
-        "vec_id",
-        "sub",
-        F.col("_b.code_id").alias("code_id"),
-        F.col("_b.dist").alias("dist"),
-    )
+    return _pq_nearest(pq_subvectors(embeddings, m, dim, vec_col), codebooks)
 
 
 def pq_code_histogram(
@@ -667,6 +658,33 @@ def pq_code_histogram(
     cb = codebooks if codebooks is not None else pq_codebooks(embeddings, m, n_codes, dim, vec_col)
     codes = pq_encode(embeddings, cb, m, dim, vec_col)
     return codes.groupBy("sub", "code_id").agg(F.count(F.lit(1)).alias("n_vecs"))
+
+
+def _adc_scores(
+    codes: DataFrame,
+    codebooks: DataFrame,
+    embeddings: DataFrame,
+    query_vec_id: int,
+    m: int,
+    dim: int,
+    vec_col: str,
+) -> DataFrame:
+    """(vec_id, adc_score) of every vector in ``codes`` but the query: the
+    query's raw subvectors dot every codeword into an m x k lookup table
+    (LUT), broadcast to the codes and summed per vector by one
+    map-side-combined groupBy(vec_id)."""
+    qsv = pq_subvectors(
+        embeddings.where(F.col("vec_id") == query_vec_id), m, dim, vec_col
+    ).select("sub", F.col("subvec").alias("q_sub"))
+    lut = codebooks.join(F.broadcast(qsv), "sub").select(
+        "sub", "code_id", F.round(dot(F.col("c_vec"), F.col("q_sub")), 6).alias("part")
+    )
+    return (
+        codes.where(F.col("vec_id") != query_vec_id)
+        .join(F.broadcast(lut), ["sub", "code_id"])
+        .groupBy("vec_id")
+        .agg(F.round(F.sum("part"), 6).alias("adc_score"))
+    )
 
 
 def pq_search_adc(
@@ -695,31 +713,8 @@ def pq_search_adc(
     matters (cf. :func:`ivf_search` composition)."""
     cb = codebooks if codebooks is not None else pq_codebooks(embeddings, m, n_codes, dim, vec_col)
     codes = pq_encode(embeddings, cb, m, dim, vec_col)
-    qsv = pq_subvectors(
-        embeddings.where(F.col("vec_id") == query_vec_id), m, dim, vec_col
-    ).select("sub", F.col("subvec").alias("q_sub"))
-    lut = cb.join(F.broadcast(qsv), "sub").select(
-        "sub", "code_id", F.round(dot(F.col("c_vec"), F.col("q_sub")), 6).alias("part")
-    )
-    scored = (
-        codes.where(F.col("vec_id") != query_vec_id)
-        .join(F.broadcast(lut), ["sub", "code_id"])
-        .groupBy("vec_id")
-        .agg(F.round(F.sum("part"), 6).alias("adc_score"))
-    )
-    top = scored.orderBy(F.desc("adc_score"), F.asc("vec_id")).limit(k)
-    arr = F.sort_array(
-        F.collect_list(F.struct((-F.col("adc_score")).alias("_neg"), "vec_id", "adc_score"))
-    )
-    return (
-        top.agg(arr.alias("_v"))
-        .select(F.posexplode("_v").alias("_pos", "_s"))
-        .select(
-            F.col("_s.vec_id").alias("vec_id"),
-            F.col("_s.adc_score").alias("adc_score"),
-            (F.col("_pos") + 1).cast("int").alias("rank"),
-        )
-    )
+    scored = _adc_scores(codes, cb, embeddings, query_vec_id, m, dim, vec_col)
+    return top_k(scored, "adc_score", "vec_id", k)
 
 
 def ivfpq_search(
@@ -748,45 +743,12 @@ def ivfpq_search(
     TakeOrderedAndProject. The raw vectors are read once (to encode);
     a deployed index would persist ``pq_encode``'s output and never
     touch them at query time."""
-    cents = centroids if centroids is not None else seed_centroids(embeddings, n_centroids, vec_col)
-    assigned = assign_to_centroids(embeddings, cents, vec_col).select("vec_id", "centroid_id")
-    q = embeddings.where(F.col("vec_id") == query_vec_id).select(F.col(vec_col).alias("q_vec"))
-    probes = (
-        cents.crossJoin(F.broadcast(q))
-        .select("centroid_id", F.round(cosine(F.col("c_vec"), F.col("q_vec")), 6).alias("qc"))
-        .orderBy(F.desc("qc"), F.asc("centroid_id"))
-        .limit(n_probe)
-        .select("centroid_id")
-    )
-    in_probed = assigned.join(F.broadcast(probes), "centroid_id", "left_semi")
+    q = _query_vec(embeddings, query_vec_id, vec_col)
+    probed = _probed_ids(embeddings, q, n_centroids, n_probe, vec_col, centroids)
     cb = codebooks if codebooks is not None else pq_codebooks(embeddings, m, n_codes, dim, vec_col)
-    codes = pq_encode(embeddings, cb, m, dim, vec_col)
-    qsv = pq_subvectors(
-        embeddings.where(F.col("vec_id") == query_vec_id), m, dim, vec_col
-    ).select("sub", F.col("subvec").alias("q_sub"))
-    lut = cb.join(F.broadcast(qsv), "sub").select(
-        "sub", "code_id", F.round(dot(F.col("c_vec"), F.col("q_sub")), 6).alias("part")
-    )
-    scored = (
-        codes.join(in_probed.select("vec_id"), "vec_id", "left_semi")
-        .where(F.col("vec_id") != query_vec_id)
-        .join(F.broadcast(lut), ["sub", "code_id"])
-        .groupBy("vec_id")
-        .agg(F.round(F.sum("part"), 6).alias("adc_score"))
-    )
-    top = scored.orderBy(F.desc("adc_score"), F.asc("vec_id")).limit(k)
-    arr = F.sort_array(
-        F.collect_list(F.struct((-F.col("adc_score")).alias("_neg"), "vec_id", "adc_score"))
-    )
-    return (
-        top.agg(arr.alias("_v"))
-        .select(F.posexplode("_v").alias("_pos", "_s"))
-        .select(
-            F.col("_s.vec_id").alias("vec_id"),
-            F.col("_s.adc_score").alias("adc_score"),
-            (F.col("_pos") + 1).cast("int").alias("rank"),
-        )
-    )
+    codes = pq_encode(embeddings, cb, m, dim, vec_col).join(probed, "vec_id", "left_semi")
+    scored = _adc_scores(codes, cb, embeddings, query_vec_id, m, dim, vec_col)
+    return top_k(scored, "adc_score", "vec_id", k)
 
 
 def pq_search_rescored(
@@ -814,27 +776,9 @@ def pq_search_rescored(
     sl = pq_search_adc(
         embeddings, query_vec_id, shortlist, m, n_codes, dim, vec_col, codebooks
     ).select("vec_id")
-    q = embeddings.where(F.col("vec_id") == query_vec_id).select(
-        F.col(vec_col).alias("q_vec")
-    )
-    scored = (
-        embeddings.join(sl, "vec_id", "left_semi")
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", F.round(cosine(F.col(vec_col), F.col("q_vec")), 6).alias("cos_sim"))
-    )
-    top = scored.orderBy(F.desc("cos_sim"), F.asc("vec_id")).limit(k)
-    arr = F.sort_array(
-        F.collect_list(F.struct((-F.col("cos_sim")).alias("_neg"), "vec_id", "cos_sim"))
-    )
-    return (
-        top.agg(arr.alias("_v"))
-        .select(F.posexplode("_v").alias("_pos", "_s"))
-        .select(
-            F.col("_s.vec_id").alias("vec_id"),
-            F.col("_s.cos_sim").alias("cos_sim"),
-            (F.col("_pos") + 1).cast("int").alias("rank"),
-        )
-    )
+    q = _query_vec(embeddings, query_vec_id, vec_col)
+    scored = _query_scored(embeddings.join(sl, "vec_id", "left_semi"), q, vec_col)
+    return top_k(scored, "cos_sim", "vec_id", k)
 
 
 def pq_train_codebooks(
@@ -851,9 +795,9 @@ def pq_train_codebooks(
 
     Per round: broadcast the m x k codebooks, argmin-assign each subvector
     (one map-side-combined groupBy), recompute codewords at (sub, code,
-    dim) grain via posexplode + avg — the same never-a-whole-vector-reduce
-    shape as :func:`kmeans_train`. Empty codes keep their previous
-    codeword (left-join coalesce), so the codebook stays exactly m x k.
+    dim) grain, the same :func:`_lloyd_means` as :func:`kmeans_train`.
+    Empty codes keep their previous codeword (left-join coalesce), so the
+    codebook stays exactly m x k.
     Each round is materialized and the previous one freed; the last
     round's codebooks are the caller's owned result (``unpersist()``
     them when done)."""
@@ -863,29 +807,9 @@ def pq_train_codebooks(
     cb = pq_codebooks(embeddings, m, n_codes, dim, vec_col)
     with materialize_scope() as scope:
         for i in range(iters):
-            scored = sv.join(F.broadcast(cb), "sub").select(
-                "vec_id",
-                "sub",
-                "code_id",
-                F.round(_l2sq(F.col("subvec"), F.col("c_vec")), 6).alias("dist"),
-            )
-            best = scored.groupBy("vec_id", "sub").agg(
-                F.min(F.struct("dist", "code_id")).alias("_b")
-            )
-            assigned = best.select(
-                "vec_id", "sub", F.col("_b.code_id").alias("code_id")
-            )
-            by_dim = (
-                sv.join(assigned, ["vec_id", "sub"])
-                .select("sub", "code_id", F.posexplode("subvec").alias("d", "x"))
-                .groupBy("sub", "code_id", "d")
-                .agg(F.avg("x").alias("cm"))
-            )
-            means = by_dim.groupBy("sub", "code_id").agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("d", "cm"))), lambda s: s["cm"]
-                ).alias("new_vec")
-            )
+            assigned = _pq_nearest(sv, cb).select("vec_id", "sub", "code_id")
+            members = sv.join(assigned, ["vec_id", "sub"])
+            means = _lloyd_means(members, ["sub", "code_id"], "subvec", "new_vec")
             new_cb = cb.join(means, ["sub", "code_id"], "left").select(
                 "sub", "code_id", F.coalesce("new_vec", "c_vec").alias("c_vec")
             )

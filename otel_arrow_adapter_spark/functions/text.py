@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..operators.normalize import top_k
+
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
 
 # tiny per-language stopword profiles for the n-gram/stopword language-ID
@@ -533,19 +535,7 @@ def bm25_topk(
         .groupBy("doc_id")
         .agg(F.round(F.sum("term_score"), 6).alias("bm25"))
     )
-    top = scored.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(k)
-    arr = F.sort_array(
-        F.collect_list(F.struct((-F.col("bm25")).alias("_neg"), "doc_id", "bm25"))
-    )
-    return (
-        top.agg(arr.alias("_v"))
-        .select(F.posexplode("_v").alias("_pos", "_s"))
-        .select(
-            F.col("_s.doc_id").alias("doc_id"),
-            F.col("_s.bm25").alias("bm25"),
-            (F.col("_pos") + 1).cast("int").alias("rank"),
-        )
-    )
+    return top_k(scored, "bm25", "doc_id", k)
 
 
 def source_kl_drift(

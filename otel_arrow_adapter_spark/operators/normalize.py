@@ -5,12 +5,12 @@ The reference assigns a canonical small-int ID per distinct
 single pass (/root/reference/pkg/otel/logs/arrow/optimizer.go:83-99, hashes
 in pkg/otel/common/otlp/ids.go). Two Spark-native strategies:
 
-- ``mode="dense"``: distinct over the (tiny) dimension -> dense_rank on the
-  distinct set -> broadcast-join back. Deterministic small ints (ordered by
-  value, not first-seen — first-seen order is batch-order-dependent and
-  meaningless under distributed execution). Scale note: dense_rank runs over
-  the *distinct* values only (~50 tools x 4 roles), so the single-partition
-  window is O(dims), never O(rows).
+- ``mode="dense"``: distinct over the (tiny) dimension -> windowless rank
+  of the distinct set (:func:`ranked_dim`) -> broadcast-join back.
+  Deterministic small ints (ordered by value, not first-seen — first-seen
+  order is batch-order-dependent and meaningless under distributed
+  execution). Scale note: the rank sorts the *distinct* values only (~50
+  tools x 4 roles) in one task, O(dims), never O(rows).
 - ``mode="hash"``: xxhash64 content hash, the ids.go approach — no shuffle
   at all, ideal at 10^12 rows; IDs are stable but not dense.
 """
@@ -21,6 +21,34 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def _rank(
+    df: DataFrame,
+    fields: list,
+    cols: tuple[str, ...],
+    id_name: str,
+    id_type: str,
+    start: int,
+) -> DataFrame:
+    """Windowless global rank of a small frame: ``cols`` plus ``id_name``
+    (``start``-based position in the ascending sort of ``fields``).
+
+    collect_list(struct) -> sort_array -> posexplode: one reduce of a small
+    array instead of a single-partition window (Spark strips foldable
+    partition keys, so a window here always funnels through one task AND
+    warns). Struct comparison sorts field by field, null fields first —
+    matching the oracles' ``ORDER BY ... ASC NULLS FIRST``. Only for
+    dictionary- or k-small inputs: the sorted array lives in one task."""
+    arr = F.sort_array(F.collect_list(F.struct(*fields)))
+    return (
+        df.agg(arr.alias("_vals"))
+        .select(F.posexplode("_vals").alias("_pos", "_s"))
+        .select(
+            *[F.col(f"_s.{c}").alias(c) for c in cols],
+            (F.col("_pos") + F.lit(start)).cast(id_type).alias(id_name),
+        )
+    )
+
+
 def ranked_dim(
     df: DataFrame,
     cols: tuple[str, ...],
@@ -28,24 +56,20 @@ def ranked_dim(
     id_type: str = "long",
     start: int = 1,
 ) -> DataFrame:
-    """Global dense rank over a DISTINCT dimension, windowless.
+    """Global dense rank over a DISTINCT dimension, windowless (see
+    :func:`_rank`)."""
+    return _rank(df.select(*cols).distinct(), list(cols), cols, id_name, id_type, start)
 
-    collect_list(struct) -> sort_array -> posexplode: one reduce of an
-    O(dims) array instead of a single-partition window (Spark strips
-    foldable partition keys, so a window here always funnels through one
-    task AND warns). Struct comparison sorts null fields first — matching
-    the oracles' ``ORDER BY ... ASC NULLS FIRST``. Only for
-    dictionary-small inputs: the sorted array lives in one task."""
-    dim = df.select(*cols).distinct()
-    arr = F.sort_array(F.collect_list(F.struct(*cols)))
-    return (
-        dim.agg(arr.alias("_vals"))
-        .select(F.posexplode("_vals").alias("_pos", "_s"))
-        .select(
-            *[F.col(f"_s.{c}").alias(c) for c in cols],
-            (F.col("_pos") + F.lit(start)).cast(id_type).alias(id_name),
-        )
-    )
+
+def top_k(scored: DataFrame, score: str, key: str, k: int) -> DataFrame:
+    """(key, score, rank int from 1) of the ``k`` highest scores, ties by
+    ascending key. orderBy+limit compiles to TakeOrderedAndProject —
+    distributed partial top-k per partition, k rows to the driver —
+    instead of a global row_number window over every score; the k
+    survivors are then ranked by :func:`_rank`."""
+    top = scored.orderBy(F.desc(score), F.asc(key)).limit(k)
+    fields = [(-F.col(score)).alias("_neg"), key, score]
+    return _rank(top, fields, (key, score), "rank", "int", 1)
 
 
 def assign_surrogate_ids(

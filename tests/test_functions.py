@@ -222,6 +222,31 @@ def test_jaccard_candidates_bound_the_join(spark, docs_with_dups):
     assert got == {t for t in unbounded if (t[0], t[1]) in cand_set}
 
 
+def test_rank_core_ties_overflow_and_dict_codes(spark):
+    """The windowless rank behind every top-k search and dense dimension:
+    tied scores rank by ascending key, a k above the candidate count
+    returns every candidate ranked 1..n, and start=0/id_type="int" gives
+    dict_encode_column's dictionary codes."""
+    from otel_arrow_adapter_spark.operators.normalize import ranked_dim, top_k
+
+    scored = spark.createDataFrame(
+        [(7, 0.5), (3, 0.9), (5, 0.5), (1, 0.5), (9, 0.1)], "key long, score double"
+    )
+    top = top_k(scored, "score", "key", 3)
+    assert dict(top.dtypes)["rank"] == "int"
+    assert [tuple(r) for r in top.orderBy("rank").collect()] == [
+        (3, 0.9, 1), (1, 0.5, 2), (5, 0.5, 3)
+    ]
+    every = top_k(scored, "score", "key", 50).orderBy("rank").collect()
+    assert [r.key for r in every] == [3, 1, 5, 7, 9]
+    assert [r.rank for r in every] == [1, 2, 3, 4, 5]
+
+    vals = spark.createDataFrame([("b",), ("a",), ("c",), ("a",)], "v string")
+    codes = ranked_dim(vals, ("v",), "v_code", id_type="int", start=0)
+    assert dict(codes.dtypes)["v_code"] == "int"
+    assert sorted(tuple(r) for r in codes.collect()) == [("a", 0), ("b", 1), ("c", 2)]
+
+
 def test_cosine_topk_distributed_plan(spark, emb):
     """Top-k must compile to a distributed partial top-k (TakeOrdered /
     Limit), never a single-partition global row_number window over n rows."""

@@ -98,6 +98,13 @@ def test_no_unpartitioned_window_in_query_surface(spark):
         "emb_cosine_topk",
         "pipeline_delta_encode",
         "doc_minhash_sig",
+        # every other caller of the shared windowless top-k tail
+        "emb_quantized_topk",
+        "emb_ivf_search",
+        "emb_ivf_search_trained",
+        "emb_ivfpq_search",
+        "emb_pq_search",
+        "doc_bm25_topk",
     ]
     qs = entrymod.QUERIES
     for name in suspects:

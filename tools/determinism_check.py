@@ -9,9 +9,10 @@ results that the single-run oracle gate cannot see.
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from otel_arrow_adapter_spark.session import get_spark  # noqa: E402
