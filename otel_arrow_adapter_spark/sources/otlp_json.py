@@ -1,11 +1,10 @@
-"""OTLP-JSON capture format (S7/S8): ExportLogsServiceRequest in protojson
-encoding — the reference's dataset loaders accept OTLP JSON alongside .pb
+"""OTLP-JSON capture format (S7/S8): Export{Logs,Trace,Metrics}ServiceRequest
+in protojson encoding — the reference's dataset loaders accept OTLP JSON alongside .pb
 (pkg/benchmark/dataset/real_logs_dataset.go loads whole requests; the JSON
 form is the public protojson rendering of the same messages).
 
 Layout choice: ONE REQUEST PER LINE, sharded at resource grain (each line
-is a complete ExportLogsServiceRequest holding a single resourceLogs
-entry). The reference stores one request per file; the line-sharded form
+is a complete request holding a single resource entry). The reference stores one request per file; the line-sharded form
 carries identical information while keeping the writer distributed (no
 driver collect) and the reader a splittable text scan.
 
@@ -19,25 +18,21 @@ protojson conventions for the fields used: int64 (timeUnixNano) renders as
 a JSON STRING; trace/span ids as hex strings (OTLP JSON spec); AnyValue as
 ``{"stringValue": ...}``; absent optional fields are omitted (Spark's
 ``to_json`` drops nulls by default, matching protojson).
+
+The envelope (Resource > Scope > item, attribute maps, quarantine rows)
+is written once: ``_write_requests`` and ``_read_requests`` serve all three
+signals, which keep only their item columns.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StructType
 
-# from_json schema for one ExportLogsServiceRequest (string-typed AnyValue)
-OTLP_JSON_LOG_SCHEMA = (
-    "resourceLogs array<struct<"
-    "resource:struct<attributes:array<struct<key:string,value:struct<stringValue:string>>>>,"
-    "scopeLogs:array<struct<"
-    "scope:struct<name:string,version:string>,"
-    "logRecords:array<struct<"
-    "timeUnixNano:string,severityNumber:int,severityText:string,"
-    "body:struct<stringValue:string>,"
-    "attributes:array<struct<key:string,value:struct<stringValue:string>>>,"
-    "traceId:string,spanId:string>>>>>>"
-)
+from .otlp_pb import _TEMPORAL_TYPES, PB_METRIC_SCHEMA
+
+_KV = "array<struct<key:string,value:struct<stringValue:string>>>"
 
 
 def _kv_array(m):
@@ -50,6 +45,164 @@ def _kv_array(m):
             F.struct(e["value"].alias("stringValue")).alias("value"),
         ),
     )
+
+
+def _kv_map(a):
+    """protojson KeyValue array -> map<string,string>."""
+    return F.map_from_entries(
+        F.transform(a, lambda e: F.struct(e["key"], e["value"]["stringValue"]))
+    )
+
+
+# ---------------------------------------------------------------------------
+# the envelope core: one writer and one reader for all three signals
+# ---------------------------------------------------------------------------
+
+def _keyed(df: DataFrame, res_col: str, scope_col: str | None, *cols) -> DataFrame:
+    """``df`` with its resource key as ``_res`` and its scope key as
+    ``_scope`` (a null or absent scope is the empty scope), plus ``cols``."""
+    scope = (
+        F.coalesce(F.col(scope_col), F.lit(""))
+        if scope_col and scope_col in df.columns
+        else F.lit("")
+    )
+    return df.select(F.col(res_col).alias("_res"), scope.alias("_scope"), *cols)
+
+
+def _write_requests(
+    keyed: DataFrame, path: str, signal: str, items: str, item, res_attrs: bool = False
+) -> None:
+    """Keyed rows -> one Export{signal}ServiceRequest line per resource.
+    ``item`` (a column over ``keyed``) groups into ``items`` lists by
+    (resource, scope), scopes into ``scope{signal}`` lists by resource.
+    With ``res_attrs`` the resource's attributes are the first ``_ra`` map
+    of its rows. Two grouping shuffles on dimension grain; the final
+    ``.text()`` write uses Spark's commit protocol, so task retries are
+    idempotent (no manual file naming needed)."""
+    ra = [F.first("_ra").alias("_ra")] if res_attrs else []
+    per_scope = keyed.groupBy("_res", "_scope").agg(F.collect_list(item).alias("_items"), *ra)
+    scope = F.struct(
+        F.struct(F.col("_scope").alias("name")).alias("scope"),
+        F.col("_items").alias(items),
+    )
+    per_res = per_scope.groupBy("_res").agg(F.collect_list(scope).alias("_scopes"), *ra)
+    empty = F.array().cast(_KV)
+    attrs = F.coalesce(_kv_array(F.col("_ra")), empty) if res_attrs else empty
+    resource = F.struct(
+        F.struct(attrs.alias("attributes")).alias("resource"),
+        F.col("_scopes").alias(f"scope{signal}"),
+    )
+    request = F.struct(F.array(resource).alias(f"resource{signal}"))
+    per_res.select(F.to_json(request).alias("value")).write.mode("overwrite").text(path)
+
+
+def _int64(src):
+    """A protojson int64 string as a long; null when it is not one."""
+    return src.try_cast("long")
+
+
+def _int64_error(**srcs):
+    """The first of the protojson int64 strings (keyed by the column they
+    fill) that is not an int64, as an error message; null when all cast."""
+    return F.coalesce(*[
+        F.when(src.isNotNull() & _int64(src).isNull(),
+               F.concat(F.lit(f"{name} is not an int64: "), src))
+        for name, src in srcs.items()
+    ])
+
+
+def _quarantine_row(schema: StructType, error_col: str, message, zeroed=()) -> list:
+    """One quarantine row over a reader's output ``schema``: the path,
+    ``res_idx`` -1, ``__decode_error__: <message>`` in ``error_col``, 0 or
+    an empty array in the ``zeroed`` columns, null elsewhere."""
+    def value(f):
+        if f.name == "path":
+            return F.col("path")
+        if f.name == "res_idx":
+            return F.lit(-1)
+        if f.name == error_col:
+            return F.concat(F.lit("__decode_error__: "), message)
+        if f.name in zeroed:
+            zero = F.array() if isinstance(f.dataType, ArrayType) else F.lit(0)
+            return zero.cast(f.dataType)
+        return F.lit(None).cast(f.dataType)
+
+    return [value(f).alias(f.name) for f in schema.fields]
+
+
+def _read_requests(
+    spark: SparkSession,
+    path: str,
+    schema: str,
+    signal: str,
+    items: str,
+    flatten,
+    error_col: str,
+    zeroed=(),
+) -> DataFrame:
+    """Export{signal}ServiceRequest lines -> flat rows, error-not-crash.
+
+    A splittable text scan parses each line with ``from_json``; resources
+    explode with their position as ``res_idx``, then scopes, then the
+    ``items`` of each scope as ``_item`` (next to ``path``, ``res_idx``,
+    ``res_attrs`` and ``scope_name``). ``flatten`` maps that frame to the
+    signal's columns plus ``_error``, a message for a record that does
+    not decode (an int64 field that does not cast). Such a record, and a
+    line that is not a request, each become one quarantine row
+    (``_quarantine_row``; the line's first 80 characters as its message)
+    — the reader counterpart of logs.go:145-154, like the .pb reader."""
+    parsed = spark.read.text(path).select(
+        F.input_file_name().alias("path"),
+        F.col("value"),
+        F.from_json("value", schema).alias("r"),
+    )
+    resources = F.col(f"r.resource{signal}")
+    exploded = (
+        parsed.where(resources.isNotNull())
+        .select("path", F.posexplode(resources).alias("res_idx", "_res"))
+        .select(
+            "path",
+            "res_idx",
+            _kv_map(F.col("_res.resource.attributes")).alias("res_attrs"),
+            F.explode_outer(f"_res.scope{signal}").alias("_scope"),
+        )
+        .select(
+            "path",
+            "res_idx",
+            "res_attrs",
+            F.col("_scope.scope.name").alias("scope_name"),
+            F.explode_outer(f"_scope.{items}").alias("_item"),
+        )
+    )
+    flat = flatten(exploded)
+    cols = flat.drop("_error")
+    err = F.col("_error")
+    good = flat.select(*[
+        F.when(err.isNull(), F.col(c)).otherwise(q).alias(c)
+        for c, q in zip(cols.columns, _quarantine_row(cols.schema, error_col, err, zeroed))
+    ])
+    bad = parsed.where(resources.isNull()).select(
+        *_quarantine_row(cols.schema, error_col, F.substring("value", 1, 80), zeroed)
+    )
+    return good.unionByName(bad)
+
+
+# ---------------------------------------------------------------------------
+# logs
+# ---------------------------------------------------------------------------
+
+# from_json schema for one ExportLogsServiceRequest (string-typed AnyValue)
+OTLP_JSON_LOG_SCHEMA = (
+    "resourceLogs array<struct<"
+    f"resource:struct<attributes:{_KV}>,"
+    "scopeLogs:array<struct<"
+    "scope:struct<name:string,version:string>,"
+    "logRecords:array<struct<"
+    "timeUnixNano:string,severityNumber:int,severityText:string,"
+    "body:struct<stringValue:string>,"
+    f"attributes:{_KV},"
+    "traceId:string,spanId:string>>>>>>"
+)
 
 
 def write_otlp_json_logs(
@@ -65,10 +218,8 @@ def write_otlp_json_logs(
     Expected flat columns (nullable unless noted): ``res_col`` (grouping
     key, required), ``time_unix_nano`` long, ``severity_number`` int,
     ``severity_text``, ``body`` string, optional ``attrs_col``
-    map<string,string>, optional ``trace_id``/``span_id`` hex strings.
-    Two grouping shuffles (records->scope, scope->resource) on dimension
-    grain; the final ``.text()`` write uses Spark's commit protocol, so
-    task retries are idempotent (no manual file naming needed)."""
+    map<string,string>, optional ``trace_id``/``span_id`` hex strings,
+    optional ``res_attrs_col`` map<string,string> (a resource's first)."""
     cols = set(df.columns)
     rec = F.struct(
         F.col("time_unix_nano").cast("string").alias("timeUnixNano"),
@@ -82,108 +233,44 @@ def write_otlp_json_logs(
         *( [F.col("trace_id").alias("traceId")] if "trace_id" in cols else [] ),
         *( [F.col("span_id").alias("spanId")] if "span_id" in cols else [] ),
     )
-    scope = (
-        F.coalesce(F.col(scope_col), F.lit(""))
-        if scope_col and scope_col in cols
-        else F.lit("")
-    )
     has_res_attrs = bool(res_attrs_col) and res_attrs_col in cols
-    ra = (
-        F.col(res_attrs_col)
-        if has_res_attrs
-        else F.lit(None).cast("map<string,string>")
-    )
-    per_scope = (
-        df.select(
-            F.col(res_col).alias("_res"), scope.alias("_scope"),
-            rec.alias("_r"), ra.alias("_ra"),
-        )
-        .groupBy("_res", "_scope")
-        .agg(F.collect_list("_r").alias("_records"), F.first("_ra").alias("_ra"))
-    )
-    sl = F.struct(
-        F.struct(F.col("_scope").alias("name")).alias("scope"),
-        F.col("_records").alias("logRecords"),
-    )
-    per_res = per_scope.groupBy("_res").agg(
-        F.collect_list(sl).alias("_scopes"), F.first("_ra").alias("_ra")
-    )
-    empty_kv = F.array().cast(
-        "array<struct<key:string,value:struct<stringValue:string>>>"
-    )
-    resource = F.struct(
-        F.coalesce(_kv_array(F.col("_ra")), empty_kv).alias("attributes")
-    )
-    request = F.struct(
-        F.array(
-            F.struct(resource.alias("resource"), F.col("_scopes").alias("scopeLogs"))
-        ).alias("resourceLogs")
-    )
-    per_res.select(F.to_json(request).alias("value")).write.mode("overwrite").text(path)
+    ra = F.col(res_attrs_col) if has_res_attrs else F.lit(None).cast("map<string,string>")
+    keyed = _keyed(df, res_col, scope_col, rec.alias("_r"), ra.alias("_ra"))
+    _write_requests(keyed, path, "Logs", "logRecords", F.col("_r"), res_attrs=True)
 
 
 def read_otlp_json_logs(spark: SparkSession, path: str) -> DataFrame:
-    """OTLP-JSON capture -> flat log rows (same surface as read_pb_logs:
-    attr key/values as maps, error-not-crash). A line that fails to parse
-    as a request yields one quarantine row with ``res_idx = -1`` and the
-    offending line's prefix in ``body`` — the reader counterpart of
-    logs.go:145-154, like the .pb reader."""
-    txt = spark.read.text(path).select(
-        F.input_file_name().alias("path"), F.col("value")
-    )
-    parsed = txt.select(
-        "path", "value", F.from_json("value", OTLP_JSON_LOG_SCHEMA).alias("r")
-    )
-    bad = parsed.where(
-        F.col("r").isNull() | F.col("r.resourceLogs").isNull()
-    ).select(
-        "path",
-        F.lit(-1).alias("res_idx"),
-        F.lit(None).cast("string").alias("scope_name"),
-        F.lit(None).cast("long").alias("time_unix_nano"),
-        F.lit(None).cast("int").alias("severity_number"),
-        F.lit(None).cast("string").alias("severity_text"),
-        F.concat(F.lit("__decode_error__: "), F.substring("value", 1, 80)).alias("body"),
-        F.lit(None).cast("map<string,string>").alias("attrs"),
-        F.lit(None).cast("map<string,string>").alias("res_attrs"),
-        F.lit(None).cast("string").alias("trace_id"),
-        F.lit(None).cast("string").alias("span_id"),
-    )
-    kvmap = lambda a: F.map_from_entries(  # noqa: E731
-        F.transform(a, lambda e: F.struct(e["key"], e["value"]["stringValue"]))
-    )
-    good = (
-        parsed.where(F.col("r.resourceLogs").isNotNull())
-        .select("path", F.posexplode("r.resourceLogs").alias("res_idx", "_rl"))
-        .select(
-            "path",
-            "res_idx",
-            kvmap(F.col("_rl.resource.attributes")).alias("res_attrs"),
-            F.explode_outer("_rl.scopeLogs").alias("_sl"),
-        )
-        .select(
-            "path",
-            "res_idx",
-            "res_attrs",
-            F.col("_sl.scope.name").alias("scope_name"),
-            F.explode_outer("_sl.logRecords").alias("_lr"),
-        )
-        .select(
+    """OTLP-JSON capture -> flat log rows: the read_pb_logs columns this
+    codec carries (no ``scope_version``, ``observed_time_unix_nano``,
+    ``n_res_attrs`` or ``n_attrs``), attr key/values as maps. A line that
+    is not a request, or a record whose ``timeUnixNano`` is not an int64,
+    yields one quarantine row with ``res_idx = -1`` and the error in
+    ``body``."""
+
+    def flatten(exploded):
+        r = F.col("_item")
+        return exploded.select(
             "path",
             "res_idx",
             "scope_name",
-            F.col("_lr.timeUnixNano").cast("long").alias("time_unix_nano"),
-            F.col("_lr.severityNumber").alias("severity_number"),
-            F.col("_lr.severityText").alias("severity_text"),
-            F.col("_lr.body.stringValue").alias("body"),
-            kvmap(F.col("_lr.attributes")).alias("attrs"),
+            _int64(r["timeUnixNano"]).alias("time_unix_nano"),
+            r["severityNumber"].alias("severity_number"),
+            r["severityText"].alias("severity_text"),
+            r["body"]["stringValue"].alias("body"),
+            _kv_map(r["attributes"]).alias("attrs"),
             "res_attrs",
-            F.col("_lr.traceId").alias("trace_id"),
-            F.col("_lr.spanId").alias("span_id"),
+            r["traceId"].alias("trace_id"),
+            r["spanId"].alias("span_id"),
+            _int64_error(time_unix_nano=r["timeUnixNano"]).alias("_error"),
         )
-    )
-    return good.unionByName(bad.select(*good.columns))
 
+    return _read_requests(spark, path, OTLP_JSON_LOG_SCHEMA, "Logs", "logRecords",
+                          flatten, "body")
+
+
+# ---------------------------------------------------------------------------
+# traces
+# ---------------------------------------------------------------------------
 
 # from_json schema for one ExportTraceServiceRequest. protojson notes:
 # int64 nanos as strings, ids as hex strings, enums accepted numerically
@@ -191,14 +278,14 @@ def read_otlp_json_logs(spark: SparkSession, path: str) -> DataFrame:
 # both name and number; numbers keep the schema closed over int columns).
 OTLP_JSON_SPAN_SCHEMA = (
     "resourceSpans array<struct<"
-    "resource:struct<attributes:array<struct<key:string,value:struct<stringValue:string>>>>,"
+    f"resource:struct<attributes:{_KV}>,"
     "scopeSpans:array<struct<"
     "scope:struct<name:string,version:string>,"
     "spans:array<struct<"
     "traceId:string,spanId:string,parentSpanId:string,name:string,kind:int,"
     "startTimeUnixNano:string,endTimeUnixNano:string,"
     "status:struct<code:int>,"
-    "attributes:array<struct<key:string,value:struct<stringValue:string>>>,"
+    f"attributes:{_KV},"
     "events:array<struct<timeUnixNano:string,name:string>>,"
     "links:array<struct<traceId:string,spanId:string>>"
     ">>>>>>"
@@ -267,108 +354,45 @@ def write_otlp_json_spans(
                 ),
             ).alias("links")
         )
-    scope = (
-        F.coalesce(F.col(scope_col), F.lit(""))
-        if scope_col and scope_col in cols
-        else F.lit("")
-    )
-    per_scope = (
-        df.select(
-            F.col(res_col).alias("_res"), scope.alias("_scope"),
-            F.struct(*span_fields).alias("_s"),
-        )
-        .groupBy("_res", "_scope")
-        .agg(F.collect_list("_s").alias("_spans"))
-    )
-    sl = F.struct(
-        F.struct(F.col("_scope").alias("name")).alias("scope"),
-        F.col("_spans").alias("spans"),
-    )
-    per_res = per_scope.groupBy("_res").agg(F.collect_list(sl).alias("_scopes"))
-    request = F.struct(
-        F.array(
-            F.struct(
-                F.struct(
-                    F.array().cast(
-                        "array<struct<key:string,value:struct<stringValue:string>>>"
-                    ).alias("attributes")
-                ).alias("resource"),
-                F.col("_scopes").alias("scopeSpans"),
-            )
-        ).alias("resourceSpans")
-    )
-    per_res.select(F.to_json(request).alias("value")).write.mode("overwrite").text(path)
+    keyed = _keyed(df, res_col, scope_col, F.struct(*span_fields).alias("_s"))
+    _write_requests(keyed, path, "Spans", "spans", F.col("_s"))
 
 
 def read_otlp_json_spans(spark: SparkSession, path: str) -> DataFrame:
     """OTLP-JSON trace capture -> flat span rows, SAME surface as
     read_pb_spans (incl. the n_attrs/n_events/n_links convenience counts);
-    malformed lines quarantine as one res_idx=-1 row each."""
-    txt = spark.read.text(path).select(
-        F.input_file_name().alias("path"), F.col("value")
-    )
-    parsed = txt.select(
-        "path", "value", F.from_json("value", OTLP_JSON_SPAN_SCHEMA).alias("r")
-    )
+    a malformed line, or a span with a time that is not an int64,
+    quarantines as one res_idx=-1 row with the error in ``name``."""
     empty_events = F.array().cast("array<struct<time_unix_nano:long,name:string>>")
     empty_links = F.array().cast("array<struct<trace_id:string,span_id:string>>")
-    bad = parsed.where(
-        F.col("r").isNull() | F.col("r.resourceSpans").isNull()
-    ).select(
-        "path",
-        F.lit(-1).alias("res_idx"),
-        F.lit(None).cast("string").alias("scope_name"),
-        F.lit(None).cast("string").alias("trace_id"),
-        F.lit(None).cast("string").alias("span_id"),
-        F.lit(None).cast("string").alias("parent_span_id"),
-        F.concat(F.lit("__decode_error__: "), F.substring("value", 1, 80)).alias("name"),
-        F.lit(None).cast("int").alias("kind"),
-        F.lit(None).cast("long").alias("start_time_unix_nano"),
-        F.lit(None).cast("long").alias("end_time_unix_nano"),
-        F.lit(None).cast("int").alias("status_code"),
-        F.lit(0).alias("n_attrs"),
-        F.lit(0).alias("n_events"),
-        F.lit(0).alias("n_links"),
-        F.lit(None).cast("map<string,string>").alias("attrs"),
-        empty_events.alias("events"),
-        empty_links.alias("links"),
-    )
-    kvmap = lambda a: F.map_from_entries(  # noqa: E731
-        F.transform(a, lambda e: F.struct(e["key"], e["value"]["stringValue"]))
-    )
-    good = (
-        parsed.where(F.col("r.resourceSpans").isNotNull())
-        .select("path", F.posexplode("r.resourceSpans").alias("res_idx", "_rs"))
-        .select(
-            "path", "res_idx", F.explode_outer("_rs.scopeSpans").alias("_ss")
+
+    def flatten(exploded):
+        s = F.col("_item")
+        bad_event = F.exists(
+            s["events"],
+            lambda e: e["timeUnixNano"].isNotNull() & _int64(e["timeUnixNano"]).isNull(),
         )
-        .select(
-            "path",
-            "res_idx",
-            F.col("_ss.scope.name").alias("scope_name"),
-            F.explode_outer("_ss.spans").alias("_sp"),
-        )
-        .select(
+        return exploded.select(
             "path",
             "res_idx",
             "scope_name",
-            F.col("_sp.traceId").alias("trace_id"),
-            F.col("_sp.spanId").alias("span_id"),
-            F.col("_sp.parentSpanId").alias("parent_span_id"),
-            F.col("_sp.name").alias("name"),
-            F.col("_sp.kind").alias("kind"),
-            F.col("_sp.startTimeUnixNano").cast("long").alias("start_time_unix_nano"),
-            F.col("_sp.endTimeUnixNano").cast("long").alias("end_time_unix_nano"),
-            F.col("_sp.status.code").alias("status_code"),
-            F.coalesce(F.size("_sp.attributes"), F.lit(0)).alias("n_attrs"),
-            F.coalesce(F.size("_sp.events"), F.lit(0)).alias("n_events"),
-            F.coalesce(F.size("_sp.links"), F.lit(0)).alias("n_links"),
-            kvmap(F.col("_sp.attributes")).alias("attrs"),
+            s["traceId"].alias("trace_id"),
+            s["spanId"].alias("span_id"),
+            s["parentSpanId"].alias("parent_span_id"),
+            s["name"].alias("name"),
+            s["kind"].alias("kind"),
+            _int64(s["startTimeUnixNano"]).alias("start_time_unix_nano"),
+            _int64(s["endTimeUnixNano"]).alias("end_time_unix_nano"),
+            s["status"]["code"].alias("status_code"),
+            F.coalesce(F.size(s["attributes"]), F.lit(0)).alias("n_attrs"),
+            F.coalesce(F.size(s["events"]), F.lit(0)).alias("n_events"),
+            F.coalesce(F.size(s["links"]), F.lit(0)).alias("n_links"),
+            _kv_map(s["attributes"]).alias("attrs"),
             F.coalesce(
                 F.transform(
-                    "_sp.events",
+                    s["events"],
                     lambda e: F.struct(
-                        e["timeUnixNano"].cast("long").alias("time_unix_nano"),
+                        _int64(e["timeUnixNano"]).alias("time_unix_nano"),
                         e["name"].alias("name"),
                     ),
                 ),
@@ -376,24 +400,34 @@ def read_otlp_json_spans(spark: SparkSession, path: str) -> DataFrame:
             ).alias("events"),
             F.coalesce(
                 F.transform(
-                    "_sp.links",
+                    s["links"],
                     lambda l: F.struct(
                         l["traceId"].alias("trace_id"), l["spanId"].alias("span_id")
                     ),
                 ),
                 empty_links,
             ).alias("links"),
+            F.coalesce(
+                _int64_error(start_time_unix_nano=s["startTimeUnixNano"],
+                             end_time_unix_nano=s["endTimeUnixNano"]),
+                F.when(bad_event, F.lit("an event time_unix_nano is not an int64")),
+            ).alias("_error"),
         )
-    )
-    return good.unionByName(bad.select(*good.columns))
 
+    return _read_requests(spark, path, OTLP_JSON_SPAN_SCHEMA, "Spans", "spans",
+                          flatten, "name",
+                          zeroed=("n_attrs", "n_events", "n_links", "events", "links"))
+
+
+# ---------------------------------------------------------------------------
+# metrics
+# ---------------------------------------------------------------------------
 
 # from_json schema for one ExportMetricsServiceRequest — all five data
 # families (gauge / sum / histogram / exponentialHistogram / summary).
 # protojson: uint64/int64 scalars (timeUnixNano, count, zeroCount, asInt,
 # bucketCounts elements) render as JSON STRINGS; doubles as numbers;
 # enums numerically.
-_KV = "array<struct<key:string,value:struct<stringValue:string>>>"
 _NUM_DP = (
     "struct<startTimeUnixNano:string,timeUnixNano:string,"
     f"asDouble:double,asInt:string,attributes:{_KV}>"
@@ -429,29 +463,20 @@ OTLP_JSON_METRIC_SCHEMA = (
     ">>>>>>"
 )
 
-# full flat metric-DP column set (the read_pb_metrics surface, minus
-# path/res_idx/scope_name/metric identity); the writer null-fills absent
-# ones so callers pass only what their family uses
-_METRIC_DP_COLS: dict[str, str] = {
-    "temporality": "int",
-    "is_monotonic": "boolean",
-    "start_time_unix_nano": "long",
-    "time_unix_nano": "long",
-    "value_double": "double",
-    "value_int": "long",
-    "count": "long",
-    "sum": "double",
-    "bucket_counts": "string",
-    "explicit_bounds": "string",
-    "scale": "int",
-    "zero_count": "long",
-    "positive_offset": "int",
-    "positive_bucket_counts": "string",
-    "negative_offset": "int",
-    "negative_bucket_counts": "string",
-    "quantiles": "string",
-    "attrs": "map<string,string>",
-}
+
+# metric_type -> the protojson key of its data oneof, in oneof order
+_FAMILY_KEYS = {"gauge": "gauge", "sum": "sum", "histogram": "histogram",
+                "exponential_histogram": "exponentialHistogram", "summary": "summary"}
+# the data point columns that protojson renders as int64 strings
+_METRIC_INT64 = ("start_time_unix_nano", "time_unix_nano", "value_int", "count", "zero_count")
+
+
+def _metric_dp_fields():
+    """The read_pb_metrics columns of one data point (PB_METRIC_SCHEMA
+    without the envelope, the metric identity and n_attrs), typed."""
+    skip = {"path", "res_idx", "scope_name", "metric_name", "metric_unit",
+            "metric_type", "n_attrs"}
+    return [f for f in StructType.fromDDL(PB_METRIC_SCHEMA).fields if f.name not in skip]
 
 
 def _csv_strings(col):
@@ -471,18 +496,14 @@ def write_otlp_json_metrics(
     the protojson sibling of otlp_pb.encode_export_metrics_request, zero
     Python. Input = the read_pb_metrics flat surface: ``metric_type`` in
     {gauge,sum,histogram,exponential_histogram,summary} picks the oneof;
-    bucket lists arrive as the same CSV strings the .pb reader emits.
-    DPs group into metrics by (resource, name, unit, type, temporality,
-    monotonicity), metrics into one request line per resource."""
-    cols = set(df.columns)
-    for c, t in _METRIC_DP_COLS.items():
-        if c not in cols:
-            df = df.withColumn(c, F.lit(None).cast(t))
-    scope = (
-        F.coalesce(F.col(scope_col), F.lit(""))
-        if scope_col and scope_col in cols
-        else F.lit("")
-    )
+    bucket lists arrive as the same CSV strings the .pb reader emits; data
+    point columns the frame lacks are null. DPs group into metrics by
+    (resource, scope, name, unit, type, temporality, monotonicity), and
+    the metrics are the items of the request lines."""
+    df = df.withColumns({
+        f.name: F.lit(None).cast(f.dataType)
+        for f in _metric_dp_fields() if f.name not in df.columns
+    })
     dp = F.struct(
         F.col("start_time_unix_nano").cast("string").alias("startTimeUnixNano"),
         F.col("time_unix_nano").cast("string").alias("timeUnixNano"),
@@ -523,9 +544,8 @@ def write_otlp_json_metrics(
         _kv_array(F.col("attrs")).alias("attributes"),
     )
     per_metric = (
-        df.select(
-            F.col(res_col).alias("_res"),
-            scope.alias("_scope"),
+        _keyed(
+            df, res_col, scope_col,
             F.col("metric_name").alias("_name"),
             F.coalesce(F.col("metric_unit"), F.lit("")).alias("_unit"),
             F.col("metric_type").alias("_type"),
@@ -536,185 +556,97 @@ def write_otlp_json_metrics(
         .groupBy("_res", "_scope", "_name", "_unit", "_type", "_temp", "_mono")
         .agg(F.collect_list("_dp").alias("_dps"))
     )
-    t = F.col("_type")
+
+    def family(mtype):
+        fields = [F.col("_temp").alias("aggregationTemporality")] if mtype in _TEMPORAL_TYPES else []
+        if mtype == "sum":
+            fields.append(F.col("_mono").alias("isMonotonic"))
+        return F.when(
+            F.col("_type") == mtype, F.struct(*fields, F.col("_dps").alias("dataPoints"))
+        ).alias(_FAMILY_KEYS[mtype])
+
     metric = F.struct(
         F.col("_name").alias("name"),
         F.col("_unit").alias("unit"),
-        F.when(t == "gauge", F.struct(F.col("_dps").alias("dataPoints"))).alias("gauge"),
-        F.when(
-            t == "sum",
-            F.struct(
-                F.col("_temp").alias("aggregationTemporality"),
-                F.col("_mono").alias("isMonotonic"),
-                F.col("_dps").alias("dataPoints"),
-            ),
-        ).alias("sum"),
-        F.when(
-            t == "histogram",
-            F.struct(
-                F.col("_temp").alias("aggregationTemporality"),
-                F.col("_dps").alias("dataPoints"),
-            ),
-        ).alias("histogram"),
-        F.when(
-            t == "exponential_histogram",
-            F.struct(
-                F.col("_temp").alias("aggregationTemporality"),
-                F.col("_dps").alias("dataPoints"),
-            ),
-        ).alias("exponentialHistogram"),
-        F.when(t == "summary", F.struct(F.col("_dps").alias("dataPoints"))).alias(
-            "summary"
-        ),
+        *[family(mtype) for mtype in _FAMILY_KEYS],
     )
-    per_scope = per_metric.groupBy("_res", "_scope").agg(
-        F.collect_list(metric).alias("_metrics")
-    )
-    sm = F.struct(
-        F.struct(F.col("_scope").alias("name")).alias("scope"),
-        F.col("_metrics").alias("metrics"),
-    )
-    per_res = per_scope.groupBy("_res").agg(F.collect_list(sm).alias("_scopes"))
-    request = F.struct(
-        F.array(
-            F.struct(
-                F.struct(F.array().cast(_KV).alias("attributes")).alias("resource"),
-                F.col("_scopes").alias("scopeMetrics"),
-            )
-        ).alias("resourceMetrics")
-    )
-    per_res.select(F.to_json(request).alias("value")).write.mode("overwrite").text(path)
+    _write_requests(per_metric, path, "Metrics", "metrics", metric)
 
 
 def read_otlp_json_metrics(spark: SparkSession, path: str) -> DataFrame:
     """OTLP-JSON metrics capture -> flat DP rows, SAME surface as
     read_pb_metrics (bucket lists as CSV strings, quantiles as 'q:v'
-    pairs, attrs as a map); malformed lines quarantine as res_idx=-1."""
-    txt = spark.read.text(path).select(
-        F.input_file_name().alias("path"), F.col("value")
-    )
-    parsed = txt.select(
-        "path", "value", F.from_json("value", OTLP_JSON_METRIC_SCHEMA).alias("r")
-    )
-    kvmap = lambda a: F.map_from_entries(  # noqa: E731
-        F.transform(a, lambda e: F.struct(e["key"], e["value"]["stringValue"]))
+    pairs, attrs as a map; ``n_attrs`` just before ``attrs``). A malformed
+    line, or a point with an int64 field that does not cast, quarantines
+    as one res_idx=-1 row with the error in ``metric_name``."""
+    fields = [f for f in _metric_dp_fields() if f.name != "attrs"]
+    m = F.col("_item")
+
+    def points(mtype, **given):
+        """The family's data points as flat structs: ``given`` maps columns
+        to expressions over the point ``d``, the rest are null. int64
+        columns stay protojson strings until ``flatten`` casts them."""
+        fam = m[_FAMILY_KEYS[mtype]]
+        carried = {}
+        if mtype in _TEMPORAL_TYPES:
+            carried["temporality"] = fam["aggregationTemporality"]
+        if mtype == "sum":
+            carried["is_monotonic"] = fam["isMonotonic"]
+
+        def flat(d):
+            cols = {"start_time_unix_nano": d["startTimeUnixNano"],
+                    "time_unix_nano": d["timeUnixNano"],
+                    **carried, **{k: v(d) for k, v in given.items()}}
+            return F.struct(
+                F.lit(mtype).alias("metric_type"),
+                *[cols.get(f.name, F.lit(None).cast(
+                    "string" if f.name in _METRIC_INT64 else f.dataType)).alias(f.name)
+                  for f in fields],
+                F.coalesce(F.size(d["attributes"]), F.lit(0)).alias("n_attrs"),
+                _kv_map(d["attributes"]).alias("attrs"),
+            )
+
+        return F.coalesce(F.transform(fam["dataPoints"], flat), F.array())
+
+    value = dict(value_double=lambda d: d["asDouble"], value_int=lambda d: d["asInt"])
+    stats = dict(count=lambda d: d["count"], sum=lambda d: d["sum"])
+    dps = F.concat(
+        points("gauge", **value),
+        points("sum", **value),
+        points("histogram", **stats,
+               bucket_counts=lambda d: F.array_join(d["bucketCounts"], ","),
+               explicit_bounds=lambda d: F.array_join(
+                   F.transform(d["explicitBounds"], lambda b: b.cast("string")), ",")),
+        points("exponential_histogram", **stats,
+               scale=lambda d: d["scale"],
+               zero_count=lambda d: d["zeroCount"],
+               positive_offset=lambda d: d["positive"]["offset"],
+               positive_bucket_counts=lambda d: F.array_join(d["positive"]["bucketCounts"], ","),
+               negative_offset=lambda d: d["negative"]["offset"],
+               negative_bucket_counts=lambda d: F.array_join(d["negative"]["bucketCounts"], ",")),
+        points("summary", **stats,
+               quantiles=lambda d: F.array_join(F.transform(
+                   d["quantileValues"],
+                   lambda q: F.concat_ws(":", q["quantile"].cast("string"),
+                                         q["value"].cast("string"))), ",")),
     )
 
-    def flat(mtype, d, **f):
-        """Uniform flat-DP struct; per-family fields via kwargs, rest null."""
-        def g(name, typ):
-            e = f.get(name)
-            return (e if e is not None else F.lit(None).cast(typ)).alias(name)
-
-        return F.struct(
-            F.lit(mtype).alias("metric_type"),
-            g("temporality", "int"),
-            g("is_monotonic", "boolean"),
-            d["startTimeUnixNano"].cast("long").alias("start_time_unix_nano"),
-            d["timeUnixNano"].cast("long").alias("time_unix_nano"),
-            g("value_double", "double"),
-            g("value_int", "long"),
-            g("count", "long"),
-            g("sum", "double"),
-            g("bucket_counts", "string"),
-            g("explicit_bounds", "string"),
-            g("scale", "int"),
-            g("zero_count", "long"),
-            g("positive_offset", "int"),
-            g("positive_bucket_counts", "string"),
-            g("negative_offset", "int"),
-            g("negative_bucket_counts", "string"),
-            g("quantiles", "string"),
-            F.coalesce(F.size(d["attributes"]), F.lit(0)).alias("n_attrs"),
-            kvmap(d["attributes"]).alias("attrs"),
-        )
-
-    m = F.col("_m")
-    empty = "array<struct<metric_type:string,temporality:int,is_monotonic:boolean," \
-        "start_time_unix_nano:long,time_unix_nano:long,value_double:double," \
-        "value_int:long,count:long,sum:double,bucket_counts:string," \
-        "explicit_bounds:string,scale:int,zero_count:long,positive_offset:int," \
-        "positive_bucket_counts:string,negative_offset:int," \
-        "negative_bucket_counts:string,quantiles:string,n_attrs:int," \
-        "attrs:map<string,string>>>"
-    fams = [
-        F.transform(
-            m["gauge"]["dataPoints"],
-            lambda d: flat("gauge", d, value_double=d["asDouble"],
-                           value_int=d["asInt"].cast("long")),
-        ),
-        F.transform(
-            m["sum"]["dataPoints"],
-            lambda d: flat("sum", d, value_double=d["asDouble"],
-                           value_int=d["asInt"].cast("long"),
-                           temporality=m["sum"]["aggregationTemporality"],
-                           is_monotonic=m["sum"]["isMonotonic"]),
-        ),
-        F.transform(
-            m["histogram"]["dataPoints"],
-            lambda d: flat("histogram", d,
-                           temporality=m["histogram"]["aggregationTemporality"],
-                           count=d["count"].cast("long"), sum=d["sum"],
-                           bucket_counts=F.array_join(d["bucketCounts"], ","),
-                           explicit_bounds=F.array_join(
-                               F.transform(d["explicitBounds"],
-                                           lambda b: b.cast("string")), ",")),
-        ),
-        F.transform(
-            m["exponentialHistogram"]["dataPoints"],
-            lambda d: flat("exponential_histogram", d,
-                           temporality=m["exponentialHistogram"]["aggregationTemporality"],
-                           count=d["count"].cast("long"), sum=d["sum"],
-                           scale=d["scale"], zero_count=d["zeroCount"].cast("long"),
-                           positive_offset=d["positive"]["offset"],
-                           positive_bucket_counts=F.array_join(
-                               d["positive"]["bucketCounts"], ","),
-                           negative_offset=d["negative"]["offset"],
-                           negative_bucket_counts=F.array_join(
-                               d["negative"]["bucketCounts"], ",")),
-        ),
-        F.transform(
-            m["summary"]["dataPoints"],
-            lambda d: flat("summary", d,
-                           count=d["count"].cast("long"), sum=d["sum"],
-                           quantiles=F.array_join(
-                               F.transform(
-                                   d["quantileValues"],
-                                   lambda q: F.concat_ws(
-                                       ":", q["quantile"].cast("string"),
-                                       q["value"].cast("string"))), ",")),
-        ),
-    ]
-    dps = F.concat(*[F.coalesce(fam, F.array().cast(empty)) for fam in fams])
-    good = (
-        parsed.where(F.col("r.resourceMetrics").isNotNull())
-        .select("path", F.posexplode("r.resourceMetrics").alias("res_idx", "_rm"))
-        .select("path", "res_idx", F.explode_outer("_rm.scopeMetrics").alias("_sm"))
-        .select(
-            "path", "res_idx",
-            F.col("_sm.scope.name").alias("scope_name"),
-            F.explode_outer("_sm.metrics").alias("_m"),
-        )
-        .select(
+    def flatten(exploded):
+        dp = F.col("_dp")
+        return exploded.select(
             "path", "res_idx", "scope_name",
-            F.col("_m.name").alias("metric_name"),
-            F.col("_m.unit").alias("metric_unit"),
+            m["name"].alias("metric_name"),
+            m["unit"].alias("metric_unit"),
             F.explode_outer(dps).alias("_dp"),
+        ).select(
+            "path", "res_idx", "scope_name", "metric_name", "metric_unit",
+            dp["metric_type"].alias("metric_type"),
+            *[(_int64(dp[f.name]) if f.name in _METRIC_INT64 else dp[f.name]).alias(f.name)
+              for f in fields],
+            dp["n_attrs"].alias("n_attrs"),
+            dp["attrs"].alias("attrs"),
+            _int64_error(**{c: dp[c] for c in _METRIC_INT64}).alias("_error"),
         )
-        .select("path", "res_idx", "scope_name", "metric_name", "metric_unit", "_dp.*")
-    )
-    bad = parsed.where(
-        F.col("r").isNull() | F.col("r.resourceMetrics").isNull()
-    ).select(
-        "path",
-        F.lit(-1).alias("res_idx"),
-        F.lit(None).cast("string").alias("scope_name"),
-        F.concat(
-            F.lit("__decode_error__: "), F.substring("value", 1, 80)
-        ).alias("metric_name"),
-        F.lit(None).cast("string").alias("metric_unit"),
-        F.explode(
-            F.array(F.lit(None).cast(empty.replace("array<", "", 1)[:-1]))
-        ).alias("_dp"),
-    ).select("path", "res_idx", "scope_name", "metric_name", "metric_unit", "_dp.*")
-    return good.unionByName(bad.select(*good.columns))
+
+    return _read_requests(spark, path, OTLP_JSON_METRIC_SCHEMA, "Metrics", "metrics",
+                          flatten, "metric_name")

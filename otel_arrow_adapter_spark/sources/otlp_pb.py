@@ -1,30 +1,20 @@
 """S8 completion: OTLP protobuf (.pb) dataset loader + capture writer.
 
 The reference's dataset loader reads a ``.pb`` file as ONE serialized
-``ExportLogsServiceRequest`` and flattens ResourceLogs > ScopeLogs >
-LogRecord into per-record units
-(/root/reference/pkg/benchmark/dataset/real_logs_dataset.go:109-157).
+``Export{Logs,Trace,Metrics}ServiceRequest`` and flattens Resource >
+Scope > item into per-item units
+(pkg/benchmark/dataset/real_logs_dataset.go:109-157).
 
-This sandbox image has no protobuf package, so the decoder is a minimal
-pure-Python protobuf *wire-format* reader (varint / fixed64 / fixed32 /
-length-delimited — the whole wire grammar, public spec) walking the public
-OTLP field numbers (opentelemetry-proto logs.proto / common.proto):
-
-  ExportLogsServiceRequest: resource_logs = 1
-  ResourceLogs:  resource = 1, scope_logs = 2
-  Resource:      attributes = 1
-  ScopeLogs:     scope = 1, log_records = 2
-  InstrumentationScope: name = 1, version = 2
-  LogRecord:     time_unix_nano = 1 (fixed64), severity_number = 2,
-                 severity_text = 3, body = 5, attributes = 6,
-                 trace_id = 9, span_id = 10,
-                 observed_time_unix_nano = 11 (fixed64)
-  KeyValue:      key = 1, value = 2
-  AnyValue:      string=1, bool=2, int=3, double=4, bytes=7
+The decoder is a minimal pure-Python protobuf *wire-format* reader
+(varint / fixed64 / fixed32 / length-delimited — the whole wire grammar,
+public spec; no protobuf package needed) walking the public OTLP field
+numbers listed per message below. The envelope walk, attribute maps, field
+readers and id checks exist once for all three signals; each signal keeps
+only its item decoder and encoder.
 
 Spark plumbing: ``spark.read.format("binaryFile")`` gives (path, content)
 rows — one per capture file — and a mapInPandas decoder flattens each
-file's request into log-record rows. Parallelism unit = file, exactly the
+file's request into rows. Parallelism unit = file, exactly the
 reference's dataset granularity; no per-row Python beyond the per-FILE
 decode, which is the irreducible work. Encoders plus ``write_pb_capture``
 (the file exporter's capture analog, one request file per partition) make
@@ -33,6 +23,7 @@ round-trips testable end-to-end.
 
 from __future__ import annotations
 
+import itertools
 import os
 import shutil
 import struct
@@ -68,6 +59,8 @@ def _read_varint(buf: bytes, i: int) -> tuple[int, int]:
 
 
 def _write_varint(val: int) -> bytes:
+    if 0 <= val < 0x80:  # one byte: every tag and most lengths
+        return bytes((val,))
     out = bytearray()
     while True:
         b = val & 0x7F
@@ -81,9 +74,13 @@ def _write_varint(val: int) -> bytes:
 
 def _iter_fields(buf: bytes, i: int, end: int) -> Iterator[tuple[int, int, object]]:
     """Yield (field_no, wire_type, value): varints as int, fixed64/fixed32
-    as raw int, length-delimited as memoryview span (zero-copy)."""
+    as raw int, length-delimited as a (start, end) span (zero-copy)."""
     while i < end:
-        tag, i = _read_varint(buf, i)
+        tag = buf[i]
+        if tag < 0x80:  # one-byte tag: every field number below 16
+            i += 1
+        else:
+            tag, i = _read_varint(buf, i)
         field, wt = tag >> 3, tag & 7
         if wt == 0:  # varint
             v, i = _read_varint(buf, i)
@@ -125,170 +122,242 @@ def _ld(field: int, payload: bytes) -> bytes:
     return _tag(field, 2) + _write_varint(len(payload)) + payload
 
 
+def _varint(field: int, v: int | None) -> bytes:
+    return b"" if v is None else _tag(field, 0) + _write_varint(v)
+
+
+def _text(field: int, s: str | None) -> bytes:
+    """A non-empty string as field ``field``; empty and None are absent."""
+    return _ld(field, s.encode()) if s else b""
+
+
+def _fixed64(field: int, v: int | float | None, fmt: str = "<Q") -> bytes:
+    """``v`` as a fixed64 field: uint64 by default, ``<q`` sfixed64, ``<d`` double."""
+    return b"" if v is None else _tag(field, 1) + struct.pack(fmt, v)
+
+
 # ---------------------------------------------------------------------------
-# OTLP logs decode (field numbers from public opentelemetry-proto)
+# field readers: each wire value -> column value, range-checked against the
+# column type so an out-of-range value quarantines its file (a ValueError
+# inside the reader's try) instead of failing the Arrow transfer
 # ---------------------------------------------------------------------------
 
-def _decode_any_value(buf: bytes, lo: int, hi: int) -> str | None:
-    for f, _, v in _iter_fields(buf, lo, hi):
+def _str(buf: bytes, span: tuple[int, int]) -> str:
+    return buf[span[0]:span[1]].decode("utf-8", "replace")
+
+
+def _hex(buf: bytes, span: tuple[int, int]) -> str:
+    return buf[span[0]:span[1]].hex()
+
+
+def _f64(v: int) -> float:
+    """fixed64 bits -> double."""
+    return struct.unpack("<d", struct.pack("<Q", v))[0]
+
+
+_INT32, _INT64 = 1 << 31, 1 << 63
+
+
+def _fits(v: int, limit: int = _INT64) -> int:
+    """v, if it fits a signed column holding [-limit, limit) (long by default)."""
+    if -limit <= v < limit:
+        return v
+    raise ValueError(f"{v} does not fit a {limit.bit_length()}-bit column")
+
+
+def _any_value(buf: bytes, span: tuple[int, int]) -> str | None:
+    for f, _, v in _iter_fields(buf, *span):
         if f == 1:  # string_value
-            return bytes(buf[v[0]:v[1]]).decode("utf-8", "replace")
+            return _str(buf, v)
         if f == 2:  # bool_value
             return "true" if v else "false"
         if f == 3:  # int_value (sint not used by OTLP here)
             return str(v)
         if f == 4:  # double_value (fixed64 bits)
-            return repr(struct.unpack("<d", struct.pack("<Q", v))[0])
+            return repr(_f64(v))
         if f == 7:  # bytes_value
-            return bytes(buf[v[0]:v[1]]).hex()
+            return _hex(buf, v)
     return None
 
 
-def _decode_kv(buf: bytes, lo: int, hi: int) -> tuple[str | None, str | None]:
-    """One KeyValue message -> (key, AnyValue rendered as string)."""
-    key = val = None
-    for f, _, v in _iter_fields(buf, lo, hi):
-        if f == 1:
-            key = bytes(buf[v[0]:v[1]]).decode("utf-8", "replace")
-        elif f == 2:
-            val = _decode_any_value(buf, v[0], v[1])
-    return key, val
+def _attr_map(buf: bytes, spans: list[tuple[int, int]]) -> dict:
+    """KeyValue spans -> {key: AnyValue rendered as a string}. A KeyValue
+    without a key adds nothing to the map; item rows still count it in
+    ``n_attrs`` (``len(spans)``)."""
+    attrs: dict = {}
+    for span in spans:
+        key = val = None
+        for f, _, v in _iter_fields(buf, *span):
+            if f == 1:
+                key = _str(buf, v)
+            elif f == 2:
+                val = _any_value(buf, v)
+        if key is not None:
+            attrs[key] = val
+    return attrs
 
 
-def decode_export_logs_request(data: bytes, path: str = "") -> list[dict]:
-    """ExportLogsServiceRequest bytes -> flat log-record dicts (the
-    reference's logUnit flattening, real_logs_dataset.go:142-152)."""
-    rows: list[dict] = []
-    for res_idx, (f_rl, _, span_rl) in enumerate(
+# ---------------------------------------------------------------------------
+# the envelope shared by all three signals (public opentelemetry-proto):
+#   Export{Logs,Trace,Metrics}ServiceRequest: resource_{logs,spans,metrics} = 1
+#   Resource{Logs,Spans,Metrics}: resource = 1, scope_{logs,spans,metrics} = 2
+#   Resource: attributes = 1
+#   Scope{Logs,Spans,Metrics}: scope = 1, log_records / spans / metrics = 2
+#   InstrumentationScope: name = 1, version = 2
+#   KeyValue: key = 1, value = 2;  AnyValue: string=1, bool=2, int=3,
+#   double=4, bytes=7
+# ---------------------------------------------------------------------------
+
+def _walk_envelope(data: bytes) -> Iterator[tuple]:
+    """Resource > Scope > item walk of one request: yields
+    ``(res_idx, res_attrs, scope_name, scope_version, item span)`` per item
+    (a log record, a span or a metric), in wire order."""
+    for res_idx, (_, _, span) in enumerate(
         f for f in _iter_fields(data, 0, len(data)) if f[0] == 1
     ):
-        res_attrs: dict[str, str | None] = {}
-        scopes: list[tuple[int, int]] = []
-        for f, _, v in _iter_fields(data, span_rl[0], span_rl[1]):
+        res_attrs: dict = {}
+        scopes = []
+        for f, _, v in _iter_fields(data, *span):
             if f == 1:  # resource
-                for rf, _, rv in _iter_fields(data, v[0], v[1]):
-                    if rf == 1:
-                        k, av = _decode_kv(data, rv[0], rv[1])
-                        if k is not None:
-                            res_attrs[k] = av
-            elif f == 2:  # scope_logs
+                res_attrs = _attr_map(data, [rv for rf, _, rv in _iter_fields(data, *v) if rf == 1])
+            elif f == 2:
                 scopes.append(v)
-        for s_lo, s_hi in scopes:
-            scope_name = scope_version = None
-            for f, _, v in _iter_fields(data, s_lo, s_hi):
+        for scope_span in scopes:
+            name = version = None
+            items = []
+            for f, _, v in _iter_fields(data, *scope_span):
                 if f == 1:  # scope
-                    for sf, _, sv in _iter_fields(data, v[0], v[1]):
+                    for sf, _, sv in _iter_fields(data, *v):
                         if sf == 1:
-                            scope_name = bytes(data[sv[0]:sv[1]]).decode("utf-8", "replace")
+                            name = _str(data, sv)
                         elif sf == 2:
-                            scope_version = bytes(data[sv[0]:sv[1]]).decode("utf-8", "replace")
-            for f, _, v in _iter_fields(data, s_lo, s_hi):
-                if f != 2:  # log_records
-                    continue
-                row = {
-                    "path": path,
-                    "res_idx": res_idx,
-                    "scope_name": scope_name,
-                    "scope_version": scope_version,
-                    "time_unix_nano": None,
-                    "observed_time_unix_nano": None,
-                    "severity_number": None,
-                    "severity_text": None,
-                    "body": None,
-                    "trace_id": None,
-                    "span_id": None,
-                    "n_res_attrs": len(res_attrs),
-                    "n_attrs": 0,
-                    "res_attrs": res_attrs,
-                    "attrs": {},
-                }
-                for lf, _, lv in _iter_fields(data, v[0], v[1]):
-                    if lf == 1:
-                        row["time_unix_nano"] = lv
-                    elif lf == 2:
-                        row["severity_number"] = lv
-                    elif lf == 3:
-                        row["severity_text"] = bytes(data[lv[0]:lv[1]]).decode("utf-8", "replace")
-                    elif lf == 5:
-                        row["body"] = _decode_any_value(data, lv[0], lv[1])
-                    elif lf == 6:
-                        row["n_attrs"] += 1
-                        k, av = _decode_kv(data, lv[0], lv[1])
-                        if k is not None:
-                            row["attrs"][k] = av
-                    elif lf == 9:
-                        row["trace_id"] = bytes(data[lv[0]:lv[1]]).hex()
-                    elif lf == 10:
-                        row["span_id"] = bytes(data[lv[0]:lv[1]]).hex()
-                    elif lf == 11:
-                        row["observed_time_unix_nano"] = lv
-                rows.append(row)
-    return rows
+                            version = _str(data, sv)
+                elif f == 2:
+                    items.append(v)
+            for item in items:
+                yield res_idx, res_attrs, name, version, item
 
 
-# ---------------------------------------------------------------------------
-# OTLP logs encode (capture writer / test fixture generator)
-# ---------------------------------------------------------------------------
+def _attrs(field: int, attrs: dict | None) -> bytes:
+    """A map as repeated KeyValue ``field`` (values as string AnyValues)."""
+    if not attrs:
+        return b""
+    return b"".join(
+        _ld(field, _ld(1, k.encode()) + _ld(2, _ld(1, str(v).encode())))
+        for k, v in attrs.items()
+    )
 
-def encode_export_logs_request(records: list[dict]) -> bytes:
-    """Flat log dicts -> ExportLogsServiceRequest bytes. Minimal but real
-    wire format: records group by res_idx into ResourceLogs, one ScopeLogs
-    each. The ID-validation contract applies: trace_id must be 16 bytes
-    and span_id 8 when present (logs.go:145-154 error-not-crash is the
-    reader's job; the writer refuses to fabricate invalid frames)."""
+
+def _id(r: dict, key: str, field: int, nbytes: int) -> bytes:
+    """The hex id ``r[key]`` as bytes ``field``, empty when absent. The
+    ID-validation contract (logs.go:145-154 family): error-not-crash is the
+    reader's job, the writer refuses to fabricate invalid frames."""
+    if not r.get(key):
+        return b""
+    raw = bytes.fromhex(r[key])
+    if len(raw) != nbytes:
+        raise ValueError(f"{key} must be {nbytes} bytes, got {len(raw)}")
+    return _ld(field, raw)
+
+
+def _encode_request(records: list[dict], items: Callable[[list[dict]], Iterator[bytes]]) -> bytes:
+    """Flat records -> Export*ServiceRequest bytes. Records group by
+    ``res_idx`` (ascending) into one Resource* each, whose attributes are
+    its first record's ``res_attrs``. Within a resource, each run of
+    consecutive records with one scope (name, version) becomes one Scope*
+    holding the item messages ``items`` builds from the run, so every
+    record keeps its scope and decodes in input order."""
     by_res: dict[int, list[dict]] = {}
     for r in records:
         by_res.setdefault(r.get("res_idx", 0), []).append(r)
     out = bytearray()
     for res_idx in sorted(by_res):
         recs = by_res[res_idx]
-        scope = b""
-        name = next((r.get("scope_name") for r in recs if r.get("scope_name")), None)
-        if name:
-            scope = _ld(1, _ld(1, name.encode()))
-        body_records = bytearray()
-        for r in recs:
-            lr = bytearray()
-            if r.get("time_unix_nano") is not None:
-                lr += _tag(1, 1) + struct.pack("<Q", r["time_unix_nano"])
-            if r.get("severity_number") is not None:
-                lr += _tag(2, 0) + _write_varint(r["severity_number"])
-            if r.get("severity_text"):
-                lr += _ld(3, r["severity_text"].encode())
-            if r.get("body") is not None:
-                lr += _ld(5, _ld(1, str(r["body"]).encode()))
-            for k, v in (r.get("attrs") or {}).items():
-                lr += _ld(6, _ld(1, k.encode()) + _ld(2, _ld(1, str(v).encode())))
-            if r.get("trace_id"):
-                tid = bytes.fromhex(r["trace_id"])
-                if len(tid) != 16:
-                    raise ValueError(f"trace_id must be 16 bytes, got {len(tid)}")
-                lr += _ld(9, tid)
-            if r.get("span_id"):
-                sid = bytes.fromhex(r["span_id"])
-                if len(sid) != 8:
-                    raise ValueError(f"span_id must be 8 bytes, got {len(sid)}")
-                lr += _ld(10, sid)
-            if r.get("observed_time_unix_nano") is not None:
-                lr += _tag(11, 1) + struct.pack("<Q", r["observed_time_unix_nano"])
-            body_records += _ld(2, bytes(lr))
-        res = b""
-        for k, v in (recs[0].get("res_attrs") or {}).items():
-            res += _ld(1, _ld(1, k.encode()) + _ld(2, _ld(1, str(v).encode())))
-        rl = (_ld(1, res) if res else b"") + _ld(2, scope + bytes(body_records))
-        out += _ld(1, bytes(rl))
+        res = _attrs(1, recs[0].get("res_attrs"))
+        body = bytearray(_ld(1, res) if res else b"")
+        for (name, version), run in itertools.groupby(
+            recs, lambda r: (r.get("scope_name") or None, r.get("scope_version") or None)
+        ):
+            scope = _text(1, name) + _text(2, version)
+            body += _ld(2, (_ld(1, scope) if scope else b"") + b"".join(
+                _ld(2, item) for item in items(list(run))
+            ))
+        out += _ld(1, bytes(body))
     return bytes(out)
 
 
 # ---------------------------------------------------------------------------
-# OTLP traces decode/encode (real_trace_dataset.go:118-133 loads the same
-# single-request .pb shape; public trace.proto field numbers:
-#   ExportTraceServiceRequest: resource_spans = 1
-#   ResourceSpans: resource = 1, scope_spans = 2
-#   ScopeSpans:    scope = 1, spans = 2
+# OTLP logs (public logs.proto):
+#   LogRecord: time_unix_nano = 1 (fixed64), severity_number = 2,
+#              severity_text = 3, body = 5, attributes = 6, trace_id = 9,
+#              span_id = 10, observed_time_unix_nano = 11 (fixed64)
+# ---------------------------------------------------------------------------
+
+def decode_export_logs_request(data: bytes, path: str = "") -> list[dict]:
+    """ExportLogsServiceRequest bytes -> flat log-record dicts (the
+    reference's logUnit flattening, real_logs_dataset.go:142-152)."""
+    rows: list[dict] = []
+    for res_idx, res_attrs, scope_name, scope_version, span in _walk_envelope(data):
+        row = {
+            "path": path, "res_idx": res_idx, "scope_name": scope_name,
+            "scope_version": scope_version, "time_unix_nano": None,
+            "observed_time_unix_nano": None, "severity_number": None,
+            "severity_text": None, "body": None, "trace_id": None, "span_id": None,
+            "n_res_attrs": len(res_attrs), "n_attrs": 0, "res_attrs": res_attrs,
+            "attrs": {},
+        }
+        attrs = []
+        for f, _, v in _iter_fields(data, *span):
+            if f == 1:
+                row["time_unix_nano"] = _fits(v)
+            elif f == 2:
+                row["severity_number"] = _fits(v, _INT32)
+            elif f == 3:
+                row["severity_text"] = _str(data, v)
+            elif f == 5:
+                row["body"] = _any_value(data, v)
+            elif f == 6:
+                attrs.append(v)
+            elif f == 9:
+                row["trace_id"] = _hex(data, v)
+            elif f == 10:
+                row["span_id"] = _hex(data, v)
+            elif f == 11:
+                row["observed_time_unix_nano"] = _fits(v)
+        if attrs:
+            row["n_attrs"], row["attrs"] = len(attrs), _attr_map(data, attrs)
+        rows.append(row)
+    return rows
+
+
+def _log_records(recs: list[dict]) -> Iterator[bytes]:
+    for r in recs:
+        yield (
+            _fixed64(1, r.get("time_unix_nano"))
+            + _varint(2, r.get("severity_number"))
+            + _text(3, r.get("severity_text"))
+            + (_ld(5, _ld(1, str(r["body"]).encode())) if r.get("body") is not None else b"")
+            + _attrs(6, r.get("attrs"))
+            + _id(r, "trace_id", 9, 16)
+            + _id(r, "span_id", 10, 8)
+            + _fixed64(11, r.get("observed_time_unix_nano"))
+        )
+
+
+def encode_export_logs_request(records: list[dict]) -> bytes:
+    """Flat log dicts -> ExportLogsServiceRequest bytes. Minimal but real
+    wire format: one ResourceLogs per res_idx, one ScopeLogs per scope.
+    trace_id must be 16 bytes and span_id 8 when present."""
+    return _encode_request(records, _log_records)
+
+
+# ---------------------------------------------------------------------------
+# OTLP traces (real_trace_dataset.go:118-133 loads the same single-request
+# .pb shape; public trace.proto field numbers:
 #   Span: trace_id=1, span_id=2, parent_span_id=4, name=5, kind=6,
 #         start_time_unix_nano=7 (fixed64), end_time_unix_nano=8 (fixed64),
-#         attributes=9, events=11, links=13, status=15 (code=3)
+#         attributes=9, events=11 (time_unix_nano=1, name=2),
+#         links=13 (trace_id=1, span_id=2), status=15 (code=3)
 # ---------------------------------------------------------------------------
 
 PB_SPAN_SCHEMA = (
@@ -306,156 +375,90 @@ def decode_export_trace_request(data: bytes, path: str = "") -> list[dict]:
     """ExportTraceServiceRequest bytes -> flat span dicts (the reference's
     span flattening, real_trace_dataset.go:148-160)."""
     rows: list[dict] = []
-    for res_idx, (_, _, span_rl) in enumerate(
-        f for f in _iter_fields(data, 0, len(data)) if f[0] == 1
-    ):
-        scopes = [v for f, _, v in _iter_fields(data, span_rl[0], span_rl[1]) if f == 2]
-        for s_lo, s_hi in scopes:
-            scope_name = None
-            for f, _, v in _iter_fields(data, s_lo, s_hi):
-                if f == 1:
-                    for sf, _, sv in _iter_fields(data, v[0], v[1]):
-                        if sf == 1:
-                            scope_name = bytes(data[sv[0]:sv[1]]).decode("utf-8", "replace")
-            for f, _, v in _iter_fields(data, s_lo, s_hi):
-                if f != 2:  # spans
-                    continue
-                row = {
-                    "path": path,
-                    "res_idx": res_idx,
-                    "scope_name": scope_name,
-                    "trace_id": None,
-                    "span_id": None,
-                    "parent_span_id": None,
-                    "name": None,
-                    "kind": None,
-                    "start_time_unix_nano": None,
-                    "end_time_unix_nano": None,
-                    "status_code": None,
-                    "n_attrs": 0,
-                    "n_events": 0,
-                    "n_links": 0,
-                    "attrs": {},
-                    "events": [],
-                    "links": [],
-                }
-                for sf, _, sv in _iter_fields(data, v[0], v[1]):
-                    if sf == 1:
-                        row["trace_id"] = bytes(data[sv[0]:sv[1]]).hex()
-                    elif sf == 2:
-                        row["span_id"] = bytes(data[sv[0]:sv[1]]).hex()
-                    elif sf == 4:
-                        row["parent_span_id"] = bytes(data[sv[0]:sv[1]]).hex()
-                    elif sf == 5:
-                        row["name"] = bytes(data[sv[0]:sv[1]]).decode("utf-8", "replace")
-                    elif sf == 6:
-                        row["kind"] = sv
-                    elif sf == 7:
-                        row["start_time_unix_nano"] = sv
-                    elif sf == 8:
-                        row["end_time_unix_nano"] = sv
-                    elif sf == 9:
-                        row["n_attrs"] += 1
-                        k, av = _decode_kv(data, sv[0], sv[1])
-                        if k is not None:
-                            row["attrs"][k] = av
-                    elif sf == 11:  # Span.Event: time_unix_nano=1, name=2
-                        row["n_events"] += 1
-                        ev: dict = {"time_unix_nano": None, "name": None}
-                        for ef, _, evv in _iter_fields(data, sv[0], sv[1]):
-                            if ef == 1:
-                                ev["time_unix_nano"] = evv
-                            elif ef == 2:
-                                ev["name"] = bytes(
-                                    data[evv[0]:evv[1]]
-                                ).decode("utf-8", "replace")
-                        row["events"].append(ev)
-                    elif sf == 13:  # Span.Link: trace_id=1, span_id=2
-                        row["n_links"] += 1
-                        lk: dict = {"trace_id": None, "span_id": None}
-                        for lf_, _, lv_ in _iter_fields(data, sv[0], sv[1]):
-                            if lf_ == 1:
-                                lk["trace_id"] = bytes(data[lv_[0]:lv_[1]]).hex()
-                            elif lf_ == 2:
-                                lk["span_id"] = bytes(data[lv_[0]:lv_[1]]).hex()
-                        row["links"].append(lk)
-                    elif sf == 15:
-                        for stf, _, stv in _iter_fields(data, sv[0], sv[1]):
-                            if stf == 3:
-                                row["status_code"] = stv
-                rows.append(row)
+    for res_idx, _, scope_name, _, span in _walk_envelope(data):
+        row = {
+            "path": path, "res_idx": res_idx, "scope_name": scope_name,
+            "trace_id": None, "span_id": None, "parent_span_id": None,
+            "name": None, "kind": None, "start_time_unix_nano": None,
+            "end_time_unix_nano": None, "status_code": None, "n_attrs": 0,
+            "n_events": 0, "n_links": 0, "attrs": {}, "events": [], "links": [],
+        }
+        attrs = []
+        for f, _, v in _iter_fields(data, *span):
+            if f == 1:
+                row["trace_id"] = _hex(data, v)
+            elif f == 2:
+                row["span_id"] = _hex(data, v)
+            elif f == 4:
+                row["parent_span_id"] = _hex(data, v)
+            elif f == 5:
+                row["name"] = _str(data, v)
+            elif f == 6:
+                row["kind"] = _fits(v, _INT32)
+            elif f == 7:
+                row["start_time_unix_nano"] = _fits(v)
+            elif f == 8:
+                row["end_time_unix_nano"] = _fits(v)
+            elif f == 9:
+                attrs.append(v)
+            elif f == 11:
+                ev: dict = {"time_unix_nano": None, "name": None}
+                for ef, _, ev_v in _iter_fields(data, *v):
+                    if ef == 1:
+                        ev["time_unix_nano"] = _fits(ev_v)
+                    elif ef == 2:
+                        ev["name"] = _str(data, ev_v)
+                row["events"].append(ev)
+            elif f == 13:
+                lk: dict = {"trace_id": None, "span_id": None}
+                for lf, _, lv in _iter_fields(data, *v):
+                    if lf in (1, 2):
+                        lk["trace_id" if lf == 1 else "span_id"] = _hex(data, lv)
+                row["links"].append(lk)
+            elif f == 15:
+                for sf, _, sv in _iter_fields(data, *v):
+                    if sf == 3:
+                        row["status_code"] = _fits(sv, _INT32)
+        if attrs:
+            row["n_attrs"], row["attrs"] = len(attrs), _attr_map(data, attrs)
+        row["n_events"], row["n_links"] = len(row["events"]), len(row["links"])
+        rows.append(row)
     return rows
+
+
+def _spans(recs: list[dict]) -> Iterator[bytes]:
+    for r in recs:
+        yield (
+            _id(r, "trace_id", 1, 16)
+            + _id(r, "span_id", 2, 8)
+            + _id(r, "parent_span_id", 4, 8)
+            + _text(5, r.get("name"))
+            + _varint(6, r.get("kind"))
+            + _fixed64(7, r.get("start_time_unix_nano"))
+            + _fixed64(8, r.get("end_time_unix_nano"))
+            + _attrs(9, r.get("attrs"))
+            + b"".join(
+                _ld(11, _fixed64(1, ev.get("time_unix_nano")) + _text(2, ev.get("name")))
+                for ev in r.get("events") or []
+            )
+            + b"".join(
+                _ld(13, _id(ln, "trace_id", 1, 16) + _id(ln, "span_id", 2, 8))
+                for ln in r.get("links") or []
+            )
+            + (_ld(15, _varint(3, r["status_code"]))
+               if r.get("status_code") is not None else b"")
+        )
 
 
 def encode_export_trace_request(spans: list[dict]) -> bytes:
     """Flat span dicts -> ExportTraceServiceRequest bytes. trace_id must be
-    16 bytes and span ids 8 when present (the ID-validation contract,
-    logs.go:145-154 family)."""
-
-    def _id(r: dict, key: str, nbytes: int) -> bytes | None:
-        if not r.get(key):
-            return None
-        raw = bytes.fromhex(r[key])
-        if len(raw) != nbytes:
-            raise ValueError(f"{key} must be {nbytes} bytes, got {len(raw)}")
-        return raw
-
-    by_res: dict[int, list[dict]] = {}
-    for r in spans:
-        by_res.setdefault(r.get("res_idx", 0), []).append(r)
-    out = bytearray()
-    for res_idx in sorted(by_res):
-        recs = by_res[res_idx]
-        scope = b""
-        name = next((r.get("scope_name") for r in recs if r.get("scope_name")), None)
-        if name:
-            scope = _ld(1, _ld(1, name.encode()))
-        body = bytearray()
-        for r in recs:
-            sp = bytearray()
-            for key, field, nbytes in (
-                ("trace_id", 1, 16), ("span_id", 2, 8), ("parent_span_id", 4, 8)
-            ):
-                raw = _id(r, key, nbytes)
-                if raw is not None:
-                    sp += _ld(field, raw)
-            if r.get("name"):
-                sp += _ld(5, r["name"].encode())
-            if r.get("kind") is not None:
-                sp += _tag(6, 0) + _write_varint(r["kind"])
-            if r.get("start_time_unix_nano") is not None:
-                sp += _tag(7, 1) + struct.pack("<Q", r["start_time_unix_nano"])
-            if r.get("end_time_unix_nano") is not None:
-                sp += _tag(8, 1) + struct.pack("<Q", r["end_time_unix_nano"])
-            for k, v in (r.get("attrs") or {}).items():
-                sp += _ld(9, _ld(1, k.encode()) + _ld(2, _ld(1, str(v).encode())))
-            for ev in r.get("events") or []:
-                e = bytearray()
-                if ev.get("time_unix_nano") is not None:
-                    e += _tag(1, 1) + struct.pack("<Q", ev["time_unix_nano"])
-                if ev.get("name"):
-                    e += _ld(2, ev["name"].encode())
-                sp += _ld(11, bytes(e))
-            for ln in r.get("links") or []:
-                lk = bytearray()
-                for key, field, nbytes in (("trace_id", 1, 16), ("span_id", 2, 8)):
-                    raw = _id(ln, key, nbytes)
-                    if raw is not None:
-                        lk += _ld(field, raw)
-                sp += _ld(13, bytes(lk))
-            if r.get("status_code") is not None:
-                sp += _ld(15, _tag(3, 0) + _write_varint(r["status_code"]))
-            body += _ld(2, bytes(sp))
-        out += _ld(1, bytes(_ld(2, scope + bytes(body))))
-    return bytes(out)
+    16 bytes and span ids 8 when present."""
+    return _encode_request(spans, _spans)
 
 
 # ---------------------------------------------------------------------------
-# OTLP metrics decode/encode (real_metrics_dataset.go loads the same
-# single-request .pb shape; public metrics.proto field numbers:
-#   ExportMetricsServiceRequest: resource_metrics = 1
-#   ResourceMetrics: resource = 1, scope_metrics = 2
-#   ScopeMetrics:    scope = 1, metrics = 2
+# OTLP metrics (real_metrics_dataset.go loads the same single-request .pb
+# shape; public metrics.proto field numbers:
 #   Metric: name=1, description=2, unit=3,
 #           gauge=5 / sum=7 / histogram=9 / exponential_histogram=10 /
 #           summary=11 (the data oneof)
@@ -473,6 +476,8 @@ def encode_export_trace_request(spans: list[dict]) -> bytes:
 #   SummaryDataPoint: start=2, time=3, count=4 (fixed64), sum=5 (double),
 #                    quantile_values=6 (quantile=1, value=2 doubles),
 #                    attributes=7
+# The reference transports the same offset-bearing DataPointBuckets on every
+# ExpHistogramDP (pkg/otel/metrics/arrow/ehistogram_dp.go:58-62).
 # ---------------------------------------------------------------------------
 
 PB_METRIC_SCHEMA = (
@@ -486,65 +491,63 @@ PB_METRIC_SCHEMA = (
     "negative_bucket_counts string, quantiles string, "
     "attrs map<string,string>"
 )
-
 _METRIC_TYPES = {5: "gauge", 7: "sum", 9: "histogram",
                  10: "exponential_histogram", 11: "summary"}
+_METRIC_FIELDS = {v: k for k, v in _METRIC_TYPES.items()}
+_NUMBER_TYPES = ("gauge", "sum")
+_TEMPORAL_TYPES = ("sum", "histogram", "exponential_histogram")
+# the data point field that carries attributes, per family
+_DP_ATTRS = {"gauge": 7, "sum": 7, "histogram": 9, "exponential_histogram": 1,
+             "summary": 7}
 
 
-def _decode_number_dp(data: bytes, lo: int, hi: int) -> dict:
-    dp = {"start_time_unix_nano": None, "time_unix_nano": None,
-          "value_double": None, "value_int": None, "n_attrs": 0, "attrs": {}}
-    for f, _, v in _iter_fields(data, lo, hi):
+def _decode_number_dp(data: bytes, span: tuple[int, int], row: dict) -> list:
+    """NumberDataPoint into ``row``; returns its attribute spans."""
+    attrs = []
+    for f, _, v in _iter_fields(data, *span):
         if f == 2:
-            dp["start_time_unix_nano"] = v
+            row["start_time_unix_nano"] = _fits(v)
         elif f == 3:
-            dp["time_unix_nano"] = v
+            row["time_unix_nano"] = _fits(v)
         elif f == 4:
-            dp["value_double"] = struct.unpack("<d", struct.pack("<Q", v))[0]
-        elif f == 6:
-            dp["value_int"] = struct.unpack("<q", struct.pack("<Q", v))[0]
+            row["value_double"] = _f64(v)
+        elif f == 6:  # sfixed64
+            row["value_int"] = struct.unpack("<q", struct.pack("<Q", v))[0]
         elif f == 7:
-            dp["n_attrs"] += 1
-            k, av = _decode_kv(data, v[0], v[1])
-            if k is not None:
-                dp["attrs"][k] = av
-    return dp
+            attrs.append(v)
+    return attrs
 
 
-def _decode_hist_dp(data: bytes, lo: int, hi: int) -> dict:
-    dp = {"start_time_unix_nano": None, "time_unix_nano": None,
-          "count": None, "sum": None, "bucket_counts": None,
-          "explicit_bounds": None, "n_attrs": 0, "attrs": {}}
-    for f, wt, v in _iter_fields(data, lo, hi):
+def _decode_hist_dp(data: bytes, span: tuple[int, int], row: dict) -> list:
+    """HistogramDataPoint into ``row``; returns its attribute spans."""
+    attrs = []
+    for f, wt, v in _iter_fields(data, *span):
         if f == 2:
-            dp["start_time_unix_nano"] = v
+            row["start_time_unix_nano"] = _fits(v)
         elif f == 3:
-            dp["time_unix_nano"] = v
+            row["time_unix_nano"] = _fits(v)
         elif f == 4:
-            dp["count"] = v
+            row["count"] = _fits(v)
         elif f == 5:
-            dp["sum"] = struct.unpack("<d", struct.pack("<Q", v))[0]
+            row["sum"] = _f64(v)
         elif f == 6 and wt == 2:  # packed fixed64
             vals = struct.unpack_from(f"<{(v[1] - v[0]) // 8}Q", data, v[0])
-            dp["bucket_counts"] = ",".join(str(x) for x in vals)
+            row["bucket_counts"] = ",".join(str(x) for x in vals)
         elif f == 7 and wt == 2:  # packed doubles
             vals = struct.unpack_from(f"<{(v[1] - v[0]) // 8}d", data, v[0])
-            dp["explicit_bounds"] = ",".join(repr(x) for x in vals)
+            row["explicit_bounds"] = ",".join(repr(x) for x in vals)
         elif f == 9:
-            dp["n_attrs"] += 1
-            k, av = _decode_kv(data, v[0], v[1])
-            if k is not None:
-                dp["attrs"][k] = av
-    return dp
+            attrs.append(v)
+    return attrs
 
 
-def _decode_exp_buckets(data: bytes, lo: int, hi: int) -> tuple[int, list[int]]:
+def _decode_exp_buckets(data: bytes, span: tuple[int, int]) -> tuple[int, str]:
     """ExponentialHistogramDataPoint.Buckets: offset=1 (sint32 zigzag),
-    bucket_counts=2 (repeated uint64 — packed or unpacked)."""
+    bucket_counts=2 (repeated uint64 — packed or unpacked) as a CSV."""
     offset, counts = 0, []
-    for f, wt, v in _iter_fields(data, lo, hi):
+    for f, wt, v in _iter_fields(data, *span):
         if f == 1:
-            offset = _zigzag_decode(v)
+            offset = _fits(_zigzag_decode(v), _INT32)
         elif f == 2:
             if wt == 2:  # packed varints
                 i = v[0]
@@ -553,84 +556,64 @@ def _decode_exp_buckets(data: bytes, lo: int, hi: int) -> tuple[int, list[int]]:
                     counts.append(c)
             else:
                 counts.append(v)
-    return offset, counts
+    return offset, ",".join(str(c) for c in counts)
 
 
-def _decode_exp_hist_dp(data: bytes, lo: int, hi: int) -> dict:
-    """ExponentialHistogramDataPoint (public metrics.proto): attributes=1,
-    start=2 (fixed64), time=3 (fixed64), count=4 (fixed64), sum=5 (double),
-    scale=6 (sint32 zigzag), zero_count=7 (fixed64), positive=8 /
-    negative=9 (Buckets with offset). The reference transports the same
-    offset-bearing DataPointBuckets on every ExpHistogramDP
-    (pkg/otel/metrics/arrow/ehistogram_dp.go:58-62)."""
-    dp = {"start_time_unix_nano": None, "time_unix_nano": None,
-          "count": None, "sum": None, "scale": None, "zero_count": None,
-          "positive_offset": None, "positive_bucket_counts": None,
-          "negative_offset": None, "negative_bucket_counts": None,
-          "n_attrs": 0, "attrs": {}}
-    for f, _, v in _iter_fields(data, lo, hi):
+def _decode_exp_hist_dp(data: bytes, span: tuple[int, int], row: dict) -> list:
+    """ExponentialHistogramDataPoint into ``row``; returns its attribute spans."""
+    attrs = []
+    for f, _, v in _iter_fields(data, *span):
         if f == 1:
-            dp["n_attrs"] += 1
-            k, av = _decode_kv(data, v[0], v[1])
-            if k is not None:
-                dp["attrs"][k] = av
+            attrs.append(v)
         elif f == 2:
-            dp["start_time_unix_nano"] = v
+            row["start_time_unix_nano"] = _fits(v)
         elif f == 3:
-            dp["time_unix_nano"] = v
+            row["time_unix_nano"] = _fits(v)
         elif f == 4:
-            dp["count"] = v
+            row["count"] = _fits(v)
         elif f == 5:
-            dp["sum"] = struct.unpack("<d", struct.pack("<Q", v))[0]
+            row["sum"] = _f64(v)
         elif f == 6:
-            dp["scale"] = _zigzag_decode(v)
+            row["scale"] = _fits(_zigzag_decode(v), _INT32)
         elif f == 7:
-            dp["zero_count"] = v
+            row["zero_count"] = _fits(v)
         elif f in (8, 9):
-            off, counts = _decode_exp_buckets(data, v[0], v[1])
             side = "positive" if f == 8 else "negative"
-            dp[f"{side}_offset"] = off
-            dp[f"{side}_bucket_counts"] = ",".join(str(c) for c in counts)
-    return dp
+            row[f"{side}_offset"], row[f"{side}_bucket_counts"] = _decode_exp_buckets(data, v)
+    return attrs
 
 
-def _decode_summary_dp(data: bytes, lo: int, hi: int) -> dict:
-    """SummaryDataPoint (public metrics.proto): start=2, time=3,
-    count=4 (fixed64), sum=5 (double), quantile_values=6
-    (ValueAtQuantile: quantile=1 double, value=2 double), attributes=7.
-    Quantiles render as 'q:value' pairs (repr doubles, lossless)."""
-    dp = {"start_time_unix_nano": None, "time_unix_nano": None,
-          "count": None, "sum": None, "quantiles": None, "n_attrs": 0,
-          "attrs": {}}
-    qs: list[str] = []
-    for f, _, v in _iter_fields(data, lo, hi):
+def _decode_summary_dp(data: bytes, span: tuple[int, int], row: dict) -> list:
+    """SummaryDataPoint into ``row``; returns its attribute spans. Quantiles
+    render as 'q:value' pairs (repr doubles, lossless)."""
+    attrs, quantiles = [], []
+    for f, _, v in _iter_fields(data, *span):
         if f == 2:
-            dp["start_time_unix_nano"] = v
+            row["start_time_unix_nano"] = _fits(v)
         elif f == 3:
-            dp["time_unix_nano"] = v
+            row["time_unix_nano"] = _fits(v)
         elif f == 4:
-            dp["count"] = v
+            row["count"] = _fits(v)
         elif f == 5:
-            dp["sum"] = struct.unpack("<d", struct.pack("<Q", v))[0]
+            row["sum"] = _f64(v)
         elif f == 6:
             q = qval = None
-            for qf, _, qv in _iter_fields(data, v[0], v[1]):
+            for qf, _, qv in _iter_fields(data, *v):
                 if qf == 1:
-                    q = struct.unpack("<d", struct.pack("<Q", qv))[0]
+                    q = _f64(qv)
                 elif qf == 2:
-                    qval = struct.unpack("<d", struct.pack("<Q", qv))[0]
-            qs.append(f"{q!r}:{qval!r}")
+                    qval = _f64(qv)
+            quantiles.append(f"{q!r}:{qval!r}")
         elif f == 7:
-            dp["n_attrs"] += 1
-            k, av = _decode_kv(data, v[0], v[1])
-            if k is not None:
-                dp["attrs"][k] = av
-    if qs:
-        dp["quantiles"] = ",".join(qs)
-    return dp
+            attrs.append(v)
+    if quantiles:
+        row["quantiles"] = ",".join(quantiles)
+    return attrs
 
 
 _DP_DECODERS = {
+    "gauge": _decode_number_dp,
+    "sum": _decode_number_dp,
     "histogram": _decode_hist_dp,
     "exponential_histogram": _decode_exp_hist_dp,
     "summary": _decode_summary_dp,
@@ -641,166 +624,119 @@ def decode_export_metrics_request(data: bytes, path: str = "") -> list[dict]:
     """ExportMetricsServiceRequest bytes -> flat data-point dicts (the
     reference's per-DP flattening, real_metrics_dataset.go)."""
     rows: list[dict] = []
-    for res_idx, (_, _, span_rm) in enumerate(
-        f for f in _iter_fields(data, 0, len(data)) if f[0] == 1
-    ):
-        scopes = [v for f, _, v in _iter_fields(data, span_rm[0], span_rm[1]) if f == 2]
-        for s_lo, s_hi in scopes:
-            scope_name = None
-            for f, _, v in _iter_fields(data, s_lo, s_hi):
+    for res_idx, _, scope_name, _, span in _walk_envelope(data):
+        name = unit = None
+        families = []
+        for f, _, v in _iter_fields(data, *span):
+            if f == 1:
+                name = _str(data, v)
+            elif f == 3:
+                unit = _str(data, v)
+            elif f in _METRIC_TYPES:
+                families.append((_METRIC_TYPES[f], v))
+        for mtype, fam_span in families:
+            temporality = monotonic = None
+            dps = []
+            for f, _, v in _iter_fields(data, *fam_span):
                 if f == 1:
-                    for sf, _, sv in _iter_fields(data, v[0], v[1]):
-                        if sf == 1:
-                            scope_name = bytes(data[sv[0]:sv[1]]).decode("utf-8", "replace")
-            for f, _, v in _iter_fields(data, s_lo, s_hi):
-                if f != 2:  # metrics
-                    continue
-                name = unit = None
-                for mf, _, mv in _iter_fields(data, v[0], v[1]):
-                    if mf == 1:
-                        name = bytes(data[mv[0]:mv[1]]).decode("utf-8", "replace")
-                    elif mf == 3:
-                        unit = bytes(data[mv[0]:mv[1]]).decode("utf-8", "replace")
-                for mf, _, mv in _iter_fields(data, v[0], v[1]):
-                    if mf not in _METRIC_TYPES:
-                        continue
-                    mtype = _METRIC_TYPES[mf]
-                    temporality = monotonic = None
-                    dps = []
-                    for df, _, dv in _iter_fields(data, mv[0], mv[1]):
-                        if df == 1:
-                            dps.append(dv)
-                        elif df == 2 and mtype in ("sum", "histogram",
-                                                   "exponential_histogram"):
-                            temporality = dv
-                        elif df == 3 and mtype == "sum":
-                            monotonic = bool(dv)
-                    for d_lo, d_hi in dps:
-                        base = {
-                            "path": path, "res_idx": res_idx,
-                            "scope_name": scope_name, "metric_name": name,
-                            "metric_unit": unit, "metric_type": mtype,
-                            "temporality": temporality,
-                            "is_monotonic": monotonic,
-                            "count": None, "sum": None,
-                            "bucket_counts": None, "explicit_bounds": None,
-                            "value_double": None, "value_int": None,
-                            "scale": None, "zero_count": None,
-                            "positive_offset": None,
-                            "positive_bucket_counts": None,
-                            "negative_offset": None,
-                            "negative_bucket_counts": None,
-                            "quantiles": None,
-                            "attrs": {},
-                        }
-                        dp = _DP_DECODERS.get(mtype, _decode_number_dp)(
-                            data, d_lo, d_hi
-                        )
-                        base.update(dp)
-                        rows.append(base)
+                    dps.append(v)
+                elif f == 2 and mtype in _TEMPORAL_TYPES:
+                    temporality = _fits(v, _INT32)
+                elif f == 3 and mtype == "sum":
+                    monotonic = bool(v)
+            decode_dp = _DP_DECODERS[mtype]
+            for dp in dps:
+                row = {
+                    "path": path, "res_idx": res_idx, "scope_name": scope_name,
+                    "metric_name": name, "metric_unit": unit, "metric_type": mtype,
+                    "temporality": temporality, "is_monotonic": monotonic,
+                    "start_time_unix_nano": None, "time_unix_nano": None,
+                    "value_double": None, "value_int": None, "count": None,
+                    "sum": None, "bucket_counts": None, "explicit_bounds": None,
+                    "n_attrs": 0, "scale": None, "zero_count": None,
+                    "positive_offset": None, "positive_bucket_counts": None,
+                    "negative_offset": None, "negative_bucket_counts": None,
+                    "quantiles": None, "attrs": {},
+                }
+                attrs = decode_dp(data, dp, row)
+                if attrs:
+                    row["n_attrs"], row["attrs"] = len(attrs), _attr_map(data, attrs)
+                rows.append(row)
     return rows
+
+
+def _csv(value, cast=int) -> list:
+    return [cast(x) for x in str(value).split(",")]
+
+
+def _data_point(p: dict, mtype: str) -> bytes:
+    """One flat point -> the family's data point message. Every family
+    frames start=2 and time=3, Number points as_double=4 / as_int=6, the
+    others count=4 and sum=5, then each family's own fields; attributes go
+    last except in exp-histogram points, where they come first."""
+    dp = bytearray(_fixed64(2, p.get("start_time_unix_nano"))
+                   + _fixed64(3, p.get("time_unix_nano")))
+    if mtype == "exponential_histogram":
+        dp += _attrs(1, p.get("attrs"))
+    if mtype in _NUMBER_TYPES:
+        dp += _fixed64(4, p.get("value_double"), "<d") + _fixed64(6, p.get("value_int"), "<q")
+    else:
+        dp += _fixed64(4, p.get("count")) + _fixed64(5, p.get("sum"), "<d")
+    if mtype == "histogram":
+        if p.get("bucket_counts"):
+            vals = _csv(p["bucket_counts"])
+            dp += _ld(6, struct.pack(f"<{len(vals)}Q", *vals))
+        if p.get("explicit_bounds"):
+            vals = _csv(p["explicit_bounds"], float)
+            dp += _ld(7, struct.pack(f"<{len(vals)}d", *vals))
+    elif mtype == "exponential_histogram":
+        if p.get("scale") is not None:
+            dp += _varint(6, _zigzag_encode(p["scale"]))
+        dp += _fixed64(7, p.get("zero_count"))
+        for side, field in (("positive", 8), ("negative", 9)):
+            counts = p.get(f"{side}_bucket_counts")
+            off = p.get(f"{side}_offset")
+            if counts is None and off is None:
+                continue
+            dp += _ld(field, (b"" if off is None else _varint(1, _zigzag_encode(off)))
+                      + (_ld(2, b"".join(_write_varint(c) for c in _csv(counts)))
+                         if counts else b""))
+    elif mtype == "summary":
+        for pair in str(p.get("quantiles") or "").split(","):
+            if pair:
+                q, qval = pair.split(":")
+                dp += _ld(6, _fixed64(1, float(q), "<d") + _fixed64(2, float(qval), "<d"))
+    if mtype != "exponential_histogram":
+        dp += _attrs(_DP_ATTRS[mtype], p.get("attrs"))
+    return bytes(dp)
+
+
+def _metrics(points: list[dict]) -> Iterator[bytes]:
+    """One scope's points -> Metric messages, one per metric identity:
+    name, unit, type, and the temporality / monotonic flag the type
+    carries (the identity write_otlp_json_metrics groups by)."""
+    by_metric: dict[tuple, list[dict]] = {}
+    for p in points:
+        mtype = p.get("metric_type", "gauge")
+        by_metric.setdefault((
+            p.get("metric_name"), p.get("metric_unit") or None, mtype,
+            p.get("temporality") if mtype in _TEMPORAL_TYPES else None,
+            mtype == "sum" and bool(p.get("is_monotonic")),
+        ), []).append(p)
+    for (name, unit, mtype, temporality, monotonic), dps in by_metric.items():
+        payload = (
+            b"".join(_ld(1, _data_point(p, mtype)) for p in dps)
+            + _varint(2, temporality)
+            + (_varint(3, 1) if monotonic else b"")
+        )
+        yield _text(1, name) + _text(3, unit) + _ld(_METRIC_FIELDS[mtype], payload)
 
 
 def encode_export_metrics_request(points: list[dict]) -> bytes:
     """Flat DP dicts -> ExportMetricsServiceRequest bytes. Points group by
-    (res_idx, metric_name); metric_type picks the data oneof (gauge, sum,
-    histogram, exponential_histogram, summary)."""
-    by_res: dict[int, dict[tuple, list[dict]]] = {}
-    for p in points:
-        by_res.setdefault(p.get("res_idx", 0), {}).setdefault(
-            (p.get("metric_name"), p.get("metric_type", "gauge")), []
-        ).append(p)
-    out = bytearray()
-    for res_idx in sorted(by_res):
-        metrics = bytearray()
-        for (name, mtype), dps in by_res[res_idx].items():
-            m = bytearray()
-            if name:
-                m += _ld(1, name.encode())
-            if dps[0].get("metric_unit"):
-                m += _ld(3, dps[0]["metric_unit"].encode())
-            payload = bytearray()
-            for p in dps:
-                dp = bytearray()
-                if p.get("start_time_unix_nano") is not None:
-                    dp += _tag(2, 1) + struct.pack("<Q", p["start_time_unix_nano"])
-                if p.get("time_unix_nano") is not None:
-                    dp += _tag(3, 1) + struct.pack("<Q", p["time_unix_nano"])
-                if mtype == "histogram":
-                    if p.get("count") is not None:
-                        dp += _tag(4, 1) + struct.pack("<Q", p["count"])
-                    if p.get("sum") is not None:
-                        dp += _tag(5, 1) + struct.pack("<d", p["sum"])
-                    if p.get("bucket_counts"):
-                        vals = [int(x) for x in str(p["bucket_counts"]).split(",")]
-                        dp += _ld(6, struct.pack(f"<{len(vals)}Q", *vals))
-                    if p.get("explicit_bounds"):
-                        vals = [float(x) for x in str(p["explicit_bounds"]).split(",")]
-                        dp += _ld(7, struct.pack(f"<{len(vals)}d", *vals))
-                    for k, vv in (p.get("attrs") or {}).items():
-                        dp += _ld(9, _ld(1, k.encode()) + _ld(2, _ld(1, str(vv).encode())))
-                elif mtype == "exponential_histogram":
-                    for k, vv in (p.get("attrs") or {}).items():
-                        dp += _ld(1, _ld(1, k.encode()) + _ld(2, _ld(1, str(vv).encode())))
-                    if p.get("count") is not None:
-                        dp += _tag(4, 1) + struct.pack("<Q", p["count"])
-                    if p.get("sum") is not None:
-                        dp += _tag(5, 1) + struct.pack("<d", p["sum"])
-                    if p.get("scale") is not None:
-                        dp += _tag(6, 0) + _write_varint(_zigzag_encode(p["scale"]))
-                    if p.get("zero_count") is not None:
-                        dp += _tag(7, 1) + struct.pack("<Q", p["zero_count"])
-                    for side, field in (("positive", 8), ("negative", 9)):
-                        counts = p.get(f"{side}_bucket_counts")
-                        off = p.get(f"{side}_offset")
-                        if counts is None and off is None:
-                            continue
-                        b = bytearray()
-                        if off is not None:
-                            b += _tag(1, 0) + _write_varint(_zigzag_encode(off))
-                        if counts:
-                            vals = [int(x) for x in str(counts).split(",")]
-                            b += _ld(2, b"".join(_write_varint(c) for c in vals))
-                        dp += _ld(field, bytes(b))
-                elif mtype == "summary":
-                    if p.get("count") is not None:
-                        dp += _tag(4, 1) + struct.pack("<Q", p["count"])
-                    if p.get("sum") is not None:
-                        dp += _tag(5, 1) + struct.pack("<d", p["sum"])
-                    for pair in str(p.get("quantiles") or "").split(","):
-                        if not pair:
-                            continue
-                        q, qval = pair.split(":")
-                        dp += _ld(
-                            6,
-                            _tag(1, 1) + struct.pack("<d", float(q))
-                            + _tag(2, 1) + struct.pack("<d", float(qval)),
-                        )
-                    for k, vv in (p.get("attrs") or {}).items():
-                        dp += _ld(7, _ld(1, k.encode()) + _ld(2, _ld(1, str(vv).encode())))
-                else:
-                    if p.get("value_double") is not None:
-                        dp += _tag(4, 1) + struct.pack("<d", p["value_double"])
-                    if p.get("value_int") is not None:
-                        dp += _tag(6, 1) + struct.pack("<q", p["value_int"])
-                    for k, vv in (p.get("attrs") or {}).items():
-                        dp += _ld(7, _ld(1, k.encode()) + _ld(2, _ld(1, str(vv).encode())))
-                payload += _ld(1, bytes(dp))
-            if mtype == "sum":
-                if dps[0].get("temporality") is not None:
-                    payload += _tag(2, 0) + _write_varint(dps[0]["temporality"])
-                if dps[0].get("is_monotonic"):
-                    payload += _tag(3, 0) + _write_varint(1)
-            elif (
-                mtype in ("histogram", "exponential_histogram")
-                and dps[0].get("temporality") is not None
-            ):
-                payload += _tag(2, 0) + _write_varint(dps[0]["temporality"])
-            field = {v: k for k, v in _METRIC_TYPES.items()}[mtype]
-            m += _ld(field, bytes(payload))
-            metrics += _ld(2, bytes(m))
-        out += _ld(1, _ld(2, bytes(metrics)))
-    return bytes(out)
+    resource, scope and metric identity; metric_type picks the data oneof
+    (gauge, sum, histogram, exponential_histogram, summary)."""
+    return _encode_request(points, _metrics)
 
 
 # ---------------------------------------------------------------------------

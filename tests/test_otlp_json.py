@@ -58,11 +58,21 @@ def test_otlp_json_malformed_line_quarantines(spark, tmp_path):
     write_otlp_json_logs(df, out)
     with open(f"{out}/garbage.txt", "w") as f:
         f.write("this is not json\n")
+    # well-formed requests whose int64 strings do not cast to a long: each
+    # such record quarantines instead of failing the read under ANSI mode
+    with open(f"{out}/bad_ints.txt", "w") as f:
+        for ts in ("abc", "18446744073709551615"):
+            f.write('{"resourceLogs":[{"scopeLogs":[{"logRecords":[{"timeUnixNano":"%s",'
+                    '"body":{"stringValue":"x"}}]}]}]}\n' % ts)
     rows = read_otlp_json_logs(spark, out).collect()
     good = [r for r in rows if r.res_idx >= 0]
     bad = [r for r in rows if r.res_idx == -1]
     assert len(good) == 1 and good[0].body == "ok"
-    assert len(bad) == 1 and bad[0].body.startswith("__decode_error__")
+    assert len(bad) == 3 and all(r.body.startswith("__decode_error__") for r in bad)
+    assert sorted(r.body for r in bad if "int64" in r.body) == [
+        "__decode_error__: time_unix_nano is not an int64: 18446744073709551615",
+        "__decode_error__: time_unix_nano is not an int64: abc",
+    ]
 
 
 def test_otlp_json_plan_has_no_python(spark, tmp_path):
@@ -149,12 +159,18 @@ def test_otlp_json_spans_malformed_and_no_python(spark, tmp_path):
     write_otlp_json_spans(df, out)
     with open(f"{out}/garbage.txt", "w") as f:
         f.write("{not a request}\n")
+    with open(f"{out}/bad_ints.txt", "w") as f:
+        f.write('{"resourceSpans":[{"scopeSpans":[{"spans":[{"name":"t",'
+                '"startTimeUnixNano":"abc"}]}]}]}\n')
+        f.write('{"resourceSpans":[{"scopeSpans":[{"spans":[{"name":"e",'
+                '"events":[{"timeUnixNano":"1"},{"timeUnixNano":"x"}]}]}]}]}\n')
     reader = read_otlp_json_spans(spark, out)
     rows = reader.collect()
     good = [r for r in rows if r.res_idx >= 0]
     bad = [r for r in rows if r.res_idx == -1]
     assert len(good) == 1 and good[0].name == "op"
-    assert len(bad) == 1 and bad[0].name.startswith("__decode_error__")
+    assert len(bad) == 3 and all(r.name.startswith("__decode_error__") for r in bad)
+    assert all(r.n_events == 0 and r.events == [] for r in bad)
     plan = reader._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan and "FlatMapGroupsInPandas" not in plan
 
@@ -234,11 +250,146 @@ def test_otlp_json_metrics_malformed_and_no_python(spark, tmp_path):
     write_otlp_json_metrics(df, out)
     with open(f"{out}/garbage.txt", "w") as f:
         f.write("nope\n")
+    with open(f"{out}/bad_ints.txt", "w") as f:
+        f.write('{"resourceMetrics":[{"scopeMetrics":[{"metrics":[{"name":"h",'
+                '"histogram":{"dataPoints":[{"count":"x1"}]}}]}]}]}\n')
+        f.write('{"resourceMetrics":[{"scopeMetrics":[{"metrics":[{"name":"g",'
+                '"gauge":{"dataPoints":[{"timeUnixNano":"abc"}]}}]}]}]}\n')
     reader = read_otlp_json_metrics(spark, out)
     rows = reader.collect()
     good = [r for r in rows if r.res_idx >= 0]
     bad = [r for r in rows if r.res_idx == -1]
     assert len(good) == 1 and good[0].value_double == 2.0
-    assert len(bad) == 1 and bad[0].metric_name.startswith("__decode_error__")
+    assert len(bad) == 3 and all(r.metric_name.startswith("__decode_error__") for r in bad)
+    assert sorted(r.metric_name for r in bad if "int64" in r.metric_name) == [
+        "__decode_error__: count is not an int64: x1",
+        "__decode_error__: time_unix_nano is not an int64: abc",
+    ]
     plan = reader._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan and "FlatMapGroupsInPandas" not in plan
+
+
+def _canonical_lines(path):
+    """The request lines a writer emitted, with every array of messages
+    except attribute lists sorted, so the result does not depend on the
+    order in which collect_list gathered rows. Field order is kept."""
+    import glob
+    import json
+
+    def walk(x, key=None):
+        if isinstance(x, dict):
+            return {k: walk(v, k) for k, v in x.items()}
+        if isinstance(x, list):
+            items = [walk(v) for v in x]
+            if key != "attributes" and items and isinstance(items[0], dict):
+                items.sort(key=json.dumps)
+            return items
+        return x
+
+    lines = []
+    for f in glob.glob(f"{path}/part-*"):
+        with open(f) as fh:
+            lines += [json.dumps(walk(json.loads(ln)), separators=(",", ":"))
+                      for ln in fh if ln.strip()]
+    return sorted(lines)
+
+
+GOLDEN_LOG_LINES = [
+    '{"resourceLogs":[{"resource":{"attributes":[]},"scopeLogs":[{"scope":{"name":"scope-a"},'
+    '"logRecords":[{"body":{"stringValue":"orphan"},'
+    '"attributes":[{"key":"tool","value":{"stringValue":"t"}}]}]}]}]}',
+    '{"resourceLogs":[{"resource":{"attributes":[{"key":"svc","value":{"stringValue":"a"}}]},'
+    '"scopeLogs":[{"scope":{"name":""},"logRecords":[{"timeUnixNano":"12","severityNumber":17,'
+    '"severityText":"ERROR","body":{}}]},{"scope":{"name":"scope-a"},"logRecords":[{'
+    '"timeUnixNano":"11","severityNumber":9,"severityText":"INFO","body":{"stringValue":"hello"},'
+    '"attributes":[{"key":"a","value":{"stringValue":"b"}},{"key":"k","value":{"stringValue":"v"}}],'
+    '"traceId":"abababababababababababababababab","spanId":"0101010101010101"}]}]}]}',
+]
+GOLDEN_SPAN_LINES = [
+    '{"resourceSpans":[{"resource":{"attributes":[]},"scopeSpans":[{"scope":{"name":""},'
+    '"spans":[{"traceId":"cdcdcdcdcdcdcdcdcdcdcdcdcdcdcdcd","spanId":"0303030303030303",'
+    '"name":"op-b","kind":1,"startTimeUnixNano":"22","events":[],"links":[]}]},'
+    '{"scope":{"name":"scope-t"},"spans":[{"traceId":"abababababababababababababababab",'
+    '"spanId":"0101010101010101","parentSpanId":"0202020202020202","name":"op-a","kind":2,'
+    '"startTimeUnixNano":"21","endTimeUnixNano":"29","status":{"code":1},'
+    '"attributes":[{"key":"conv","value":{"stringValue":"c1"}}],'
+    '"events":[{"timeUnixNano":"21","name":"span.start"},{"timeUnixNano":"29","name":"span.end"}],'
+    '"links":[{"traceId":"abababababababababababababababab","spanId":"0202020202020202"}]}]}]}]}',
+    '{"resourceSpans":[{"resource":{"attributes":[]},"scopeSpans":[{"scope":{"name":"scope-t"},'
+    '"spans":[{"traceId":"efefefefefefefefefefefefefefefef","spanId":"0404040404040404",'
+    '"name":"op-c","kind":4,"startTimeUnixNano":"5","status":{"code":0},'
+    '"attributes":[{"key":"k","value":{"stringValue":"v"}}],"events":[],"links":[]}]}]}]}',
+]
+GOLDEN_METRIC_LINES = [
+    '{"resourceMetrics":[{"resource":{"attributes":[]},"scopeMetrics":[{"scope":{"name":""},'
+    '"metrics":[{"name":"lat","unit":"ms","histogram":{"aggregationTemporality":1,'
+    '"dataPoints":[{"timeUnixNano":"33","count":"3","bucketCounts":["1","2"],'
+    '"explicitBounds":[0.5],"attributes":[]}]}}]}]}]}',
+    '{"resourceMetrics":[{"resource":{"attributes":[]},"scopeMetrics":[{"scope":{"name":"scope-m"},'
+    '"metrics":[{"name":"reqs","unit":"1","sum":{"aggregationTemporality":2,"isMonotonic":true,'
+    '"dataPoints":[{"timeUnixNano":"31","asInt":"41",'
+    '"attributes":[{"key":"h","value":{"stringValue":"a"}}]},{"timeUnixNano":"32","asInt":"42",'
+    '"attributes":[{"key":"h","value":{"stringValue":"b"}}]}]}}]}]}]}',
+]
+
+
+def test_otlp_json_writers_golden_lines(spark, tmp_path):
+    """The exact request lines each writer emits for a 3-row frame: two
+    scopes of one resource plus a second resource, record and resource
+    attrs, span events and links, and two points of one metric next to a
+    histogram. A refactor of the writer core must leave them unchanged."""
+    from otel_arrow_adapter_spark.sources.otlp_json import (
+        write_otlp_json_metrics,
+        write_otlp_json_spans,
+    )
+
+    logs = spark.createDataFrame(
+        [
+            (0, "scope-a", 11, 9, "INFO", "hello", {"k": "v", "a": "b"},
+             {"svc": "a"}, "ab" * 16, "01" * 8),
+            (0, None, 12, 17, "ERROR", None, None, {"svc": "a"}, None, None),
+            (1, "scope-a", None, None, None, "orphan", {"tool": "t"}, None, None, None),
+        ],
+        "res_idx int, scope_name string, time_unix_nano long, "
+        "severity_number int, severity_text string, body string, "
+        "attrs map<string,string>, res_attrs map<string,string>, "
+        "trace_id string, span_id string",
+    )
+    write_otlp_json_logs(logs, str(tmp_path / "logs"), res_attrs_col="res_attrs")
+    assert _canonical_lines(tmp_path / "logs") == GOLDEN_LOG_LINES
+
+    spans = spark.createDataFrame(
+        [
+            (0, "scope-t", "ab" * 16, "01" * 8, "02" * 8, "op-a", 2, 21, 29, 1,
+             {"conv": "c1"}, [(21, "span.start"), (29, "span.end")],
+             [("ab" * 16, "02" * 8)]),
+            (0, None, "cd" * 16, "03" * 8, None, "op-b", 1, 22, None, None,
+             None, [], []),
+            (1, "scope-t", "ef" * 16, "04" * 8, None, "op-c", 4, 5, None, 0,
+             {"k": "v"}, [], []),
+        ],
+        "res_idx int, scope_name string, trace_id string, span_id string, "
+        "parent_span_id string, name string, kind int, "
+        "start_time_unix_nano long, end_time_unix_nano long, status_code int, "
+        "attrs map<string,string>, "
+        "events array<struct<time_unix_nano:long,name:string>>, "
+        "links array<struct<trace_id:string,span_id:string>>",
+    )
+    write_otlp_json_spans(spans, str(tmp_path / "spans"))
+    assert _canonical_lines(tmp_path / "spans") == GOLDEN_SPAN_LINES
+
+    metrics = spark.createDataFrame(
+        [
+            (0, "scope-m", "reqs", "1", "sum", 2, True, 31, 41, None, None, None,
+             {"h": "a"}),
+            (0, "scope-m", "reqs", "1", "sum", 2, True, 32, 42, None, None, None,
+             {"h": "b"}),
+            (1, None, "lat", "ms", "histogram", 1, None, 33, None, 3, "1,2", "0.5", {}),
+        ],
+        "res_idx int, scope_name string, metric_name string, metric_unit string, "
+        "metric_type string, temporality int, is_monotonic boolean, "
+        "time_unix_nano long, value_int long, count long, bucket_counts string, "
+        "explicit_bounds string, attrs map<string,string>",
+    )
+    write_otlp_json_metrics(metrics, str(tmp_path / "metrics"))
+    assert _canonical_lines(tmp_path / "metrics") == GOLDEN_METRIC_LINES

@@ -73,14 +73,18 @@ def test_pb_spark_reader(spark, tmp_path):
     (d / "b.pb").write_bytes(encode_export_logs_request(SAMPLE[:1]))
     (d / "bad.pb").write_bytes(b"\xff\xff\xff\xff\xff\xff")  # malformed
     (d / "ignored.txt").write_bytes(b"not a capture")
+    # well-formed wire, but values that do not fit their int / long columns
+    (d / "big_sev.pb").write_bytes(encode_export_logs_request([{"severity_number": 2**40}]))
+    (d / "big_ts.pb").write_bytes(encode_export_logs_request([{"time_unix_nano": 2**64 - 1}]))
 
     df = read_pb_logs(spark, str(d))
     rows = df.collect()
     good = [r for r in rows if r["res_idx"] >= 0]
     bad = [r for r in rows if r["res_idx"] == -1]
     assert len(good) == 4  # 3 from a.pb + 1 from b.pb
-    assert len(bad) == 1 and "__decode_error__" in bad[0]["body"]
-    assert bad[0]["path"].endswith("bad.pb")
+    assert len(bad) == 3  # one row per quarantined file
+    assert sorted(r["path"].rsplit("/", 1)[1] for r in bad) == ["bad.pb", "big_sev.pb", "big_ts.pb"]
+    assert all("__decode_error__" in r["body"] for r in bad)
     # typed columns survive the Arrow transfer
     infos = [r for r in good if r["severity_text"] == "INFO"]
     assert len(infos) == 2
@@ -559,3 +563,84 @@ def test_pb_metrics_spark_reader(spark, tmp_path):
     bad = [r for r in rows if r["res_idx"] == -1]
     assert {r["metric_type"] for r in good} == {"gauge", "sum", "histogram"}
     assert len(bad) == 1 and "__decode_error__" in bad[0]["metric_name"]
+
+
+GOLDEN_SHA256 = {
+    "logs": "4f49d71b8aeef52dbdfd46f8f2d2b862d3a68f81749b5cc881514071ce3b7ea1",
+    "trace": "b1d15abbe14ec82b26dfa30d0ba2d7d911d7c6753398fa6b8434e4075ead9045",
+    "metrics": "8988981d15950b5eb38a607fcfce03843aa3152f7ec6dce496bf5faf0c41b5aa",
+}
+
+
+def test_pb_encoders_golden_bytes():
+    """The three encoders' exact bytes over fixed fixtures: one scope per
+    resource, all five metric families, record attrs, span events and
+    links, and both id kinds (16-byte trace ids, 8-byte span ids). A
+    refactor of the envelope writer must leave these bytes unchanged."""
+    import hashlib
+
+    from otel_arrow_adapter_spark.sources import (
+        encode_export_logs_request,
+        encode_export_metrics_request,
+        encode_export_trace_request,
+    )
+
+    encoded = {
+        "logs": encode_export_logs_request(SAMPLE),
+        "trace": encode_export_trace_request(SPAN_SAMPLE),
+        "metrics": encode_export_metrics_request(METRIC_SAMPLE + EXP_HIST_SAMPLE),
+    }
+    assert {k: hashlib.sha256(v).hexdigest() for k, v in encoded.items()} == GOLDEN_SHA256
+
+
+def test_pb_encoders_keep_scope_and_metric_identity():
+    """Records of one resource keep their own scope (a, b, none) through
+    encode∘decode, metrics included, and points of one metric name that
+    differ in unit, temporality or monotonic flag keep their own values."""
+    from otel_arrow_adapter_spark.sources import (
+        decode_export_logs_request,
+        decode_export_metrics_request,
+        decode_export_trace_request,
+        encode_export_logs_request,
+        encode_export_metrics_request,
+        encode_export_trace_request,
+    )
+
+    scopes = ["a", "b", None, "a"]
+    logs = decode_export_logs_request(encode_export_logs_request(
+        [{"res_idx": 0, "scope_name": s, "body": str(i)} for i, s in enumerate(scopes)]
+    ))
+    assert [(r["body"], r["scope_name"]) for r in logs] == [
+        (str(i), s) for i, s in enumerate(scopes)
+    ]
+    spans = decode_export_trace_request(encode_export_trace_request(
+        [{"res_idx": 0, "scope_name": s, "name": str(i)} for i, s in enumerate(scopes)]
+    ))
+    assert [(r["name"], r["scope_name"]) for r in spans] == [
+        (str(i), s) for i, s in enumerate(scopes)
+    ]
+
+    points = [
+        {"scope_name": "m", "metric_name": "reqs", "metric_type": "sum",
+         "metric_unit": "1", "temporality": 2, "is_monotonic": True, "value_int": 1},
+        {"scope_name": "m", "metric_name": "reqs", "metric_type": "sum",
+         "metric_unit": "ms", "temporality": 2, "is_monotonic": True, "value_int": 2},
+        {"scope_name": "m", "metric_name": "reqs", "metric_type": "sum",
+         "metric_unit": "1", "temporality": 1, "is_monotonic": True, "value_int": 3},
+        {"scope_name": "m", "metric_name": "reqs", "metric_type": "sum",
+         "metric_unit": "1", "temporality": 2, "is_monotonic": False, "value_int": 4},
+        {"scope_name": None, "metric_name": "reqs", "metric_type": "sum",
+         "metric_unit": "1", "temporality": 2, "is_monotonic": True, "value_int": 5},
+    ]
+    rows = decode_export_metrics_request(encode_export_metrics_request(points))
+    got = sorted(
+        (r["value_int"], r["scope_name"], r["metric_unit"], r["temporality"], r["is_monotonic"])
+        for r in rows
+    )
+    assert got == [
+        (1, "m", "1", 2, True),
+        (2, "m", "ms", 2, True),
+        (3, "m", "1", 1, True),
+        (4, "m", "1", 2, None),  # an unset flag is absent on the wire
+        (5, None, "1", 2, True),
+    ]

@@ -25,7 +25,7 @@ def value_hash(df) -> str:
 
 
 def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None) -> int:
-    spark = get_spark(app_name="determinism-check", cores=8, shuffle_partitions=8)
+    spark = get_spark(app_name="determinism-check")
     bad = []
     for name, fn in entrymod.queries().items():
         if only and name not in only:

@@ -41,7 +41,7 @@ def norm_rows(cols, rows, ndigits=6):
 
 
 def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None):
-    spark = get_spark(app_name="oracle-check", cores=8, shuffle_partitions=8)
+    spark = get_spark(app_name="oracle-check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
