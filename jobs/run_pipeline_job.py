@@ -15,7 +15,11 @@
 Master/memory/executors come from spark-submit (cluster mode); nothing in
 the job pins local mode. spark-submit starts the driver JVM before any
 Python runs, so the driver's JIT thresholds
-(``session.DRIVER_JIT_OPTIONS``) are passed there, as above. The same
+(``session.DRIVER_JIT_OPTIONS``) are passed there, as above. The Parquet
+timestamp type (``session.PARQUET_TIMESTAMP_TYPE``, INT64 microseconds) is
+a runtime SQL conf, so the job sets it on its own session builder and
+needs no ``--conf``; without it the routed ``ts`` column would be INT96,
+which has no delta encoding. The same
 module runs the sandbox bench via
 ``otel_arrow_adapter_spark.session.get_spark`` instead — see bench.py.
 
@@ -51,7 +55,13 @@ def main() -> None:
                     "payload-level suppression (rebuildable text stored as null)")
     args = ap.parse_args()
 
-    spark = SparkSession.builder.appName("otel-arrow-adapter-spark-pipeline").getOrCreate()
+    from otel_arrow_adapter_spark.session import PARQUET_TIMESTAMP_TYPE
+
+    spark = (
+        SparkSession.builder.appName("otel-arrow-adapter-spark-pipeline")
+        .config("spark.sql.parquet.outputTimestampType", PARQUET_TIMESTAMP_TYPE)
+        .getOrCreate()
+    )
 
     from otel_arrow_adapter_spark.datagen import synthesize_tool_catalog
     from otel_arrow_adapter_spark.plans import run_pipeline

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 
 SINKS = ("logs", "metrics", "traces", "quarantine")
@@ -271,6 +271,22 @@ def restore_text(df: DataFrame) -> DataFrame:
     return df.withColumn("text", F.coalesce(F.col("text"), rebuild_text()))
 
 
+def _routed_writer(df: DataFrame, codec: str = "zstd") -> DataFrameWriter:
+    """The routed table's physical format, shared by ``write_routed`` and
+    ``compact_routed`` so a compaction keeps it: ``codec``-compressed
+    Parquet v2 data pages. v1 pages (Spark's default) store values only as
+    dictionary or PLAIN; on v2 pages parquet-mr falls back from a
+    dictionary that does not pay to DELTA_BINARY_PACKED for int32/int64
+    columns and to DELTA_BYTE_ARRAY for strings. The sort keys make ``ts``
+    and ``log_ts_us`` rise within each conversation, so both delta-encode:
+    the reference's delta encoding of sorted ids and timestamps (SURVEY.md
+    E1). ``ts`` gets it only as INT64 microseconds, which
+    ``session.get_spark`` sets; Spark's default INT96 has no delta
+    encoding, and ``spark.sql.parquet.outputTimestampType`` is read from the
+    session's SQL conf, never from a write option."""
+    return df.write.option("compression", codec).option("parquet.writer.version", "v2")
+
+
 def write_routed(
     labeled: DataFrame,
     out_dir: str,
@@ -283,7 +299,9 @@ def write_routed(
     bloom_cols: dict[str, int] | None = None,
 ) -> None:
     """One sorted dynamic-partition write for all sinks (S3 analog:
-    IPC+ZSTD+dict-deltas -> Parquet dictionary pages + zstd). Each sink
+    IPC+ZSTD+dict-deltas -> Parquet v2 pages + zstd: dictionary pages for
+    low-cardinality columns, delta pages for the rising ``ts`` and
+    ``log_ts_us``, see ``_routed_writer``). Each sink
     gets its own sort keys (``SORT_STRATEGIES[sort_strategy]``) inside the
     single pass. ``extra_partition_cols`` prepend layout partitions (the
     resumable pipeline passes ``bucket``); partitionOverwriteMode=dynamic
@@ -323,9 +341,8 @@ def write_routed(
         slim, SORT_STRATEGIES[sort_strategy]
     )
     writer = (
-        slim.sortWithinPartitions(*sort_cols)
-        .write.mode(mode)
-        .option("compression", codec)
+        _routed_writer(slim.sortWithinPartitions(*sort_cols), codec)
+        .mode(mode)
         .option("partitionOverwriteMode", "dynamic")
     )
     for c, ndv in (bloom_cols or {}).items():
@@ -409,8 +426,9 @@ def compact_routed(
     Streaming micro-batches and resumable dynamic-partition writes fragment
     each sink into many small files; at 100 TB that tanks scan throughput
     (per-file open cost) and wrecks row-group compression. Rewrite each
-    sink partition into ceil(bytes / target) zstd files, restoring the
-    sink's sort-for-compression order inside each output file. The driver
+    sink partition into ceil(bytes / target) files in the routed format
+    (``_routed_writer``: zstd, v2 delta pages), restoring the sink's
+    sort-for-compression order inside each output file. The driver
     loop is over the 4 sinks; every rewrite is a distributed job. Returns
     {sink: (files_before, files_after)} so callers can ledger the win.
     Production target is Iceberg's own metadata-driven rewrite; this
@@ -447,13 +465,8 @@ def compact_routed(
         df = spark.read.parquet(d)
         keys = [c for c in SORT_STRATEGIES[sort_strategy][sink] if c in df.columns]
         dest = f"{out_dir}/{subdir}_compacted/sink={sink}"
-        (
-            df.repartition(n)
-            .sortWithinPartitions(*keys)
-            .write.mode("overwrite")
-            .option("compression", "zstd")
-            .parquet(dest)
-        )
+        sorted_sink = df.repartition(n).sortWithinPartitions(*keys)
+        _routed_writer(sorted_sink).mode("overwrite").parquet(dest)
         after = len(parquet_sizes(dest))
         result[sink] = (len(files), after)
     return result

@@ -18,7 +18,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="oaas-tests", cores=8, shuffle_partitions=8)
+    s = get_spark(app_name="oaas-tests")
     yield s
 
 

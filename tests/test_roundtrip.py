@@ -318,6 +318,51 @@ def test_compact_routed_under_file_uri(spark, transcripts, small_catalog, tmp_pa
         assert a.count() == b.count()
 
 
+def test_routed_format_delta_encodes_timestamps(spark, synth_transcripts, small_catalog, tmp_path):
+    """The routed table and its compaction are Parquet v2 pages with ``ts``
+    as INT64 TIMESTAMP(MICROS, UTC), so the sorted ``ts`` and ``log_ts_us``
+    columns are DELTA_BINARY_PACKED (INT96 on v1 pages had no delta
+    encoding), and every column reads back equal to the written frame."""
+    import glob
+    import json
+
+    import pyarrow.parquet as pq
+
+    from otel_arrow_adapter_spark.operators.route import _DERIVED, compact_routed, write_routed
+    from otel_arrow_adapter_spark.plans import build_labeled
+
+    assert dict(synth_transcripts.dtypes)["ts"] == "timestamp"
+    labeled = build_labeled(synth_transcripts, small_catalog)
+    out = str(tmp_path / "out_format")
+    write_routed(labeled, out)
+    compact_routed(spark, out, target_mb=512)
+
+    for sub in ("routed", "routed_compacted"):
+        files = sorted(glob.glob(f"{out}/{sub}/sink=*/*.parquet"))
+        assert any("/sink=logs/" in f for f in files), sub
+        for f in files:
+            md = pq.ParquetFile(f).metadata
+            names = [md.schema.column(i).name for i in range(md.num_columns)]
+            col = md.schema.column(names.index("ts"))
+            assert col.physical_type == "INT64", (f, col.physical_type)
+            logical = json.loads(col.logical_type.to_json())
+            assert logical["Type"] == "Timestamp", (f, logical)
+            assert logical["timeUnit"] == "microseconds", (f, logical)
+            assert logical["isAdjustedToUTC"] is True, (f, logical)
+            delta = ["ts"] + (["log_ts_us"] if "/sink=logs/" in f else [])
+            for rg in range(md.num_row_groups):
+                for c in delta:
+                    enc = md.row_group(rg).column(names.index(c)).encodings
+                    assert "DELTA_BINARY_PACKED" in enc, (f, c, enc)
+
+    written = labeled.drop(*[c for c in _DERIVED if c in labeled.columns])
+    for sub in ("routed", "routed_compacted"):
+        back = spark.read.parquet(f"{out}/{sub}").select(*written.columns)
+        assert dict(back.dtypes) == dict(written.dtypes), sub
+        assert written.exceptAll(back).count() == 0, sub
+        assert back.exceptAll(written).count() == 0, sub
+
+
 def test_compact_routed_rejects_bucketed_run(spark, transcripts, small_catalog, tmp_path):
     """A bucketed run's routed table (bucket=*/sink=*) is refused loudly
     instead of compacting nothing."""
