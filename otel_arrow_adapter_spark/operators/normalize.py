@@ -5,12 +5,16 @@ The reference assigns a canonical small-int ID per distinct
 single pass (/root/reference/pkg/otel/logs/arrow/optimizer.go:83-99, hashes
 in pkg/otel/common/otlp/ids.go). Two Spark-native strategies:
 
-- ``mode="dense"``: distinct over the (tiny) dimension -> windowless rank
-  of the distinct set (:func:`ranked_dim`) -> broadcast-join back.
+- ``mode="dense"``: ONE dimension pass for both ids, as the reference
+  gives a record both ids in one walk: one aggregation collects the
+  sorted distinct (resource, scope) keys, each key's res_id / scope_id is
+  its value's rank among the distinct resource / scope values (the order
+  of :func:`ranked_dim`), and one null-safe broadcast join attaches both.
   Deterministic small ints (ordered by value, not first-seen — first-seen
   order is batch-order-dependent and meaningless under distributed
-  execution). Scale note: the rank sorts the *distinct* values only (~50
-  tools x 4 roles) in one task, O(dims), never O(rows).
+  execution). Scale note: the aggregate ships only distinct keys (~50
+  tools x 4 roles) to one task, O(dims), never O(rows); the fact side
+  pays one O(1) hash probe per row.
 - ``mode="hash"``: xxhash64 content hash, the ids.go approach — no shuffle
   at all, ideal at 10^12 rows; IDs are stable but not dense.
 """
@@ -86,23 +90,38 @@ def assign_surrogate_ids(
             "scope_id", F.xxhash64(*[F.coalesce(F.col(c), F.lit("")) for c in scope_cols])
         )
 
-    out = df
-    for id_name, cols in (("res_id", resource_cols), ("scope_id", scope_cols)):
-        dim = ranked_dim(df, cols, id_name)
-        # null-safe join keys: the null dim value IS a resource (the
-        # reference hashes the empty resource to a real ID, ids.go) — a
-        # plain equi-join would leave its rows without a surrogate.
-        dim = dim.select(
-            *[F.col(c).alias(f"__dim_{c}") for c in cols], id_name
+    # One aggregation collects the distinct (resource, scope) keys; a key's
+    # id in each dimension is its value's 1-based position among that
+    # dimension's sorted distinct values (ranked_dim's order, null fields
+    # first), worked out on the one-row side.
+    keys = list(dict.fromkeys(resource_cols + scope_cols))
+    ids = {"res_id": resource_cols, "scope_id": scope_cols}
+
+    def proj(s, cols):
+        return F.struct(*[s[c].alias(c) for c in cols])
+
+    def ranks(cols):
+        return F.sort_array(F.array_distinct(F.transform("_k", lambda s: proj(s, cols))))
+
+    dim = (
+        df.agg(F.collect_set(F.struct(*keys)).alias("_k"))
+        .select(
+            F.explode("_k").alias("_s"),
+            *[ranks(cols).alias(f"_{n}") for n, cols in ids.items()],
         )
-        cond = None
-        for c in cols:
-            e = F.col(c).eqNullSafe(F.col(f"__dim_{c}"))
-            cond = e if cond is None else cond & e
-        out = out.join(F.broadcast(dim), on=cond, how="left").drop(
-            *[f"__dim_{c}" for c in cols]
+        .select(
+            *[F.col(f"_s.{c}").alias(f"__dim_{c}") for c in keys],
+            *[F.array_position(f"_{n}", proj(F.col("_s"), cols)).alias(n) for n, cols in ids.items()],
         )
-    return out
+    )
+    # null-safe join keys: the null dim value IS a resource (the reference
+    # hashes the empty resource to a real ID, ids.go) — a plain equi-join
+    # would leave its rows without a surrogate.
+    cond = None
+    for c in keys:
+        e = F.col(c).eqNullSafe(F.col(f"__dim_{c}"))
+        cond = e if cond is None else cond & e
+    return df.join(F.broadcast(dim), on=cond, how="left").drop(*[f"__dim_{c}" for c in keys])
 
 
 def stable_turn_order(df: DataFrame) -> DataFrame:

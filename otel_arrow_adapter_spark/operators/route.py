@@ -271,9 +271,10 @@ def restore_text(df: DataFrame) -> DataFrame:
     return df.withColumn("text", F.coalesce(F.col("text"), rebuild_text()))
 
 
-def _routed_writer(df: DataFrame, codec: str = "zstd") -> DataFrameWriter:
-    """The routed table's physical format, shared by ``write_routed`` and
-    ``compact_routed`` so a compaction keeps it: ``codec``-compressed
+def routed_write_options(codec: str = "zstd") -> dict[str, str]:
+    """The routed table's physical format, shared by ``write_routed``,
+    ``compact_routed`` (so a compaction keeps it) and the streaming sink
+    (``streaming.stream.start_routed_stream``): ``codec``-compressed
     Parquet v2 data pages. v1 pages (Spark's default) store values only as
     dictionary or PLAIN; on v2 pages parquet-mr falls back from a
     dictionary that does not pay to DELTA_BINARY_PACKED for int32/int64
@@ -284,7 +285,12 @@ def _routed_writer(df: DataFrame, codec: str = "zstd") -> DataFrameWriter:
     ``session.get_spark`` sets; Spark's default INT96 has no delta
     encoding, and ``spark.sql.parquet.outputTimestampType`` is read from the
     session's SQL conf, never from a write option."""
-    return df.write.option("compression", codec).option("parquet.writer.version", "v2")
+    return {"compression": codec, "parquet.writer.version": "v2"}
+
+
+def _routed_writer(df: DataFrame, codec: str = "zstd") -> DataFrameWriter:
+    """A batch writer in the routed format (``routed_write_options``)."""
+    return df.write.options(**routed_write_options(codec))
 
 
 def write_routed(

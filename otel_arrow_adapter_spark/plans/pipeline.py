@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.parse import parse_turns
 from ..operators.parse_arrow import parse_turns_arrow
@@ -89,7 +90,16 @@ def run_pipeline(
     ``suppress_text`` defaults ON here: with the shared_native sort keys
     the rebuild-guard compute is fully paid back by the ~35% smaller
     routed output (measured in BENCH/BASELINE.md, both configs), so the
-    pipeline default wins on bytes and ties on throughput."""
+    pipeline default wins on bytes and ties on throughput.
+
+    The routed and ``sink_counts`` reads name their schemas (the columns
+    the counts tail and the bucket stats use, typed from ``transcripts``),
+    so neither runs a Parquet footer job to infer one."""
+    routed_schema = T.StructType(
+        [T.StructField(f.name, f.dataType) for f in transcripts.schema if f.name in ("conv_id", "ts")]
+        + [T.StructField("sink", T.StringType())]
+        + ([T.StructField("bucket", T.IntegerType())] if n_buckets > 0 else [])
+    )
     if n_buckets <= 0:
         labeled = build_labeled(transcripts, catalog, id_mode, salt_buckets, parse_impl)
         write_routed(labeled, out_dir, suppress_text=suppress_text)
@@ -119,7 +129,7 @@ def run_pipeline(
             # ledger metrics from ONE scan of the (columnar, pruned) output —
             # the ProducerStats analog (stats.go:26-43), per (bucket, sink)
             stats = (
-                spark.read.parquet(f"{out_dir}/routed")
+                spark.read.schema(routed_schema).parquet(f"{out_dir}/routed")
                 .where(F.col("bucket").isin([int(b) for b in todo]))
                 .groupBy("bucket", "sink")
                 .count()
@@ -138,10 +148,10 @@ def run_pipeline(
                 pstats.inc(f"{r['sink']}_batches_produced")
             pstats.flush_to_ledger(ledger)
 
-    routed = spark.read.parquet(f"{out_dir}/routed")
+    routed = spark.read.schema(routed_schema).parquet(f"{out_dir}/routed")
     counts = counts_from_routed(routed, run_id)
     counts.write.mode("overwrite").parquet(f"{out_dir}/sink_counts")
-    return spark.read.parquet(f"{out_dir}/sink_counts")
+    return spark.read.schema(counts.schema).parquet(f"{out_dir}/sink_counts")
 
 
 def pipeline_sinks(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:

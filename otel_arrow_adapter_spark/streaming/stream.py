@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.route import routed_write_options
+
 TRANSCRIPT_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),
@@ -104,16 +106,37 @@ def start_routed_stream(
     labeled: DataFrame, out_dir: str, checkpoint: str, trigger_sec: int = 5
 ):
     """Fan-out sink write with exactly-once checkpointing — the ack analog.
-    Dynamic partitionBy(sink) works in streaming parquet sinks."""
-    return (
+    Dynamic partitionBy(sink) works in streaming parquet sinks. Files are
+    written in the batch routed format (``route.routed_write_options``:
+    zstd on Parquet v2 pages, so ``ts`` delta-encodes); micro-batches are
+    not sorted (``compact_routed`` rewrites them sorted).
+
+    A file stream sink hands its writer only the ``compression`` option;
+    parquet-mr reads every other key from the Hadoop conf, which the sink
+    copies from the session's confs once, when ``start()`` builds it. So
+    the other routed options are session confs for that call only."""
+    opts = routed_write_options()
+    conf = labeled.sparkSession.conf
+    saved = {k: conf.get(k, None) for k in opts if k != "compression"}
+    writer = (
         labeled.writeStream.format("parquet")
+        .options(**opts)
         .option("path", f"{out_dir}/routed")
         .option("checkpointLocation", checkpoint)
         .partitionBy("sink")
         .trigger(processingTime=f"{trigger_sec} seconds")
         .outputMode("append")
-        .start()
     )
+    try:
+        for k in saved:
+            conf.set(k, opts[k])
+        return writer.start()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                conf.unset(k)
+            else:
+                conf.set(k, v)
 
 
 STATE_SCHEMA = "n_turns long, n_quarantine long, last_signal string, n_segments long"

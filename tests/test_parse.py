@@ -208,3 +208,42 @@ def test_distinct_sketch_merges(spark, transcripts):
     exact_glob = transcripts.select("conv_id").distinct().count()
     est_glob = glob.collect()[0].n_distinct_est
     assert abs(est_glob - exact_glob) <= max(1, 0.05 * exact_glob)
+
+
+def test_dense_surrogate_ids_pin_rank_values(spark):
+    """Dense ``res_id``/``scope_id`` are each dimension's ascending
+    NULLS-FIRST dense rank from 1 (the ``pipeline_delta_ids`` oracle's
+    ``dense_rank() OVER (ORDER BY tool ASC NULLS FIRST)``, and the same for
+    role), typed ``long``, nullable, appended after the input columns."""
+    from otel_arrow_adapter_spark.operators.normalize import assign_surrogate_ids
+
+    rows = [
+        (0, "t-b", "user"),
+        (1, "t-a", "tool"),
+        (2, None, "assistant"),
+        (3, "t-b", "assistant"),
+        (4, "t-b", None),
+        (5, "t-c", "user"),
+        (6, None, None),
+        (7, "t-a", "tool"),
+        (8, "t-b", "user"),
+    ]
+    df = spark.createDataFrame(rows, "k int, tool string, role string")
+    out = assign_surrogate_ids(df)
+
+    assert out.columns == ["k", "tool", "role", "res_id", "scope_id"]
+    fields = {f.name: f for f in out.schema.fields}
+    for c in ("res_id", "scope_id"):
+        assert fields[c].dataType.simpleString() == "bigint", c
+        assert fields[c].nullable, c
+
+    def dense_rank(values):
+        order = sorted(set(values), key=lambda v: (v is not None, v or ""))
+        return {v: i + 1 for i, v in enumerate(order)}
+
+    res = dense_rank([t for _, t, _ in rows])
+    scope = dense_rank([r for _, _, r in rows])
+    assert res == {None: 1, "t-a": 2, "t-b": 3, "t-c": 4}
+    assert scope == {None: 1, "assistant": 2, "tool": 3, "user": 4}
+    got = {r.k: (r.res_id, r.scope_id) for r in out.collect()}
+    assert got == {k: (res[t], scope[r]) for k, t, r in rows}

@@ -49,21 +49,57 @@ def test_enrich_is_broadcast_join(spark, transcripts, small_catalog):
     assert "SortMergeJoin" not in plan  # the catalog must never shuffle the fact side
 
 
+def _ancestors(plan: str, i: int) -> list[str]:
+    """The lines of the nodes above line ``i`` of a tree string: a node's
+    depth is the column of its ``+-`` or ``:-`` marker, the root's is -1,
+    and unmarked lines (a cached relation's inner plan) are no nodes."""
+    import re
+
+    lines = plan.splitlines()
+
+    def depth(j: int) -> int | None:
+        m = re.match(r"([ :]*)(\+- |:- )", lines[j])
+        return len(m.group(1)) if m else (-1 if j == 0 else None)
+
+    out, d = [], depth(i)
+    for j in range(i - 1, -1, -1):
+        dj = depth(j)
+        if dj is not None and dj < d:
+            out.append(lines[j])
+            d = dj
+    return out
+
+
 def test_surrogate_ids_broadcast_both_dims(spark, transcripts):
+    """Both dense ids come from ONE dimension: one aggregate over the
+    (tool, role) columns, attached to the fact side by a broadcast hash
+    join (never a shuffle join)."""
     from otel_arrow_adapter_spark.operators.normalize import assign_surrogate_ids
     from otel_arrow_adapter_spark.operators.parse import parse_turns
 
-    plan = _plan(assign_surrogate_ids(parse_turns(transcripts)))
-    assert plan.count("BroadcastHashJoin") >= 2  # res dim + scope dim
+    df = assign_surrogate_ids(parse_turns(transcripts))
+    plan = _plan(df)
     assert "SortMergeJoin" not in plan
+    lines = plan.splitlines()
+    for id_name in ("res_id", "scope_id"):
+        made = [i for i, line in enumerate(lines) if f" AS {id_name}#" in line]
+        assert made, (id_name, plan)
+        for i in made:
+            up = _ancestors(plan, i)
+            assert any("BroadcastExchange" in a for a in up), (id_name, up)
+            assert any("BroadcastHashJoin" in a for a in up), (id_name, up)
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    aggs = [line for line in optimized.splitlines() if line.lstrip(" :+-").startswith("Aggregate")]
+    assert len(aggs) == 1, aggs
+    assert "tool" in aggs[0] and "role" in aggs[0], aggs
 
 
 def test_pipeline_counts_one_full_width_scan(spark, small_catalog, tmp_path):
     """The flagship parse->enrich->route->count lineage must scan the full
     payload exactly once (fan-out via one labeled projection, not per-sink
-    reads). The two surrogate-id dimension builds may re-scan, but ONLY
-    column-pruned to their dim columns — at 100 TB those are narrow-column
-    scans, never full-width re-reads."""
+    reads). The one surrogate-id dimension build re-scans once, column-pruned
+    to its dim columns — at 100 TB that is a narrow-column scan, never a
+    full-width re-read."""
     import os
     import re
 
@@ -82,7 +118,40 @@ def test_pipeline_counts_one_full_width_scan(spark, small_catalog, tmp_path):
     full = [s for s in scans if "value" in s]  # the payload column
     narrow = [s for s in scans if "value" not in s]
     assert len(full) == 1, f"payload scanned {len(full)}x: {scans}"
-    assert all(s.count(",") <= 1 for s in narrow), f"dim scans not pruned: {narrow}"
+    assert len(narrow) == 1, f"dim input scanned {len(narrow)}x: {narrow}"
+    assert narrow[0].count(",") <= 1, f"dim scan not pruned: {narrow}"
+
+
+def test_pipeline_job_count(spark, small_catalog, tmp_path):
+    """One dense unbucketed ``run_pipeline`` call, counts collected, runs at
+    most 10 Spark jobs on the fixture: one dimension build for both ids and
+    no schema-inference reads in the counts tail. Every job costs driver
+    planning, scheduling and JIT time at benchmark scale."""
+    import os
+
+    from otel_arrow_adapter_spark.datagen import transcripts_from_events
+    from otel_arrow_adapter_spark.plans import run_pipeline
+
+    # an uncached copy: the session fixture caches the same lineage
+    os.makedirs(f"{tmp_path}/sf", exist_ok=True)
+    _copy_input(f"{SF}/events.parquet", f"{tmp_path}/sf/events.parquet")
+    sc = spark.sparkContext
+    group = "test-pipeline-job-count"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        counts = run_pipeline(
+            spark,
+            transcripts_from_events(spark, f"{tmp_path}/sf"),
+            small_catalog,
+            str(tmp_path / "out"),
+            resume=False,
+        )
+        rows = counts.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sum(r["n_rows"] for r in rows) == 1000
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 10, f"{len(jobs)} jobs"
 
 
 def test_no_unpartitioned_window_in_query_surface(spark):

@@ -34,6 +34,35 @@ def test_stream_routes_all_rows(spark, transcripts, small_catalog, tmp_path):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
+def test_stream_sink_writes_routed_format(spark, synth_transcripts, small_catalog, tmp_path):
+    """The streaming sink writes the batch routed format: zstd on Parquet
+    v2 pages, so its INT64 ``ts`` is DELTA_BINARY_PACKED, while the
+    session's own Parquet writes keep their settings."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "fmt_src")
+    out = str(tmp_path / "fmt_out")
+    synth_transcripts.repartition(2).write.parquet(src)
+    labeled = build_labeled(read_transcript_stream(spark, src), small_catalog, id_mode="hash")
+    q = start_routed_stream(labeled, out, str(tmp_path / "fmt_ckpt"), trigger_sec=1)
+    # the page version reaches the sink only: the session's conf is restored
+    assert spark.conf.get("parquet.writer.version", None) is None
+    q.processAllAvailable()
+    q.stop()
+
+    files = sorted(glob.glob(f"{out}/routed/sink=logs/*.parquet"))
+    assert files
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        names = [md.schema.column(i).name for i in range(md.num_columns)]
+        ts = md.row_group(0).column(names.index("ts"))
+        assert ts.physical_type == "INT64", (f, ts.physical_type)
+        assert "DELTA_BINARY_PACKED" in ts.encodings, (f, ts.encodings)
+        assert ts.compression == "ZSTD", (f, ts.compression)
+
+
 def test_stream_windowed_counts(spark, transcripts, tmp_path):
     src = str(tmp_path / "src2")
     transcripts.repartition(2).write.parquet(src)
