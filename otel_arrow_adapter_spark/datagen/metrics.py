@@ -10,13 +10,13 @@ fields drop out deterministically (the reference's randomly-missing-fields
 fuzz, /root/reference/pkg/datagen/logs.go:116-147).
 
 Shape discipline: children are generated as FLAT rows (explode) and nested
-back with sort_array(collect_list(...)). A first version built the nesting
-as one giant tree of array-transform lambdas — 300 rows planned/codegen'd
-in ~15 s; the flat+collect form plans in milliseconds and its tiny
-shuffles are free. Nesting via sort_array also makes the arrays canonical
-(leading sort field strictly increasing), so a decode that re-assembles
-them with sort_array reproduces the input bit-for-bit — the vPath-equality
-analog of assert.Equiv (/root/reference/pkg/otel/assert/equiv.go:107-157).
+back by the star-schema core's ``nest`` (operators/star.py) — the same
+sort_array(collect_list(...)) fold ``decode_metrics`` re-nests the encoded
+records with. A first version built the nesting as one giant tree of
+array-transform lambdas — 300 rows planned/codegen'd in ~15 s; the flat +
+collect form plans in milliseconds and its tiny shuffles are free. Nesting
+via sort_array also makes the arrays canonical (leading sort field strictly
+increasing), so the decode reproduces the input bit-for-bit.
 """
 
 from __future__ import annotations
@@ -24,17 +24,36 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.star import nest
+
 # Metric type tags (reference MetricType u8, metrics.go:41; values follow
 # the pmetric enum order loosely: gauge/sum collapse to "number" here).
 MT_NUMBER, MT_HISTOGRAM, MT_SUMMARY, MT_EXP_HISTOGRAM = 1, 2, 3, 4
 
 _EPOCH = 1_704_067_200_000_000  # 2024-01-01 UTC, µs
 
-EXEMPLARS_T = (
-    "array<struct<ts_us:bigint,int_value:bigint,double_value:double,"
-    "span_hex:string,trace_hex:string>>"
-)
-ATTRS_T = "array<struct<key:string,str:string>>"
+# nested dp-family array -> (metric type, dp struct fields in order)
+DP_FAMILIES = {
+    "number_dps": (
+        MT_NUMBER,
+        ("start_ts_us", "ts_us", "int_value", "double_value", "exemplars", "attrs"),
+    ),
+    "hist_dps": (
+        MT_HISTOGRAM,
+        ("start_ts_us", "ts_us", "count", "sum", "bucket_counts", "explicit_bounds",
+         "min", "max", "exemplars", "attrs"),
+    ),
+    "exp_hist_dps": (
+        MT_EXP_HISTOGRAM,
+        ("start_ts_us", "ts_us", "count", "sum", "scale", "zero_count", "positive_offset",
+         "positive_bucket_counts", "negative_offset", "negative_bucket_counts", "min", "max",
+         "exemplars", "attrs"),
+    ),
+    "summary_dps": (
+        MT_SUMMARY,
+        ("start_ts_us", "ts_us", "count", "sum", "quantile_values", "attrs"),
+    ),
+}
 
 
 def _attrs(h: Column, d: Column) -> Column:
@@ -146,141 +165,29 @@ def synthesize_metrics_nested(
         F.format_string("%016x", F.pmod(F.col("h") + e, F.lit(0xFFFF)) + 1).alias("span_hex"),
         F.format_string("%032x", F.pmod(F.col("h") + e, F.lit(0xFFFFF)) + 1).alias("trace_hex"),
     )
-    ex_arr = ex_rows.groupBy("gen_id", "d").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct("ts_us", "int_value", "double_value", "span_hex", "trace_hex")
-            )
-        ).alias("exemplars")
-    )
-    dp = dp.join(ex_arr, ["gen_id", "d"], "left").withColumn(
-        "exemplars", F.coalesce("exemplars", F.array().cast(EXEMPLARS_T))
-    )
-
-    # ---- nest each family ---------------------------------------------
-    number = (
-        dp.where(F.col("metric_type") == MT_NUMBER)
-        .groupBy("gen_id")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        "start_ts_us", "ts_us", "int_value", "double_value", "exemplars", "attrs"
-                    )
-                )
-            ).alias("number_dps")
-        )
-    )
-    hist = (
-        dp.where(F.col("metric_type") == MT_HISTOGRAM)
-        .groupBy("gen_id")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        "start_ts_us",
-                        "ts_us",
-                        "count",
-                        "sum",
-                        "bucket_counts",
-                        "explicit_bounds",
-                        "min",
-                        "max",
-                        "exemplars",
-                        "attrs",
-                    )
-                )
-            ).alias("hist_dps")
-        )
-    )
-    exp_hist = (
-        dp.where(F.col("metric_type") == MT_EXP_HISTOGRAM)
-        .groupBy("gen_id")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        "start_ts_us",
-                        "ts_us",
-                        "count",
-                        "sum",
-                        "scale",
-                        "zero_count",
-                        "positive_offset",
-                        "positive_bucket_counts",
-                        "negative_offset",
-                        "negative_bucket_counts",
-                        "min",
-                        "max",
-                        "exemplars",
-                        "attrs",
-                    )
-                )
-            ).alias("exp_hist_dps")
-        )
-    )
-    summary = (
-        dp.where(F.col("metric_type") == MT_SUMMARY)
-        .groupBy("gen_id")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct("start_ts_us", "ts_us", "count", "sum", "quantile_values", "attrs")
-                )
-            ).alias("summary_dps")
-        )
-    )
+    dp = nest(dp, ex_rows, "exemplars", on=("gen_id", "d"), by=("gen_id", "d"))
 
     h0 = F.col("h")
-    out = (
-        base.select(
-            F.col("id").alias("gen_id"),
-            F.pmod(h0, F.lit(5)).alias("res_id"),
-            F.pmod(h0, F.lit(3)).alias("scope_id"),
-            "metric_type",
-            F.format_string("metric_%d", F.pmod(F.col("id"), F.lit(20))).alias("name"),
-            F.when(
-                F.pmod(h0, F.lit(3)) != 0, F.format_string("desc %d", F.pmod(h0, F.lit(9)))
-            ).alias("description"),
-            F.element_at(
-                F.array(F.lit("ms"), F.lit("count"), F.lit("%")),
-                (F.pmod(h0, F.lit(3)) + 1).cast("int"),
-            ).alias("unit"),
-            (F.pmod(h0, F.lit(2)) + 1).cast("int").alias("aggregation_temporality"),
-            (F.pmod(h0, F.lit(2)) == 0).alias("is_monotonic"),
-        )
-        .join(number, "gen_id", "left")
-        .join(hist, "gen_id", "left")
-        .join(exp_hist, "gen_id", "left")
-        .join(summary, "gen_id", "left")
+    out = base.select(
+        F.col("id").alias("gen_id"),
+        F.pmod(h0, F.lit(5)).alias("res_id"),
+        F.pmod(h0, F.lit(3)).alias("scope_id"),
+        "metric_type",
+        F.format_string("metric_%d", F.pmod(F.col("id"), F.lit(20))).alias("name"),
+        F.when(
+            F.pmod(h0, F.lit(3)) != 0, F.format_string("desc %d", F.pmod(h0, F.lit(9)))
+        ).alias("description"),
+        F.element_at(
+            F.array(F.lit("ms"), F.lit("count"), F.lit("%")),
+            (F.pmod(h0, F.lit(3)) + 1).cast("int"),
+        ).alias("unit"),
+        (F.pmod(h0, F.lit(2)) + 1).cast("int").alias("aggregation_temporality"),
+        (F.pmod(h0, F.lit(2)) == 0).alias("is_monotonic"),
     )
-    ndp_t = (
-        "array<struct<start_ts_us:bigint,ts_us:bigint,int_value:bigint,double_value:double,"
-        f"exemplars:{EXEMPLARS_T},attrs:{ATTRS_T}>>"
-    )
-    hdp_t = (
-        "array<struct<start_ts_us:bigint,ts_us:bigint,count:bigint,sum:double,"
-        "bucket_counts:array<bigint>,explicit_bounds:array<double>,min:double,max:double,"
-        f"exemplars:{EXEMPLARS_T},attrs:{ATTRS_T}>>"
-    )
-    edp_t = (
-        "array<struct<start_ts_us:bigint,ts_us:bigint,count:bigint,sum:double,"
-        "scale:int,zero_count:bigint,positive_offset:int,"
-        "positive_bucket_counts:array<bigint>,negative_offset:int,"
-        "negative_bucket_counts:array<bigint>,min:double,max:double,"
-        f"exemplars:{EXEMPLARS_T},attrs:{ATTRS_T}>>"
-    )
-    sdp_t = (
-        "array<struct<start_ts_us:bigint,ts_us:bigint,count:bigint,sum:double,"
-        "quantile_values:array<struct<quantile:double,value:double>>,"
-        f"attrs:{ATTRS_T}>>"
-    )
-    return (
-        out.withColumn("number_dps", F.coalesce("number_dps", F.array().cast(ndp_t)))
-        .withColumn("hist_dps", F.coalesce("hist_dps", F.array().cast(hdp_t)))
-        .withColumn("exp_hist_dps", F.coalesce("exp_hist_dps", F.array().cast(edp_t)))
-        .withColumn("summary_dps", F.coalesce("summary_dps", F.array().cast(sdp_t)))
-    )
+    for family, (metric_type, fields) in DP_FAMILIES.items():
+        dps = dp.where(F.col("metric_type") == metric_type)
+        out = nest(out, dps, family, fields, on=("gen_id",), by=("gen_id",))
+    return out
 
 
 def synthesize_metrics_multivariate(

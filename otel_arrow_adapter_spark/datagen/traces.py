@@ -4,7 +4,8 @@ One row per span with events/links/attrs nested, mirroring the source
 shape the reference's producer walks (ResourceSpans ⊃ ScopeSpans ⊃ Span ⊃
 {Event, Link}, /root/reference/pkg/otel/traces/arrow/optimizer.go:75-113).
 Same construction discipline as datagen/metrics.py: seeded hash-of-id
-columns, children generated flat and nested with sort_array(collect_list)
+columns, children generated flat and nested by the star-schema core's
+``nest`` (operators/star.py) — the fold ``decode_traces`` re-nests with —
 so arrays are canonical and a decode reproduces the input exactly
 (validation_test.go round-trip analog).
 """
@@ -14,14 +15,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_EPOCH = 1_704_067_200_000_000  # µs
+from ..operators.star import nest
 
-EV_ATTRS_T = "array<struct<key:string,str:string>>"
-EVENTS_T = f"array<struct<ts_us:bigint,name:string,attrs:{EV_ATTRS_T}>>"
-LINKS_T = (
-    "array<struct<trace_hex:string,span_hex:string,trace_state:string,"
-    f"attrs:{EV_ATTRS_T}>>"
-)
+_EPOCH = 1_704_067_200_000_000  # µs
 
 
 def _kv(h: Column, mod3: int = 3, mod5: int = 5) -> Column:
@@ -76,9 +72,6 @@ def synthesize_traces_nested(
         ).alias("name"),
         _kv(F.col("h") + F.col("e")).alias("attrs"),
     )
-    ev_arr = ev_rows.groupBy("gen_id").agg(
-        F.sort_array(F.collect_list(F.struct("ts_us", "name", "attrs"))).alias("events")
-    )
 
     ln = base.where(F.col("n_links") > 0).select(
         F.col("id").alias("gen_id"),
@@ -98,32 +91,23 @@ def synthesize_traces_nested(
         ),
         _kv(F.col("h") + F.col("l") + 7).alias("attrs"),
     )
-    ln_arr = ln_rows.groupBy("gen_id").agg(
-        F.sort_array(
-            F.collect_list(F.struct("trace_hex", "span_hex", "trace_state", "attrs"))
-        ).alias("links")
-    )
 
-    return (
-        base.select(
-            F.col("id").alias("gen_id"),
-            F.pmod(h, F.lit(5)).alias("res_id"),
-            F.pmod(h, F.lit(3)).alias("scope_id"),
-            F.format_string("%032x", F.pmod(h, F.lit(0xFFFFFF)) + 1).alias("trace_hex"),
-            F.format_string("%016x", F.col("id") + 1).alias("span_hex"),
-            F.when(
-                F.pmod(h, F.lit(4)) != 0,
-                F.format_string("%016x", F.pmod(h, F.lit(n_spans)) + 1),
-            ).alias("parent_span_hex"),
-            F.format_string("op_%d", F.pmod(F.col("id"), F.lit(12))).alias("name"),
-            (F.pmod(h, F.lit(5)) + 1).cast("int").alias("kind"),
-            start.alias("start_ts_us"),
-            (F.pmod(h, F.lit(10_000)) + 1).alias("dur_ms"),
-            F.pmod(h, F.lit(3)).cast("int").alias("status_code"),
-            _kv(h + 13).alias("attrs"),
-        )
-        .join(ev_arr, "gen_id", "left")
-        .join(ln_arr, "gen_id", "left")
-        .withColumn("events", F.coalesce("events", F.array().cast(EVENTS_T)))
-        .withColumn("links", F.coalesce("links", F.array().cast(LINKS_T)))
+    spans = base.select(
+        F.col("id").alias("gen_id"),
+        F.pmod(h, F.lit(5)).alias("res_id"),
+        F.pmod(h, F.lit(3)).alias("scope_id"),
+        F.format_string("%032x", F.pmod(h, F.lit(0xFFFFFF)) + 1).alias("trace_hex"),
+        F.format_string("%016x", F.col("id") + 1).alias("span_hex"),
+        F.when(
+            F.pmod(h, F.lit(4)) != 0,
+            F.format_string("%016x", F.pmod(h, F.lit(n_spans)) + 1),
+        ).alias("parent_span_hex"),
+        F.format_string("op_%d", F.pmod(F.col("id"), F.lit(12))).alias("name"),
+        (F.pmod(h, F.lit(5)) + 1).cast("int").alias("kind"),
+        start.alias("start_ts_us"),
+        (F.pmod(h, F.lit(10_000)) + 1).alias("dur_ms"),
+        F.pmod(h, F.lit(3)).cast("int").alias("status_code"),
+        _kv(h + 13).alias("attrs"),
     )
+    spans = nest(spans, ev_rows, "events", on=("gen_id",), by=("gen_id",))
+    return nest(spans, ln_rows, "links", on=("gen_id",), by=("gen_id",))

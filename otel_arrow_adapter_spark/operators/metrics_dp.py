@@ -2,21 +2,19 @@
 
 The reference splits each metrics batch into a main METRICS record plus a
 family of related records keyed by surrogate ids — NumberDP, HistogramDP,
-SummaryDP, per-DP exemplars and attrs (registry:
-/root/reference/pkg/otel/common/arrow/related_data.go:108-211; schemas:
-metrics.go:33-47, number_data_point.go:36-47, histogram_dp.go:50-66,
-summary_dp.go:36, exemplar.go:36-44). This module re-expresses that split
-as pure DataFrame transforms:
+ExpHistogramDP, SummaryDP, per-DP exemplars and attrs (schemas: the
+reference's pkg/otel/metrics/arrow/metrics.go:33-47,
+number_data_point.go:36-47, histogram_dp.go:50-66, summary_dp.go:36,
+exemplar.go:36-44). This module re-expresses that split as pure DataFrame
+transforms over the shared star-schema core (``operators/star.py``: child
+explode, attrs melt, typed nest, surrogate ids):
 
 - ``encode_metrics``: nested metrics -> {record_name: flat DataFrame}.
-  IDs are NOT batch-order counters (meaningless under distributed
-  execution): the metric id derives from a (hash-bucket, in-bucket rank)
-  pair and every child id from (parent_id << 16 | position) — unique,
-  deterministic, and assigned without any global window.
-- ``decode_metrics``: the inverse — group children, re-nest, reproduce the
-  input (round-trip contract, validation_process.md:23-32). Child arrays
-  are re-assembled with sort_array; the generator emits them in canonical
-  order, so equality is exact (assert.Equiv analog).
+  Each dp record's fields are read from its nested struct type; only the
+  exemplar's hex ids become binary on the way.
+- ``decode_metrics``: the inverse — nest exemplars and attrs onto their
+  dp rows, then the dp families onto their metric, reproducing the input
+  (round-trip contract, validation_process.md:23-32).
 - ``histogram_rollup`` / ``summary_rollup`` / ``top_exemplars``: the
   HistogramDP / SummaryDP / Exemplar *computations* over raw number points
   (bucket counts with explicit bounds as array columns, exact quantile
@@ -34,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .star import assign_row_ids, explode_children, melt_attrs, nest, nest_attrs
+
 # O5 default sort-for-compression keys per related record.
 DP_SORT_KEYS = {
     "metrics": ["res_id", "scope_id", "metric_type", "name"],
@@ -50,32 +50,16 @@ DP_SORT_KEYS = {
     "summary_dp_attrs": ["key", "str", "parent_id"],
 }
 
-
-def assign_row_ids(
-    df: DataFrame, key_cols: tuple[str, ...], id_name: str = "id", n_buckets: int = 64
-) -> DataFrame:
-    """Deterministic unique row ids WITHOUT a global window.
-
-    The reference's ids are per-batch row counters (u16/u32 appended in
-    walk order, metrics.go:42); a distributed table has no batch order, so
-    id = (key-hash bucket << 32) | row_number-within-bucket. key_cols must
-    be row-unique for determinism across runs."""
-    b = F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets)).cast("long")
-    w = Window.partitionBy("_idb").orderBy(*key_cols)
-    return (
-        df.withColumn("_idb", b)
-        .withColumn(id_name, F.shiftleft(F.col("_idb"), 32) + F.row_number().over(w))
-        .drop("_idb")
-    )
-
-
-def _child_id(parent: Column, pos: Column) -> Column:
-    # parent id occupies <= 38 bits (64 buckets << 32 + rank); 16 bits of
-    # position below it keeps the child id unique in a long. ONLY valid for
-    # first-level children (parent = a main-record id) — chaining the shift
-    # again would push the bucket bits past bit 63 and collide; grandchildren
-    # use _grandchild_id.
-    return F.shiftleft(parent, 16) + pos
+# nested dp-family array -> its record; a dp's own children are its
+# ``exemplars`` (when the family has them) and ``attrs``
+DP_RECORDS = {
+    "number_dps": "number_dp",
+    "hist_dps": "hist_dp",
+    "exp_hist_dps": "exp_hist_dp",
+    "summary_dps": "summary_dp",
+}
+# exemplar trace linkage: hex string nested, binary in the record
+_EXEMPLAR_IDS = {"span_hex": "span_id", "trace_hex": "trace_id"}
 
 
 def _grandchild_id(parent: Column, pos: Column) -> Column:
@@ -87,263 +71,33 @@ def _grandchild_id(parent: Column, pos: Column) -> Column:
     return F.xxhash64(parent, pos)
 
 
-def _explode_dps(nested: DataFrame, family: str) -> DataFrame:
-    return nested.select(
-        F.col("id").alias("parent_id"), F.posexplode(family).alias("_pos", "dp")
-    ).withColumn("id", _child_id(F.col("parent_id"), F.col("_pos")))
-
-
-def _exemplar_record(dps: DataFrame) -> DataFrame:
-    return dps.select(
-        F.col("id").alias("parent_id"), F.posexplode("dp.exemplars").alias("_pos", "ex")
-    ).select(
-        _grandchild_id(F.col("parent_id"), F.col("_pos")).alias("id"),
-        "parent_id",
-        F.col("ex.ts_us").alias("ts_us"),
-        F.col("ex.int_value").alias("int_value"),
-        F.col("ex.double_value").alias("double_value"),
-        F.unhex(F.col("ex.span_hex")).alias("span_id"),
-        F.unhex(F.col("ex.trace_hex")).alias("trace_id"),
-    )
-
-
-def _attrs_record(dps: DataFrame) -> DataFrame:
-    """Per-DP attrs melt — same long shape as the main attrs record
-    (parent_id, key, type tag, str), attributes_16.go:41-51."""
-    return dps.select(F.col("id").alias("parent_id"), F.explode("dp.attrs").alias("a")).select(
-        "parent_id",
-        F.col("a.key").alias("key"),
-        F.lit(1).cast("tinyint").alias("type"),
-        F.col("a.str").alias("str"),
-    )
-
-
 def encode_metrics(nested: DataFrame, id_key: tuple[str, ...] = ("gen_id",)) -> dict[str, DataFrame]:
     """Nested metrics -> star schema of flat related records."""
+    binary = {h: F.unhex(h).alias(b) for h, b in _EXEMPLAR_IDS.items()}
     m = assign_row_ids(nested, id_key)
-    records: dict[str, DataFrame] = {}
-    records["metrics"] = m.select(
-        "id",
-        "res_id",
-        "scope_id",
-        "metric_type",
-        "name",
-        "description",
-        "unit",
-        "aggregation_temporality",
-        "is_monotonic",
-        *id_key,
-    )
-
-    ndp = _explode_dps(m, "number_dps")
-    records["number_dp"] = ndp.select(
-        "id",
-        "parent_id",
-        F.col("dp.start_ts_us").alias("start_ts_us"),
-        F.col("dp.ts_us").alias("ts_us"),
-        F.col("dp.int_value").alias("int_value"),
-        F.col("dp.double_value").alias("double_value"),
-    )
-    records["number_dp_exemplar"] = _exemplar_record(ndp)
-    records["number_dp_attrs"] = _attrs_record(ndp)
-
-    hdp = _explode_dps(m, "hist_dps")
-    records["hist_dp"] = hdp.select(
-        "id",
-        "parent_id",
-        F.col("dp.start_ts_us").alias("start_ts_us"),
-        F.col("dp.ts_us").alias("ts_us"),
-        F.col("dp.count").alias("count"),
-        F.col("dp.sum").alias("sum"),
-        F.col("dp.bucket_counts").alias("bucket_counts"),
-        F.col("dp.explicit_bounds").alias("explicit_bounds"),
-        F.col("dp.min").alias("min"),
-        F.col("dp.max").alias("max"),
-    )
-    records["hist_dp_exemplar"] = _exemplar_record(hdp)
-    records["hist_dp_attrs"] = _attrs_record(hdp)
-
-    edp = _explode_dps(m, "exp_hist_dps")
-    records["exp_hist_dp"] = edp.select(
-        "id",
-        "parent_id",
-        F.col("dp.start_ts_us").alias("start_ts_us"),
-        F.col("dp.ts_us").alias("ts_us"),
-        F.col("dp.count").alias("count"),
-        F.col("dp.sum").alias("sum"),
-        F.col("dp.scale").alias("scale"),
-        F.col("dp.zero_count").alias("zero_count"),
-        F.col("dp.positive_offset").alias("positive_offset"),
-        F.col("dp.positive_bucket_counts").alias("positive_bucket_counts"),
-        F.col("dp.negative_offset").alias("negative_offset"),
-        F.col("dp.negative_bucket_counts").alias("negative_bucket_counts"),
-        F.col("dp.min").alias("min"),
-        F.col("dp.max").alias("max"),
-    )
-    records["exp_hist_dp_exemplar"] = _exemplar_record(edp)
-    records["exp_hist_dp_attrs"] = _attrs_record(edp)
-
-    sdp = _explode_dps(m, "summary_dps")
-    records["summary_dp"] = sdp.select(
-        "id",
-        "parent_id",
-        F.col("dp.start_ts_us").alias("start_ts_us"),
-        F.col("dp.ts_us").alias("ts_us"),
-        F.col("dp.count").alias("count"),
-        F.col("dp.sum").alias("sum"),
-        F.col("dp.quantile_values").alias("quantile_values"),
-    )
-    records["summary_dp_attrs"] = _attrs_record(sdp)
+    main = [c for c in nested.columns if c not in (*DP_RECORDS, *id_key)]
+    records = {"metrics": m.select("id", *main, *id_key)}
+    for family, name in DP_RECORDS.items():
+        dps = explode_children(m, family)
+        records[name] = dps.drop("exemplars", "attrs")
+        if "exemplars" in dps.columns:
+            ex = explode_children(dps, "exemplars", _grandchild_id)
+            records[f"{name}_exemplar"] = ex.select(*[binary.get(c, c) for c in ex.columns])
+        records[f"{name}_attrs"] = melt_attrs(dps)
     return records
-
-
-def _nest_children(dps: DataFrame, exemplars: DataFrame | None, attrs: DataFrame) -> DataFrame:
-    """Re-attach exemplars/attrs arrays to their dp rows (J3 parent wiring,
-    left joins on surrogate keys — the decode-side index lookup,
-    /root/reference/pkg/otel/metrics/otlp/related_data.go:84-156)."""
-    out = dps
-    if exemplars is not None:
-        ex = exemplars.groupBy("parent_id").agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        "ts_us",
-                        "int_value",
-                        "double_value",
-                        F.lower(F.hex("span_id")).alias("span_hex"),
-                        F.lower(F.hex("trace_id")).alias("trace_hex"),
-                    )
-                )
-            ).alias("exemplars")
-        )
-        out = out.join(ex, out["id"] == ex["parent_id"], "left").drop(ex["parent_id"])
-        out = out.withColumn(
-            "exemplars",
-            F.coalesce(
-                "exemplars",
-                F.array().cast(
-                    "array<struct<ts_us:bigint,int_value:bigint,double_value:double,"
-                    "span_hex:string,trace_hex:string>>"
-                ),
-            ),
-        )
-    at = attrs.groupBy("parent_id").agg(
-        F.sort_array(F.collect_list(F.struct("key", "str"))).alias("attrs")
-    )
-    out = out.join(at, out["id"] == at["parent_id"], "left").drop(at["parent_id"])
-    return out.withColumn(
-        "attrs", F.coalesce("attrs", F.array().cast("array<struct<key:string,str:string>>"))
-    )
 
 
 def decode_metrics(records: dict[str, DataFrame]) -> DataFrame:
     """Star schema -> nested metrics (inverse of encode_metrics)."""
-    ndp = _nest_children(
-        records["number_dp"], records["number_dp_exemplar"], records["number_dp_attrs"]
-    )
-    number = ndp.groupBy("parent_id").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    "start_ts_us", "ts_us", "int_value", "double_value", "exemplars", "attrs"
-                )
-            )
-        ).alias("number_dps")
-    )
-    hdp = _nest_children(
-        records["hist_dp"], records["hist_dp_exemplar"], records["hist_dp_attrs"]
-    )
-    hist = hdp.groupBy("parent_id").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    "start_ts_us",
-                    "ts_us",
-                    "count",
-                    "sum",
-                    "bucket_counts",
-                    "explicit_bounds",
-                    "min",
-                    "max",
-                    "exemplars",
-                    "attrs",
-                )
-            )
-        ).alias("hist_dps")
-    )
-    edp = _nest_children(
-        records["exp_hist_dp"], records["exp_hist_dp_exemplar"], records["exp_hist_dp_attrs"]
-    )
-    exp_hist = edp.groupBy("parent_id").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    "start_ts_us",
-                    "ts_us",
-                    "count",
-                    "sum",
-                    "scale",
-                    "zero_count",
-                    "positive_offset",
-                    "positive_bucket_counts",
-                    "negative_offset",
-                    "negative_bucket_counts",
-                    "min",
-                    "max",
-                    "exemplars",
-                    "attrs",
-                )
-            )
-        ).alias("exp_hist_dps")
-    )
-    sdp = _nest_children(records["summary_dp"], None, records["summary_dp_attrs"])
-    summ = sdp.groupBy("parent_id").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct("start_ts_us", "ts_us", "count", "sum", "quantile_values", "attrs")
-            )
-        ).alias("summary_dps")
-    )
-    m = records["metrics"]
-    out = m
-    for child, cname in (
-        (number, "number_dps"),
-        (hist, "hist_dps"),
-        (exp_hist, "exp_hist_dps"),
-        (summ, "summary_dps"),
-    ):
-        out = out.join(child, out["id"] == child["parent_id"], "left").drop("parent_id")
-    # absent family -> empty array (matches the generator's empty arrays)
-    ndp_t = (
-        "array<struct<start_ts_us:bigint,ts_us:bigint,int_value:bigint,double_value:double,"
-        "exemplars:array<struct<ts_us:bigint,int_value:bigint,double_value:double,"
-        "span_hex:string,trace_hex:string>>,attrs:array<struct<key:string,str:string>>>>"
-    )
-    hdp_t = (
-        "array<struct<start_ts_us:bigint,ts_us:bigint,count:bigint,sum:double,"
-        "bucket_counts:array<bigint>,explicit_bounds:array<double>,min:double,max:double,"
-        "exemplars:array<struct<ts_us:bigint,int_value:bigint,double_value:double,"
-        "span_hex:string,trace_hex:string>>,attrs:array<struct<key:string,str:string>>>>"
-    )
-    edp_t = (
-        "array<struct<start_ts_us:bigint,ts_us:bigint,count:bigint,sum:double,"
-        "scale:int,zero_count:bigint,positive_offset:int,"
-        "positive_bucket_counts:array<bigint>,negative_offset:int,"
-        "negative_bucket_counts:array<bigint>,min:double,max:double,"
-        "exemplars:array<struct<ts_us:bigint,int_value:bigint,double_value:double,"
-        "span_hex:string,trace_hex:string>>,attrs:array<struct<key:string,str:string>>>>"
-    )
-    sdp_t = (
-        "array<struct<start_ts_us:bigint,ts_us:bigint,count:bigint,sum:double,"
-        "quantile_values:array<struct<quantile:double,value:double>>,"
-        "attrs:array<struct<key:string,str:string>>>>"
-    )
-    return (
-        out.withColumn("number_dps", F.coalesce("number_dps", F.array().cast(ndp_t)))
-        .withColumn("hist_dps", F.coalesce("hist_dps", F.array().cast(hdp_t)))
-        .withColumn("exp_hist_dps", F.coalesce("exp_hist_dps", F.array().cast(edp_t)))
-        .withColumn("summary_dps", F.coalesce("summary_dps", F.array().cast(sdp_t)))
-    )
+    hex_of = {b: F.lower(F.hex(b)).alias(h) for h, b in _EXEMPLAR_IDS.items()}
+    out = records["metrics"]
+    for family, name in DP_RECORDS.items():
+        dps = records[name]
+        if f"{name}_exemplar" in records:
+            ex = records[f"{name}_exemplar"]
+            dps = nest(dps, ex.select(*[hex_of.get(c, c) for c in ex.columns]), "exemplars")
+        out = nest(out, nest_attrs(dps, records[f"{name}_attrs"]), family)
+    return out
 
 
 def write_metrics_records(records: dict[str, DataFrame], out_dir: str, mode: str = "overwrite") -> None:

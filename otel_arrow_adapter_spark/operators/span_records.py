@@ -19,6 +19,10 @@ in SQL while exercising the same star-schema wiring:
   re-attach to the span row (n_events, event ts range, n_links), the
   analog of the store lookups in
   /root/reference/pkg/otel/traces/otlp/related_data.go.
+- ``encode_traces`` / ``decode_traces``: the nested-span star schema
+  (spans, events, links, each with its attrs record) and its inverse,
+  written over the shared split/nest core in ``operators/star.py`` (child
+  explode, attrs melt, typed nest) that the metrics codec also uses.
 
 All pure column expressions; the explode is per-row (no shuffle), the
 wiring is two grouped joins on the span's natural key.
@@ -32,6 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .star import assign_row_ids, explode_children, melt_attrs, nest, nest_attrs
 
 SPAN_KEY = ("conv_id", "turn_idx", "span_hex")
 
@@ -80,94 +86,36 @@ def span_links(traces: DataFrame) -> DataFrame:
     )
 
 
+# nested child array -> (its record, that record's attrs record)
+SPAN_CHILDREN = {
+    "events": ("span_events", "span_event_attrs"),
+    "links": ("span_links", "span_link_attrs"),
+}
+
+
 def encode_traces(nested: DataFrame, id_key: tuple[str, ...] = ("gen_id",)) -> dict[str, DataFrame]:
     """Nested spans -> star schema: SPANS main + SPAN_ATTRS + SPAN_EVENTS
     (+ event attrs) + SPAN_LINKS (+ link attrs), surrogate-keyed exactly
     like the metrics family (traces/arrow/related_data.go registry;
     event.go:46-52, link.go:47-55 schemas)."""
-    from .metrics_dp import _child_id, assign_row_ids
-
     m = assign_row_ids(nested, id_key)
-    records: dict[str, DataFrame] = {}
-    records["spans"] = m.select(
-        "id",
-        "res_id",
-        "scope_id",
-        "trace_hex",
-        "span_hex",
-        "parent_span_hex",
-        "name",
-        "kind",
-        "start_ts_us",
-        "dur_ms",
-        "status_code",
-        *id_key,
-    )
-
-    def attrs_of(df: DataFrame, src: str) -> DataFrame:
-        return df.select(F.col("id").alias("parent_id"), F.explode(src).alias("a")).select(
-            "parent_id",
-            F.col("a.key").alias("key"),
-            F.lit(1).cast("tinyint").alias("type"),
-            F.col("a.str").alias("str"),
-        )
-
-    records["span_attrs"] = attrs_of(m, "attrs")
-
-    ev = m.select(F.col("id").alias("parent_id"), F.posexplode("events").alias("_pos", "ev"))
-    ev = ev.withColumn("id", _child_id(F.col("parent_id"), F.col("_pos")))
-    records["span_events"] = ev.select(
-        "id", "parent_id", F.col("ev.ts_us").alias("ts_us"), F.col("ev.name").alias("name")
-    )
-    records["span_event_attrs"] = attrs_of(ev.withColumn("attrs", F.col("ev.attrs")), "attrs")
-
-    ln = m.select(F.col("id").alias("parent_id"), F.posexplode("links").alias("_pos", "ln"))
-    ln = ln.withColumn("id", _child_id(F.col("parent_id"), F.col("_pos")))
-    records["span_links"] = ln.select(
-        "id",
-        "parent_id",
-        F.col("ln.trace_hex").alias("trace_hex"),
-        F.col("ln.span_hex").alias("span_hex"),
-        F.col("ln.trace_state").alias("trace_state"),
-    )
-    records["span_link_attrs"] = attrs_of(ln.withColumn("attrs", F.col("ln.attrs")), "attrs")
+    main = [c for c in nested.columns if c not in ("attrs", *SPAN_CHILDREN, *id_key)]
+    records = {"spans": m.select("id", *main, *id_key), "span_attrs": melt_attrs(m)}
+    for array_col, (name, attrs_name) in SPAN_CHILDREN.items():
+        children = explode_children(m, array_col)
+        records[name] = children.drop("attrs")
+        records[attrs_name] = melt_attrs(children)
     return records
 
 
 def decode_traces(records: dict[str, DataFrame]) -> DataFrame:
-    """Inverse of encode_traces: attach attrs to events/links, re-nest both
-    onto spans, reproduce the input (validation_test.go round-trip)."""
-    attrs_t = "array<struct<key:string,str:string>>"
-
-    def with_attrs(df: DataFrame, attrs: DataFrame) -> DataFrame:
-        at = attrs.groupBy("parent_id").agg(
-            F.sort_array(F.collect_list(F.struct("key", "str"))).alias("attrs")
-        )
-        out = df.join(at, df["id"] == at["parent_id"], "left").drop(at["parent_id"])
-        return out.withColumn("attrs", F.coalesce("attrs", F.array().cast(attrs_t)))
-
-    ev = with_attrs(records["span_events"], records["span_event_attrs"])
-    events = ev.groupBy("parent_id").agg(
-        F.sort_array(F.collect_list(F.struct("ts_us", "name", "attrs"))).alias("events")
-    )
-    ln = with_attrs(records["span_links"], records["span_link_attrs"])
-    links = ln.groupBy("parent_id").agg(
-        F.sort_array(
-            F.collect_list(F.struct("trace_hex", "span_hex", "trace_state", "attrs"))
-        ).alias("links")
-    )
-    sp = with_attrs(records["spans"], records["span_attrs"])
-    out = (
-        sp.join(events, sp["id"] == events["parent_id"], "left")
-        .drop("parent_id")
-        .join(links, F.col("id") == links["parent_id"], "left")
-        .drop("parent_id")
-    )
-    from ..datagen.traces import EVENTS_T, LINKS_T
-
-    return out.withColumn("events", F.coalesce("events", F.array().cast(EVENTS_T))).withColumn(
-        "links", F.coalesce("links", F.array().cast(LINKS_T))
-    )
+    """Inverse of encode_traces: attach attrs to spans, events and links,
+    then re-nest events and links onto their spans, reproducing the input
+    (validation_test.go round-trip)."""
+    out = nest_attrs(records["spans"], records["span_attrs"])
+    for array_col, (name, attrs_name) in SPAN_CHILDREN.items():
+        out = nest(out, nest_attrs(records[name], records[attrs_name]), array_col)
+    return out
 
 
 def wire_span_children(

@@ -275,11 +275,19 @@ def dict_stream_stats_sink(stats, widths: tuple[int, ...] = (256, 65536, 1 << 32
     boundary counts ``dictionary_index_type_changed`` (stats.go:41), and a
     bucket exceeding the widest type counts ``dictionary_overflow_detected``
     (stats.go:42's overflow fallback signal). The per-batch aggregation is
-    one O(buckets) collect — control-plane, same discipline as the ledger."""
+    one O(buckets) collect — control-plane, same discipline as the ledger.
+
+    foreachBatch is at-least-once: a re-delivered micro-batch keeps its
+    batch_id, so ids already counted are skipped (closure-local ``done``
+    set, as in ``cms_stream_sink``) — otherwise a replay would add its
+    batches and entries to the counters a second time."""
 
     names = ["u8", "u16", "u32"][: len(widths)]
+    done: set[int] = set()
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_id in done:
+            return
         per_bucket = (
             batch_df.groupBy("bucket")
             .agg(
@@ -288,6 +296,7 @@ def dict_stream_stats_sink(stats, widths: tuple[int, ...] = (256, 65536, 1 << 32
             )
             .collect()
         )
+        done.add(batch_id)
         if not per_bucket:
             return
         stats.inc("batches_produced")

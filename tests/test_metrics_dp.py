@@ -87,8 +87,31 @@ def test_child_ids_wire_to_parents(records):
 
 def test_metrics_roundtrip(nested, records):
     decoded = decode_metrics(records)
-    cols = nested.columns  # gen_id + metric fields + 3 dp arrays
+    cols = nested.columns  # gen_id + metric fields + 4 dp arrays
+    assert decoded.select(cols).schema == nested.schema  # nullability included
     assert _canon(nested, cols) == _canon(decoded, cols)
+
+
+@pytest.mark.parametrize("codec", ["metrics", "traces"])
+def test_child_position_overflow_rejected(spark, codec):
+    """A child id is parent << 16 | pos, so a parent with more than 65,536
+    children would reuse the next parent's ids (position 65,536 of parent
+    p is child 0 of p + 1); the encode must fail loudly instead."""
+    from pyspark.errors import SparkRuntimeException
+
+    from otel_arrow_adapter_spark.datagen.traces import synthesize_traces_nested
+    from otel_arrow_adapter_spark.operators.span_records import encode_traces
+
+    gen, encode, array_col, record = {
+        "metrics": (synthesize_metrics_nested, encode_metrics, "number_dps", "number_dp"),
+        "traces": (synthesize_traces_nested, encode_traces, "events", "span_events"),
+    }[codec]
+    one = gen(spark, 8, seed=7).where(F.size(array_col) > 0).limit(1)
+    first = F.try_element_at(array_col, F.lit(1))
+    wide = one.withColumn(array_col, F.array_repeat(first, (1 << 16) + 1))
+    ids = encode(wide)[record].select("id")
+    with pytest.raises(SparkRuntimeException, match="overflows the 16-bit child-id field"):
+        ids.collect()
 
 
 def test_assign_row_ids_unique_deterministic(spark, nested):

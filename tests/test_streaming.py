@@ -474,8 +474,11 @@ def test_stream_cms_merges_to_batch_sketch(spark, transcripts, tmp_path):
 
 def test_stream_cms_sink_idempotent_on_replayed_batch(spark, transcripts):
     """foreachBatch is at-least-once: re-delivering the SAME batch_id must
-    not double-merge (ADVICE r5) while distinct ids still accumulate."""
-    from otel_arrow_adapter_spark.streaming.stream import cms_stream_sink
+    not double-count (ADVICE r5) while distinct ids still accumulate — for
+    the CMS sink's merged cells and for the dictionary-delta stats sink's
+    ProducerStats counters."""
+    from otel_arrow_adapter_spark.plans.stats import ProducerStats
+    from otel_arrow_adapter_spark.streaming.stream import cms_stream_sink, dict_stream_stats_sink
 
     acc = {}
     sink = cms_stream_sink(acc, key_col="tool")
@@ -487,3 +490,14 @@ def test_stream_cms_sink_idempotent_on_replayed_batch(spark, transcripts):
     assert acc == once
     sink(batch, 1)  # a genuinely new batch still merges
     assert acc == {k: 2 * v for k, v in once.items()}
+
+    stats = ProducerStats()
+    sink = dict_stream_stats_sink(stats)
+    deltas = spark.createDataFrame([(0, 0), (0, 1), (1, 0)], "bucket int, code long")
+    sink(deltas, 0)
+    once = stats.as_dict()
+    assert once["batches_produced"] == 1 and once["dictionary_entries_added"] == 3
+    sink(deltas, 0)  # replay of the same micro-batch
+    assert stats.as_dict() == once
+    sink(deltas, 1)  # a genuinely new batch still counts
+    assert stats.get("batches_produced") == 2 and stats.get("dictionary_entries_added") == 6
