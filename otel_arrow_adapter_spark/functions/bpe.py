@@ -30,17 +30,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..caching import materialize_scope
-from .text import normalize_text, tokens
+from .text import token_rows, type_counts
 
 
 def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, n) over the normalized corpus — the single corpus-scale pass
     of BPE training; everything after operates at word-type grain."""
-    return (
-        docs.select(F.explode(tokens(normalize_text(F.col(text_col)))).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    return type_counts(token_rows(docs, text_col), "n").withColumnRenamed("tok", "word")
 
 
 def _merge_pair_in_syms(pdf_iter, a: str, b: str):

@@ -25,10 +25,14 @@ from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..caching import materialize_scope, owned_result
-from .text import fingerprint, shingles
+from ..datagen.seeds import md5_bucket
+from .text import fingerprint, normalize_text
 
 DEFAULT_NUM_HASHES = 8
 DEFAULT_BANDS = 4  # rows-per-band = num_hashes / bands
+# dup_clusters' label-propagation steps: a component whose diameter needs
+# more raises instead of returning partial labels
+CC_MAX_STEPS = 20
 
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -44,6 +48,30 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def window_kgrams(docs: DataFrame, k: int, text_col: str, with_pos: bool = True) -> DataFrame:
+    """(doc_id, pos, gram): every word k-gram of the normalized text with
+    its 0-based token offset (``with_pos=False``: (doc_id, gram), for
+    consumers that only need the gram set); documents shorter than ``k``
+    tokens give none.
+
+    Built as posexplode(tokens) + window lead(k-1), NOT as an array
+    ``transform`` lambda: Spark's higher-order functions are interpreted
+    (no whole-stage codegen) and cost ~100µs/element, while
+    generate + window + concat stay fully codegen'd. The window shuffle
+    hash-partitions on doc_id."""
+    toks = docs.select(
+        "doc_id",
+        F.posexplode(F.split(normalize_text(F.col(text_col)), " ")).alias("pos", "tok"),
+    )
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    parts = [F.col("tok")] + [F.lead("tok", j).over(w) for j in range(1, k)]
+    return toks.select(
+        "doc_id",
+        *(["pos"] if with_pos else []),
+        F.when(parts[-1].isNotNull(), F.concat_ws(" ", *parts)).alias("gram"),
+    ).where(F.col("gram").isNotNull())
+
+
 def doc_shingles(
     docs: DataFrame, k: int = 3, text_col: str = "text", distinct: bool = True
 ) -> DataFrame:
@@ -51,25 +79,11 @@ def doc_shingles(
     (``distinct=False`` skips the extra (doc_id, shingle) shuffle for
     consumers that deduplicate downstream anyway).
 
-    Built as posexplode(tokens) + window lead(k-1), NOT as an array
-    ``transform`` lambda: Spark's higher-order functions are interpreted
-    (no whole-stage codegen) and cost ~100µs/element, while
-    generate + window + concat stay fully codegen'd. The window shuffle
+    The grams come from :func:`window_kgrams`, whose window shuffle
     hash-partitions on doc_id — the same key the downstream minhash
     groupBy needs, so the sort-based shingling is effectively free at
     scale (one shuffle serves both)."""
-    from .text import normalize_text
-
-    toks = docs.select(
-        "doc_id",
-        F.posexplode(F.split(normalize_text(F.col(text_col)), " ")).alias("pos", "tok"),
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    parts = [F.col("tok")] + [F.lead("tok", j).over(w) for j in range(1, k)]
-    out = toks.select(
-        "doc_id",
-        F.when(parts[-1].isNotNull(), F.concat_ws(" ", *parts)).alias("shingle"),
-    ).where(F.col("shingle").isNotNull())
+    out = window_kgrams(docs, k, text_col, with_pos=False).withColumnRenamed("gram", "shingle")
     return out.distinct() if distinct else out
 
 
@@ -380,7 +394,6 @@ def incremental_dedup(
 
 def dup_clusters(
     pairs: DataFrame,
-    max_iters: int = 20,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     id_name: str = "doc_id",
@@ -401,9 +414,11 @@ def dup_clusters(
     released (resident state = edges + 2 x one row per doc, same
     discipline as kmeans_train).  Convergence = a changed-label count per
     round, observed (``pyspark.sql.Observation``) on the round's own
-    materialization job — no extra count job — bounded by ``max_iters``.
-    Rounds needed = component diameter: near-dup clusters are dense and
-    shallow (a dup group is near-clique), so 3-5 rounds in practice; for
+    materialization job — no extra count job — bounded by
+    ``CC_MAX_STEPS`` propagation steps. Steps needed = component diameter:
+    near-dup clusters are dense and shallow (a dup group is near-clique),
+    so 3-5 steps in practice. A component still changing after the last
+    step raises ``RuntimeError`` rather than return partial labels; for
     adversarially long chain graphs the known upgrade is
     large-star/small-star path doubling (O(log d)) — not worth its extra
     shuffles for dedup workloads.
@@ -445,7 +460,7 @@ def dup_clusters(
         # are pure per-round overhead — halved by checking convergence every
         # second step. Stopping when the LAST step changed nothing is exact:
         # min-label propagation is monotone, a no-change step is a fixed point.
-        for _ in range(max(1, max_iters // 2)):
+        for _ in range(CC_MAX_STEPS // 2):
             obs = Observation()
             nxt = m.keep(
                 _propagate(_propagate(labels))
@@ -455,6 +470,11 @@ def dup_clusters(
             labels = nxt
             if obs.get["changed"] == 0:
                 break
+        else:
+            raise RuntimeError(
+                f"dup_clusters: labels still changing after {CC_MAX_STEPS} propagation "
+                "steps; a duplicate chain is longer than the step bound"
+            )
         out = labels.select(
             F.col("doc_id").alias(id_name),
             F.col("label").alias("cluster_id"),
@@ -486,10 +506,7 @@ def leakage_free_split(
     state). Returns (doc_id, split_key, split), materialized: the caller
     owns it and calls ``unpersist()`` when done."""
     key = F.coalesce(F.col("cluster_id"), F.col(id_col))
-    u = F.pmod(
-        F.conv(F.substring(F.md5(key.cast("string")), 1, 12), 16, 10).cast("long"),
-        F.lit(denom),
-    )
+    u = md5_bucket(key, denom)
     with materialize_scope() as m:
         clusters = m.own(dup_clusters(pairs, id_name=id_col))
         joined = docs.select(id_col).join(clusters.select(id_col, "cluster_id"), id_col, "left")
@@ -501,8 +518,6 @@ def leakage_free_split(
             .alias("split"),
         )
         return owned_result(out)
-
-
 
 
 # ---------------------------------------------------------------------------
@@ -642,19 +657,7 @@ def dup_spans(
     offset, span length in tokens, and the number of k-gram anchors
     merged into the span.
     """
-    from .text import normalize_text
-
-    toks = docs.select(
-        "doc_id",
-        F.posexplode(F.split(normalize_text(F.col(text_col)), " ")).alias("pos", "tok"),
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    parts = [F.col("tok")] + [F.lead("tok", j).over(w) for j in range(1, k)]
-    grams = toks.select(
-        "doc_id",
-        "pos",
-        F.when(parts[-1].isNotNull(), F.concat_ws(" ", *parts)).alias("gram"),
-    ).where(F.col("gram").isNotNull())
+    grams = window_kgrams(docs, k, text_col)
     dup = (
         grams.groupBy("gram")
         .agg(F.countDistinct("doc_id").alias("nd"))

@@ -8,8 +8,8 @@ the count-min sketch here covers point FREQUENCIES (Cormode/Muthukrishnan
 (key -> count) table is too wide to keep.
 
 Engine-portable hashing: bucket = md5-uint48("r:" || key) % width — the
-same first-12-hex-chars idiom as shard_shuffle / stratified_sample, so
-the DuckDB oracle computes byte-identical cells.
+library's one md5 draw (``datagen.seeds.md5_bucket``, as in shard_shuffle
+/ stratified_sample), so the DuckDB oracle computes byte-identical cells.
 """
 
 from __future__ import annotations
@@ -17,12 +17,20 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..datagen.seeds import md5_bucket
 
-def _bucket(key: Column, row: int, width: int) -> Column:
-    h = F.md5(F.concat(F.lit(f"{row}:"), key))
-    return F.pmod(
-        F.conv(F.substring(h, 1, 12), 16, 10).cast("long"), F.lit(width)
-    ).cast("int")
+
+def _cells(key_col: str, depth: int, width: int) -> Column:
+    """The key's ``depth`` sketch cells: array<struct<row, col>>."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(r).cast("int").alias("row"),
+                md5_bucket(F.concat(F.lit(f"{r}:"), F.col(key_col)), width).cast("int").alias("col"),
+            )
+            for r in range(depth)
+        ]
+    )
 
 
 def count_min_sketch(
@@ -37,18 +45,9 @@ def count_min_sketch(
     (row, col) sum (how per-day sketches roll up to a month). Estimates
     are one-sided: est >= true, with err <= 2N/width at probability
     1 - (1/2)^depth."""
-    cells = F.array(
-        *[
-            F.struct(
-                F.lit(r).cast("int").alias("row"),
-                _bucket(F.col(key_col), r, width).alias("col"),
-            )
-            for r in range(depth)
-        ]
-    )
     return (
         items.where(F.col(key_col).isNotNull())  # null keys are untracked
-        .select(F.explode(cells).alias("e"))
+        .select(F.explode(_cells(key_col, depth, width)).alias("e"))
         .groupBy(F.col("e.row").alias("row"), F.col("e.col").alias("col"))
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -65,17 +64,8 @@ def cms_lookup(
 
     The sketch is depth*width rows — BROADCAST; lookup is one broadcast
     join + a groupBy(key) min, never a rescan of the original stream."""
-    cells = F.array(
-        *[
-            F.struct(
-                F.lit(r).cast("int").alias("row"),
-                _bucket(F.col(key_col), r, width).alias("col"),
-            )
-            for r in range(depth)
-        ]
-    )
     probed = keys.where(F.col(key_col).isNotNull()).select(
-        key_col, F.explode(cells).alias("e")
+        key_col, F.explode(_cells(key_col, depth, width)).alias("e")
     ).select(
         key_col, F.col("e.row").alias("row"), F.col("e.col").alias("col")
     )

@@ -4,13 +4,24 @@ All hot-path functions are native column expressions (whole-stage codegen,
 no Python) and have exact DuckDB-SQL oracles. Heuristics are deliberately
 simple + deterministic: the operator surface (tokenize, quality-score,
 language-ID, fingerprint) is what matters, not linguistic accuracy.
+
+Shared cores. The corpus-statistics operators (the unigram/bigram LMs,
+BM25, KL drift, DSIR, tf-idf, BPE word counts, the count-min query) build
+on three pieces written once here: ``token_rows`` (the ``(keys…, tok)``
+rows of the normalized text), ``type_counts`` (a row count per
+``(by…, tok)``: token TYPES, Heaps-sublinear) and ``with_total`` (a
+frame crossJoined with the broadcast sum of a count column). The md5
+bucket draw behind sampling, sharding and packing is
+``datagen.seeds.md5_bucket``; the window k-gram shingler is
+``dedup.window_kgrams``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..datagen.seeds import md5_bucket
 from ..operators.normalize import top_k
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
@@ -103,28 +114,33 @@ def fingerprint(text: Column) -> Column:
     return F.md5(normalize_text(text))
 
 
-def shingles(text: Column, k: int = 3) -> Column:
-    """Word k-gram shingle set (distinct). Documents shorter than ``k``
-    tokens yield an empty array (guarded: ``F.sequence(1, 0)`` would
-    descend, and under ANSI the out-of-range ``element_at`` would throw)."""
-    toks = tokens(normalize_text(text))
-    n = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(0))),
-        lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(k)]),
-    )
-    return F.when(n >= k, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
-    )
+def token_rows(docs: DataFrame, text_col: str, *keys: str | Column) -> DataFrame:
+    """(keys…, tok): one row per whitespace token of the normalized text.
+    The explode is narrow, so a document's tokens stay in its input
+    partition and any per-document groupBy combines map-side."""
+    return docs.select(*keys, F.explode(tokens(normalize_text(F.col(text_col)))).alias("tok"))
+
+
+def type_counts(rows: DataFrame, name: str, *by: str) -> DataFrame:
+    """(by…, tok, ``name``): the row count per (by…, tok) — one
+    map-side-combined groupBy whose output is token TYPES (Heaps' law:
+    sublinear in corpus size)."""
+    return rows.groupBy(*by, "tok").agg(F.count(F.lit(1)).alias(name))
+
+
+def with_total(df: DataFrame, counts: DataFrame, col: str, total: str) -> DataFrame:
+    """``df`` crossJoined with the one-row ``sum(counts.col) AS total``,
+    broadcast. ``counts`` need not be ``df``: a head-capped vocabulary
+    takes its total from the full one."""
+    return df.crossJoin(F.broadcast(counts.agg(F.sum(col).alias(total))))
 
 
 def ngram_array(text: Column, n: int = 3) -> Column:
     """Positional (non-distinct) word n-grams over the normalized text.
 
-    Unlike :func:`shingles` (a distinct SET for MinHash), this keeps every
-    occurrence — repetition analysis needs multiplicity. Documents shorter
-    than ``n`` tokens yield an empty array (guarded: ``F.sequence(1, 0)``
-    would descend)."""
+    Every occurrence is kept — repetition analysis needs multiplicity.
+    Documents shorter than ``n`` tokens yield an empty array (guarded:
+    ``F.sequence(1, 0)`` would descend)."""
     toks = tokens(normalize_text(text))
     cnt = F.size(toks)
     grams = F.transform(
@@ -244,10 +260,7 @@ def stratified_sample(
     driver coordination, reproducible across engines and re-runs, and a
     plain filter — pushes below any downstream shuffle, never materializes
     the rejected rows. Resolution is 1/denom."""
-    u = F.pmod(
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 12), 16, 10).cast("long"),
-        F.lit(denom),
-    )
+    u = md5_bucket(F.col(id_col), denom)
     rate = F.lit(float(default_rate))
     for key, val in sorted(rates.items()):
         rate = F.when(F.col(stratum_col) == key, F.lit(float(val))).otherwise(rate)
@@ -317,11 +330,8 @@ def shard_shuffle(
     count). No RNG state, no driver coordination, no global sort."""
     from pyspark.sql import Window
 
-    sid = F.col(id_col).cast("string")
-    shard = F.pmod(
-        F.conv(F.substring(F.md5(sid), 1, 12), 16, 10).cast("long"), F.lit(n_shards)
-    ).cast("int")
-    key = F.md5(F.concat(F.lit(f"{seed}:"), sid))
+    shard = md5_bucket(F.col(id_col), n_shards).cast("int")
+    key = F.md5(F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string")))
     w = Window.partitionBy("shard").orderBy("sort_key", id_col)
     return (
         docs.select(F.col(id_col), shard.alias("shard"), key.alias("sort_key"))
@@ -349,10 +359,7 @@ def pack_offsets(
     ids are shard-local; (shard << 32 | chunk) globalizes them."""
     from pyspark.sql import Window
 
-    shard = F.pmod(
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 12), 16, 10).cast("long"),
-        F.lit(n_shards),
-    ).cast("int")
+    shard = md5_bucket(F.col("doc_id"), n_shards).cast("int")
     w = Window.partitionBy("shard").orderBy("doc_id")
     sharded = docs.withColumn("shard", shard)
     start = F.coalesce(
@@ -395,14 +402,10 @@ def unigram_logprob(
     outside it score ``oov_logprob`` — the standard head-vocab + OOV
     bucket approximation.
     """
-    toks = docs.select(
-        "doc_id", F.explode(tokens(normalize_text(F.col(text_col)))).alias("tok")
-    )
-    vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("n_tok"))
-    total = vocab.agg(F.sum("n_tok").alias("n_total"))
-    if max_vocab is not None:
-        vocab = vocab.orderBy(F.desc("n_tok"), "tok").limit(max_vocab)
-    vocab = vocab.crossJoin(F.broadcast(total))
+    toks = token_rows(docs, text_col, "doc_id")
+    vocab = type_counts(toks, "n_tok")
+    head = vocab if max_vocab is None else vocab.orderBy(F.desc("n_tok"), "tok").limit(max_vocab)
+    vocab = with_total(head, vocab, "n_tok", "n_total")
     logp = F.log(F.col("n_tok").cast("double") / F.col("n_total").cast("double"))
     scored = toks.join(F.broadcast(vocab), "tok", "left")
     return scored.groupBy("doc_id").agg(
@@ -451,17 +454,17 @@ def bigram_logprob(
         )
 
     lm = lm_docs if lm_docs is not None else docs
-    lm_toks = lm.select(F.explode(tokens(normalize_text(F.col(text_col)))).alias("tok"))
-    uni = lm_toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c_uni"))
-    total = uni.agg(F.sum("c_uni").alias("n_total"))
+    uni = type_counts(token_rows(lm, text_col), "c_uni")
     bi = bigrams(lm).groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c_bi"))
 
-    scored = (
+    scored = with_total(
         bigrams(docs)
         .join(bi, ["w1", "w2"], "left")
         .join(F.broadcast(uni.select(F.col("tok").alias("w1"), F.col("c_uni").alias("c1"))), "w1", "left")
-        .join(F.broadcast(uni.select(F.col("tok").alias("w2"), F.col("c_uni").alias("c2"))), "w2", "left")
-        .crossJoin(F.broadcast(total))
+        .join(F.broadcast(uni.select(F.col("tok").alias("w2"), F.col("c_uni").alias("c2"))), "w2", "left"),
+        uni,
+        "c_uni",
+        "n_total",
     )
     logp = (
         F.when(
@@ -501,19 +504,13 @@ def bm25_topk(
     (N, avgdl) and per-term df/idf are O(1)/O(|q|) rows, broadcast. The
     tf-to-doclen join keys both sides on doc_id. Returns (doc_id, bm25,
     rank) with the score rounded to 6 so both engines rank identically."""
-    toks = docs.select(
-        "doc_id", F.explode(tokens(normalize_text(F.col(text_col)))).alias("tok")
-    )
+    toks = token_rows(docs, text_col, "doc_id")
     doclen = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     stats = doclen.agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
     )
-    tf = (
-        toks.where(F.col("tok").isin(*query_terms))
-        .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df_t = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+    tf = type_counts(toks.where(F.col("tok").isin(*query_terms)), "tf", "doc_id")
+    df_t = type_counts(tf, "df")
     idf = df_t.crossJoin(F.broadcast(stats)).select(
         "tok",
         F.log(
@@ -554,17 +551,16 @@ def source_kl_drift(
     output is |strata| x Heaps-sublinear types), the corpus vocab derived
     from it by a second tiny groupBy, joined back BROADCAST on tok.
     Returns (stratum, n_tokens, kl) rounded to 6."""
-    st = docs.select(
-        F.col(stratum_col).alias("stratum"),
-        F.explode(tokens(normalize_text(F.col(text_col)))).alias("tok"),
-    ).groupBy("stratum", "tok").agg(F.count(F.lit(1)).alias("c_st"))
+    st = type_counts(
+        token_rows(docs, text_col, F.col(stratum_col).alias("stratum")), "c_st", "stratum"
+    )
     corpus = st.groupBy("tok").agg(F.sum("c_st").alias("c_all"))
     totals = st.groupBy("stratum").agg(F.sum("c_st").alias("n_st"))
-    grand = corpus.agg(F.sum("c_all").alias("n_all"))
-    joined = (
-        st.join(F.broadcast(corpus), "tok")
-        .join(F.broadcast(totals), "stratum")
-        .crossJoin(F.broadcast(grand))
+    joined = with_total(
+        st.join(F.broadcast(corpus), "tok").join(F.broadcast(totals), "stratum"),
+        corpus,
+        "c_all",
+        "n_all",
     )
     p_s = F.col("c_st").cast("double") / F.col("n_st").cast("double")
     p = F.col("c_all").cast("double") / F.col("n_all").cast("double")
@@ -635,15 +631,9 @@ def dsir_weights(
     broadcast outgrows executors).
 
     Returns (doc_id, n_tokens, log_weight)."""
-    raw_toks = docs.select(
-        "doc_id", F.explode(tokens(normalize_text(F.col(text_col)))).alias("tok")
-    )
-    raw_vocab = raw_toks.groupBy("tok").agg(F.count(F.lit(1)).alias("n_raw"))
-    tgt_vocab = (
-        target.select(F.explode(tokens(normalize_text(F.col(text_col)))).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("n_tgt"))
-    )
+    raw_toks = token_rows(docs, text_col, "doc_id")
+    raw_vocab = type_counts(raw_toks, "n_raw")
+    tgt_vocab = type_counts(token_rows(target, text_col), "n_tgt")
     merged = raw_vocab.join(tgt_vocab, "tok", "full_outer").select(
         "tok",
         F.coalesce("n_raw", F.lit(0)).alias("n_raw"),
@@ -688,21 +678,15 @@ def tfidf_top_terms(
     Returns (doc_id, term, tf, score, rnk)."""
     from pyspark.sql import Window
 
-    tf = (
-        docs.select(
-            "doc_id", F.explode(tokens(normalize_text(F.col(text_col)))).alias("term")
-        )
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df_tbl = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    tf = type_counts(token_rows(docs, text_col, "doc_id"), "tf", "doc_id")
+    df_tbl = type_counts(tf, "df")
     n_docs = tf.agg(F.countDistinct("doc_id").alias("n"))
     scored = (
-        tf.join(F.broadcast(df_tbl), "term")
+        tf.join(F.broadcast(df_tbl), "tok")
         .crossJoin(F.broadcast(n_docs))
         .select(
             "doc_id",
-            "term",
+            F.col("tok").alias("term"),
             "tf",
             F.round(
                 F.col("tf") * F.log(F.col("n").cast("double") / F.col("df")), 6

@@ -32,7 +32,6 @@ from ..functions.text import (
     fingerprint,
     lang_id,
     length_histogram,
-    normalize_text,
     pack_offsets,
     pii_counts,
     quality_score,
@@ -47,7 +46,8 @@ from ..functions.text import (
     tfidf_top_terms,
     token_budget_sample,
     token_count,
-    tokens,
+    token_rows,
+    type_counts,
     unigram_logprob,
 )
 
@@ -401,13 +401,8 @@ def q_doc_token_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     per partition; lookup = broadcast join. Completes the sketch family
     (HLL distinct / DDSketch quantiles / CMS frequencies)."""
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = d.select(F.explode(tokens(normalize_text(F.col("text")))).alias("tok"))
-    top = (
-        toks.groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("exact_n"))
-        .orderBy(F.desc("exact_n"), F.asc("tok"))
-        .limit(20)
-    )
+    toks = token_rows(d, "text")
+    top = type_counts(toks, "exact_n").orderBy(F.desc("exact_n"), F.asc("tok")).limit(20)
     sketch = count_min_sketch(toks, key_col="tok", depth=4, width=256)
     return top.join(cms_lookup(sketch, top.select("tok"), key_col="tok"), "tok").select(
         "tok", "exact_n", "cms_n"

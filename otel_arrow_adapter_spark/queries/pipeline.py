@@ -16,6 +16,7 @@ from pyspark.sql import functions as F, Window as W
 
 from ..caching import materialize_scope, owned_result
 from ..datagen import synthesize_tool_catalog, transcripts_from_events
+from ..datagen.seeds import md5_bucket
 from ..datagen.traces import synthesize_traces_nested
 from ..datagen.transcripts import synthesize_tool_catalog_versions
 from ..functions.conversations import conv_dedup, conv_quality, sft_pairs
@@ -233,18 +234,11 @@ def q_pipeline_delta_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     <=6 window tasks for 10^12 rows otherwise). parent_id and enc_bucket
     are md5-derived (engine-portable) so the DuckDB oracle replays the
     full encode — window, group detection, deltas — exactly."""
-    md5_long = F.conv(F.substring(F.md5("conv_id"), 1, 12), 16, 10).cast("long")
     attrs = melt_attributes(_parsed(spark, sf_dir)).withColumn(
         "parent_id",
-        (F.pmod(md5_long, F.lit(100000)) * 1000 + F.col("turn_idx")).cast("long"),
+        (md5_bucket(F.col("conv_id"), 100000) * 1000 + F.col("turn_idx")).cast("long"),
     )
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.col("parent_id").cast("string")), 1, 12), 16, 10).cast(
-            "long"
-        ),
-        F.lit(16),
-    ).cast("int")
-    attrs = attrs.withColumn("enc_bucket", bucket)
+    attrs = attrs.withColumn("enc_bucket", md5_bucket(F.col("parent_id"), 16).cast("int"))
     enc = delta_encode_parent_ids(with_encode_order(attrs, n_buckets=16), n_buckets=16)
     # aggregate (stable surface): per key, #groups and delta checksum
     return enc.groupBy("key").agg(

@@ -16,7 +16,6 @@ from otel_arrow_adapter_spark.functions.text import (
     fingerprint,
     lang_id,
     quality_score,
-    shingles,
     token_count,
 )
 
@@ -77,12 +76,6 @@ def test_quality_score_bounds(spark, docs):
     qs = docs.select(quality_score(F.col("text")).alias("q"))
     mn, mx = qs.agg(F.min("q"), F.max("q")).collect()[0]
     assert 0.0 <= mn <= mx <= 1.0
-
-
-def test_shingles_k3(spark):
-    df = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
-    got = df.select(shingles(F.col("text")).alias("s")).collect()[0].s
-    assert got == ["a b c", "b c d"]
 
 
 def test_exact_duplicates_found(spark, docs_with_dups):
@@ -507,6 +500,24 @@ def test_dup_clusters_chain_linear_plan_growth(spark):
     assert elapsed < 120, elapsed  # exponential form: minutes of treeString
 
 
+def test_dup_clusters_chain_past_step_bound_raises(spark):
+    """A path whose diameter exceeds the propagation-step bound fails
+    loudly (it used to return a path of 30 split into 10 clusters) and
+    leaves nothing behind; a path within the bound is still one cluster."""
+    from otel_arrow_adapter_spark.functions.dedup import CC_MAX_STEPS, dup_clusters
+
+    def path(n):
+        return spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long")
+
+    assert CC_MAX_STEPS < 29
+    with no_new_persistent_rdds(spark, "dup_clusters long chain"):
+        with pytest.raises(RuntimeError, match="still changing"):
+            dup_clusters(path(30))
+    out = dup_clusters(path(10))
+    assert {(r.cluster_id, r.cluster_size) for r in out.collect()} == {(0, 10)}
+    out.unpersist()
+
+
 def test_no_lingering_caches_after_queries(spark):
     """Cache-lifecycle contract (caching.materialize_scope): every query
     whose plan materializes intermediates frees them once its result
@@ -780,14 +791,6 @@ def test_stratified_sample_deterministic_and_gated(spark):
     assert half_a == half_b  # pure function of doc_id: no RNG state
     assert half_a < {i for i in range(200) if i % 2 == 0}
     assert 20 <= len(half_a) <= 80  # md5 uniformity, loose bound
-
-
-def test_shingles_shorter_than_k_is_empty(spark):
-    from otel_arrow_adapter_spark.functions.text import shingles
-
-    df = spark.createDataFrame([(1, "only three words"), (2, "")], "id long, text string")
-    rows = {r["id"]: r["s"] for r in df.select("id", shingles(F.col("text"), 8).alias("s")).collect()}
-    assert rows[1] == [] and rows[2] == []
 
 
 def test_redact_pii_idempotent_no_residuals(spark):
