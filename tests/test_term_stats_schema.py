@@ -6,8 +6,10 @@ draw and window k-grams cores, on a small in-test corpus.
 The pins in ``term_stats_schema_pins.json`` are the schemas these frames
 had when each function still spelled out its own token stream, vocabulary,
 md5 draw and shingler; the shared cores must reproduce every one of them.
-``dup_clusters`` and ``leakage_free_split`` materialize their results, so
-a few small jobs run; the rest is analysis only."""
+The dedup chain's owned results (``lsh_candidates``, both ``jaccard_pairs``
+paths, ``lsh_jaccard_pairs``, ``incremental_dedup``, ``dup_clusters`` and
+``leakage_free_split``) materialize, so a few small jobs run; the rest is
+analysis only."""
 
 import json
 import os
@@ -54,6 +56,14 @@ def _frames(spark):
         "doc_shingles_all": lambda: dedup.doc_shingles(docs, distinct=False),
         "dup_spans": lambda: dedup.dup_spans(docs, k=3),
         "ngram_contamination": lambda: dedup.ngram_contamination(docs, docs.where("doc_id = 1"), n=3),
+        "minhash_signature": lambda: dedup.minhash_signature(docs),
+        "lsh_candidates": lambda: dedup.lsh_candidates(dedup.minhash_signature(docs)),
+        "jaccard_pairs": lambda: dedup.jaccard_pairs(docs, threshold=0.3),
+        "jaccard_pairs_candidates": lambda: dedup.jaccard_pairs(docs, threshold=0.3, candidates=pairs),
+        "lsh_jaccard_pairs": lambda: dedup.lsh_jaccard_pairs(docs, threshold=0.3),
+        "incremental_dedup": lambda: dedup.incremental_dedup(
+            docs.where("doc_id > 1"), docs.where("doc_id <= 1")
+        ),
         "dup_clusters": lambda: dedup.dup_clusters(pairs),
         "leakage_free_split": lambda: dedup.leakage_free_split(docs, pairs),
     }
