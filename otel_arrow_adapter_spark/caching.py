@@ -2,19 +2,19 @@
 exit — errors included.
 
 Library functions materialize intermediates that their result's plan uses
-more than once (LSH band tables, shingle tables, simhash signatures,
-k-means rounds).  Left alone, those materializations live for the whole
-session — harmless at sf0.01, a real memory accrual in a long-lived
-100 TB session.  The reference frees its builders after every batch
-(pkg/otel/arrow_record/producer.go:46-48); here the equivalent is a
-scope::
+more than once (doc-grain minhash signature tables, LSH candidates,
+simhash signatures, k-means rounds).  Left alone, those materializations
+live for the whole session — harmless at sf0.01, a real memory accrual in
+a long-lived 100 TB session.  The reference frees its builders after
+every batch (pkg/otel/arrow_record/producer.go:46-48); here the
+equivalent is a scope::
 
     with materialize_scope() as m:
-        sh = m.keep(doc_shingles(docs))      # materialized, held
-        cand = m.own(lsh_candidates(sig))    # a callee's owned result, held
+        sig = m.keep(_doc_signatures(docs, 8, 3))  # materialized, held
+        cand = m.own(lsh_candidates(sig))          # a callee's owned result, held
         for ...:
             nxt = m.keep(step(cur)); m.free(cur); cur = nxt  # one round early
-        return owned_result(out)             # the one frame the caller gets
+        return owned_result(out)                   # the one frame the caller gets
 
 Leaving the block releases everything still held, also when an error is
 raised.  ``owned_result`` is the only way to hand a result to the caller:

@@ -7,12 +7,18 @@ scale story:
 - minhash-LSH:  shingle -> k md5-minhashes -> band buckets -> bucket join.
                 Candidate generation never compares all pairs; at 100 TB
                 the bucket join is the only shuffle and banding bounds
-                bucket sizes.
+                bucket sizes. The dedup chains (``lsh_jaccard_pairs``,
+                ``incremental_dedup``) build ONE doc-grain signature table
+                per input — each doc's shingle set and minhash from one
+                aggregation — that both the banding and the verify read.
 - simhash:      64-bit near-dup signature via token-hash bit voting
                 (vectorized pandas UDF — bit arithmetic isn't columnar SQL).
 - ngram-jaccard: exact verify for candidate pairs (used as LSH verifier and
-                as ground truth at test SF).
+                as ground truth at test SF): both docs' shingle sets joined
+                onto each pair, intersected map-side.
 - embedding-cosine: near-dup by vector similarity (see similarity.py).
+
+``dup_clusters`` resolves any of the pair lists into connected components.
 
 All md5-based hashing is engine-portable: the DuckDB oracles compute
 byte-identical signatures.
@@ -87,31 +93,55 @@ def doc_shingles(
     return out.distinct() if distinct else out
 
 
+def _minhash_aggs(num_hashes: int) -> list:
+    """The ``sig_0..sig_{n-1}`` min-hash aggregates over a ``shingle``
+    column: 8-hex-char slices of salted md5(shingle) — one md5 yields 4
+    independent-enough slices, so n signatures cost ceil(n/4) md5s per
+    shingle instead of n. String min is engine-portable (the DuckDB oracle
+    computes byte-identical signatures; 64-bit integer hash mixing would
+    not be) and duplicate-insensitive, so a non-distinct shingle stream
+    gives the same signature."""
+    aggs = []
+    for i in range(num_hashes):
+        salt, slot = divmod(i, 4)
+        h = F.md5(F.concat(F.lit(f"{salt}:"), F.col("shingle")))
+        aggs.append(F.min(F.substring(h, 1 + 8 * slot, 8)).alias(f"sig_{i}"))
+    return aggs
+
+
 def minhash_signature(
     docs: DataFrame,
     num_hashes: int = DEFAULT_NUM_HASHES,
     k: int = 3,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
-    """(doc_id, sig_0..sig_{n-1}): lexicographic min-hash per shingle set.
-
-    Hash family: 8-hex-char slices of salted md5(shingle) — one md5 yields
-    4 independent-enough slices, so n signatures cost ceil(n/4) md5s per
-    shingle instead of n. String min is engine-portable (the DuckDB oracle
-    computes byte-identical signatures; 64-bit integer hash mixing would
-    not be). Shape: one explode + one groupBy with n min() aggregates —
-    a single map-side-combined shuffle; the aggregation also acts as a
-    pipeline breaker so downstream banding doesn't re-expand the shingle
-    expressions (projection collapse would otherwise duplicate them).
-    Pass a (materialized) ``shingles`` table to share one shingling pass with
-    other consumers (jaccard verify) — shingling is the expensive half."""
+    """(doc_id, sig_0..sig_{n-1}): lexicographic min-hash per shingle set
+    (hash family in :func:`_minhash_aggs`). Shape: one groupBy(doc_id) with
+    n min() aggregates over the shingle rows — a single map-side-combined
+    shuffle; the aggregation also acts as a pipeline breaker so downstream
+    banding doesn't re-expand the shingle expressions. Pass a
+    (materialized) ``shingles`` table to reuse one shingling pass; the
+    chain's own callers use :func:`_doc_signatures` instead, which carries
+    each document's shingle set in the same aggregation."""
     sh = doc_shingles(docs, k) if shingles is None else shingles
-    aggs = []
-    for i in range(num_hashes):
-        salt, slot = divmod(i, 4)
-        h = F.md5(F.concat(F.lit(f"{salt}:"), F.col("shingle")))
-        aggs.append(F.min(F.substring(h, 1 + 8 * slot, 8)).alias(f"sig_{i}"))
-    return sh.groupBy("doc_id").agg(*aggs)
+    return sh.groupBy("doc_id").agg(*_minhash_aggs(num_hashes))
+
+
+def _doc_signatures(
+    docs: DataFrame, num_hashes: int, k: int, text_col: str = "text"
+) -> DataFrame:
+    """(doc_id, _sh, sig_0..sig_{n-1}): the doc-grain signature table —
+    each document's distinct shingle SET and its min-hash signature from
+    ONE groupBy(doc_id) over the non-distinct shingle rows. The window
+    shingler already hash-partitions those rows on doc_id, so the
+    aggregation adds no exchange. Banding reads the ``sig_*`` columns and
+    the Jaccard verify joins the ``_sh`` column onto each candidate side,
+    so one materialization of this table serves the whole LSH -> Jaccard
+    front half. Documents shorter than ``k`` tokens have no row."""
+    sh = doc_shingles(docs, k, text_col, distinct=False)
+    return sh.groupBy("doc_id").agg(
+        F.collect_set("shingle").alias("_sh"), *_minhash_aggs(num_hashes)
+    )
 
 
 def banded_buckets(
@@ -149,11 +179,13 @@ def lsh_candidates(
     A pair is a candidate if ANY band matches (standard LSH OR-construction).
     """
     with materialize_scope() as m:
-        # materialize before the self-join: both sides reuse ONE evaluation
-        # of the signature lineage instead of recomputing it (at scale: one
-        # scan, not two — and Catalyst's join-key null filters would
-        # otherwise be pushed into duplicated upstream subtrees)
-        stacked = m.keep(banded_buckets(signatures, num_hashes, bands))
+        # materialize the signatures before the self-join: both sides band
+        # ONE evaluation of the signature lineage instead of recomputing it
+        # (at scale: one scan, not two — and Catalyst's join-key null filters
+        # would otherwise be pushed into duplicated upstream subtrees). An
+        # already-materialized input (the doc-grain signature table) is
+        # banded as it is, with no job of its own.
+        stacked = banded_buckets(m.keep(signatures), num_hashes, bands)
         a, b = stacked.alias("a"), stacked.alias("b")
         pairs = (
             a.join(b, on=["band", "bucket"])
@@ -169,33 +201,16 @@ def _verify_pairs(
     a_col: str,
     b_col: str,
     threshold: float,
-    sh_a: DataFrame,
-    sh_b: DataFrame | None = None,
+    sets_a: DataFrame,
+    sets_b: DataFrame,
 ) -> DataFrame:
     """Set-form exact Jaccard verify of candidate ``pairs``: each side's
-    shingle rows are LEFT-SEMI-joined to that side's candidate doc ids and
-    rolled up into one DISTINCT shingle SET per doc (collect_set), both
-    sets are joined onto each pair, and n_common is a map-side
-    array_intersect. Returns the pairs whose rounded ``jaccard`` reaches
-    ``threshold``. With one shingle table (``sh_b`` None) both sides share
-    one set frame over the union of candidate docs."""
-
-    def sets(sh: DataFrame, ids: DataFrame) -> DataFrame:
-        return (
-            sh.join(ids.distinct(), "doc_id", "left_semi")
-            .groupBy("doc_id")
-            .agg(F.collect_set("shingle").alias("_sh"))
-        )
-
-    ids_a = pairs.select(F.col(a_col).alias("doc_id"))
-    ids_b = pairs.select(F.col(b_col).alias("doc_id"))
-    if sh_b is None:
-        set_a = set_b = sets(sh_a, ids_a.unionByName(ids_b))
-    else:
-        set_a, set_b = sets(sh_a, ids_a), sets(sh_b, ids_b)
+    (doc_id, _sh) shingle-SET frame is joined onto the pairs and n_common
+    is a map-side array_intersect — no shingle-grain join at all. Returns
+    the pairs whose rounded ``jaccard`` reaches ``threshold``."""
     return (
-        pairs.join(set_a.select(F.col("doc_id").alias(a_col), F.col("_sh").alias("_sh_a")), a_col)
-        .join(set_b.select(F.col("doc_id").alias(b_col), F.col("_sh").alias("_sh_b")), b_col)
+        pairs.join(sets_a.select(F.col("doc_id").alias(a_col), F.col("_sh").alias("_sh_a")), a_col)
+        .join(sets_b.select(F.col("doc_id").alias(b_col), F.col("_sh").alias("_sh_b")), b_col)
         .withColumn("n_common", F.size(F.array_intersect("_sh_a", "_sh_b")))
         .withColumn(
             "jaccard",
@@ -221,16 +236,15 @@ def jaccard_pairs(
     only docs sharing >=1 shingle are compared).
 
     With candidates: the shingle table is LEFT-SEMI-joined to the candidate
-    doc-id set, rolled up into one DISTINCT shingle SET per candidate doc
-    (collect_set — so the shared ``shingles`` table may skip its own
-    corpus-wide distinct), and the pair join attaches both docs' sets to
-    each candidate pair; n_common is a map-side array_intersect. No
-    shingle-grain self-join exists on this path at all — the former
-    inverted-index form shuffled |candidate-doc shingle rows| into a
-    per-pair groupBy and was quadratic in hot-shingle buckets; the set
-    form's join traffic is O(candidate pairs x doc length) with per-doc
-    (bounded-length) arrays, and it measured ~1.4x faster end-to-end at
-    sf0.1 (guide §2.3/§2.4: fewer shuffled bytes, one less shuffle).
+    doc-id set and rolled up into one DISTINCT shingle SET per candidate
+    doc (collect_set — so the shared ``shingles`` table may skip its own
+    corpus-wide distinct); :func:`_verify_pairs` joins both docs' sets onto
+    each candidate pair and intersects them. The set form's join traffic is
+    O(candidate pairs x doc length) with per-doc (bounded-length) arrays;
+    the inverted-index form shuffles |candidate-doc shingle rows| into a
+    per-pair groupBy and is quadratic in hot-shingle buckets.
+    :func:`lsh_jaccard_pairs` skips the semi-join and the second
+    aggregation: its signature table already holds every doc's set.
 
     Ownership: only what THIS function materializes is released when the
     verified pairs materialize. Caller-supplied ``shingles`` /
@@ -243,10 +257,16 @@ def jaccard_pairs(
     with materialize_scope() as m:
         if candidates is not None:
             candidates = m.keep(candidates)  # used 3x: doc-id set + 2 pair joins
-            out = _verify_pairs(candidates, "doc_a", "doc_b", threshold, sh).select(
-                "doc_a", "doc_b", "jaccard"
+            ids = candidates.select(F.col("doc_a").alias("doc_id")).unionByName(
+                candidates.select(F.col("doc_b").alias("doc_id"))
             )
-            return owned_result(out)
+            sets = (
+                sh.join(ids.distinct(), "doc_id", "left_semi")
+                .groupBy("doc_id")
+                .agg(F.collect_set("shingle").alias("_sh"))
+            )
+            out = _verify_pairs(candidates, "doc_a", "doc_b", threshold, sets, sets)
+            return owned_result(out.select("doc_a", "doc_b", "jaccard"))
         # No candidates: the exact inverted-index path (test/ground-truth scale).
         # distinct() is idempotent, so a shared non-distinct shingle table is
         # handled identically to a pre-distinct one.
@@ -283,17 +303,17 @@ def lsh_jaccard_pairs(
 ) -> DataFrame:
     """Verified near-dup pairs (doc_a, doc_b, jaccard): MinHash-LSH
     candidates checked by exact shingle Jaccard — the front half of every
-    dedup chain. ONE shingling pass feeds both the minhash and the verify;
-    non-distinct, because minhash's min() is duplicate-insensitive and the
-    set-based verify dedups via collect_set, so the corpus-wide
-    (doc_id, shingle) distinct shuffle is skipped (guide §2.4). The shingle
-    table and the candidates are freed before returning, on error too; the
-    caller owns the materialized pairs."""
+    dedup chain. ONE materialized doc-grain table (:func:`_doc_signatures`:
+    each doc's shingle set and signature from one aggregation) is banded
+    into the candidates and supplies both sides' sets to the verify, so
+    no shingle-grain table is materialized and no second aggregation runs.
+    The signature table and the candidates are freed before returning, on
+    error too; the caller owns the materialized pairs."""
     with materialize_scope() as m:
-        sh = m.keep(doc_shingles(docs, k, distinct=False))
-        sig = minhash_signature(docs, num_hashes, k, shingles=sh)
+        sig = m.keep(_doc_signatures(docs, num_hashes, k))
         cand = m.own(lsh_candidates(sig, num_hashes, bands))
-        return jaccard_pairs(docs, threshold, k, candidates=cand, shingles=sh)
+        out = _verify_pairs(cand, "doc_a", "doc_b", threshold, sig, sig)
+        return owned_result(out.select("doc_a", "doc_b", "jaccard"))
 
 
 def incremental_dedup(
@@ -316,13 +336,13 @@ def incremental_dedup(
     Returns (doc_id, reason, keep) for every batch doc.
 
     Scale shape at a 10^12-doc index: the index side is PRECOMPUTED state —
-    its fingerprints and band buckets live as bucketed tables
-    (sources/bucketed.py layout) appended per increment, so per-batch cost
-    is batch-sized maps plus equi-joins into those tables (semi-join on
-    fp; band-bucket equi-join; shingle verify only for candidate docs).
-    Here both sides derive inline from the given frames; nothing below is
-    pair-quadratic — the only self-comparison is the fingerprint
-    keep-first groupBy."""
+    its fingerprints and doc-grain signature table (shingle set + band
+    buckets) live as bucketed tables (sources/bucketed.py layout) appended
+    per increment, so per-batch cost is batch-sized maps plus equi-joins
+    into those tables (semi-join on fp; band-bucket equi-join; set join for
+    candidate pairs). Here both sides derive inline from the given frames;
+    nothing below is pair-quadratic — the only self-comparison is the
+    fingerprint keep-first groupBy."""
     with materialize_scope() as m:
         # fingerprints + the exact/batch-dup verdicts are each referenced by
         # several downstream materializations (survivors' anti-joins AND the
@@ -353,25 +373,17 @@ def incremental_dedup(
             batch.join(exact.select("doc_id"), "doc_id", "left_anti")
             .join(bdup.select("doc_id"), "doc_id", "left_anti")
         )
-        # ONE shingle pass per side, shared by minhash AND the Jaccard verify
-        # (shingling is the expensive half — same sharing contract as
-        # minhash_signature's ``shingles`` parameter). Non-distinct: minhash's
-        # min() is duplicate-insensitive and the set verify dedups via
-        # collect_set, so the corpus-wide (doc_id, shingle) distinct shuffle
-        # is skipped entirely (guide §2.4).
-        sh_surv = m.keep(doc_shingles(survivors, k, text_col, distinct=False))
-        sh_idx = m.keep(doc_shingles(index, k, text_col, distinct=False))
-        bb = banded_buckets(
-            minhash_signature(survivors, num_hashes, k, shingles=sh_surv), num_hashes, bands
+        # ONE doc-grain signature table per side (shingle set + minhash from
+        # one aggregation), shared by the banding AND the Jaccard verify
+        sig_surv = m.keep(_doc_signatures(survivors, num_hashes, k, text_col))
+        sig_idx = m.keep(_doc_signatures(index, num_hashes, k, text_col))
+        bb = banded_buckets(sig_surv, num_hashes, bands)
+        bi = banded_buckets(sig_idx, num_hashes, bands).select(
+            F.col("doc_id").alias("index_doc"), "band", "bucket"
         )
-        bi = banded_buckets(
-            minhash_signature(index, num_hashes, k, shingles=sh_idx), num_hashes, bands
-        ).select(F.col("doc_id").alias("index_doc"), "band", "bucket")
         cand = m.keep(bb.join(bi, ["band", "bucket"]).select("doc_id", "index_doc").distinct())
-        # Jaccard verify in set form (see _verify_pairs): no shingle-grain
-        # join exists here at all
         near = (
-            _verify_pairs(cand, "doc_id", "index_doc", threshold, sh_surv, sh_idx)
+            _verify_pairs(cand, "doc_id", "index_doc", threshold, sig_surv, sig_idx)
             .select("doc_id")
             .distinct()
             .withColumn("r_near", F.lit(True))
@@ -408,11 +420,13 @@ def dup_clusters(
     where cluster_id = min doc_id in the component (the kept representative,
     matching the keep-first rule in exact dedup / clean_corpus).
 
-    Shape per round: one edges⋈labels join + one groupBy(dst).min —
+    Shape per step: one edges⋈labels join + one groupBy(dst).min —
     both shuffle on doc_id, so AQE coalesces them into the same exchange
-    footprint; labels are materialized per round and the previous round's
-    released (resident state = edges + 2 x one row per doc, same
-    discipline as kmeans_train).  Convergence = a changed-label count per
+    footprint. The first step starts from the identity labels, so it is
+    the groupBy of the edges alone (min(src) per dst), with no join. Two
+    steps make a round; labels are materialized per round and the
+    previous round's released (resident state = edges + 2 x one row per
+    doc, same discipline as kmeans_train).  Convergence = a changed-label count per
     round, observed (``pyspark.sql.Observation``) on the round's own
     materialization job — no extra count job — bounded by
     ``CC_MAX_STEPS`` propagation steps. Steps needed = component diameter:
@@ -435,38 +449,42 @@ def dup_clusters(
         edges = m.keep(
             sym.unionByName(sym.select(F.col("src"), F.col("src").alias("dst"))).distinct()
         )
-        # initial labels derive from the FLAT edges (self-loop rows are exactly
-        # the node set), so no plan ever references the pair finder again; not
-        # materialized itself — round 0's materialization truncates it
-        labels = edges.where(F.col("src") == F.col("dst")).select(
-            F.col("src").alias("doc_id"), F.col("src").alias("label")
-        )
+
+        def _step(rows: DataFrame) -> DataFrame:
+            # one propagation step over (src, dst, label) rows: dst takes the
+            # min label of its in-edges. The self-loop row (src==dst) carries
+            # dst's PREVIOUS label through the same shuffle, so one groupBy
+            # yields both the new label and the convergence flag — no
+            # separate labels⋈labels diff join per round.
+            return rows.groupBy(F.col("dst").alias("doc_id")).agg(
+                F.min("label").alias("label"),
+                F.min(F.when(F.col("src") == F.col("dst"), F.col("label"))).alias("_prev"),
+            )
 
         def _propagate(lbl: DataFrame) -> DataFrame:
-            # The self-loop row (src==dst) carries dst's PREVIOUS label through
-            # the same shuffle, so one groupBy yields both the new label and the
-            # convergence flag — no separate labels⋈labels diff join per round.
-            return (
-                edges.join(lbl, edges.src == lbl.doc_id)
-                .groupBy(F.col("dst").alias("doc_id"))
-                .agg(
-                    F.min("label").alias("label"),
-                    F.min(F.when(F.col("src") == F.col("dst"), F.col("label"))).alias("_prev"),
-                )
-            )
+            return _step(edges.join(lbl, edges.src == lbl.doc_id))
+
+        # Step 1 starts from the identity labels (each node labelled by
+        # itself; the self-loop rows are exactly the node set). Joined onto
+        # the edges they give every non-null src its own id as label, so the
+        # first step is an aggregation of the flat edges alone — no join, and
+        # no plan ever references the pair finder again. The null-src filter
+        # drops what the equi-join would drop. Not materialized itself: round
+        # 0's materialization truncates it.
+        labels = _step(edges.where(F.col("src").isNotNull()).withColumn("label", F.col("src")))
 
         # Two propagation steps per materialization: the shuffles per step are
         # inherent (they ARE the label propagation), but materialization jobs
         # are pure per-round overhead — halved by checking convergence every
         # second step. Stopping when the LAST step changed nothing is exact:
         # min-label propagation is monotone, a no-change step is a fixed point.
-        for _ in range(CC_MAX_STEPS // 2):
+        for i in range(CC_MAX_STEPS // 2):
             obs = Observation()
-            nxt = m.keep(
-                _propagate(_propagate(labels))
-                .observe(obs, F.count(F.when(F.col("label") != F.col("_prev"), 1)).alias("changed"))
-            )
-            m.free(labels)
+            # round 0's first step is the join-free one above
+            two = _propagate(labels if i == 0 else _propagate(labels))
+            changed = F.count(F.when(F.col("label") != F.col("_prev"), 1)).alias("changed")
+            nxt = m.keep(two.observe(obs, changed))
+            m.free(labels)  # a no-op for round 0's unmaterialized first step
             labels = nxt
             if obs.get["changed"] == 0:
                 break

@@ -34,9 +34,18 @@ def _cells(key_col: str, depth: int, width: int) -> Column:
 
 
 def count_min_sketch(
-    items: DataFrame, key_col: str = "key", depth: int = 4, width: int = 256
+    items: DataFrame,
+    key_col: str = "key",
+    depth: int = 4,
+    width: int = 256,
+    count_col: str | None = None,
 ) -> DataFrame:
     """Build a depth x width CMS over a key stream: (row, col, c).
+
+    ``items`` holds one row per occurrence, or, with ``count_col``, one row
+    per key with its occurrence count (a type-grain vocabulary): a cell's
+    count is then the sum of its keys' counts, the same cells the
+    occurrence stream gives.
 
     Scale shape: one narrow explode to ``depth`` cells per item, then ONE
     map-side-combined groupBy over at most depth*width cells — the reduce
@@ -45,11 +54,15 @@ def count_min_sketch(
     (row, col) sum (how per-day sketches roll up to a month). Estimates
     are one-sided: est >= true, with err <= 2N/width at probability
     1 - (1/2)^depth."""
+    # a sum over a cell's non-empty group is never null; the coalesce keeps
+    # ``c`` non-nullable, as the occurrence count is
+    c = F.count(F.lit(1)) if count_col is None else F.coalesce(F.sum(count_col), F.lit(0))
+    counts = [] if count_col is None else [count_col]
     return (
         items.where(F.col(key_col).isNotNull())  # null keys are untracked
-        .select(F.explode(_cells(key_col, depth, width)).alias("e"))
+        .select(F.explode(_cells(key_col, depth, width)).alias("e"), *counts)
         .groupBy(F.col("e.row").alias("row"), F.col("e.col").alias("col"))
-        .agg(F.count(F.lit(1)).alias("c"))
+        .agg(c.alias("c"))
     )
 
 

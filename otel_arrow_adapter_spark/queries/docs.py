@@ -52,11 +52,22 @@ from ..functions.text import (
 )
 
 
+# The ``documents`` table's columns as its Parquet footer declares them.
+# Every read below names it, so no read runs a footer-inference job; a
+# column renamed in the files would read as nulls under this name, which
+# tests/test_plans.py::test_documents_schema_matches_footers guards.
+DOCUMENTS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
+
+
+def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.read.schema(DOCUMENTS_SCHEMA).parquet(f"{sf_dir}/documents.parquet")
+
+
 def _docs_plus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents + deterministic duplicates: exact copies (doc_id%10==0,
     +100000) and near copies with a token tail (doc_id%7==0, +200000) —
     so dedup operators have something to find."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    d = _documents(spark, sf_dir).select("doc_id", "text")
     exact = d.where(F.col("doc_id") % 10 == 0).select(
         (F.col("doc_id") + 100000).alias("doc_id"), "text"
     )
@@ -70,7 +81,7 @@ def _docs_plus(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_doc_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace token count + BPE-ish pre-tokenizer count (letter runs /
     digit runs / single punctuation — the LLM-token estimate) + chars."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = _documents(spark, sf_dir)
     return d.select(
         "doc_id",
         token_count(F.col("text")).alias("n_tokens"),
@@ -80,7 +91,7 @@ def q_doc_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = _documents(spark, sf_dir)
     return d.select(
         "doc_id",
         lang_id(F.col("text")).alias("lang_pred"),
@@ -89,7 +100,7 @@ def q_doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = _documents(spark, sf_dir)
     return d.select("doc_id", fingerprint(F.col("text")).alias("fp"))
 
 
@@ -156,7 +167,7 @@ def q_doc_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents (the CCNet/RefinedWeb repeated-chrome target). One explode +
     one map-side-combined groupBy on the gram string — shuffled rows ≈
     distinct grams, never total occurrences."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = _documents(spark, sf_dir)
     return boilerplate_ngrams(d, n=3, min_docs=5)
 
 
@@ -164,7 +175,7 @@ def q_doc_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style per-doc repetition filters at token grain: duplicate
     2-gram fraction + most-frequent-2-gram share, keep = dup fraction
     <= 0.2. Pure array expressions, zero shuffle, zero Python."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = _documents(spark, sf_dir)
     return repetition_scores(d, n=2)
 
 
@@ -173,7 +184,7 @@ def _docs_with_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is PII-free, so the redaction query plants known instances as a
     pure function of doc_id; the oracle replays the identical augmentation
     in SQL). doc_id%5 -> an email, %7 -> a phone, %11 -> an IPv4."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = _documents(spark, sf_dir)
     did = F.col("doc_id")
     email = F.concat(F.lit(" contact user"), did.cast("string"), F.lit("@example.com"))
     phone = F.concat(
@@ -221,7 +232,7 @@ def q_doc_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents with doc_id%10==0 (so docs_plus's planted exact copies and
     the %70 near-dup tails are guaranteed hits). Broadcast-join shape:
     the fact side never sort-merges."""
-    bench = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
+    bench = _documents(spark, sf_dir).where(
         F.pmod(F.col("doc_id"), F.lit(10)) == 0
     )
     return ngram_contamination(_docs_plus(spark, sf_dir), bench, n=8)
@@ -232,7 +243,7 @@ def q_doc_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-language rates (en 50%, de/fr 25%, es/zh 10%) — reproducible
     membership as a pure function of doc_id, a plain pushed-down filter
     (no RNG state, no shuffle, rejected rows never materialize)."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = _documents(spark, sf_dir)
     rates = {"en": 0.5, "de": 0.25, "fr": 0.25, "es": 0.1, "zh": 0.1}
     return stratified_sample(d, "lang", rates).select("doc_id", "lang")
 
@@ -243,7 +254,7 @@ def q_doc_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution. Vocab build = one map-side-combined groupBy over token
     TYPES; scoring = broadcast join + one doc-grain groupBy. Oracle: the
     identical ln(n_tok/n_total) average in DuckDB."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = _documents(spark, sf_dir)
     return unigram_logprob(d)
 
 
@@ -258,7 +269,7 @@ def q_doc_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = _documents(spark, sf_dir)
     return d.select("doc_id", quality_score(F.col("text")).alias("quality"))
 
 
@@ -268,7 +279,7 @@ def q_doc_pack_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic md5 shard's concatenated token stream. The running
     offset window partitions by shard — never the whole corpus in one
     task."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    d = _documents(spark, sf_dir).select(
         "doc_id", token_count(F.col("text")).alias("n_tokens")
     )
     return pack_offsets(d, budget=512, n_shards=16)
@@ -301,7 +312,7 @@ def q_doc_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs shared verbatim by >= 2 documents, found by anchoring word
     5-grams and merging overlapping duplicated anchors. Gram filter =
     one map-side-combined groupBy; span merge = per-doc islands window."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = _documents(spark, sf_dir)
     return dup_spans(d, k=5, min_docs=2)
 
 
@@ -320,7 +331,7 @@ def q_doc_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     order until the language's token budget fills (en 6000, de/fr 2000,
     zh 1500; es unbudgeted -> excluded). One cumulative-sum window per
     stratum + a plain filter."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = _documents(spark, sf_dir)
     budgets = {"en": 6000, "de": 2000, "fr": 2000, "zh": 1500}
     return token_budget_sample(d, budgets)
 
@@ -329,7 +340,7 @@ def q_doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus length profile per language: log2 token-count buckets with
     per-stratum doc shares. One map-side-combined groupBy; the share
     window runs over the tiny aggregate only."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = _documents(spark, sf_dir)
     return length_histogram(d, stratum_col="lang")
 
 
@@ -339,7 +350,7 @@ def q_doc_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     subset) vs the raw-corpus model, add-0.5 smoothing over the union
     vocabulary. Two type-grain vocab groupBys + one broadcast join +
     one doc-grain groupBy."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = _documents(spark, sf_dir)
     return dsir_weights(d, d.where(F.col("lang") == "en"), alpha=0.5)
 
 
@@ -348,7 +359,7 @@ def q_doc_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     table are map-side-combined groupBys, df joins back broadcast, top-k
     is one per-doc row_number window ranked on the ROUNDED score with a
     term tie-break (engine-portable determinism)."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = _documents(spark, sf_dir)
     return tfidf_top_terms(d, top_k=3)
 
 
@@ -358,7 +369,7 @@ def q_doc_shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 intra-shard sort key. One hash shuffle + per-shard row_number;
     reproducible across engines and re-runs, reshuffles by changing the
     seed string only."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = _documents(spark, sf_dir)
     return shard_shuffle(d, n_shards=16, seed="epoch0")
 
 
@@ -367,7 +378,7 @@ def q_doc_quantile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality score. Thresholds = one stratum-grain exact percentile
     broadcast back; keep flag = codegen'd comparison on the rounded
     threshold (tie decisions identical across engines)."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = _documents(spark, sf_dir)
     return quantile_filter(d, frac=0.2, stratum_col="lang")
 
 
@@ -376,7 +387,7 @@ def q_doc_source_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     copies (doc_id%10==0, inheriting source/lang): doc count, exact-dup
     rate, mean quality, mean tokens, language spread. One fingerprint
     shuffle + a co-partitioned narrow join + a tiny source rollup."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    d = _documents(spark, sf_dir).select(
         "doc_id", "text", "lang", "source"
     )
     plus = d.unionByName(
@@ -389,7 +400,7 @@ def q_doc_chunk_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAG-style sliding-window chunking: 32-token windows advancing by
     24 (8-token overlap), one row per (doc, chunk) with exact token
     offsets. Zero shuffles, zero Python — a codegen'd map-only pass."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = _documents(spark, sf_dir)
     return chunk_spans(d, chunk_size=32, stride=24)
 
 
@@ -397,13 +408,18 @@ def q_doc_token_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch frequencies (Cormode/Muthukrishnan 2005) vs exact:
     4x256 CMS over the token stream, point estimates for the exact top-20
     tokens — (tok, exact_n, cms_n), cms_n >= exact_n by construction.
-    Sketch = one map-side-combined groupBy bounded at depth*width cells
-    per partition; lookup = broadcast join. Completes the sketch family
+    Sketch = one map-side-combined groupBy over the exact vocabulary,
+    bounded at depth*width cells per partition, so the corpus is tokenized
+    once; lookup = broadcast join. Completes the sketch family
     (HLL distinct / DDSketch quantiles / CMS frequencies)."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = token_rows(d, "text")
-    top = type_counts(toks, "exact_n").orderBy(F.desc("exact_n"), F.asc("tok")).limit(20)
-    sketch = count_min_sketch(toks, key_col="tok", depth=4, width=256)
+    # One tokenization: the sketch sums the vocabulary's type counts per
+    # cell. Tokens are never null; filtering them up front gives every use
+    # of the vocabulary the sketch's null-key guard, so all of them share
+    # one exchange and the corpus is scanned once.
+    toks = token_rows(_documents(spark, sf_dir), "text").where(F.col("tok").isNotNull())
+    vocab = type_counts(toks, "exact_n")
+    top = vocab.orderBy(F.desc("exact_n"), F.asc("tok")).limit(20)
+    sketch = count_min_sketch(vocab, key_col="tok", depth=4, width=256, count_col="exact_n")
     return top.join(cms_lookup(sketch, top.select("tok"), key_col="tok"), "tok").select(
         "tok", "exact_n", "cms_n"
     )
@@ -417,7 +433,7 @@ def q_doc_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch doc classified exact_dup / batch_dup / near_dup / new —
     fingerprint semi-join, keep-first groupBy, LSH band join vs the index
     + shingle-Jaccard verify. Never pair-quadratic."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    d = _documents(spark, sf_dir).select("doc_id", "text")
     index = d.where(F.col("doc_id") % 3 == 0)
     batch = (
         d.where(F.col("doc_id") % 3 != 0)
@@ -447,7 +463,7 @@ def q_doc_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tf table is isin-filtered BEFORE any join so post-stats work is
     query-sized; top-k is TakeOrderedAndProject. Scores rounded to 6 so
     both engines rank identically."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = _documents(spark, sf_dir)
     return bm25_topk(d, query_terms=("spark", "join", "window"), k=20)
 
 
@@ -455,7 +471,7 @@ def q_doc_source_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source KL(P_source || P_corpus) over unigram distributions —
     the corpus-drift monitor (crawl regressions, template floods). One
     (source, token-type) groupBy, corpus vocab broadcast back."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = _documents(spark, sf_dir)
     return source_kl_drift(d, stratum_col="source")
 
 
@@ -466,5 +482,5 @@ def q_doc_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     alpha*c(w2)/N, unseen unigrams floor at -20. Unigram counts broadcast
     (Heaps-sublinear types); the bigram score join is a same-key shuffle
     join (broadcast would not hold at open-web scale)."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = _documents(spark, sf_dir)
     return bigram_logprob(d, lm_docs=d.where(F.col("doc_id") % 10 != 0))

@@ -518,6 +518,61 @@ def test_dup_clusters_chain_past_step_bound_raises(spark):
     out.unpersist()
 
 
+def _bag_equal(x, y):
+    assert x.schema == y.schema
+    assert x.exceptAll(y).count() == 0 and y.exceptAll(x).count() == 0
+
+
+def test_lsh_jaccard_pairs_equals_long_table_path(spark, docs_with_dups):
+    """The doc-grain signature table (one aggregation for each doc's shingle
+    set and signature) finds and verifies exactly the pairs of the
+    long-table path: minhash_signature -> lsh_candidates -> jaccard_pairs
+    with candidates, which rebuilds the candidate docs' sets itself."""
+    from otel_arrow_adapter_spark.functions.dedup import lsh_jaccard_pairs
+
+    cand = lsh_candidates(minhash_signature(docs_with_dups))
+    long_path = jaccard_pairs(docs_with_dups, candidates=cand)
+    one_table = lsh_jaccard_pairs(docs_with_dups)
+    assert one_table.count() > 0
+    _bag_equal(one_table, long_path)
+    for df in (one_table, long_path, cand):
+        df.unpersist()
+
+
+def test_dup_clusters_null_ids_and_chain(spark):
+    """The join-free first label step gives the rows the edges-join step
+    gave: a 5-node chain is one cluster, and null ids are kept as they were
+    (a null node takes its partners' min label; a (null, null) pair adds
+    nothing). Expected rows recorded from the edges-join implementation."""
+    from otel_arrow_adapter_spark.functions.dedup import dup_clusters
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (3, 2), (3, 4), (5, 4), (7, None), (None, 8), (None, None), (10, 11)],
+        "doc_a long, doc_b long",
+    )
+    out = dup_clusters(pairs)
+    got = sorted((tuple(r) for r in out.collect()), key=str)
+    out.unpersist()
+    assert got == [
+        (1, 1, 5, True), (10, 10, 2, True), (11, 10, 2, False), (2, 1, 5, False),
+        (3, 1, 5, False), (4, 1, 5, False), (5, 1, 5, False), (7, 7, 2, True),
+        (8, 8, 1, True), (None, 7, 2, None),
+    ]
+
+
+def test_count_min_sketch_from_vocabulary_equals_stream(spark, docs):
+    """A sketch summed from the type-grain vocabulary has the cells, and
+    the schema, of the sketch counted over the token stream."""
+    from otel_arrow_adapter_spark.functions.sketches import count_min_sketch
+    from otel_arrow_adapter_spark.functions.text import token_rows, type_counts
+
+    toks = token_rows(docs, "text")
+    _bag_equal(
+        count_min_sketch(type_counts(toks, "n"), key_col="tok", count_col="n"),
+        count_min_sketch(toks, key_col="tok"),
+    )
+
+
 def test_no_lingering_caches_after_queries(spark):
     """Cache-lifecycle contract (caching.materialize_scope): every query
     whose plan materializes intermediates frees them once its result

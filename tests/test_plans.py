@@ -154,6 +154,57 @@ def test_pipeline_job_count(spark, small_catalog, tmp_path):
     assert len(jobs) <= 10, f"{len(jobs)} jobs"
 
 
+# Spark jobs per dedup-chain query, built from the registry at sf0.001 and
+# collected. One doc-grain signature table feeds the LSH banding and the
+# Jaccard verify, the first label step of dup_clusters is join-free, and
+# the documents reads name their schema; the edges-join, shingle-table
+# chain ran 24, 31, 29 and 35 jobs here.
+DEDUP_CHAIN_JOBS = {
+    "doc_dup_clusters": 17,
+    "doc_clean_corpus_near": 23,
+    "doc_leakage_free_split": 21,
+    "doc_incremental_dedup": 27,
+}
+
+
+def test_dedup_chain_job_count(spark):
+    """Each dedup-chain query runs at most its measured number of Spark
+    jobs: at benchmark scale the chain's CPU tracks its job and stage
+    count (driver planning, scheduling and JIT), not its data."""
+    import __spark_entry__ as entrymod
+
+    sc = spark.sparkContext
+    got = {}
+    for name in DEDUP_CHAIN_JOBS:
+        group = f"test-dedup-chain-job-count-{name}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            res = entrymod.QUERIES[name](spark, SF)
+            assert res.collect()
+            res.unpersist()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        got[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert all(got[n] <= DEDUP_CHAIN_JOBS[n] for n in got), got
+
+
+def test_documents_schema_matches_footers(spark):
+    """The named ``documents`` schema of queries/docs.py is the Parquet
+    footer schema of every fixture scale: a named schema reads a renamed
+    or retyped column as silent nulls instead of failing."""
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from otel_arrow_adapter_spark.queries.docs import DOCUMENTS_SCHEMA
+
+    named = spark.createDataFrame([], DOCUMENTS_SCHEMA).schema
+    for sf in ("sf0.001", "sf0.01", "sf0.1"):
+        footer = from_arrow_schema(pq.read_schema(f"{os.path.dirname(SF)}/{sf}/documents.parquet"))
+        assert named == footer, sf
+
+
 def test_no_unpartitioned_window_in_query_surface(spark):
     """No query's physical plan may move the fact table into a single
     unpartitioned Window (the round-1 scale-killer). Dimension-table ranks

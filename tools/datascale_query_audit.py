@@ -22,15 +22,15 @@ Replica construction (no RNG state):
   ~120-176x the 1x rows. A large wall ratio there measures a harder
   problem, not a defect; judge those queries by wall / output-pairs.
 
-Caveat: all 103 queries x 2 sizes run in ONE session, and long-lived
-local sessions degrade (GC/shuffle-state accrual — see the verify
-recipe), so isolated large ratios LATE in the sweep can be session-aging
-artifacts: re-measure outliers in a fresh session
-(`SPARK_GRAFT_SF_DIR=<10x dir> python bench_extra.py <name>`) before
-believing them. In the committed r6 artifact, doc_decontaminate's 5.95
-re-measured at ~2.0 fresh; the emb_ann_pairs* ratios are real but
-measure the quadratic-pairs construction above, confirmed by output
-counts (1x 645/4,199 pairs -> 10x 113,650/504,060).
+Each requested query is timed in its own fresh session: one Python
+subprocess per query (``time_one``), which starts its own Spark session,
+times both sizes and exits. A long-lived session degrades (GC and
+shuffle-state accrual — see the verify recipe), and a shared session
+moved a row by up to ~30% with what ran before it. In the committed r6
+artifact (one shared session), doc_decontaminate's 5.95 re-measured at
+~2.0 fresh; the emb_ann_pairs* ratios are real but measure the
+quadratic-pairs construction above, confirmed by output counts (1x
+645/4,199 pairs -> 10x 113,650/504,060).
 
 The replica directory is reused only when its ``_BUILT`` sentinel exists;
 ``build_10x`` writes it after its last artifact, so a build that died
@@ -46,6 +46,7 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
@@ -148,24 +149,52 @@ def merge_audit(old: dict, new: dict) -> dict:
     return {**old, **new, "queries": {**old["queries"], **new["queries"]}}
 
 
-def main() -> None:
+def _session() -> SparkSession:
     from otel_arrow_adapter_spark.session import get_spark
+
+    return get_spark(app_name="oaas-audit-10x", cores=CPUS, shuffle_partitions=CPUS)
+
+
+def time_one(name: str) -> None:
+    """Time query ``name`` at both sizes in this process's own session and
+    print its row as the last line of stdout."""
+    import __spark_entry__ as entrymod
+
+    spark = _session()
+    fn = entrymod.queries()[name]
+    spark.sparkContext.setJobDescription(f"audit-10x: {name}")
+    s1 = time_query(spark, fn, SF_DIR)
+    s10 = time_query(spark, fn, OUT_DIR)
+    spark.stop()
+    print(json.dumps({"sec_1x": s1, "sec_10x": s10, "ratio": round(s10 / s1, 2)}))
+
+
+def _in_subprocess(call: str) -> str:
+    """Run ``call`` on this module in a fresh Python process (so in a fresh
+    Spark session) and return its stdout."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    code = (
+        f"import sys; sys.path.insert(0, {here!r}); "
+        f"import datascale_query_audit as audit; audit.{call}"
+    )
+    return subprocess.run(
+        [sys.executable, "-c", code], check=True, stdout=subprocess.PIPE, text=True
+    ).stdout
+
+
+def main() -> None:
     import __spark_entry__ as entrymod
 
     only = sys.argv[1].split(",") if len(sys.argv) > 1 else None
-    spark = get_spark(app_name="oaas-audit-10x", cores=CPUS, shuffle_partitions=CPUS)
     if not os.path.exists(BUILT):
-        build_10x(spark)
+        _in_subprocess("build_10x(audit._session())")
     rows = {}
-    for name, fn in entrymod.queries().items():
+    for name in entrymod.queries():
         if only and name not in only:
             continue
-        spark.sparkContext.setJobDescription(f"audit-10x: {name}")
-        s1 = time_query(spark, fn, SF_DIR)
-        s10 = time_query(spark, fn, OUT_DIR)
-        rows[name] = {"sec_1x": s1, "sec_10x": s10, "ratio": round(s10 / s1, 2)}
-        print(f"  {name}: 1x {s1} 10x {s10} ratio {rows[name]['ratio']}", file=sys.stderr)
-    spark.sparkContext.setJobDescription(None)
+        rows[name] = json.loads(_in_subprocess(f"time_one({name!r})").splitlines()[-1])
+        r = rows[name]
+        print(f"  {name}: 1x {r['sec_1x']} 10x {r['sec_10x']} ratio {r['ratio']}", file=sys.stderr)
     out = {"replicas": REPLICAS, "sf_1x": SF_DIR, "queries": rows}
     if only and os.path.exists(AUDIT_JSON):
         with open(AUDIT_JSON) as f:
