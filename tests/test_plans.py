@@ -170,7 +170,7 @@ DEDUP_CHAIN_JOBS = {
 def test_dedup_chain_job_count(spark):
     """Each dedup-chain query runs at most its measured number of Spark
     jobs: at benchmark scale the chain's CPU tracks its job and stage
-    count (driver planning, scheduling and JIT), not its data."""
+    count (query planning, scheduling and JIT), not its data."""
     import __spark_entry__ as entrymod
 
     sc = spark.sparkContext
