@@ -65,20 +65,16 @@ def main() -> None:
 
     from otel_arrow_adapter_spark.datagen import synthesize_tool_catalog
     from otel_arrow_adapter_spark.plans import run_pipeline
+    from otel_arrow_adapter_spark.sources import read_transcripts
 
     if args.catalog_path:
         catalog = spark.read.parquet(args.catalog_path)
     else:
         catalog = synthesize_tool_catalog(spark, n_tools=args.catalog_tools)
 
-    if args.input.endswith(".parquet") or "/" in args.input:
-        transcripts = spark.read.parquet(args.input)
-    else:
-        transcripts = spark.table(args.input)
-
     counts = run_pipeline(
         spark,
-        transcripts,
+        read_transcripts(spark, args.input),
         catalog,
         args.output,
         run_id=args.run_id,

@@ -1,6 +1,10 @@
 """Capture round-trips: OTLP ``.pb`` and OTLP-JSON encode -> decode of logs,
 metrics and traces, each rolled up from the DECODED values so equality
 with the oracle holds iff encode∘decode == id.
+
+Each signal's .pb/JSON pair captures one input frame (``_log_rows``,
+``_exp_hist_points``, ``_span_rows``): the flat ``read_pb_*`` row surface
+that ``write_pb_capture`` and the protojson writers both take.
 """
 
 from __future__ import annotations
@@ -42,6 +46,67 @@ def _capture_dir(name: str, sf_dir: str) -> str:
     )
 
 
+def _log_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Log-classified turns as flat log rows: 8 resources by conv_id, the
+    severity, the message as body and the tool as an attribute."""
+    return (
+        _parsed(spark, sf_dir)
+        .where(F.col("signal_type") == "log")
+        .select(
+            F.pmod(F.xxhash64("conv_id"), F.lit(8)).cast("int").alias("res_idx"),
+            (F.col("log_ts_us") * 1000).alias("time_unix_nano"),
+            "severity_number",
+            "severity_text",
+            F.col("msg").alias("body"),
+            F.when(
+                F.col("tool").isNotNull(), F.create_map(F.lit("tool"), F.col("tool"))
+            ).alias("attrs"),
+        )
+    )
+
+
+def _log_rollup(dec: DataFrame, *extra) -> DataFrame:
+    """Per-severity rollup over the DECODED log values that both logs
+    capture round-trips return, plus the ``extra`` aggregates."""
+    return dec.groupBy("severity_text").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count("body").alias("n_body"),
+        # modular sum: raw nanosecond sums overflow int64 at a few thousand
+        # rows; the mod keeps the checksum integer-exact on both engines
+        F.sum(F.col("time_unix_nano") % F.lit(1_000_003)).cast("long").alias("sum_ts_mod"),
+        F.max("time_unix_nano").cast("long").alias("max_ts"),
+        F.max("severity_number").cast("int").alias("max_sev"),
+        *extra,
+    )
+
+
+def _exp_hist_points(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The offset-bearing exp-histogram rollup as flat metric points: one
+    resource, bucket lists as CSV strings and the unit as an attribute."""
+    return _exp_hist_delta(spark, sf_dir).select(
+        F.lit(0).alias("res_idx"),
+        "metric_name",
+        F.coalesce("metric_unit", F.lit("")).alias("metric_unit"),
+        F.lit("exponential_histogram").alias("metric_type"),
+        F.lit(1_700_000_000_000_000_000).alias("time_unix_nano"),
+        "count",
+        F.col("sum").cast("double").alias("sum"),
+        "scale",
+        "zero_count",
+        "positive_offset",
+        F.nullif(F.array_join("positive_bucket_counts", ","), F.lit("")).alias(
+            "positive_bucket_counts"
+        ),
+        "negative_offset",
+        F.nullif(F.array_join("negative_bucket_counts", ","), F.lit("")).alias(
+            "negative_bucket_counts"
+        ),
+        F.create_map(
+            F.lit("unit"), F.coalesce("metric_unit", F.lit(""))
+        ).alias("attrs"),
+    )
+
+
 def _exp_hist_decoded(decoded: DataFrame) -> DataFrame:
     """The decoded exp-hist fields both metrics capture round-trips return."""
     return decoded.where(F.col("res_idx") >= 0).select(
@@ -57,6 +122,45 @@ def _exp_hist_decoded(decoded: DataFrame) -> DataFrame:
         F.coalesce("negative_bucket_counts", F.lit("")).alias("negative_bucket_counts"),
         "n_attrs",
         F.col("attrs")["unit"].alias("attr_unit"),
+    )
+
+
+def _span_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Trace-classified turns as flat span rows built from pure column
+    expressions: lifecycle events, a parent link and the conv attr."""
+    tp = _trace_points(spark, sf_dir)
+    start_ns = F.unix_micros(F.col("ts").cast("timestamp")) * 1000
+    dur = F.col("dur_ms").cast("long")
+    end_ns = F.when(dur.isNotNull(), start_ns + dur * 1_000_000)
+    trace_hex = F.md5(F.col("conv_id"))
+    parent16 = F.when(F.col("parent_hex").isNotNull(), F.lpad("parent_hex", 16, "0"))
+    ev = F.struct(start_ns.alias("time_unix_nano"), F.lit("span.start").alias("name"))
+    ev_end = F.struct(end_ns.alias("time_unix_nano"), F.lit("span.end").alias("name"))
+    return tp.select(
+        # shard the capture across 8 resource groups (same scheme as the
+        # logs rows): res_idx=0 put EVERY span into one protojson
+        # collect_list group = one write task building one giant request
+        # line, and one read task parsing it — measured 2.6x wall at 10x
+        # events while every sibling stayed ~1.2-1.3x. The readers derive
+        # res_idx as the position WITHIN each request and the rollup groups
+        # by kind only, so results do not depend on the sharding.
+        F.pmod(F.xxhash64("conv_id"), F.lit(8)).cast("int").alias("res_idx"),
+        trace_hex.alias("trace_id"),
+        F.col("span_hex").alias("span_id"),
+        parent16.alias("parent_span_id"),
+        F.concat(F.lit("op-"), F.col("conv_id")).alias("name"),
+        (F.col("turn_idx") % 4 + 1).cast("int").alias("kind"),
+        start_ns.alias("start_time_unix_nano"),
+        end_ns.alias("end_time_unix_nano"),
+        F.when(dur.isNotNull(), (dur % 3).cast("int")).alias("status_code"),
+        F.create_map(F.lit("conv"), F.col("conv_id")).alias("attrs"),
+        F.when(dur.isNotNull(), F.array(ev, ev_end)).otherwise(F.array(ev)).alias("events"),
+        F.when(
+            parent16.isNotNull(),
+            F.array(F.struct(trace_hex.alias("trace_id"), parent16.alias("span_id"))),
+        ).otherwise(
+            F.array().cast("array<struct<trace_id:string,span_id:string>>")
+        ).alias("links"),
     )
 
 
@@ -103,42 +207,9 @@ def q_pipeline_pb_capture_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     rollup. The oracle replays the rollup straight from the transcripts,
     so equality holds iff encode∘decode == id on every frame (wire format
     included)."""
-    logs = (
-        _parsed(spark, sf_dir)
-        .where(F.col("signal_type") == "log")
-        .select(
-            "severity_text",
-            "severity_number",
-            F.col("msg").alias("body"),
-            (F.col("log_ts_us") * 1000).alias("time_unix_nano"),
-        )
-    )
-
-    def to_record(r: dict) -> dict:
-        return {
-            "res_idx": 0,
-            "severity_text": r["severity_text"],
-            "severity_number": None
-            if r["severity_number"] is None
-            else int(r["severity_number"]),
-            "body": r["body"],
-            "time_unix_nano": None
-            if r["time_unix_nano"] is None
-            else int(r["time_unix_nano"]),
-        }
-
     out = _capture_dir("oaas_pb_capture", sf_dir)
-    write_pb_capture(logs, out, to_record, encode_export_logs_request)
-    decoded = read_pb_logs(spark, out)
-    return decoded.groupBy("severity_text").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count("body").alias("n_body"),
-        # modular sum: raw nanosecond sums overflow int64 at a few thousand
-        # rows; the mod keeps the checksum integer-exact on both engines
-        F.sum(F.col("time_unix_nano") % F.lit(1_000_003)).cast("long").alias("sum_ts_mod"),
-        F.max("time_unix_nano").cast("long").alias("max_ts"),
-        F.max("severity_number").cast("int").alias("max_sev"),
-    )
+    write_pb_capture(_log_rows(spark, sf_dir), out, encode_export_logs_request)
+    return _log_rollup(read_pb_logs(spark, out))
 
 
 def q_pipeline_pb_metrics_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -153,112 +224,42 @@ def q_pipeline_pb_metrics_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     reader surfaces DP attr key/values as a map, not just a count) — the
     r4 ADVICE failure (exp-hist DPs decoded with the NumberDP layout)
     would turn every row into garbage here."""
-    eh = _exp_hist_delta(spark, sf_dir).select(
-        "metric_name",
-        "metric_unit",
-        "count",
-        "sum",
-        "scale",
-        "zero_count",
-        "positive_offset",
-        F.array_join("positive_bucket_counts", ",").alias("pos_csv"),
-        "negative_offset",
-        F.array_join("negative_bucket_counts", ",").alias("neg_csv"),
-    )
-
-    def to_record(r: dict) -> dict:
-        return {
-            "res_idx": 0,
-            "metric_name": r["metric_name"],
-            "metric_unit": r["metric_unit"],
-            "metric_type": "exponential_histogram",
-            "time_unix_nano": 1_700_000_000_000_000_000,
-            "count": int(r["count"]),
-            "sum": float(r["sum"]),
-            "scale": int(r["scale"]),
-            "zero_count": int(r["zero_count"]),
-            "positive_offset": int(r["positive_offset"]),
-            "positive_bucket_counts": r["pos_csv"] or None,
-            "negative_offset": int(r["negative_offset"]),
-            "negative_bucket_counts": r["neg_csv"] or None,
-            "attrs": {"unit": r["metric_unit"] or ""},
-        }
-
     out = _capture_dir("oaas_pb_mcapture", sf_dir)
-    write_pb_capture(eh, out, to_record, encode_export_metrics_request)
+    write_pb_capture(_exp_hist_points(spark, sf_dir), out, encode_export_metrics_request)
     return _exp_hist_decoded(read_pb_metrics(spark, out))
 
 
 def q_pipeline_otlp_json_metrics_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The protojson sibling of pipeline_pb_metrics_roundtrip, ZERO
-    Python: the same offset-bearing exp-histogram rollup is captured as
+    Python: the same offset-bearing exp-histogram points are captured as
     line-sharded ExportMetricsServiceRequest JSON (uint64-as-string,
     positive/negative DataPointBuckets with offsets) via to_json, decoded
     with from_json, and the decoded fields returned. Shares the .pb
     sibling's oracle verbatim — equality iff protojson encode∘decode == id
     on every exp-hist field including offsets and the attr value."""
-    eh = _exp_hist_delta(spark, sf_dir).select(
-        F.lit(0).alias("res_idx"),
-        "metric_name",
-        F.coalesce("metric_unit", F.lit("")).alias("metric_unit"),
-        F.lit("exponential_histogram").alias("metric_type"),
-        F.lit(1_700_000_000_000_000_000).alias("time_unix_nano"),
-        "count",
-        F.col("sum").cast("double").alias("sum"),
-        "scale",
-        "zero_count",
-        "positive_offset",
-        F.nullif(F.array_join("positive_bucket_counts", ","), F.lit("")).alias(
-            "positive_bucket_counts"
-        ),
-        "negative_offset",
-        F.nullif(F.array_join("negative_bucket_counts", ","), F.lit("")).alias(
-            "negative_bucket_counts"
-        ),
-        F.create_map(
-            F.lit("unit"), F.coalesce("metric_unit", F.lit(""))
-        ).alias("attrs"),
-    )
     out = _capture_dir("oaas_json_mcapture", sf_dir)
-    write_otlp_json_metrics(eh, out)  # overwrite mode: idempotent re-runs
+    # overwrite mode: idempotent re-runs
+    write_otlp_json_metrics(_exp_hist_points(spark, sf_dir), out)
     return _exp_hist_decoded(read_otlp_json_metrics(spark, out))
 
 
 def q_pipeline_otlp_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S7/S8 OTLP-JSON capture fidelity, oracle-gated, ZERO Python in the
-    data path: log-classified turns (+ a tool attribute) -> line-sharded
-    ExportLogsServiceRequest capture via to_json (protojson rendering,
-    requests sharded at resource grain) -> from_json decode -> severity
-    rollup over the DECODED values including the attr map. The protojson
-    sibling of pipeline_pb_capture_roundtrip — same oracle family (replayed
-    straight from the transcripts), so equality holds iff
-    encode∘decode == id; unlike the .pb path there is no mapInPandas
+    data path: the .pb sibling's log rows (with the tool attribute) ->
+    line-sharded ExportLogsServiceRequest capture via to_json (protojson
+    rendering, requests sharded at resource grain) -> from_json decode ->
+    severity rollup over the DECODED values including the attr map. The
+    protojson sibling of pipeline_pb_capture_roundtrip — same oracle
+    family (replayed straight from the transcripts), so equality holds iff
+    encode∘decode == id; unlike the .pb path there is no Python UDF
     anywhere, both codec directions are JVM Jackson inside the plan."""
-    logs = (
-        _parsed(spark, sf_dir)
-        .where(F.col("signal_type") == "log")
-        .select(
-            F.pmod(F.xxhash64("conv_id"), F.lit(8)).cast("int").alias("res_idx"),
-            (F.col("log_ts_us") * 1000).alias("time_unix_nano"),
-            "severity_number",
-            "severity_text",
-            F.col("msg").alias("body"),
-            F.when(
-                F.col("tool").isNotNull(), F.create_map(F.lit("tool"), F.col("tool"))
-            ).alias("attrs"),
-        )
-    )
     out = _capture_dir("oaas_json_capture", sf_dir)
-    write_otlp_json_logs(logs, out)  # overwrite mode: idempotent re-runs
-    dec = read_otlp_json_logs(spark, out).where(F.col("res_idx") >= 0)
-    return dec.groupBy("severity_text").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count("body").alias("n_body"),
-        F.sum(F.col("time_unix_nano") % F.lit(1_000_003)).cast("long").alias("sum_ts_mod"),
-        F.max("time_unix_nano").cast("long").alias("max_ts"),
-        F.max("severity_number").cast("int").alias("max_sev"),
-        F.count(F.try_element_at("attrs", F.lit("tool"))).cast("long").alias("n_tool"),
-        F.max(F.try_element_at("attrs", F.lit("tool"))).alias("max_tool"),
+    write_otlp_json_logs(_log_rows(spark, sf_dir), out)  # overwrite mode: idempotent re-runs
+    tool = F.try_element_at("attrs", F.lit("tool"))
+    return _log_rollup(
+        read_otlp_json_logs(spark, out).where(F.col("res_idx") >= 0),
+        F.count(tool).cast("long").alias("n_tool"),
+        F.max(tool).alias("max_tool"),
     )
 
 
@@ -272,101 +273,19 @@ def q_pipeline_pb_traces_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     rollup straight from the transcripts, so equality holds iff pb
     encode∘decode == id on ids, kind, status, both timestamps, event
     names+times, link trace/span ids and the attr value."""
-    spans_in = (
-        _trace_points(spark, sf_dir)
-        .select(
-            "conv_id",
-            F.md5(F.col("conv_id")).alias("trace_hex"),
-            F.col("span_hex"),
-            F.when(
-                F.col("parent_hex").isNotNull(), F.lpad("parent_hex", 16, "0")
-            ).alias("parent16"),
-            F.concat(F.lit("op-"), F.col("conv_id")).alias("name"),
-            (F.col("turn_idx") % 4 + 1).cast("int").alias("kind"),
-            (F.unix_micros(F.col("ts").cast("timestamp")) * 1000).alias("start_ns"),
-            F.col("dur_ms").cast("long").alias("dur_ms"),
-        )
-    )
-
-    def to_record(r: dict) -> dict:
-        start_ns = int(r["start_ns"])
-        dur = None if r["dur_ms"] is None else int(r["dur_ms"])
-        events = [{"time_unix_nano": start_ns, "name": "span.start"}]
-        end_ns = None
-        status = None
-        if dur is not None:
-            end_ns = start_ns + dur * 1_000_000
-            events.append({"time_unix_nano": end_ns, "name": "span.end"})
-            status = dur % 3
-        links = (
-            []
-            if r["parent16"] is None
-            else [{"trace_id": r["trace_hex"], "span_id": r["parent16"]}]
-        )
-        return {
-            "res_idx": 0,
-            "trace_id": r["trace_hex"],
-            "span_id": r["span_hex"],
-            "parent_span_id": r["parent16"],
-            "name": r["name"],
-            "kind": int(r["kind"]),
-            "start_time_unix_nano": start_ns,
-            "end_time_unix_nano": end_ns,
-            "status_code": status,
-            "attrs": {"conv": r["conv_id"]},
-            "events": events,
-            "links": links,
-        }
-
     out = _capture_dir("oaas_pb_tcapture", sf_dir)
-    write_pb_capture(spans_in, out, to_record, encode_export_trace_request)
+    write_pb_capture(_span_rows(spark, sf_dir), out, encode_export_trace_request)
     return _span_rollup(read_pb_spans(spark, out).where(F.col("res_idx") >= 0))
 
 
 def q_pipeline_otlp_json_traces_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The protojson sibling of pipeline_pb_traces_roundtrip, ZERO Python
     anywhere: the same span rows (lifecycle events, parent link, conv
-    attr) are built as pure column expressions, captured as line-sharded
-    ExportTraceServiceRequest JSON via to_json, decoded with from_json,
-    and rolled up from the DECODED values. Shares the .pb sibling's oracle
-    verbatim — equality holds iff protojson encode∘decode == id on ids,
-    kind, status, both timestamps, event names+times, link ids and the
-    attr value."""
-    tp = _trace_points(spark, sf_dir)
-    start_ns = F.unix_micros(F.col("ts").cast("timestamp")) * 1000
-    dur = F.col("dur_ms").cast("long")
-    end_ns = F.when(dur.isNotNull(), start_ns + dur * 1_000_000)
-    trace_hex = F.md5(F.col("conv_id"))
-    parent16 = F.when(F.col("parent_hex").isNotNull(), F.lpad("parent_hex", 16, "0"))
-    ev = F.struct(start_ns.alias("time_unix_nano"), F.lit("span.start").alias("name"))
-    ev_end = F.struct(end_ns.alias("time_unix_nano"), F.lit("span.end").alias("name"))
-    spans_in = tp.select(
-        # shard the capture across 8 resource groups (same scheme as the
-        # logs sibling): res_idx=0 put EVERY span into one collect_list
-        # group = one write task building one giant request line, and one
-        # read task parsing it — measured 2.6x wall at 10x events while
-        # every sibling stayed ~1.2-1.3x. The reader derives res_idx as
-        # the position WITHIN each request (0 for all good rows either
-        # way) and the final rollup groups by kind only, so results are
-        # identical; only the request sharding changes.
-        F.pmod(F.xxhash64("conv_id"), F.lit(8)).cast("int").alias("res_idx"),
-        trace_hex.alias("trace_id"),
-        F.col("span_hex").alias("span_id"),
-        parent16.alias("parent_span_id"),
-        F.concat(F.lit("op-"), F.col("conv_id")).alias("name"),
-        (F.col("turn_idx") % 4 + 1).cast("int").alias("kind"),
-        start_ns.alias("start_time_unix_nano"),
-        end_ns.alias("end_time_unix_nano"),
-        F.when(dur.isNotNull(), (dur % 3).cast("int")).alias("status_code"),
-        F.create_map(F.lit("conv"), F.col("conv_id")).alias("attrs"),
-        F.when(dur.isNotNull(), F.array(ev, ev_end)).otherwise(F.array(ev)).alias("events"),
-        F.when(
-            parent16.isNotNull(),
-            F.array(F.struct(trace_hex.alias("trace_id"), parent16.alias("span_id"))),
-        ).otherwise(
-            F.array().cast("array<struct<trace_id:string,span_id:string>>")
-        ).alias("links"),
-    )
+    attr) are captured as line-sharded ExportTraceServiceRequest JSON via
+    to_json, decoded with from_json, and rolled up from the DECODED
+    values. Shares the .pb sibling's oracle verbatim — equality holds iff
+    protojson encode∘decode == id on ids, kind, status, both timestamps,
+    event names+times, link ids and the attr value."""
     out = _capture_dir("oaas_json_tcapture", sf_dir)
-    write_otlp_json_spans(spans_in, out)  # overwrite mode: idempotent re-runs
+    write_otlp_json_spans(_span_rows(spark, sf_dir), out)  # overwrite mode: idempotent re-runs
     return _span_rollup(read_otlp_json_spans(spark, out).where(F.col("res_idx") >= 0))

@@ -9,7 +9,7 @@ carries identical information while keeping the writer distributed (no
 driver collect) and the reader a splittable text scan.
 
 Pure Spark SQL end-to-end: ``to_json`` / ``from_json`` / explode — ZERO
-Python in the data path. The .pb sibling (otlp_pb.py) needs mapInPandas
+Python in the data path. The .pb sibling (otlp_pb.py) needs mapInArrow
 only because protobuf wire framing isn't a SQL codec; protojson is, so
 this path stays inside whole-stage codegen'd operators and the JVM's
 Jackson codec.
@@ -58,15 +58,28 @@ def _kv_map(a):
 # the envelope core: one writer and one reader for all three signals
 # ---------------------------------------------------------------------------
 
+# the columns that key one Scope* entry: resource, scope name, scope version
+_SCOPE_KEY = ("_res", "_scope", "_ver")
+
+
 def _keyed(df: DataFrame, res_col: str, scope_col: str | None, *cols) -> DataFrame:
-    """``df`` with its resource key as ``_res`` and its scope key as
-    ``_scope`` (a null or absent scope is the empty scope), plus ``cols``."""
+    """``df`` with its resource key as ``_res``, its scope name as
+    ``_scope`` (a null or absent scope is the empty scope) and the
+    ``scope_version`` column as ``_ver`` (null when empty or absent, so
+    the version is omitted from the JSON), plus ``cols``."""
     scope = (
         F.coalesce(F.col(scope_col), F.lit(""))
         if scope_col and scope_col in df.columns
         else F.lit("")
     )
-    return df.select(F.col(res_col).alias("_res"), scope.alias("_scope"), *cols)
+    version = (
+        F.nullif(F.col("scope_version"), F.lit(""))
+        if "scope_version" in df.columns
+        else F.lit(None).cast("string")
+    )
+    return df.select(
+        F.col(res_col).alias("_res"), scope.alias("_scope"), version.alias("_ver"), *cols
+    )
 
 
 def _write_requests(
@@ -74,15 +87,16 @@ def _write_requests(
 ) -> None:
     """Keyed rows -> one Export{signal}ServiceRequest line per resource.
     ``item`` (a column over ``keyed``) groups into ``items`` lists by
-    (resource, scope), scopes into ``scope{signal}`` lists by resource.
+    (resource, scope name, scope version), scopes into ``scope{signal}``
+    lists by resource.
     With ``res_attrs`` the resource's attributes are the first ``_ra`` map
     of its rows. Two grouping shuffles on dimension grain; the final
     ``.text()`` write uses Spark's commit protocol, so task retries are
     idempotent (no manual file naming needed)."""
     ra = [F.first("_ra").alias("_ra")] if res_attrs else []
-    per_scope = keyed.groupBy("_res", "_scope").agg(F.collect_list(item).alias("_items"), *ra)
+    per_scope = keyed.groupBy(*_SCOPE_KEY).agg(F.collect_list(item).alias("_items"), *ra)
     scope = F.struct(
-        F.struct(F.col("_scope").alias("name")).alias("scope"),
+        F.struct(F.col("_scope").alias("name"), F.col("_ver").alias("version")).alias("scope"),
         F.col("_items").alias(items),
     )
     per_res = per_scope.groupBy("_res").agg(F.collect_list(scope).alias("_scopes"), *ra)
@@ -145,10 +159,10 @@ def _read_requests(
     A splittable text scan parses each line with ``from_json``; resources
     explode with their position as ``res_idx``, then scopes, then the
     ``items`` of each scope as ``_item`` (next to ``path``, ``res_idx``,
-    ``res_attrs`` and ``scope_name``). ``flatten`` maps that frame to the
-    signal's columns plus ``_error``, a message for a record that does
-    not decode (an int64 field that does not cast). Such a record, and a
-    line that is not a request, each become one quarantine row
+    ``res_attrs``, ``scope_name`` and ``scope_version``). ``flatten`` maps
+    that frame to the signal's columns plus ``_error``, a message for a
+    record that does not decode (an int64 field that does not cast). Such
+    a record, and a line that is not a request, each become one quarantine row
     (``_quarantine_row``; the line's first 80 characters as its message)
     — the reader counterpart of logs.go:145-154, like the .pb reader."""
     parsed = spark.read.text(path).select(
@@ -171,6 +185,7 @@ def _read_requests(
             "res_idx",
             "res_attrs",
             F.col("_scope.scope.name").alias("scope_name"),
+            F.col("_scope.scope.version").alias("scope_version"),
             F.explode_outer(f"_scope.{items}").alias("_item"),
         )
     )
@@ -216,7 +231,9 @@ def write_otlp_json_logs(
     """Flat log rows -> OTLP-JSON capture (one request line per resource).
 
     Expected flat columns (nullable unless noted): ``res_col`` (grouping
-    key, required), ``time_unix_nano`` long, ``severity_number`` int,
+    key, required), optional ``scope_col`` and ``scope_version`` strings
+    (records group into one scope per name and version),
+    ``time_unix_nano`` long, ``severity_number`` int,
     ``severity_text``, ``body`` string, optional ``attrs_col``
     map<string,string>, optional ``trace_id``/``span_id`` hex strings,
     optional ``res_attrs_col`` map<string,string> (a resource's first)."""
@@ -241,11 +258,10 @@ def write_otlp_json_logs(
 
 def read_otlp_json_logs(spark: SparkSession, path: str) -> DataFrame:
     """OTLP-JSON capture -> flat log rows: the read_pb_logs columns this
-    codec carries (no ``scope_version``, ``observed_time_unix_nano``,
-    ``n_res_attrs`` or ``n_attrs``), attr key/values as maps. A line that
-    is not a request, or a record whose ``timeUnixNano`` is not an int64,
-    yields one quarantine row with ``res_idx = -1`` and the error in
-    ``body``."""
+    codec carries (no ``observed_time_unix_nano``, ``n_res_attrs`` or
+    ``n_attrs``), attr key/values as maps. A line that is not a request,
+    or a record whose ``timeUnixNano`` is not an int64, yields one
+    quarantine row with ``res_idx = -1`` and the error in ``body``."""
 
     def flatten(exploded):
         r = F.col("_item")
@@ -253,6 +269,7 @@ def read_otlp_json_logs(spark: SparkSession, path: str) -> DataFrame:
             "path",
             "res_idx",
             "scope_name",
+            "scope_version",
             _int64(r["timeUnixNano"]).alias("time_unix_nano"),
             r["severityNumber"].alias("severity_number"),
             r["severityText"].alias("severity_text"),
@@ -498,8 +515,8 @@ def write_otlp_json_metrics(
     {gauge,sum,histogram,exponential_histogram,summary} picks the oneof;
     bucket lists arrive as the same CSV strings the .pb reader emits; data
     point columns the frame lacks are null. DPs group into metrics by
-    (resource, scope, name, unit, type, temporality, monotonicity), and
-    the metrics are the items of the request lines."""
+    (resource, scope name and version, name, unit, type, temporality,
+    monotonicity), and the metrics are the items of the request lines."""
     df = df.withColumns({
         f.name: F.lit(None).cast(f.dataType)
         for f in _metric_dp_fields() if f.name not in df.columns
@@ -553,7 +570,7 @@ def write_otlp_json_metrics(
             F.col("is_monotonic").alias("_mono"),
             dp.alias("_dp"),
         )
-        .groupBy("_res", "_scope", "_name", "_unit", "_type", "_temp", "_mono")
+        .groupBy(*_SCOPE_KEY, "_name", "_unit", "_type", "_temp", "_mono")
         .agg(F.collect_list("_dp").alias("_dps"))
     )
 

@@ -13,12 +13,13 @@ readers and id checks exist once for all three signals; each signal keeps
 only its item decoder and encoder.
 
 Spark plumbing: ``spark.read.format("binaryFile")`` gives (path, content)
-rows — one per capture file — and a mapInPandas decoder flattens each
-file's request into rows. Parallelism unit = file, exactly the
+rows — one per capture file — and a mapInArrow decoder flattens each
+file's request into Arrow records. Parallelism unit = file, exactly the
 reference's dataset granularity; no per-row Python beyond the per-FILE
-decode, which is the irreducible work. Encoders plus ``write_pb_capture``
-(the file exporter's capture analog, one request file per partition) make
-round-trips testable end-to-end.
+decode, which is the irreducible work. ``write_pb_capture`` (the file
+exporter's capture analog, one request file per partition) takes the same
+flat row frame the readers emit and the protojson writers take, so
+round-trips are testable end-to-end in both codecs from one input.
 """
 
 from __future__ import annotations
@@ -238,13 +239,15 @@ def _walk_envelope(data: bytes) -> Iterator[tuple]:
                 yield res_idx, res_attrs, name, version, item
 
 
-def _attrs(field: int, attrs: dict | None) -> bytes:
-    """A map as repeated KeyValue ``field`` (values as string AnyValues)."""
+def _attrs(field: int, attrs) -> bytes:
+    """A map as repeated KeyValue ``field`` (values as string AnyValues).
+    ``attrs`` is a dict or, as Arrow hands a map column over, a list of
+    (key, value) pairs."""
     if not attrs:
         return b""
     return b"".join(
         _ld(field, _ld(1, k.encode()) + _ld(2, _ld(1, str(v).encode())))
-        for k, v in attrs.items()
+        for k, v in dict(attrs).items()
     )
 
 
@@ -744,21 +747,20 @@ def encode_export_metrics_request(points: list[dict]) -> bytes:
 # ---------------------------------------------------------------------------
 
 def write_pb_capture(
-    df: DataFrame,
-    out_dir: str,
-    to_record: Callable[[dict], dict],
-    encode: Callable[[list[dict]], bytes],
+    df: DataFrame, out_dir: str, encode: Callable[[list[dict]], bytes]
 ) -> int:
     """Distributed .pb capture writer (the file exporter's analog): one
-    mapInPandas task per partition maps each row (nulls as None) through
-    ``to_record`` and writes ``encode(records)`` as ONE request file.
-    ``out_dir`` is cleared first, and files are named by PARTITION ID, not
-    uuid: a retried or speculatively re-executed task overwrites its own
-    file instead of duplicating the partition's records. Workers write to
-    local paths with ``open()`` (driver-local tmp in local mode; shared
-    storage on a cluster), so ``out_dir`` is a bare path or a ``file://``
-    URI; any other scheme raises ``ValueError``. Returns the number of
-    records written."""
+    mapInArrow task per partition hands its rows to ``encode`` as the
+    records Arrow converts them to (nulls as None, structs as dicts, maps
+    as (key, value) pairs) and writes ``encode(records)`` as ONE request
+    file. ``df`` is the flat frame the matching ``read_pb_*`` reader emits
+    and the protojson writers take. ``out_dir`` is cleared first, and
+    files are named by PARTITION ID, not uuid: a retried or speculatively
+    re-executed task overwrites its own file instead of duplicating the
+    partition's records. Workers write to local paths with ``open()``
+    (driver-local tmp in local mode; shared storage on a cluster), so
+    ``out_dir`` is a bare path or a ``file://`` URI; any other scheme
+    raises ``ValueError``. Returns the number of records written."""
     url = urlparse(out_dir)
     if url.scheme == "file" and url.netloc in ("", "localhost"):
         out_dir = url.path
@@ -768,22 +770,17 @@ def write_pb_capture(
     os.makedirs(out_dir, exist_ok=True)
 
     def write(batches):
-        import pandas as pd  # noqa: PLC0415 — worker-side import
+        import pyarrow as pa  # noqa: PLC0415 — worker-side import
         from pyspark import TaskContext  # noqa: PLC0415
 
-        recs = []
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            clean = pdf.astype(object).where(pdf.notna(), None)
-            recs.extend(to_record(r) for r in clean.to_dict("records"))
+        recs = [r for batch in batches for r in batch.to_pylist()]
         if recs:
             pid = TaskContext.get().partitionId()
             with open(os.path.join(out_dir, f"part-{pid:05d}.pb"), "wb") as f:
                 f.write(encode(recs))
-        yield pd.DataFrame({"n": [len(recs)]})
+        yield pa.RecordBatch.from_pydict({"n": pa.array([len(recs)], pa.int64())})
 
-    return df.mapInPandas(write, "n long").agg(F.sum("n")).first()[0] or 0
+    return df.mapInArrow(write, "n long").agg(F.sum("n")).first()[0] or 0
 
 
 def _read_pb(
@@ -795,27 +792,30 @@ def _read_pb(
     error_col: str,
 ) -> DataFrame:
     """binaryFile scan (one row per capture file, Spark splits files across
-    tasks) -> mapInPandas decode. A malformed file yields one path-tagged
-    quarantine row (``res_idx`` -1, the error text in ``error_col``, the
-    rest of ``error_row``) — error-not-crash, the reader counterpart of
-    logs.go:145-154."""
-    cols = StructType.fromDDL(schema).names
+    tasks) -> mapInArrow decode into Arrow records of ``schema``. A
+    malformed file yields one path-tagged quarantine row (``res_idx`` -1,
+    the error text in ``error_col``, the rest of ``error_row``) —
+    error-not-crash, the reader counterpart of logs.go:145-154."""
+    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+
+    arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
 
     def decode(batches):
-        import pandas as pd  # noqa: PLC0415 — worker-side import
+        import pyarrow as pa  # noqa: PLC0415 — worker-side import
 
-        for pdf in batches:
+        for batch in batches:
             rows: list[dict] = []
-            for path_, content in zip(pdf["path"], pdf["content"]):
+            paths = batch.column("path").to_pylist()
+            for path_, content in zip(paths, batch.column("content").to_pylist()):
                 try:
-                    rows.extend(decode_request(bytes(content), path_))
+                    rows.extend(decode_request(content, path_))
                 except Exception as e:  # noqa: BLE001 — quarantine, don't crash
                     rows.append({"path": path_, "res_idx": -1,
                                  error_col: f"__decode_error__: {e}", **error_row})
-            yield pd.DataFrame(rows, columns=cols)
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
     binary = spark.read.format("binaryFile").option("pathGlobFilter", "*.pb").load(path)
-    return binary.select("path", "content").mapInPandas(decode, schema)
+    return binary.select("path", "content").mapInArrow(decode, schema)
 
 
 def read_pb_metrics(spark: SparkSession, path: str) -> DataFrame:

@@ -1,10 +1,11 @@
-"""S2/S6/S8 sources: columnar readers with Iceberg gated behind availability.
+"""S2/S6/S8 sources: columnar readers for parquet paths and catalog tables.
 
 The production source is an Iceberg table partitioned by
 (bucket(conv_id), days(ts)) — partition pruning + min/max stats play the
-role of the reference's per-stream schema state (SURVEY.md §2.1 S5). The
-sandbox image has no Iceberg runtime jar, so reads fall back to parquet;
-the call sites are format-agnostic.
+role of the reference's per-stream schema state (SURVEY.md §2.1 S5). A
+catalog table name reads through the session's catalog, so the call
+sites are format-agnostic; the sandbox image has no Iceberg runtime jar
+and reads parquet paths.
 """
 
 from __future__ import annotations
@@ -17,20 +18,14 @@ TABLES = (
 )
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
-
-
-def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
-    """Read a transcripts table: Iceberg identifier if configured, else a
-    parquet path. S6 file-receiver analog (replay source)."""
-    if "/" not in path and iceberg_available(spark):
-        return spark.read.format("iceberg").load(path)
-    return spark.read.parquet(path)
+def read_transcripts(spark: SparkSession, source: str) -> DataFrame:
+    """Read a transcripts table: ``source`` is a parquet path when it ends
+    in ``.parquet`` or holds a ``/``, else a catalog table name (an
+    Iceberg table where the catalog is configured). S6 file-receiver
+    analog (replay source)."""
+    if source.endswith(".parquet") or "/" in source:
+        return spark.read.parquet(source)
+    return spark.table(source)
 
 
 def write_capture(df: DataFrame, path: str, fmt: str = "json", compression: str = "gzip") -> None:

@@ -17,13 +17,6 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = os.path.join(ROOT, "otel_arrow_adapter_spark")
 SKIP_DIRS = {".git", "__pycache__", "spark-warehouse", ".perfbench"}
 
-# name -> why it stays without a caller
-ALLOWED = {
-    # the Iceberg source path that BASELINE.json's north rule names
-    "read_transcripts": "Iceberg-or-parquet transcripts reader named by the north rule",
-    "iceberg_available": "Iceberg probe behind read_transcripts, named by the north rule",
-}
-
 
 def _py_files():
     for dirpath, dirnames, filenames in os.walk(ROOT):
@@ -74,8 +67,6 @@ def find_dead_names() -> list[str]:
         if not path.startswith(PACKAGE + os.sep):
             continue
         for name, lo, hi in _definitions(tree):
-            if name in ALLOWED:
-                continue
             used = any(
                 not (p == path and lo <= line <= hi) for p, line in refs.get(name, [])
             )
@@ -88,11 +79,3 @@ def test_no_dead_library_names():
     dead = find_dead_names()
     assert not dead, "unreferenced library names:\n" + "\n".join(dead)
 
-
-def test_allow_list_names_still_exist():
-    defined = set()
-    for path in _py_files():
-        if path.startswith(PACKAGE + os.sep):
-            with open(path, encoding="utf-8") as f:
-                defined.update(n for n, _, _ in _definitions(ast.parse(f.read())))
-    assert set(ALLOWED) <= defined

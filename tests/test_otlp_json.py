@@ -75,6 +75,30 @@ def test_otlp_json_malformed_line_quarantines(spark, tmp_path):
     ]
 
 
+def test_otlp_json_logs_keep_scope_version(spark, tmp_path):
+    """The InstrumentationScope version survives protojson encode∘decode:
+    records group into one scope per (name, version), as in the .pb
+    encoder, and the reader surfaces ``scope_version`` as read_pb_logs
+    does. A frame without the column writes no version."""
+    out = str(tmp_path / "capv")
+    df = spark.createDataFrame(
+        [(0, "lib", "1.0", 1, "a"), (0, "lib", "2.0", 2, "b"),
+         (0, "lib", "1.0", 3, "c"), (0, "lib", None, 4, "d")],
+        "res_idx int, scope_name string, scope_version string, "
+        "time_unix_nano long, body string",
+    )
+    write_otlp_json_logs(df, out)
+    rows = read_otlp_json_logs(spark, out).collect()
+    assert sorted((r.body, r.scope_name, r.scope_version) for r in rows) == [
+        ("a", "lib", "1.0"), ("b", "lib", "2.0"), ("c", "lib", "1.0"), ("d", "lib", None),
+    ]
+    (line,) = [r.value for r in spark.read.text(out).collect()]
+    assert line.count('"scope":') == 3 and line.count('"version":"1.0"') == 1
+
+    write_otlp_json_logs(df.drop("scope_version"), out)
+    assert {r.scope_version for r in read_otlp_json_logs(spark, out).collect()} == {None}
+
+
 def test_otlp_json_plan_has_no_python(spark, tmp_path):
     """The decode plan is pure JVM: no BatchEvalPython / ArrowEvalPython /
     mapInPandas stages anywhere (the whole point vs the .pb wire codec)."""

@@ -1,5 +1,5 @@
 """S8: OTLP .pb dataset loader (pure-Python wire format + Spark binaryFile
--> mapInPandas plumbing). Round-trip against our own capture writer, plus
+-> mapInArrow plumbing). Round-trip against our own capture writer, plus
 error-not-crash on malformed frames."""
 
 import pytest
@@ -114,11 +114,8 @@ def test_write_pb_capture_retry_idempotent(spark, tmp_path):
     out.mkdir()
     (out / "stale.pb").write_bytes(encode_export_logs_request([{"body": "stale"}]))
 
-    def to_record(r):
-        return {"res_idx": 0, "body": r["body"], "time_unix_nano": int(r["time_unix_nano"])}
-
     for _ in range(2):
-        assert write_pb_capture(df, str(out), to_record, encode_export_logs_request) == 24
+        assert write_pb_capture(df, str(out), encode_export_logs_request) == 24
     files = sorted(p.name for p in out.iterdir() if p.suffix == ".pb")
     assert non_empty == 3
     assert files == [f"part-{i:05d}.pb" for i in range(non_empty)]
@@ -146,18 +143,15 @@ def test_write_pb_capture_file_uri(spark, tmp_path, monkeypatch):
         (F.col("id") * 1000).alias("time_unix_nano"),
     )
 
-    def to_record(r):
-        return {"res_idx": 0, "body": r["body"], "time_unix_nano": int(r["time_unix_nano"])}
-
     out = tmp_path / "capture"
     uri = f"file://{out}"
-    assert write_pb_capture(df, uri, to_record, encode_export_logs_request) == 6
+    assert write_pb_capture(df, uri, encode_export_logs_request) == 6
     assert list(cwd.iterdir()) == []
     assert sorted(p.name for p in out.iterdir()) == ["part-00000.pb", "part-00001.pb"]
     bodies = [r["body"] for r in read_pb_logs(spark, uri).collect()]
     assert sorted(bodies) == [f"rec-{i}" for i in range(6)]
     with pytest.raises(ValueError, match="local files"):
-        write_pb_capture(df, "hdfs://nn:8020/capture", to_record, encode_export_logs_request)
+        write_pb_capture(df, "hdfs://nn:8020/capture", encode_export_logs_request)
 
 
 def test_pb_wire_roundtrip_property():

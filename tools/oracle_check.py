@@ -17,10 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from otel_arrow_adapter_spark.session import get_spark  # noqa: E402
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from otel_arrow_adapter_spark.sources.readers import TABLES  # noqa: E402
 
 
 def norm_rows(cols, rows, ndigits=6):
