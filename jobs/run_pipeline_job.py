@@ -44,7 +44,6 @@ def main() -> None:
     ap.add_argument("--run-id", default="run-0")
     ap.add_argument("--buckets", type=int, default=0, help="resumable conv_id hash buckets (0 = single pass)")
     ap.add_argument("--salt-buckets", type=int, default=0, help="salt fan-out for hot conversations")
-    ap.add_argument("--parse-impl", choices=("sql", "arrow"), default="sql")
     ap.add_argument("--id-mode", choices=("dense", "hash"), default="hash",
                     help="surrogate IDs: content-hash (no shuffle; default for clusters) or dense ranks")
     ap.add_argument("--catalog-tools", type=int, default=45, help="synthetic catalog size (or use --catalog-path)")
@@ -82,7 +81,6 @@ def main() -> None:
         resume=args.resume,
         id_mode=args.id_mode,
         salt_buckets=args.salt_buckets,
-        parse_impl=args.parse_impl,
         suppress_text=not args.verbatim_text,
     )
     for row in counts.orderBy("sink").collect():

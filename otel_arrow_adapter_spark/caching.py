@@ -10,7 +10,7 @@ every batch (pkg/otel/arrow_record/producer.go:46-48); here the
 equivalent is a scope::
 
     with materialize_scope() as m:
-        sig = m.keep(_doc_signatures(docs, 8, 3))  # materialized, held
+        sig = m.keep(_doc_signatures(docs, 8))     # materialized, held
         cand = m.own(lsh_candidates(sig))          # a callee's owned result, held
         for ...:
             nxt = m.keep(step(cur)); m.free(cur); cur = nxt  # one round early

@@ -73,18 +73,14 @@ def _attrs(h: Column, d: Column) -> Column:
     )
 
 
-def synthesize_metrics_nested(
-    spark: SparkSession, n_metrics: int = 300, seed: int = 42, partitions: int | None = None
-) -> DataFrame:
+def synthesize_metrics_nested(spark: SparkSession, n_metrics: int = 300, seed: int = 42) -> DataFrame:
     """Nested metrics table: (gen_id, res_id, scope_id, metric_type, name,
     description, unit, aggregation_temporality, is_monotonic, number_dps,
     hist_dps, summary_dps) — exactly one dp family non-empty per row."""
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
     from .seeds import seed_hash
 
     base = (
-        spark.range(0, n_metrics, 1, partitions)
+        spark.range(0, n_metrics, 1, spark.sparkContext.defaultParallelism)
         # md5-derived (not xxhash64) so a DuckDB oracle can replay the
         # generator exactly — see datagen/seeds.py
         .withColumn("h", seed_hash(F.col("id"), seed))
@@ -195,8 +191,6 @@ def synthesize_metrics_multivariate(
     n_resources: int = 100,
     n_ts: int = 1000,
     n_vars: int = 8,
-    seed: int = 42,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Multivariate metrics: K values per (resource, timestamp) sharing ONE
     attrs set — the reference's flagship compression case (multivariate
@@ -208,11 +202,9 @@ def synthesize_metrics_multivariate(
     engine-portable integer arithmetic."""
     from .seeds import seed_hash
 
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
     base = (
-        spark.range(0, n_resources * n_ts, 1, partitions)
-        .withColumn("h", seed_hash(F.col("id"), seed))
+        spark.range(0, n_resources * n_ts, 1, spark.sparkContext.defaultParallelism)
+        .withColumn("h", seed_hash(F.col("id"), 42))
         .withColumn("res_id", F.pmod(F.col("id"), F.lit(n_resources)).cast("long"))
         .withColumn("t", F.expr(f"id DIV {n_resources}"))
     )

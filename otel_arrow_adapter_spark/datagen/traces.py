@@ -20,13 +20,13 @@ from ..operators.star import nest
 _EPOCH = 1_704_067_200_000_000  # µs
 
 
-def _kv(h: Column, mod3: int = 3, mod5: int = 5) -> Column:
+def _kv(h: Column) -> Column:
     """0-2 string attrs, keys in sorted order ('env' < 'zone')."""
     env = F.struct(
-        F.lit("env").alias("key"), F.format_string("e-%d", F.pmod(h, F.lit(mod3))).alias("str")
+        F.lit("env").alias("key"), F.format_string("e-%d", F.pmod(h, F.lit(3))).alias("str")
     )
     zone = F.struct(
-        F.lit("zone").alias("key"), F.format_string("z-%d", F.pmod(h, F.lit(mod5))).alias("str")
+        F.lit("zone").alias("key"), F.format_string("z-%d", F.pmod(h, F.lit(5))).alias("str")
     )
     return F.filter(
         F.array(
@@ -37,18 +37,14 @@ def _kv(h: Column, mod3: int = 3, mod5: int = 5) -> Column:
     )
 
 
-def synthesize_traces_nested(
-    spark: SparkSession, n_spans: int = 300, seed: int = 42, partitions: int | None = None
-) -> DataFrame:
+def synthesize_traces_nested(spark: SparkSession, n_spans: int = 300, seed: int = 42) -> DataFrame:
     """Nested spans table: (gen_id, res_id, scope_id, trace_hex, span_hex,
     parent_span_hex, name, kind, start_ts_us, dur_ms, status_code, attrs,
     events, links)."""
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
     from .seeds import seed_hash
 
     base = (
-        spark.range(0, n_spans, 1, partitions)
+        spark.range(0, n_spans, 1, spark.sparkContext.defaultParallelism)
         # md5-derived (not xxhash64) so a DuckDB oracle can replay the
         # generator exactly — see datagen/seeds.py
         .withColumn("h", seed_hash(F.col("id"), seed))

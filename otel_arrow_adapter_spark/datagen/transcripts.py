@@ -110,16 +110,14 @@ def synthesize_transcripts(
     n_convs: int = 2_000,
     mean_turns: int = 25,
     seed: int = 42,
-    hot_fraction: float = 0.02,
-    hot_multiplier: int = 40,
     partitions: int | None = None,
 ) -> DataFrame:
     """Seeded, fully-distributed transcripts generator.
 
-    Power-law-ish skew: a ``hot_fraction`` of conversations get
-    ``hot_multiplier``× the mean turn count (the "80% of turns in 20% of
-    convs" shape from FIXTURES.md F1, exaggerated so skew handling is
-    actually exercised). Generation is `range -> column exprs -> explode`,
+    Power-law-ish skew: 2% of conversations get 40× the mean turn count
+    (the "80% of turns in 20% of convs" shape from FIXTURES.md F1,
+    exaggerated so skew handling is actually exercised). Generation is
+    `range -> column exprs -> explode`,
     so it scales linearly with executors and needs no driver memory.
     """
     if partitions is None:
@@ -133,8 +131,8 @@ def synthesize_transcripts(
         .withColumn(
             "n_turns",
             F.when(
-                (F.col("h") % 1000) < int(hot_fraction * 1000),
-                F.lit(mean_turns * hot_multiplier),
+                (F.col("h") % 1000) < 20,
+                F.lit(mean_turns * 40),
             ).otherwise((F.col("h") % (2 * mean_turns - 1)) + 1),
         )
     )
@@ -216,7 +214,7 @@ def synthesize_transcripts(
     )
 
 
-def synthesize_tool_catalog(spark: SparkSession, n_tools: int = 45, seed: int = 42) -> DataFrame:
+def synthesize_tool_catalog(spark: SparkSession, n_tools: int = 45) -> DataFrame:
     """Broadcast enrichment lookup (FIXTURES.md F2).
 
     Covers tool-0..tool-{n_tools-1}; the generator emits up to tool-49, so

@@ -33,10 +33,10 @@ from ..caching import materialize_scope
 from .text import token_rows, type_counts
 
 
-def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_counts(docs: DataFrame) -> DataFrame:
     """(word, n) over the normalized corpus — the single corpus-scale pass
     of BPE training; everything after operates at word-type grain."""
-    return type_counts(token_rows(docs, text_col), "n").withColumnRenamed("tok", "word")
+    return type_counts(token_rows(docs, "text"), "n").withColumnRenamed("tok", "word")
 
 
 def _merge_pair_in_syms(pdf_iter, a: str, b: str):
@@ -61,10 +61,7 @@ def _merge_pair_in_syms(pdf_iter, a: str, b: str):
 
 
 def bpe_train(
-    docs: DataFrame,
-    n_merges: int = 50,
-    text_col: str = "text",
-    min_pair_count: int = 2,
+    docs: DataFrame, n_merges: int = 50, min_pair_count: int = 2
 ) -> list[tuple[str, str]]:
     """Learn up to ``n_merges`` BPE merges from the corpus; returns the
     ranked merge list (the tokenizer artifact, like ``pca_project``'s
@@ -73,7 +70,7 @@ def bpe_train(
     merges: list[tuple[str, str]] = []
     with materialize_scope() as m:
         w = m.keep(
-            word_counts(docs, text_col)
+            word_counts(docs)
             # split only BETWEEN characters: not at start, and followed by one
             # (a bare "(?!^)" also matches at end-of-string and appends a
             # corrupting empty symbol)
@@ -125,11 +122,7 @@ def _encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
     return syms
 
 
-def bpe_apply(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_apply(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Tokenize every document with a learned merge list: returns the
     input plus ``n_bpe_tokens`` (the real sequence-length estimate for
     packing/budgeting — ``bpe_token_count``'s regex is the cheap proxy,
@@ -154,4 +147,4 @@ def bpe_apply(
 
         return texts.map(doc_tokens).astype("int64")
 
-    return docs.withColumn("n_bpe_tokens", _count(F.col(text_col)))
+    return docs.withColumn("n_bpe_tokens", _count(F.col("text")))

@@ -80,30 +80,28 @@ def _turn_term(norm_text):
     return F.conv(F.substring(h, 1, _FP_HEX_CHARS), 16, 10).cast("decimal(38,0)")
 
 
-def conv_fingerprints(turns: DataFrame, strip_digits: bool = True) -> DataFrame:
+def conv_fingerprints(turns: DataFrame) -> DataFrame:
     """Per-conversation content fingerprint WITHOUT assembling the
     conversation: ``(fp, n_turns)`` where ``fp = sum over turns of
-    md5(turn_idx ':' text')`` (60-bit terms, decimal sum). With
-    ``strip_digits`` the text is digit-stripped first — the C4-style
-    aggressive normalization that makes template-identical conversations
-    (same event shapes, different ids/values) collide, which is the
-    near-dup grain conversation curation actually wants."""
-    norm = F.col("text")
-    if strip_digits:
-        norm = F.regexp_replace(norm, "[0-9]+", "")
+    md5(turn_idx ':' text')`` (60-bit terms, decimal sum). The text is
+    digit-stripped first — the C4-style aggressive normalization that
+    makes template-identical conversations (same event shapes, different
+    ids/values) collide, which is the near-dup grain conversation
+    curation actually wants."""
+    norm = F.regexp_replace(F.col("text"), "[0-9]+", "")
     return turns.groupBy("conv_id").agg(
         F.sum(_turn_term(norm)).alias("_fp_sum"),
         F.count(F.lit(1)).alias("n_turns"),
     )
 
 
-def conv_dedup(turns: DataFrame, strip_digits: bool = True) -> DataFrame:
+def conv_dedup(turns: DataFrame) -> DataFrame:
     """Conversation-level keep-first dedup groups: conversations with the
     same (fingerprint, n_turns) form one group; the minimum ``conv_id`` is
     the kept representative (deterministic, matching the document-grain
     ``clean_corpus`` rule). Returns one row per group:
     (rep_conv_id, n_convs, n_turns, fp:string)."""
-    fps = conv_fingerprints(turns, strip_digits=strip_digits)
+    fps = conv_fingerprints(turns)
     return fps.groupBy("_fp_sum", "n_turns").agg(
         F.min("conv_id").alias("rep_conv_id"),
         F.count(F.lit(1)).alias("n_convs"),
@@ -115,17 +113,13 @@ def conv_dedup(turns: DataFrame, strip_digits: bool = True) -> DataFrame:
     )
 
 
-def conv_quality(
-    turns: DataFrame,
-    min_turns: int = 2,
-    max_turns: int = 200,
-    min_alternation: float = 0.5,
-) -> DataFrame:
+def conv_quality(turns: DataFrame) -> DataFrame:
     """Conversation-structure quality signals — the conversation-grain
     analog of the document ``quality_score`` filter, applied before SFT
-    mining: turn-count bounds, both-roles-present, and role alternation
-    rate (fraction of adjacent turn pairs that switch roles; a wall of
-    same-role turns is scraper noise, not dialogue). Returns every
+    mining: 2 to 200 turns, both roles present, and a role alternation
+    rate of at least 0.5 (fraction of adjacent turn pairs that switch
+    roles; a wall of same-role turns is scraper noise, not dialogue).
+    Returns every
     conversation with its stats and a ``keep`` flag (flag, don't filter —
     downstream stages choose).
 
@@ -153,10 +147,10 @@ def conv_quality(
         F.col("n_turns") > 1, F.col("_n_alt") / (F.col("n_turns") - 1)
     ).otherwise(F.lit(1.0))
     keep = (
-        F.col("n_turns").between(min_turns, max_turns)
+        F.col("n_turns").between(2, 200)
         & (F.col("n_user") > 0)
         & (F.col("n_assistant") > 0)
-        & (alt_rate >= min_alternation)
+        & (alt_rate >= 0.5)
     )
     return agg.select(
         "conv_id",

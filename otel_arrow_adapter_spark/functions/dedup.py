@@ -41,10 +41,10 @@ DEFAULT_BANDS = 4  # rows-per-band = num_hashes / bands
 CC_MAX_STEPS = 20
 
 
-def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """(fingerprint, n_docs, doc_ids) for groups with >1 member."""
     return (
-        docs.withColumn("fp", fingerprint(F.col(text_col)))
+        docs.withColumn("fp", fingerprint(F.col("text")))
         .groupBy("fp")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -78,9 +78,7 @@ def window_kgrams(docs: DataFrame, k: int, text_col: str, with_pos: bool = True)
     ).where(F.col("gram").isNotNull())
 
 
-def doc_shingles(
-    docs: DataFrame, k: int = 3, text_col: str = "text", distinct: bool = True
-) -> DataFrame:
+def doc_shingles(docs: DataFrame, k: int = 3, distinct: bool = True) -> DataFrame:
     """(doc_id, shingle) long table — distinct shingle set per doc
     (``distinct=False`` skips the extra (doc_id, shingle) shuffle for
     consumers that deduplicate downstream anyway).
@@ -89,7 +87,7 @@ def doc_shingles(
     hash-partitions on doc_id — the same key the downstream minhash
     groupBy needs, so the sort-based shingling is effectively free at
     scale (one shuffle serves both)."""
-    out = window_kgrams(docs, k, text_col, with_pos=False).withColumnRenamed("gram", "shingle")
+    out = window_kgrams(docs, k, "text", with_pos=False).withColumnRenamed("gram", "shingle")
     return out.distinct() if distinct else out
 
 
@@ -112,24 +110,21 @@ def _minhash_aggs(num_hashes: int) -> list:
 def minhash_signature(
     docs: DataFrame,
     num_hashes: int = DEFAULT_NUM_HASHES,
-    k: int = 3,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
-    """(doc_id, sig_0..sig_{n-1}): lexicographic min-hash per shingle set
-    (hash family in :func:`_minhash_aggs`). Shape: one groupBy(doc_id) with
+    """(doc_id, sig_0..sig_{n-1}): lexicographic min-hash per word-3-gram
+    shingle set (hash family in :func:`_minhash_aggs`). Shape: one groupBy(doc_id) with
     n min() aggregates over the shingle rows — a single map-side-combined
     shuffle; the aggregation also acts as a pipeline breaker so downstream
     banding doesn't re-expand the shingle expressions. Pass a
     (materialized) ``shingles`` table to reuse one shingling pass; the
     chain's own callers use :func:`_doc_signatures` instead, which carries
     each document's shingle set in the same aggregation."""
-    sh = doc_shingles(docs, k) if shingles is None else shingles
+    sh = doc_shingles(docs) if shingles is None else shingles
     return sh.groupBy("doc_id").agg(*_minhash_aggs(num_hashes))
 
 
-def _doc_signatures(
-    docs: DataFrame, num_hashes: int, k: int, text_col: str = "text"
-) -> DataFrame:
+def _doc_signatures(docs: DataFrame, num_hashes: int) -> DataFrame:
     """(doc_id, _sh, sig_0..sig_{n-1}): the doc-grain signature table —
     each document's distinct shingle SET and its min-hash signature from
     ONE groupBy(doc_id) over the non-distinct shingle rows. The window
@@ -137,8 +132,9 @@ def _doc_signatures(
     aggregation adds no exchange. Banding reads the ``sig_*`` columns and
     the Jaccard verify joins the ``_sh`` column onto each candidate side,
     so one materialization of this table serves the whole LSH -> Jaccard
-    front half. Documents shorter than ``k`` tokens have no row."""
-    sh = doc_shingles(docs, k, text_col, distinct=False)
+    front half. Shingles are word 3-grams, so documents shorter than 3
+    tokens have no row."""
+    sh = doc_shingles(docs, distinct=False)
     return sh.groupBy("doc_id").agg(
         F.collect_set("shingle").alias("_sh"), *_minhash_aggs(num_hashes)
     )
@@ -226,11 +222,10 @@ def _verify_pairs(
 def jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.5,
-    k: int = 3,
     candidates: DataFrame | None = None,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard for all (or candidate) pairs.
+    """Exact word-3-gram Jaccard for all (or candidate) pairs.
 
     Without candidates: inverted-index join on shingle (never all-pairs —
     only docs sharing >=1 shingle are compared).
@@ -253,7 +248,7 @@ def jaccard_pairs(
     across several calls keeps it (materialize the passed frames yourself;
     an unmaterialized ``shingles`` with no ``candidates`` is re-evaluated
     per use)."""
-    sh = doc_shingles(docs, k, distinct=False) if shingles is None else shingles
+    sh = doc_shingles(docs, distinct=False) if shingles is None else shingles
     with materialize_scope() as m:
         if candidates is not None:
             candidates = m.keep(candidates)  # used 3x: doc-id set + 2 pair joins
@@ -299,7 +294,6 @@ def lsh_jaccard_pairs(
     threshold: float = 0.5,
     num_hashes: int = DEFAULT_NUM_HASHES,
     bands: int = DEFAULT_BANDS,
-    k: int = 3,
 ) -> DataFrame:
     """Verified near-dup pairs (doc_a, doc_b, jaccard): MinHash-LSH
     candidates checked by exact shingle Jaccard — the front half of every
@@ -310,21 +304,13 @@ def lsh_jaccard_pairs(
     The signature table and the candidates are freed before returning, on
     error too; the caller owns the materialized pairs."""
     with materialize_scope() as m:
-        sig = m.keep(_doc_signatures(docs, num_hashes, k))
+        sig = m.keep(_doc_signatures(docs, num_hashes))
         cand = m.own(lsh_candidates(sig, num_hashes, bands))
         out = _verify_pairs(cand, "doc_a", "doc_b", threshold, sig, sig)
         return owned_result(out.select("doc_a", "doc_b", "jaccard"))
 
 
-def incremental_dedup(
-    batch: DataFrame,
-    index: DataFrame,
-    threshold: float = 0.7,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    bands: int = DEFAULT_BANDS,
-    k: int = 3,
-    text_col: str = "text",
-) -> DataFrame:
+def incremental_dedup(batch: DataFrame, index: DataFrame, threshold: float = 0.7) -> DataFrame:
     """Incremental-ingestion dedup gate: classify each document of a NEW
     batch against an EXISTING corpus index — the daily-crawl-increment
     production pattern (one-shot cleaning is ``doc_clean_corpus*``;
@@ -332,8 +318,9 @@ def incremental_dedup(
     ``exact_dup`` (fingerprint already in the index), else ``batch_dup``
     (an earlier doc in the SAME batch shares its fingerprint — keep-first
     within the increment), else ``near_dup`` (LSH band candidate against
-    the index verified at shingle-Jaccard >= threshold), else ``new``.
-    Returns (doc_id, reason, keep) for every batch doc.
+    the index verified at shingle-Jaccard >= threshold, banded as
+    ``DEFAULT_NUM_HASHES`` minhashes in ``DEFAULT_BANDS`` bands), else
+    ``new``. Returns (doc_id, reason, keep) for every batch doc.
 
     Scale shape at a 10^12-doc index: the index side is PRECOMPUTED state —
     its fingerprints and doc-grain signature table (shingle set + band
@@ -351,8 +338,8 @@ def incremental_dedup(
         # the md5 fingerprint over the FULL text — the expensive per-row op of
         # the exact stage — 3-4x per run. The verdict frames are O(batch)
         # doc_id rows; materialize them once.
-        fp_b = m.keep(batch.select("doc_id", fingerprint(F.col(text_col)).alias("fp")))
-        fp_i = index.select(fingerprint(F.col(text_col)).alias("fp")).distinct()
+        fp_b = m.keep(batch.select("doc_id", fingerprint(F.col("text")).alias("fp")))
+        fp_i = index.select(fingerprint(F.col("text")).alias("fp")).distinct()
         exact = m.keep(
             fp_b.join(fp_i, "fp", "left_semi").select("doc_id").withColumn("r_exact", F.lit(True))
         )
@@ -375,10 +362,10 @@ def incremental_dedup(
         )
         # ONE doc-grain signature table per side (shingle set + minhash from
         # one aggregation), shared by the banding AND the Jaccard verify
-        sig_surv = m.keep(_doc_signatures(survivors, num_hashes, k, text_col))
-        sig_idx = m.keep(_doc_signatures(index, num_hashes, k, text_col))
-        bb = banded_buckets(sig_surv, num_hashes, bands)
-        bi = banded_buckets(sig_idx, num_hashes, bands).select(
+        sig_surv = m.keep(_doc_signatures(survivors, DEFAULT_NUM_HASHES))
+        sig_idx = m.keep(_doc_signatures(index, DEFAULT_NUM_HASHES))
+        bb = banded_buckets(sig_surv)
+        bi = banded_buckets(sig_idx).select(
             F.col("doc_id").alias("index_doc"), "band", "bucket"
         )
         cand = m.keep(bb.join(bi, ["band", "bucket"]).select("doc_id", "index_doc").distinct())
@@ -502,13 +489,7 @@ def dup_clusters(
         return owned_result(out)
 
 
-def leakage_free_split(
-    docs: DataFrame,
-    pairs: DataFrame,
-    val_frac: float = 0.1,
-    id_col: str = "doc_id",
-    denom: int = 10000,
-) -> DataFrame:
+def leakage_free_split(docs: DataFrame, pairs: DataFrame, val_frac: float = 0.1) -> DataFrame:
     """Train/validation split that cannot leak near-duplicates across the
     boundary: every member of a duplicate cluster follows its CLUSTER's
     hash draw (split key = cluster id, the component's min doc id);
@@ -520,18 +501,20 @@ def leakage_free_split(
     Shape at 100 TB: :func:`dup_clusters` resolves the pair graph
     (O(component diameter) rounds); the cluster map is O(dup docs) — tiny
     next to the corpus — and joins back on doc_id; the draw itself is a
-    pure md5 expression (reproducible across engines and re-runs, no RNG
-    state). Returns (doc_id, split_key, split), materialized: the caller
-    owns it and calls ``unpersist()`` when done."""
-    key = F.coalesce(F.col("cluster_id"), F.col(id_col))
-    u = md5_bucket(key, denom)
+    pure md5 expression at 1/10000 resolution (reproducible across engines
+    and re-runs, no RNG state). Returns (doc_id, split_key, split),
+    materialized: the caller owns it and calls ``unpersist()`` when done."""
+    key = F.coalesce(F.col("cluster_id"), F.col("doc_id"))
+    u = md5_bucket(key, 10000)
     with materialize_scope() as m:
-        clusters = m.own(dup_clusters(pairs, id_name=id_col))
-        joined = docs.select(id_col).join(clusters.select(id_col, "cluster_id"), id_col, "left")
+        clusters = m.own(dup_clusters(pairs))
+        joined = docs.select("doc_id").join(
+            clusters.select("doc_id", "cluster_id"), "doc_id", "left"
+        )
         out = joined.select(
-            id_col,
+            "doc_id",
             key.alias("split_key"),
-            F.when(u < int(val_frac * denom), F.lit("val"))
+            F.when(u < int(val_frac * 10000), F.lit("val"))
             .otherwise(F.lit("train"))
             .alias("split"),
         )
@@ -579,11 +562,11 @@ def _simhash_batch(texts: pd.Series) -> pd.Series:
     return pd.Series(sig.astype(np.int64))
 
 
-def simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash long). Arrow-batched; per-token md5 keeps it
     deterministic across engines/runs."""
     udf = F.pandas_udf(_simhash_batch, "long")
-    return docs.select("doc_id", udf(F.col(text_col)).alias("simhash"))
+    return docs.select("doc_id", udf(F.col("text")).alias("simhash"))
 
 
 def simhash_near_dups(
@@ -651,7 +634,6 @@ def dup_spans(
     k: int = 5,
     min_docs: int = 2,
     min_tokens: int | None = None,
-    text_col: str = "text",
 ) -> DataFrame:
     """ExactSubstr-style duplicate-SPAN detection (Lee et al. 2021,
     "Deduplicating Training Data Makes Language Models Better"): maximal
@@ -675,7 +657,7 @@ def dup_spans(
     offset, span length in tokens, and the number of k-gram anchors
     merged into the span.
     """
-    grams = window_kgrams(docs, k, text_col)
+    grams = window_kgrams(docs, k, "text")
     dup = (
         grams.groupBy("gram")
         .agg(F.countDistinct("doc_id").alias("nd"))
@@ -696,13 +678,7 @@ def dup_spans(
     return out
 
 
-def ngram_contamination(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    n: int = 8,
-    text_col: str = "text",
-    bench_text_col: str = "text",
-) -> DataFrame:
+def ngram_contamination(docs: DataFrame, benchmark: DataFrame, n: int = 8) -> DataFrame:
     """Benchmark decontamination: flag corpus documents sharing at least
     one word n-gram with an evaluation set (the GPT-3/PaLM 13-gram-overlap
     protocol, here parameterized; default n=8). Returns
@@ -717,10 +693,8 @@ def ngram_contamination(
     over the (rare) hits. Never an all-pairs or sort-merge join against
     the fact table.
     """
-    bench_grams = doc_shingles(benchmark, k=n, text_col=bench_text_col).select(
-        F.col("shingle").alias("gram")
-    ).distinct()
-    doc_grams = doc_shingles(docs, k=n, text_col=text_col, distinct=False).select(
+    bench_grams = doc_shingles(benchmark, k=n).select(F.col("shingle").alias("gram")).distinct()
+    doc_grams = doc_shingles(docs, k=n, distinct=False).select(
         "doc_id", F.col("shingle").alias("gram")
     )
     return (

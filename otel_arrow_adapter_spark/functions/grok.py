@@ -84,8 +84,9 @@ def _make_extract(regex: str, fields: list[str]):
     return extract
 
 
-def grok_parse(df: DataFrame, pattern: str, text_col: str = "text") -> DataFrame:
-    """Add one string column per grok field (null where no match).
+def grok_parse(df: DataFrame, pattern: str) -> DataFrame:
+    """Add one string column per grok field of the ``text`` column (null
+    where no match).
 
     All fields come back as strings; cast downstream with ``try_cast`` so
     malformed values null out instead of raising under ANSI mode.
@@ -93,7 +94,7 @@ def grok_parse(df: DataFrame, pattern: str, text_col: str = "text") -> DataFrame
     regex, fields = compile_grok(pattern)
     ddl = ", ".join(f"`{f}` string" for f in fields)
     udf = F.pandas_udf(_make_extract(regex, fields), f"struct<{ddl}>")
-    g = udf(F.col(text_col))
+    g = udf(F.col("text"))
     return df.withColumns({f: g[f] for f in fields})
 
 

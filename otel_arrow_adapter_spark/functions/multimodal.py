@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 FEATURE_DIM = 16
 
 
-def synthesize_media(spark, n: int = 200, payload_bytes: int = 256) -> DataFrame:
+def synthesize_media(spark, n: int = 200) -> DataFrame:
     """Deterministic fake media table (seeded payload from media_id)."""
     return spark.range(0, n).select(
         F.col("id").alias("media_id"),
@@ -58,12 +58,13 @@ def _decode_stub(payload: bytes) -> np.ndarray:
     return np.frombuffer(h[: FEATURE_DIM * 2], dtype=np.uint16).astype(np.float64) / 65535.0
 
 
-def extract_features(media: DataFrame, batch_size: int = 512) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """mapInPandas feature extraction: binary payload -> array<float>.
 
     The iterator-of-batches shape is the Arrow analog of the reference's
-    per-batch builder loop; batch size bounds executor memory exactly like
-    the reference's LimitedAllocator bounds the IPC reader
+    per-batch builder loop; the Arrow batch size
+    (``spark.sql.execution.arrow.maxRecordsPerBatch``) bounds executor
+    memory exactly like the reference's LimitedAllocator bounds the IPC reader
     (/root/reference/pkg/otel/common/arrow/allocator.go:24-51)."""
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -8,9 +8,9 @@ Operator families, native column expressions unless noted:
 - sign-LSH pair finders: ``ann_pairs``, ``ann_pairs_multiprobe``,
   ``ann_pairs_banded`` and ``ann_pairs_projected`` (pandas-UDF
   projection buckets), with ``brute_force_pairs`` as recall ground truth;
-- IVF: ``ivf_assign`` (coarse assignment to seed or ``kmeans_train``
-  centroids: one broadcast n x k scoring and a groupBy struct-max
-  argmax, no window), ``ivf_search`` and ``semdedup``;
+- IVF: ``ivf_assign`` (coarse assignment to the seed centroids: one
+  broadcast n x k scoring and a groupBy struct-max argmax, no window),
+  ``ivf_search`` (seed or ``kmeans_train`` centroids) and ``semdedup``;
 - PQ: ``pq_codebooks``/``pq_train_codebooks``, ``pq_encode``,
   ``pq_code_histogram``, ``pq_search_adc``, ``ivfpq_search`` and
   ``pq_search_rescored``;
@@ -70,23 +70,18 @@ def _query_scored(
     )
 
 
-def cosine_topk(
-    embeddings: DataFrame,
-    query_vec_id: int = 0,
-    k: int = 10,
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_topk(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10) -> DataFrame:
     """Top-k neighbors of one vector by cosine (excluding itself);
     deterministic tie-break by vec_id."""
-    q = _query_vec(embeddings, query_vec_id, vec_col)
-    scored = _query_scored(embeddings.where(F.col("vec_id") != query_vec_id), q, vec_col)
+    q = _query_vec(embeddings, query_vec_id, "embedding")
+    scored = _query_scored(embeddings.where(F.col("vec_id") != query_vec_id), q, "embedding")
     return top_k(scored, "cos_sim", "vec_id", k)
 
 
-def _sign_bits(vec_col: str, start: int, m: int) -> Column:
+def _sign_bits(start: int, m: int) -> Column:
     """Sign-bit string ("1" for >= 0) of dimensions [start, start + m)."""
     return F.concat(*[
-        F.when(F.element_at(F.col(vec_col), start + i + 1) >= 0, F.lit("1")).otherwise(
+        F.when(F.element_at(F.col("embedding"), start + i + 1) >= 0, F.lit("1")).otherwise(
             F.lit("0")
         )
         for i in range(m)
@@ -98,7 +93,6 @@ def _bucket_pairs(
     right: DataFrame,
     on: str | list[str] | Column,
     threshold: float,
-    vec_col: str,
     distinct: bool = True,
 ) -> DataFrame:
     """The shared candidate-join-and-verify body of the ANN pair finders:
@@ -112,43 +106,34 @@ def _bucket_pairs(
         .select(
             F.col("l.vec_id").alias("vec_a"),
             F.col("r.vec_id").alias("vec_b"),
-            F.round(cosine(F.col(f"l.{vec_col}"), F.col(f"r.{vec_col}")), 6).alias("cos_sim"),
+            F.round(cosine(F.col("l.embedding"), F.col("r.embedding")), 6).alias("cos_sim"),
         )
         .where(F.col("cos_sim") >= threshold)
     )
     return pairs.distinct() if distinct else pairs
 
 
-def sign_lsh_buckets(embeddings: DataFrame, m: int = 8, vec_col: str = "embedding") -> DataFrame:
+def sign_lsh_buckets(embeddings: DataFrame, m: int = 8) -> DataFrame:
     """Bucket id = sign-bit string of the first m dimensions."""
-    return embeddings.withColumn("bucket", _sign_bits(vec_col, 0, m))
+    return embeddings.withColumn("bucket", _sign_bits(0, m))
 
 
-def ann_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.3,
-    m: int = 8,
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ann_pairs(embeddings: DataFrame, threshold: float = 0.3, m: int = 8) -> DataFrame:
     """Approximate near-neighbor pairs: same sign-LSH bucket + cosine >= t."""
-    b = sign_lsh_buckets(embeddings, m, vec_col).select("vec_id", "bucket", vec_col)
-    return _bucket_pairs(b, b, "bucket", threshold, vec_col, distinct=False)
+    b = sign_lsh_buckets(embeddings, m).select("vec_id", "bucket", "embedding")
+    return _bucket_pairs(b, b, "bucket", threshold, distinct=False)
 
 
-def seed_centroids(
-    embeddings: DataFrame, n_centroids: int, vec_col: str = "embedding"
-) -> DataFrame:
+def seed_centroids(embeddings: DataFrame, n_centroids: int) -> DataFrame:
     """Deterministic init: the first n vectors by vec_id. (k-means++ would
     sample distance-weighted; deterministic-first keeps every downstream
     result oracle-checkable.)"""
     return embeddings.where(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("centroid_id"), F.col(vec_col).alias("c_vec")
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c_vec")
     )
 
 
-def assign_to_centroids(
-    embeddings: DataFrame, centroids: DataFrame, vec_col: str = "embedding"
-) -> DataFrame:
+def assign_to_centroids(embeddings: DataFrame, centroids: DataFrame) -> DataFrame:
     """(vec_id, centroid_id, cos_sim) of each vector's nearest centroid.
 
     Broadcast n×k scoring + max_by argmin — ONE map-side-combined shuffle
@@ -157,7 +142,7 @@ def assign_to_centroids(
     scored = embeddings.crossJoin(F.broadcast(centroids)).select(
         "vec_id",
         "centroid_id",
-        F.round(cosine(F.col(vec_col), F.col("c_vec")), 6).alias("cos_sim"),
+        F.round(cosine(F.col("embedding"), F.col("c_vec")), 6).alias("cos_sim"),
     )
     # deterministic argmax: max over (cos_sim, -centroid_id) breaks ties
     # toward the smaller centroid id
@@ -169,25 +154,12 @@ def assign_to_centroids(
     )
 
 
-def ivf_assign(
-    embeddings: DataFrame,
-    n_centroids: int = 10,
-    vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
-) -> DataFrame:
-    """IVF coarse assignment against seed (default, oracle-checkable) or
-    trained centroids."""
-    cents = centroids if centroids is not None else seed_centroids(embeddings, n_centroids, vec_col)
-    return assign_to_centroids(embeddings, cents, vec_col)
+def ivf_assign(embeddings: DataFrame, n_centroids: int = 10) -> DataFrame:
+    """IVF coarse assignment against the seed centroids (oracle-checkable)."""
+    return assign_to_centroids(embeddings, seed_centroids(embeddings, n_centroids))
 
 
-def semdedup(
-    embeddings: DataFrame,
-    n_clusters: int = 10,
-    threshold: float = 0.35,
-    vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
-) -> DataFrame:
+def semdedup(embeddings: DataFrame, n_clusters: int = 10, threshold: float = 0.35) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic deduplication by clustering
     + within-cluster pairwise cosine. A vector is a duplicate when some
     cluster-mate EARLIER in the cluster's fixed scan order has cosine
@@ -209,21 +181,21 @@ def semdedup(
     Returns one row per vector: (vec_id, centroid_id, centroid_sim,
     keep) — ``keep`` false for dropped duplicates.
     """
-    assign = ivf_assign(embeddings, n_clusters, vec_col, centroids)
+    assign = ivf_assign(embeddings, n_clusters)
     w = Window.partitionBy("centroid_id").orderBy(F.asc("cos_sim"), F.asc("vec_id"))
     a = assign.withColumn("rnk", F.row_number().over(w)).join(
-        embeddings.select("vec_id", vec_col), "vec_id"
+        embeddings.select("vec_id", "embedding"), "vec_id"
     )
     left = a.select(
         F.col("centroid_id").alias("cid"),
         F.col("rnk").alias("lrnk"),
-        F.col(vec_col).alias("lv"),
+        F.col("embedding").alias("lv"),
     )
     right = a.select(
         "vec_id",
         F.col("centroid_id").alias("cid"),
         F.col("rnk").alias("rrnk"),
-        F.col(vec_col).alias("rv"),
+        F.col("embedding").alias("rv"),
     )
     dropped = (
         left.join(right, "cid")
@@ -241,12 +213,7 @@ def semdedup(
     )
 
 
-def kmeans_train(
-    embeddings: DataFrame,
-    n_centroids: int = 10,
-    iters: int = 5,
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans_train(embeddings: DataFrame, n_centroids: int = 10, iters: int = 5) -> DataFrame:
     """Distributed Lloyd iterations for IVF centroids (cosine geometry:
     centroids are L2-normalized means, so dot == cosine ranking).
 
@@ -266,14 +233,12 @@ def kmeans_train(
             "centroid_id", F.transform("c_vec", lambda x: x / norm(F.col("c_vec"))).alias("c_vec")
         )
 
-    cents = unit(seed_centroids(embeddings, n_centroids, vec_col))
+    cents = unit(seed_centroids(embeddings, n_centroids))
     with materialize_scope() as m:
         for i in range(iters):
-            assigned = assign_to_centroids(embeddings, cents, vec_col).select(
-                "vec_id", "centroid_id"
-            )
+            assigned = assign_to_centroids(embeddings, cents).select("vec_id", "centroid_id")
             members = embeddings.join(assigned, "vec_id")
-            new_cents = unit(_lloyd_means(members, ["centroid_id"], vec_col, "c_vec"))
+            new_cents = unit(_lloyd_means(members, ["centroid_id"], "embedding", "c_vec"))
             if i + 1 < iters:  # the last round becomes the caller's result
                 new_cents = m.keep(new_cents)
                 m.free(cents)
@@ -296,27 +261,20 @@ def _lloyd_means(members: DataFrame, keys: list[str], vec_col: str, out: str) ->
     )
 
 
-def kmeans_inertia(
-    embeddings: DataFrame, centroids: DataFrame, vec_col: str = "embedding"
-) -> float:
+def kmeans_inertia(embeddings: DataFrame, centroids: DataFrame) -> float:
     """Mean (1 - cos) to the assigned centroid — the convergence metric."""
-    a = assign_to_centroids(embeddings, centroids, vec_col)
+    a = assign_to_centroids(embeddings, centroids)
     return a.agg(F.avg(1 - F.col("cos_sim"))).first()[0]
 
 
-def ann_pairs_multiprobe(
-    embeddings: DataFrame,
-    threshold: float = 0.3,
-    m: int = 8,
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ann_pairs_multiprobe(embeddings: DataFrame, threshold: float = 0.3, m: int = 8) -> DataFrame:
     """Multi-probe sign-LSH near-neighbor pairs: a pair is a candidate iff
     their m-bit sign buckets differ in AT MOST ONE bit — one side joins on
     its exact bucket, the other explodes to (m+1) probes (exact + each
     single-bit flip). Recall strictly dominates the exact-bucket join at
     the same m (the standard remedy for "more planes lose recall"); cost
     is bounded at (m+1)x the probe-side rows, still never all-pairs."""
-    b = sign_lsh_buckets(embeddings, m, vec_col).select("vec_id", "bucket", vec_col)
+    b = sign_lsh_buckets(embeddings, m).select("vec_id", "bucket", "embedding")
     flips = [F.col("bucket")] + [
         F.concat(
             F.substring("bucket", 1, i),
@@ -325,32 +283,28 @@ def ann_pairs_multiprobe(
         )
         for i in range(m)
     ]
-    probes = b.select("vec_id", vec_col, F.explode(F.array(*flips)).alias("probe"))
-    return _bucket_pairs(b, probes, F.col("l.bucket") == F.col("r.probe"), threshold, vec_col)
+    probes = b.select("vec_id", "embedding", F.explode(F.array(*flips)).alias("probe"))
+    return _bucket_pairs(b, probes, F.col("l.bucket") == F.col("r.probe"), threshold)
 
 
-def sign_lsh_banded_buckets(
-    embeddings: DataFrame, m: int = 16, n_tables: int = 4, vec_col: str = "embedding"
-) -> DataFrame:
+def sign_lsh_banded_buckets(embeddings: DataFrame, m: int = 16, n_tables: int = 4) -> DataFrame:
     """Multi-table axis-sign LSH: table t's bucket = the m sign bits of the
     DISJOINT dimension block [t*m, (t+1)*m). Requires m * n_tables <= dim.
     Pure comparisons on stored values (no arithmetic), so buckets are
     bit-reproducible on any engine."""
     tables = [
-        F.struct(F.lit(t).cast("int").alias("table"), _sign_bits(vec_col, t * m, m).alias("bucket"))
+        F.struct(F.lit(t).cast("int").alias("table"), _sign_bits(t * m, m).alias("bucket"))
         for t in range(n_tables)
     ]
     return embeddings.select(
-        "vec_id", vec_col, F.explode(F.array(*tables)).alias("tb")
-    ).select("vec_id", vec_col, F.col("tb.table").alias("table"), F.col("tb.bucket").alias("bucket"))
+        "vec_id", "embedding", F.explode(F.array(*tables)).alias("tb")
+    ).select(
+        "vec_id", "embedding", F.col("tb.table").alias("table"), F.col("tb.bucket").alias("bucket")
+    )
 
 
 def ann_pairs_banded(
-    embeddings: DataFrame,
-    threshold: float = 0.9,
-    m: int = 16,
-    n_tables: int = 4,
-    vec_col: str = "embedding",
+    embeddings: DataFrame, threshold: float = 0.9, m: int = 16, n_tables: int = 4
 ) -> DataFrame:
     """Near-duplicate pairs by OR-amplified multi-table sign-LSH — the
     minhash-banding construction applied to hyperplane LSH: a pair is a
@@ -369,16 +323,12 @@ def ann_pairs_banded(
       recall 0.93. Moderate similarity (cos 0.25) is NOT this operator's
       regime — that's ivf_search territory.
     Cost is bounded at L x the single-table join; never all-pairs."""
-    b = sign_lsh_banded_buckets(embeddings, m, n_tables, vec_col)
-    return _bucket_pairs(b, b, ["table", "bucket"], threshold, vec_col)
+    b = sign_lsh_banded_buckets(embeddings, m, n_tables)
+    return _bucket_pairs(b, b, ["table", "bucket"], threshold)
 
 
 def projected_buckets(
-    embeddings: DataFrame,
-    m: int = 24,
-    n_tables: int = 4,
-    seed: int = 7,
-    vec_col: str = "embedding",
+    embeddings: DataFrame, m: int = 24, n_tables: int = 4, seed: int = 7
 ) -> DataFrame:
     """Signed-random-projection buckets for the m·L > dim regime: bucket
     bit j of table t = sign(<v, r_tj>) with r from a seeded ±1 matrix —
@@ -405,7 +355,7 @@ def projected_buckets(
         ]
         return pd.Series(list(np.stack(out, axis=1)))
 
-    return embeddings.withColumn("buckets", _bucketize(F.col(vec_col)))
+    return embeddings.withColumn("buckets", _bucketize(F.col("embedding")))
 
 
 def ann_pairs_projected(
@@ -414,7 +364,6 @@ def ann_pairs_projected(
     m: int = 24,
     n_tables: int = 4,
     seed: int = 7,
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """ann_pairs_banded with projection buckets — the 10^9-vector shape:
     2^24 buckets/table keeps the expected bucket at ~60 rows for 10^9
@@ -424,20 +373,18 @@ def ann_pairs_projected(
     L=8 -> 0.96; measured on planted cos~0.95 near-dups in
     BENCH/BASELINE.md). Same join discipline: collide in any table,
     cosine verify, never all-pairs."""
-    b = projected_buckets(embeddings, m, n_tables, seed, vec_col)
+    b = projected_buckets(embeddings, m, n_tables, seed)
     expl = b.select(
-        "vec_id", vec_col, F.posexplode("buckets").alias("table", "bucket")
+        "vec_id", "embedding", F.posexplode("buckets").alias("table", "bucket")
     )
-    return _bucket_pairs(expl, expl, ["table", "bucket"], threshold, vec_col)
+    return _bucket_pairs(expl, expl, ["table", "bucket"], threshold)
 
 
-def brute_force_pairs(
-    embeddings: DataFrame, threshold: float = 0.9, vec_col: str = "embedding"
-) -> DataFrame:
+def brute_force_pairs(embeddings: DataFrame, threshold: float = 0.9) -> DataFrame:
     """Exact all-pairs ground truth (recall denominators in tests/bench
     ONLY — quadratic, never a production path)."""
-    l = embeddings.select(F.col("vec_id").alias("vec_a"), F.col(vec_col).alias("_ea"))
-    r = embeddings.select(F.col("vec_id").alias("vec_b"), F.col(vec_col).alias("_eb"))
+    l = embeddings.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("_ea"))
+    r = embeddings.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("_eb"))
     return (
         l.crossJoin(r)
         .where(F.col("vec_a") < F.col("vec_b"))
@@ -455,21 +402,20 @@ def _probed_ids(
     q: DataFrame,
     n_centroids: int,
     n_probe: int,
-    vec_col: str,
     centroids: DataFrame | None,
 ) -> DataFrame:
     """The IVF probe: ``vec_id`` of every vector in the query's ``n_probe``
     nearest inverted lists, against seed (default) or given centroids.
     Centroid scoring is a broadcast; the list restriction a broadcast
     semi-join."""
-    cents = centroids if centroids is not None else seed_centroids(embeddings, n_centroids, vec_col)
+    cents = centroids if centroids is not None else seed_centroids(embeddings, n_centroids)
     probes = (
         _query_scored(cents, q, "c_vec", key="centroid_id", score="qc")
         .orderBy(F.desc("qc"), F.asc("centroid_id"))
         .limit(n_probe)
         .select("centroid_id")
     )
-    assigned = assign_to_centroids(embeddings, cents, vec_col).select("vec_id", "centroid_id")
+    assigned = assign_to_centroids(embeddings, cents).select("vec_id", "centroid_id")
     return assigned.join(F.broadcast(probes), "centroid_id", "left_semi").select("vec_id")
 
 
@@ -479,24 +425,21 @@ def ivf_search(
     k: int = 10,
     n_centroids: int = 10,
     n_probe: int = 2,
-    vec_col: str = "embedding",
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF top-k: probe the query's n_probe nearest centroids, brute-force
     ONLY inside those clusters — the 10^9-vector scale path (scanned
     fraction ≈ n_probe / n_centroids). With n_probe == n_centroids this
     degrades to exact brute-force (recall test anchor)."""
-    q = _query_vec(embeddings, query_vec_id, vec_col)
-    probed = _probed_ids(embeddings, q, n_centroids, n_probe, vec_col, centroids)
+    q = _query_vec(embeddings, query_vec_id, "embedding")
+    probed = _probed_ids(embeddings, q, n_centroids, n_probe, centroids)
     candidates = embeddings.join(probed, "vec_id", "left_semi").where(
         F.col("vec_id") != query_vec_id
     )
-    return top_k(_query_scored(candidates, q, vec_col), "cos_sim", "vec_id", k)
+    return top_k(_query_scored(candidates, q, "embedding"), "cos_sim", "vec_id", k)
 
 
-def quantize_embeddings(
-    embeddings: DataFrame, bits: int = 8, vec_col: str = "embedding"
-) -> DataFrame:
+def quantize_embeddings(embeddings: DataFrame, bits: int = 8) -> DataFrame:
     """Per-dimension symmetric scalar quantization (the int8-SQ storage
     path every billion-vector ANN deployment runs before IVF/LSH: 4x-8x
     smaller vectors, distances on reconstructions).
@@ -513,14 +456,14 @@ def quantize_embeddings(
     """
     levels = float((1 << (bits - 1)) - 1)
     scales = (
-        embeddings.select(F.posexplode(vec_col).alias("pos", "x"))
+        embeddings.select(F.posexplode("embedding").alias("pos", "x"))
         .groupBy("pos")
         .agg(F.max(F.abs(F.col("x").cast("double"))).alias("s"))
         .agg(F.sort_array(F.collect_list(F.struct("pos", "s"))).alias("ps"))
         .select(F.transform("ps", lambda e: e["s"]).alias("scales"))
     )
     codes = F.zip_with(
-        vec_col,
+        "embedding",
         "scales",
         lambda x, s: F.when(
             s > 0, F.floor(x.cast("double") / s * levels + 0.5).cast("int")
@@ -536,7 +479,6 @@ def quantized_cosine_topk(
     query_vec_id: int = 0,
     k: int = 10,
     bits: int = 8,
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Brute-force top-k over int8-reconstructed vectors (x̂_d = code_d *
     s_d / levels) — measures what a quantized store actually serves. The
@@ -544,9 +486,7 @@ def quantized_cosine_topk(
     configuration). Same TakeOrderedAndProject shape as cosine_topk."""
     levels = float((1 << (bits - 1)) - 1)
     recon = F.zip_with("codes", "scales", lambda c, s: c * s / F.lit(levels))
-    r = quantize_embeddings(embeddings, bits=bits, vec_col=vec_col).select(
-        "vec_id", recon.alias("rvec")
-    )
+    r = quantize_embeddings(embeddings, bits=bits).select("vec_id", recon.alias("rvec"))
     q = _query_vec(r, query_vec_id, "rvec")
     scored = _query_scored(r.where(F.col("vec_id") != query_vec_id), q, "rvec")
     return top_k(scored, "cos_sim", "vec_id", k)
@@ -561,9 +501,7 @@ def _l2sq(a: Column, b: Column) -> Column:
     )
 
 
-def pq_subvectors(
-    embeddings: DataFrame, m: int = 8, dim: int = 64, vec_col: str = "embedding"
-) -> DataFrame:
+def pq_subvectors(embeddings: DataFrame, m: int = 8, dim: int = 64) -> DataFrame:
     """(vec_id, sub, subvec) — each vector split into ``m`` contiguous
     subspaces of dim/m dims. Pure slice+explode, narrow (no shuffle)."""
     if dim % m != 0:
@@ -576,7 +514,7 @@ def pq_subvectors(
         *[
             F.struct(
                 F.lit(s).cast("int").alias("sub"),
-                F.slice(vec_col, s * d + 1, d).cast("array<double>").alias("subvec"),
+                F.slice("embedding", s * d + 1, d).cast("array<double>").alias("subvec"),
             )
             for s in range(m)
         ]
@@ -587,19 +525,15 @@ def pq_subvectors(
 
 
 def pq_codebooks(
-    embeddings: DataFrame,
-    m: int = 8,
-    n_codes: int = 16,
-    dim: int = 64,
-    vec_col: str = "embedding",
+    embeddings: DataFrame, m: int = 8, n_codes: int = 16, dim: int = 64
 ) -> DataFrame:
     """Seed PQ codebooks (sub, code_id, c_vec): subspace s's codewords are
     the first ``n_codes`` vectors' s-th subvectors — deterministic-first,
     the same oracle-checkable init as :func:`seed_centroids`. Use
     :func:`pq_train_codebooks` for Lloyd-refined codebooks."""
-    return pq_subvectors(
-        embeddings.where(F.col("vec_id") < n_codes), m, dim, vec_col
-    ).select("sub", F.col("vec_id").cast("int").alias("code_id"), F.col("subvec").alias("c_vec"))
+    return pq_subvectors(embeddings.where(F.col("vec_id") < n_codes), m, dim).select(
+        "sub", F.col("vec_id").cast("int").alias("code_id"), F.col("subvec").alias("c_vec")
+    )
 
 
 def _pq_nearest(sv: DataFrame, codebooks: DataFrame) -> DataFrame:
@@ -623,13 +557,7 @@ def _pq_nearest(sv: DataFrame, codebooks: DataFrame) -> DataFrame:
     )
 
 
-def pq_encode(
-    embeddings: DataFrame,
-    codebooks: DataFrame,
-    m: int = 8,
-    dim: int = 64,
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_encode(embeddings: DataFrame, codebooks: DataFrame, m: int = 8, dim: int = 64) -> DataFrame:
     """Product-quantization encoding (Jégou et al. 2011): per (vector,
     subspace), the L2-nearest codeword — (vec_id, sub, code_id, dist).
 
@@ -641,22 +569,16 @@ def pq_encode(
     windows, no UDFs; distances are codegen'd zip_with folds. Storage
     story: m codes x log2(k) bits replaces dim floats (here 8 bytes vs
     256 — the 32x compression PQ exists for)."""
-    return _pq_nearest(pq_subvectors(embeddings, m, dim, vec_col), codebooks)
+    return _pq_nearest(pq_subvectors(embeddings, m, dim), codebooks)
 
 
 def pq_code_histogram(
-    embeddings: DataFrame,
-    m: int = 8,
-    n_codes: int = 16,
-    dim: int = 64,
-    vec_col: str = "embedding",
-    codebooks: DataFrame | None = None,
+    embeddings: DataFrame, m: int = 8, n_codes: int = 16, dim: int = 64
 ) -> DataFrame:
-    """Codebook utilization: (sub, code_id, n_vecs) — the index-health
-    dashboard for a PQ deployment (a dead codeword wastes a code point;
-    a hot one degrades ADC resolution)."""
-    cb = codebooks if codebooks is not None else pq_codebooks(embeddings, m, n_codes, dim, vec_col)
-    codes = pq_encode(embeddings, cb, m, dim, vec_col)
+    """Codebook utilization of the seed codebooks: (sub, code_id, n_vecs)
+    — the index-health dashboard for a PQ deployment (a dead codeword
+    wastes a code point; a hot one degrades ADC resolution)."""
+    codes = pq_encode(embeddings, pq_codebooks(embeddings, m, n_codes, dim), m, dim)
     return codes.groupBy("sub", "code_id").agg(F.count(F.lit(1)).alias("n_vecs"))
 
 
@@ -667,15 +589,14 @@ def _adc_scores(
     query_vec_id: int,
     m: int,
     dim: int,
-    vec_col: str,
 ) -> DataFrame:
     """(vec_id, adc_score) of every vector in ``codes`` but the query: the
     query's raw subvectors dot every codeword into an m x k lookup table
     (LUT), broadcast to the codes and summed per vector by one
     map-side-combined groupBy(vec_id)."""
-    qsv = pq_subvectors(
-        embeddings.where(F.col("vec_id") == query_vec_id), m, dim, vec_col
-    ).select("sub", F.col("subvec").alias("q_sub"))
+    qsv = pq_subvectors(embeddings.where(F.col("vec_id") == query_vec_id), m, dim).select(
+        "sub", F.col("subvec").alias("q_sub")
+    )
     lut = codebooks.join(F.broadcast(qsv), "sub").select(
         "sub", "code_id", F.round(dot(F.col("c_vec"), F.col("q_sub")), 6).alias("part")
     )
@@ -694,7 +615,6 @@ def pq_search_adc(
     m: int = 8,
     n_codes: int = 16,
     dim: int = 64,
-    vec_col: str = "embedding",
     codebooks: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes — the FAISS IVFADC
@@ -711,9 +631,9 @@ def pq_search_adc(
     Returns (vec_id, adc_score, rank) — scores approximate the dot
     product; rescore the top-k against raw vectors when exactness
     matters (cf. :func:`ivf_search` composition)."""
-    cb = codebooks if codebooks is not None else pq_codebooks(embeddings, m, n_codes, dim, vec_col)
-    codes = pq_encode(embeddings, cb, m, dim, vec_col)
-    scored = _adc_scores(codes, cb, embeddings, query_vec_id, m, dim, vec_col)
+    cb = codebooks if codebooks is not None else pq_codebooks(embeddings, m, n_codes, dim)
+    codes = pq_encode(embeddings, cb, m, dim)
+    scored = _adc_scores(codes, cb, embeddings, query_vec_id, m, dim)
     return top_k(scored, "adc_score", "vec_id", k)
 
 
@@ -726,7 +646,6 @@ def ivfpq_search(
     m: int = 8,
     n_codes: int = 16,
     dim: int = 64,
-    vec_col: str = "embedding",
     centroids: DataFrame | None = None,
     codebooks: DataFrame | None = None,
 ) -> DataFrame:
@@ -743,26 +662,19 @@ def ivfpq_search(
     TakeOrderedAndProject. The raw vectors are read once (to encode);
     a deployed index would persist ``pq_encode``'s output and never
     touch them at query time."""
-    q = _query_vec(embeddings, query_vec_id, vec_col)
-    probed = _probed_ids(embeddings, q, n_centroids, n_probe, vec_col, centroids)
-    cb = codebooks if codebooks is not None else pq_codebooks(embeddings, m, n_codes, dim, vec_col)
-    codes = pq_encode(embeddings, cb, m, dim, vec_col).join(probed, "vec_id", "left_semi")
-    scored = _adc_scores(codes, cb, embeddings, query_vec_id, m, dim, vec_col)
+    q = _query_vec(embeddings, query_vec_id, "embedding")
+    probed = _probed_ids(embeddings, q, n_centroids, n_probe, centroids)
+    cb = codebooks if codebooks is not None else pq_codebooks(embeddings, m, n_codes, dim)
+    codes = pq_encode(embeddings, cb, m, dim).join(probed, "vec_id", "left_semi")
+    scored = _adc_scores(codes, cb, embeddings, query_vec_id, m, dim)
     return top_k(scored, "adc_score", "vec_id", k)
 
 
 def pq_search_rescored(
-    embeddings: DataFrame,
-    query_vec_id: int = 0,
-    k: int = 10,
-    shortlist: int = 100,
-    m: int = 8,
-    n_codes: int = 16,
-    dim: int = 64,
-    vec_col: str = "embedding",
-    codebooks: DataFrame | None = None,
+    embeddings: DataFrame, query_vec_id: int = 0, k: int = 10, shortlist: int = 100
 ) -> DataFrame:
-    """The deployed PQ shape (FAISS "refine"): ADC produces a SHORTLIST of
+    """The deployed PQ shape (FAISS "refine"): ADC over the seed PQ8x16
+    codebooks produces a SHORTLIST of
     ``shortlist`` candidates from the compressed codes, then only those
     rows' RAW vectors are fetched and exactly re-scored for the final
     top-k. At 10^9 vectors the exact pass touches ``shortlist`` vectors
@@ -773,21 +685,14 @@ def pq_search_rescored(
     embeddings are PQ-adversarial (similarity margins are razor-thin, so
     coarse codes lose rank order); real model embeddings concentrate on a
     manifold where the same configs score far higher."""
-    sl = pq_search_adc(
-        embeddings, query_vec_id, shortlist, m, n_codes, dim, vec_col, codebooks
-    ).select("vec_id")
-    q = _query_vec(embeddings, query_vec_id, vec_col)
-    scored = _query_scored(embeddings.join(sl, "vec_id", "left_semi"), q, vec_col)
+    sl = pq_search_adc(embeddings, query_vec_id, shortlist).select("vec_id")
+    q = _query_vec(embeddings, query_vec_id, "embedding")
+    scored = _query_scored(embeddings.join(sl, "vec_id", "left_semi"), q, "embedding")
     return top_k(scored, "cos_sim", "vec_id", k)
 
 
 def pq_train_codebooks(
-    embeddings: DataFrame,
-    m: int = 8,
-    n_codes: int = 16,
-    iters: int = 2,
-    dim: int = 64,
-    vec_col: str = "embedding",
+    embeddings: DataFrame, m: int = 8, n_codes: int = 16, iters: int = 2, dim: int = 64
 ) -> DataFrame:
     """Lloyd-refined PQ codebooks: k-means per subspace, ALL subspaces
     trained in one grouped job (the per-subspace problems share every
@@ -803,8 +708,8 @@ def pq_train_codebooks(
     them when done)."""
     from ..caching import materialize_scope, owned_result
 
-    sv = pq_subvectors(embeddings, m, dim, vec_col)
-    cb = pq_codebooks(embeddings, m, n_codes, dim, vec_col)
+    sv = pq_subvectors(embeddings, m, dim)
+    cb = pq_codebooks(embeddings, m, n_codes, dim)
     with materialize_scope() as scope:
         for i in range(iters):
             assigned = _pq_nearest(sv, cb).select("vec_id", "sub", "code_id")
@@ -820,7 +725,7 @@ def pq_train_codebooks(
         return owned_result(cb)
 
 
-def embedding_moments(embeddings: DataFrame, vec_col: str = "embedding") -> DataFrame:
+def embedding_moments(embeddings: DataFrame) -> DataFrame:
     """Distributed second-moment statistics — the "fit" half of PCA /
     whitening over an embedding corpus: per-partition numpy partials
     (count, per-dim sums, X^T X) via one Arrow-batched ``mapInPandas``
@@ -844,7 +749,7 @@ def embedding_moments(embeddings: DataFrame, vec_col: str = "embedding") -> Data
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+            x = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
             n += x.shape[0]
             s = x.sum(axis=0) if s is None else s + x.sum(axis=0)
             ss = x.T @ x if ss is None else ss + x.T @ x
@@ -863,7 +768,7 @@ def embedding_moments(embeddings: DataFrame, vec_col: str = "embedding") -> Data
             }
         )
 
-    partials = embeddings.select(vec_col).mapInPandas(
+    partials = embeddings.select("embedding").mapInPandas(
         _partials, "i int, j int, n long, s_i double, s_j double, ss double"
     )
     agg = partials.groupBy("i", "j").agg(
@@ -886,12 +791,7 @@ def embedding_moments(embeddings: DataFrame, vec_col: str = "embedding") -> Data
     )
 
 
-def pca_project(
-    embeddings: DataFrame,
-    k: int = 8,
-    vec_col: str = "embedding",
-    moments: DataFrame | None = None,
-) -> DataFrame:
+def pca_project(embeddings: DataFrame, k: int = 8) -> DataFrame:
     """PCA embedding compression: fit = ``embedding_moments`` (one
     distributed pass), eigendecomposition of the d x d covariance on the
     DRIVER (d=64: microseconds — the only driver-side math, on a matrix
@@ -904,8 +804,7 @@ def pca_project(
     ``projection array<double>`` (length k, centered data x top-k
     eigenvectors, descending eigenvalue order).
     """
-    mom = moments if moments is not None else embedding_moments(embeddings, vec_col)
-    rows = mom.select("i", "j", "n_vecs", "mean_i", "cov_ij").collect()  # d*(d+1)/2 rows
+    rows = embedding_moments(embeddings).select("i", "j", "n_vecs", "mean_i", "cov_ij").collect()  # d*(d+1)/2 rows
     d = max(r["j"] for r in rows) + 1
     cov = np.zeros((d, d))
     mean = np.zeros(d)
@@ -923,7 +822,7 @@ def pca_project(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+            x = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
             proj = (x - mean) @ comps
             out = pdf.copy()
             out["projection"] = list(proj)

@@ -150,9 +150,7 @@ def ngram_array(text: Column, n: int = 3) -> Column:
     return F.when(cnt >= n, grams).otherwise(F.array().cast("array<string>"))
 
 
-def boilerplate_ngrams(
-    docs: DataFrame, n: int = 3, min_docs: int = 5, text_col: str = "text"
-) -> DataFrame:
+def boilerplate_ngrams(docs: DataFrame, n: int = 3, min_docs: int = 5) -> DataFrame:
     """Corpus-level boilerplate detection: word n-grams appearing in at
     least ``min_docs`` DISTINCT documents (headers, footers, license
     blurbs, navigation chrome — the CCNet/RefinedWeb cleaning target).
@@ -169,7 +167,7 @@ def boilerplate_ngrams(
     (ngram, n_docs, n_occurrences)."""
     from .dedup import doc_shingles  # function-level: dedup imports from text
 
-    grams = doc_shingles(docs, k=n, text_col=text_col, distinct=False).select(
+    grams = doc_shingles(docs, k=n, distinct=False).select(
         "doc_id", F.col("shingle").alias("ngram")
     )
     return (
@@ -182,7 +180,7 @@ def boilerplate_ngrams(
     )
 
 
-def repetition_scores(docs: DataFrame, n: int = 2, text_col: str = "text") -> DataFrame:
+def repetition_scores(docs: DataFrame, n: int = 2) -> DataFrame:
     """Per-document repetition quality signals (the Gopher repetition
     filters, Rae et al. 2021 table A1, re-expressed at token grain):
     fraction of n-gram occurrences that are duplicates of an earlier one,
@@ -193,7 +191,7 @@ def repetition_scores(docs: DataFrame, n: int = 2, text_col: str = "text") -> Da
     zero shuffle): dup fraction = 1 - distinct/total; the top-gram share
     is an O(distinct x total) nested array scan — bounded by document
     length, embarrassingly parallel, no corpus-wide state."""
-    grams = ngram_array(F.col(text_col), n)
+    grams = ngram_array(F.col("text"), n)
     total = F.size(grams)
     uniq = F.array_distinct(grams)
     frac_dup = F.when(
@@ -245,43 +243,31 @@ def pii_counts(text: Column) -> dict[str, Column]:
     }
 
 
-def stratified_sample(
-    df: DataFrame,
-    stratum_col: str,
-    rates: dict[str, float],
-    default_rate: float = 0.0,
-    id_col: str = "doc_id",
-    denom: int = 10000,
-) -> DataFrame:
+def stratified_sample(df: DataFrame, stratum_col: str, rates: dict[str, float]) -> DataFrame:
     """Deterministic per-stratum downsampling — the domain-mixture knob of
     a pretraining pipeline (e.g. keep 50% of web text, 10% of low-resource
     scrapes). Membership is a pure function of the row id: keep when
-    ``md5(id)[0:12] as uint48 mod denom < rate*denom``. No RNG state, no
-    driver coordination, reproducible across engines and re-runs, and a
+    ``md5(doc_id)[0:12] as uint48 mod 10000 < rate*10000``. No RNG state,
+    no driver coordination, reproducible across engines and re-runs, and a
     plain filter — pushes below any downstream shuffle, never materializes
-    the rejected rows. Resolution is 1/denom."""
-    u = md5_bucket(F.col(id_col), denom)
-    rate = F.lit(float(default_rate))
+    the rejected rows. Resolution is 1/10000; strata without a rate are
+    dropped."""
+    u = md5_bucket(F.col("doc_id"), 10000)
+    rate = F.lit(0.0)
     for key, val in sorted(rates.items()):
         rate = F.when(F.col(stratum_col) == key, F.lit(float(val))).otherwise(rate)
-    return df.where(u < F.floor(rate * denom).cast("long"))
+    return df.where(u < F.floor(rate * 10000).cast("long"))
 
 
-def token_budget_sample(
-    docs: DataFrame,
-    budgets: dict[str, int],
-    stratum_col: str = "lang",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seed: str = "mix0",
-) -> DataFrame:
+def token_budget_sample(docs: DataFrame, budgets: dict[str, int]) -> DataFrame:
     """Token-budget mixture construction — the "N tokens of web, M of
     code" step of a pretraining mixture recipe: admit documents per
     stratum in a deterministic md5 order until the stratum's token budget
     is exhausted. A doc is admitted iff the running token total of
     earlier-ordered docs in its stratum is < budget (the budget may
     overshoot by at most the final admitted doc — the standard
-    convention). Strata without a budget contribute nothing.
+    convention). The stratum is ``lang``; strata without a budget
+    contribute nothing.
 
     Shape: one cumulative-sum window per stratum ordered by the md5 draw
     (strata are few, each window is a single partition chain at stratum
@@ -292,12 +278,12 @@ def token_budget_sample(
     from pyspark.sql import Window
 
     base = docs.select(
-        F.col(id_col),
-        F.col(stratum_col).alias("stratum"),
-        token_count(F.col(text_col)).alias("n_tokens"),
-        F.md5(F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string"))).alias("draw"),
+        F.col("doc_id"),
+        F.col("lang").alias("stratum"),
+        token_count(F.col("text")).alias("n_tokens"),
+        F.md5(F.concat(F.lit("mix0:"), F.col("doc_id").cast("string"))).alias("draw"),
     )
-    w = Window.partitionBy("stratum").orderBy("draw", id_col)
+    w = Window.partitionBy("stratum").orderBy("draw", "doc_id")
     prior = F.coalesce(
         F.sum("n_tokens").over(w.rowsBetween(Window.unboundedPreceding, -1)), F.lit(0)
     ).cast("long")
@@ -307,16 +293,11 @@ def token_budget_sample(
     return (
         base.withColumn("prior_tokens", prior)
         .where(F.col("prior_tokens") < budget)
-        .select(id_col, "stratum", "n_tokens", "prior_tokens")
+        .select("doc_id", "stratum", "n_tokens", "prior_tokens")
     )
 
 
-def shard_shuffle(
-    docs: DataFrame,
-    n_shards: int = 16,
-    seed: str = "epoch0",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def shard_shuffle(docs: DataFrame, n_shards: int = 16, seed: str = "epoch0") -> DataFrame:
     """Deterministic corpus shard + intra-shard shuffle — the epoch
     reshuffle primitive of a pretraining data loader. Every document gets
     a stable (shard, pos) address that is a pure function of (seed, id):
@@ -330,22 +311,17 @@ def shard_shuffle(
     count). No RNG state, no driver coordination, no global sort."""
     from pyspark.sql import Window
 
-    shard = md5_bucket(F.col(id_col), n_shards).cast("int")
-    key = F.md5(F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string")))
-    w = Window.partitionBy("shard").orderBy("sort_key", id_col)
+    shard = md5_bucket(F.col("doc_id"), n_shards).cast("int")
+    key = F.md5(F.concat(F.lit(f"{seed}:"), F.col("doc_id").cast("string")))
+    w = Window.partitionBy("shard").orderBy("sort_key", "doc_id")
     return (
-        docs.select(F.col(id_col), shard.alias("shard"), key.alias("sort_key"))
+        docs.select(F.col("doc_id"), shard.alias("shard"), key.alias("sort_key"))
         .withColumn("pos", F.row_number().over(w).cast("long"))
-        .select(id_col, "shard", "pos")
+        .select("doc_id", "shard", "pos")
     )
 
 
-def pack_offsets(
-    docs: DataFrame,
-    budget: int = 512,
-    n_shards: int = 16,
-    token_col: str = "n_tokens",
-) -> DataFrame:
+def pack_offsets(docs: DataFrame, budget: int = 512, n_shards: int = 16) -> DataFrame:
     """Concat-and-chunk sequence packing — the standard LLM-pretraining
     regime: documents are concatenated in a deterministic order and cut
     every ``budget`` tokens. Output per document: its byte-stream shard,
@@ -363,28 +339,25 @@ def pack_offsets(
     w = Window.partitionBy("shard").orderBy("doc_id")
     sharded = docs.withColumn("shard", shard)
     start = F.coalesce(
-        F.sum(token_col).over(w.rowsBetween(Window.unboundedPreceding, -1)), F.lit(0)
+        F.sum("n_tokens").over(w.rowsBetween(Window.unboundedPreceding, -1)), F.lit(0)
     ).cast("long")
     out = sharded.withColumn("start_off", start)
-    end = F.col("start_off") + F.col(token_col)
+    end = F.col("start_off") + F.col("n_tokens")
     return out.select(
         "doc_id",
         "shard",
-        F.col(token_col).alias("n_tokens"),
+        "n_tokens",
         "start_off",
         F.floor(F.col("start_off") / budget).cast("long").alias("first_chunk"),
         # empty docs occupy no chunk span: last = first
         F.when(
-            F.col(token_col) > 0, F.floor((end - 1) / budget)
+            F.col("n_tokens") > 0, F.floor((end - 1) / budget)
         ).otherwise(F.floor(F.col("start_off") / budget)).cast("long").alias("last_chunk"),
     )
 
 
 def unigram_logprob(
-    docs: DataFrame,
-    text_col: str = "text",
-    max_vocab: int | None = None,
-    oov_logprob: float = -20.0,
+    docs: DataFrame, max_vocab: int | None = None, oov_logprob: float = -20.0
 ) -> DataFrame:
     """Corpus-LM quality proxy — the CCNet/Gopher perplexity filter at
     unigram order: score each document by the mean log-probability of its
@@ -402,7 +375,7 @@ def unigram_logprob(
     outside it score ``oov_logprob`` — the standard head-vocab + OOV
     bucket approximation.
     """
-    toks = token_rows(docs, text_col, "doc_id")
+    toks = token_rows(docs, "text", "doc_id")
     vocab = type_counts(toks, "n_tok")
     head = vocab if max_vocab is None else vocab.orderBy(F.desc("n_tok"), "tok").limit(max_vocab)
     vocab = with_total(head, vocab, "n_tok", "n_total")
@@ -416,18 +389,13 @@ def unigram_logprob(
     )
 
 
-def bigram_logprob(
-    docs: DataFrame,
-    text_col: str = "text",
-    alpha: float = 0.4,
-    oov_logprob: float = -20.0,
-    lm_docs: DataFrame | None = None,
-) -> DataFrame:
+def bigram_logprob(docs: DataFrame, lm_docs: DataFrame | None = None) -> DataFrame:
     """Bigram-LM quality scoring with Stupid Backoff (Brants et al. 2007)
     — the KenLM-shaped upgrade of :func:`unigram_logprob`: score each
     document by the mean log-score of its adjacent token pairs under a
     reference corpus LM, S(w2|w1) = c(w1 w2)/c(w1) when the bigram was
-    seen, else alpha * c(w2)/N, else ``oov_logprob``. Train on ``lm_docs``
+    seen, else 0.4 * c(w2)/N (the backoff weight), else -20 (the OOV
+    log-score, as in :func:`unigram_logprob`). Train on ``lm_docs``
     (default: the scored corpus itself) — pass a held-out/reference subset
     so the backoff path actually fires, the production quality-filter
     setup. Returns (doc_id, n_bigrams, mean_logprob) for docs with >= 2
@@ -442,7 +410,7 @@ def bigram_logprob(
     aggregation is map-side-combined (a doc's bigrams start
     co-partitioned; the explode is narrow)."""
     def bigrams(frame: DataFrame) -> DataFrame:
-        t = tokens(normalize_text(F.col(text_col)))
+        t = tokens(normalize_text(F.col("text")))
         base = frame.select("doc_id", t.alias("_t")).where(F.size("_t") >= 2)
         pairs = F.zip_with(
             F.slice("_t", 1, F.size("_t") - 1),
@@ -454,7 +422,7 @@ def bigram_logprob(
         )
 
     lm = lm_docs if lm_docs is not None else docs
-    uni = type_counts(token_rows(lm, text_col), "c_uni")
+    uni = type_counts(token_rows(lm, "text"), "c_uni")
     bi = bigrams(lm).groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c_bi"))
 
     scored = with_total(
@@ -473,9 +441,9 @@ def bigram_logprob(
         )
         .when(
             F.col("c2").isNotNull(),
-            F.log(F.lit(float(alpha)) * F.col("c2").cast("double") / F.col("n_total").cast("double")),
+            F.log(F.lit(0.4) * F.col("c2").cast("double") / F.col("n_total").cast("double")),
         )
-        .otherwise(F.lit(float(oov_logprob)))
+        .otherwise(F.lit(-20.0))
     )
     return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_bigrams"),
@@ -487,12 +455,10 @@ def bm25_topk(
     docs: DataFrame,
     query_terms: tuple[str, ...],
     k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
 ) -> DataFrame:
     """BM25 keyword retrieval (Robertson/Spärck Jones; Lucene's idf
-    variant ln((N-df+0.5)/(df+0.5)+1)): top-k documents for a bag of
+    variant ln((N-df+0.5)/(df+0.5)+1) and its k1 = 1.2, b = 0.75
+    defaults): top-k documents for a bag of
     query terms — the corpus-side retrieval primitive (eval-set mining,
     targeted curation, "find me docs about X" over a training corpus).
 
@@ -504,7 +470,7 @@ def bm25_topk(
     (N, avgdl) and per-term df/idf are O(1)/O(|q|) rows, broadcast. The
     tf-to-doclen join keys both sides on doc_id. Returns (doc_id, bm25,
     rank) with the score rounded to 6 so both engines rank identically."""
-    toks = token_rows(docs, text_col, "doc_id")
+    toks = token_rows(docs, "text", "doc_id")
     doclen = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     stats = doclen.agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
@@ -518,6 +484,7 @@ def bm25_topk(
         ).alias("idf"),
         "avgdl",
     )
+    k1, b = 1.2, 0.75
     scored = (
         tf.join(F.broadcast(idf), "tok")
         .join(doclen, "doc_id")
@@ -535,11 +502,7 @@ def bm25_topk(
     return top_k(scored, "bm25", "doc_id", k)
 
 
-def source_kl_drift(
-    docs: DataFrame,
-    stratum_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def source_kl_drift(docs: DataFrame, stratum_col: str = "source") -> DataFrame:
     """Per-stratum distribution drift: KL(P_stratum || P_corpus) over the
     unigram token distributions — the corpus-monitoring number that flags
     a source whose content mix diverged from the blend (crawl gone wrong,
@@ -552,7 +515,7 @@ def source_kl_drift(
     from it by a second tiny groupBy, joined back BROADCAST on tok.
     Returns (stratum, n_tokens, kl) rounded to 6."""
     st = type_counts(
-        token_rows(docs, text_col, F.col(stratum_col).alias("stratum")), "c_st", "stratum"
+        token_rows(docs, "text", F.col(stratum_col).alias("stratum")), "c_st", "stratum"
     )
     corpus = st.groupBy("tok").agg(F.sum("c_st").alias("c_all"))
     totals = st.groupBy("stratum").agg(F.sum("c_st").alias("n_st"))
@@ -573,11 +536,7 @@ def source_kl_drift(
     )
 
 
-def length_histogram(
-    docs: DataFrame,
-    stratum_col: str = "lang",
-    text_col: str = "text",
-) -> DataFrame:
+def length_histogram(docs: DataFrame, stratum_col: str = "lang") -> DataFrame:
     """Corpus length profile — the token-count distribution every dataset
     card reports, per stratum: docs bucketed by floor(log2(n_tokens + 1))
     (log-spaced, so the 10-token and 10k-token regimes are both visible).
@@ -589,7 +548,7 @@ def length_histogram(
     window runs over that already-tiny aggregate, never over facts."""
     from pyspark.sql import Window
 
-    n_tok = token_count(F.col(text_col))
+    n_tok = token_count(F.col("text"))
     bucket = F.floor(F.log2(n_tok + 1)).cast("long")
     agg = (
         docs.select(F.col(stratum_col).alias("stratum"), bucket.alias("bucket"), n_tok.alias("n_tokens"))
@@ -606,12 +565,7 @@ def length_histogram(
     )
 
 
-def dsir_weights(
-    docs: DataFrame,
-    target: DataFrame,
-    text_col: str = "text",
-    alpha: float = 0.5,
-) -> DataFrame:
+def dsir_weights(docs: DataFrame, target: DataFrame, alpha: float = 0.5) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): score every raw document
     by the log likelihood ratio of its tokens under a target-domain
@@ -631,9 +585,9 @@ def dsir_weights(
     broadcast outgrows executors).
 
     Returns (doc_id, n_tokens, log_weight)."""
-    raw_toks = token_rows(docs, text_col, "doc_id")
+    raw_toks = token_rows(docs, "text", "doc_id")
     raw_vocab = type_counts(raw_toks, "n_raw")
-    tgt_vocab = type_counts(token_rows(target, text_col), "n_tgt")
+    tgt_vocab = type_counts(token_rows(target, "text"), "n_tgt")
     merged = raw_vocab.join(tgt_vocab, "tok", "full_outer").select(
         "tok",
         F.coalesce("n_raw", F.lit(0)).alias("n_raw"),
@@ -659,11 +613,7 @@ def dsir_weights(
     )
 
 
-def tfidf_top_terms(
-    docs: DataFrame,
-    top_k: int = 3,
-    text_col: str = "text",
-) -> DataFrame:
+def tfidf_top_terms(docs: DataFrame, top_k: int = 3) -> DataFrame:
     """Per-document top-k terms by tf-idf (idf = ln(N/df), plain — df >= 1
     for every scored term by construction), the classic keyword/topic
     proxy for corpus exploration and near-topic filtering.
@@ -678,7 +628,7 @@ def tfidf_top_terms(
     Returns (doc_id, term, tf, score, rnk)."""
     from pyspark.sql import Window
 
-    tf = type_counts(token_rows(docs, text_col, "doc_id"), "tf", "doc_id")
+    tf = type_counts(token_rows(docs, "text", "doc_id"), "tf", "doc_id")
     df_tbl = type_counts(tf, "df")
     n_docs = tf.agg(F.countDistinct("doc_id").alias("n"))
     scored = (
@@ -701,12 +651,7 @@ def tfidf_top_terms(
     )
 
 
-def chunk_spans(
-    docs: DataFrame,
-    chunk_size: int = 256,
-    stride: int = 192,
-    text_col: str = "text",
-) -> DataFrame:
+def chunk_spans(docs: DataFrame, chunk_size: int = 256, stride: int = 192) -> DataFrame:
     """Sliding-window document chunking — the RAG / long-context
     preparation step: cut each document into ``chunk_size``-token windows
     advancing by ``stride`` tokens (overlap = chunk_size - stride), one
@@ -729,7 +674,7 @@ def chunk_spans(
     """
     if stride <= 0 or chunk_size <= 0:
         raise ValueError("chunk_size and stride must be positive")
-    n = token_count(F.col(text_col))
+    n = token_count(F.col("text"))
     n_chunks = (
         F.when(n <= 0, F.lit(0))
         .when(n <= chunk_size, F.lit(1))
@@ -794,12 +739,7 @@ def source_profile(docs: DataFrame) -> DataFrame:
     )
 
 
-def quantile_filter(
-    docs: DataFrame,
-    frac: float = 0.1,
-    stratum_col: str = "lang",
-    text_col: str = "text",
-) -> DataFrame:
+def quantile_filter(docs: DataFrame, frac: float = 0.1, stratum_col: str = "lang") -> DataFrame:
     """Relative quality gate: flag the bottom ``frac`` of documents PER
     STRATUM by quality score. Absolute thresholds misfire across
     languages/sources whose score distributions differ (a fixed 0.5 cut
@@ -818,7 +758,7 @@ def quantile_filter(
     scored = docs.select(
         "doc_id",
         F.col(stratum_col).alias("stratum"),
-        quality_score(F.col(text_col)).alias("quality"),
+        quality_score(F.col("text")).alias("quality"),
     )
     thresholds = scored.groupBy("stratum").agg(
         (F.round(F.percentile("quality", F.lit(frac)), 6) + 0.0).alias("q_threshold")

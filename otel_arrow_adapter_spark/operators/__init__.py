@@ -9,6 +9,6 @@ from .encode import (  # noqa: F401
 )
 from .enrich import enrich_with_catalog  # noqa: F401
 from .route import route_signals, SINKS  # noqa: F401
-from .aggregate import sink_counts, schema_analyzer  # noqa: F401
+from .aggregate import schema_analyzer  # noqa: F401
 from .obfuscate import obfuscate_strings  # noqa: F401
 from .reconstruct import reconstruct_turns  # noqa: F401

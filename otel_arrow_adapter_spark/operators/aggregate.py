@@ -1,7 +1,5 @@
 """A1-A5: statistics aggregations.
 
-- ``sink_counts``: per-sink aggregate counts, the north-rule correctness
-  surface (analog of ProducerStats, /root/reference/pkg/otel/stats/stats.go:26-61).
 - ``schema_analyzer``: per-column distinct counts / min / max / null rate —
   the reference's schema analyzer (/root/reference/pkg/otel/common/arrow/analyzer.go:41-237)
   as one pass of distributed aggregates.
@@ -15,26 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def sink_counts(sinks: dict[str, DataFrame], run_id: str = "run-0") -> DataFrame:
-    """Union of per-sink aggregates: (sink, run_id, n_rows, n_convs, min_ts, max_ts)."""
-    parts = []
-    for name, df in sinks.items():
-        parts.append(
-            df.agg(
-                F.lit(name).alias("sink"),
-                F.lit(run_id).alias("run_id"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.countDistinct("conv_id").alias("n_convs"),
-                F.min("ts").alias("min_ts"),
-                F.max("ts").alias("max_ts"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def schema_analyzer(df: DataFrame, approx: bool = True) -> DataFrame:
@@ -107,16 +85,17 @@ def field_frequencies(df: DataFrame, columns: list[str], k: int = 5) -> DataFram
 
 
 def distinct_sketch_counts(
-    df: DataFrame, group_col: str, target_col: str, lg_k: int = 12
+    df: DataFrame, group_col: str, target_col: str
 ) -> tuple[DataFrame, DataFrame]:
     """Sketch-based distinct counting (the A2 analyzer at 100 TB): per-group
     HLL sketches are built map-side (datasketches HllSketch — mergeable,
     unlike approx_count_distinct's opaque partial) and the GLOBAL estimate
     comes from hll_union_agg over the per-group sketches — merging O(groups)
     kilobyte sketches instead of re-scanning the data or shuffling every
-    distinct value. Returns (per-group estimates, global estimate)."""
+    distinct value. Sketches use lg_k = 12 (4096 buckets, ~1.6% relative
+    error). Returns (per-group estimates, global estimate)."""
     per = df.groupBy(group_col).agg(
-        F.hll_sketch_agg(target_col, F.lit(lg_k)).alias("_sk")
+        F.hll_sketch_agg(target_col, F.lit(12)).alias("_sk")
     )
     per_counts = per.select(
         group_col, F.hll_sketch_estimate("_sk").alias("n_distinct_est")

@@ -41,8 +41,9 @@ from pyspark.sql import functions as F
 GROUP_COLS = ("key", "type", "str", "int", "double", "bool", "bytes", "ser")
 
 
-def _present(group_cols, df: DataFrame):
-    return tuple(c for c in group_cols if c in df.columns)
+def _present(df: DataFrame):
+    """The ``GROUP_COLS`` that ``df`` has."""
+    return tuple(c for c in GROUP_COLS if c in df.columns)
 
 
 def _with_bucket(attrs: DataFrame, n_buckets: int) -> DataFrame:
@@ -63,9 +64,7 @@ def _scope_window(group_cols, order_tail: str) -> Window:
     )
 
 
-def delta_encode_parent_ids(
-    attrs: DataFrame, group_cols=GROUP_COLS, n_buckets: int = 0
-) -> DataFrame:
+def delta_encode_parent_ids(attrs: DataFrame, n_buckets: int = 0) -> DataFrame:
     """attrs(parent_id, key, value cols) -> + parent_id_delta, group_start.
 
     Encoding contract (attributes_16.go:348-366): first row of a
@@ -76,7 +75,7 @@ def delta_encode_parent_ids(
     rather than <=1.
     """
     attrs = _with_bucket(attrs, n_buckets)
-    group_cols = _present(group_cols, attrs)
+    group_cols = _present(attrs)
     w = _scope_window(group_cols, "parent_id")
     same = F.lit(True)
     for c in group_cols:
@@ -91,7 +90,7 @@ def delta_encode_parent_ids(
     return out
 
 
-def delta_decode_parent_ids(encoded: DataFrame, group_cols=GROUP_COLS) -> DataFrame:
+def delta_decode_parent_ids(encoded: DataFrame) -> DataFrame:
     """Inverse of delta_encode_parent_ids: running reconstruction.
 
     Decode mirror of pkg/otel/common/otlp/attributes.go:385-443
@@ -102,8 +101,7 @@ def delta_decode_parent_ids(encoded: DataFrame, group_cols=GROUP_COLS) -> DataFr
     Requires the encode-time ``enc_bucket`` + ``enc_order`` columns (state
     is scoped exactly as it was at encode time).
     """
-    group_cols = _present(group_cols, encoded)
-    w = _scope_window(group_cols, "enc_order")
+    w = _scope_window(_present(encoded), "enc_order")
     seg = F.sum(F.col("group_start").cast("long")).over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
@@ -115,7 +113,7 @@ def delta_decode_parent_ids(encoded: DataFrame, group_cols=GROUP_COLS) -> DataFr
     ).drop("_seg")
 
 
-def with_encode_order(attrs: DataFrame, group_cols=GROUP_COLS, n_buckets: int = 0) -> DataFrame:
+def with_encode_order(attrs: DataFrame, n_buckets: int = 0) -> DataFrame:
     """Materialize the encode-time row order (per scope) so decode is exact.
 
     The reference relies on physical record order inside one Arrow batch;
@@ -123,7 +121,7 @@ def with_encode_order(attrs: DataFrame, group_cols=GROUP_COLS, n_buckets: int = 
     explicit column — one row_number per (key, enc_bucket) scope.
     """
     attrs = _with_bucket(attrs, n_buckets)
-    w = _scope_window(_present(group_cols, attrs), "parent_id")
+    w = _scope_window(_present(attrs), "parent_id")
     return attrs.withColumn("enc_order", F.row_number().over(w))
 
 

@@ -30,17 +30,10 @@ def enrich_with_catalog(df: DataFrame, catalog: DataFrame) -> DataFrame:
     )
 
 
-def enrich_asof(
-    df: DataFrame,
-    versions: DataFrame,
-    key: str = "tool",
-    ts_col: str = "ts",
-    valid_col: str = "valid_from_us",
-    value_cols: tuple[str, ...] = ("service_name",),
-) -> DataFrame:
-    """Temporal (as-of / SCD2) enrichment: each row gets the dimension
-    version in effect AT ITS TIMESTAMP — the newest version with
-    valid_from <= ts.
+def enrich_asof(df: DataFrame, versions: DataFrame) -> DataFrame:
+    """Temporal (as-of / SCD2) enrichment: each row gets the
+    ``service_name`` of its ``tool``'s version in effect AT ITS
+    TIMESTAMP — the newest version with valid_from_us <= ts.
 
     The reference has no as-of join (SURVEY §2.3); this is the Spark-first
     design for the dimension-sized case: the version table collapses to
@@ -49,18 +42,16 @@ def enrich_asof(
     (filter + element_at(-1)) — ZERO shuffle on the fact side at any
     scale, where the naive range join would shuffle 10^12 rows or explode
     the fact table by the version count."""
-    per_key = versions.groupBy(key).agg(
+    per_key = versions.groupBy("tool").agg(
         F.sort_array(
-            F.collect_list(F.struct(F.col(valid_col).alias("_vf"), *value_cols))
+            F.collect_list(F.struct(F.col("valid_from_us").alias("_vf"), "service_name"))
         ).alias("_versions")
     )
-    out = df.join(F.broadcast(per_key), on=key, how="left")
-    ts_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    out = df.join(F.broadcast(per_key), on="tool", how="left")
+    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     # try_element_at: rows predating every version filter to an empty
     # array, where plain element_at(-1) RAISES under ANSI mode
     current = F.try_element_at(
         F.filter(F.col("_versions"), lambda v: v["_vf"] <= ts_us), F.lit(-1)
     )
-    for c in value_cols:
-        out = out.withColumn(c, current[c])
-    return out.drop("_versions")
+    return out.withColumn("service_name", current["service_name"]).drop("_versions")

@@ -116,15 +116,14 @@ _BUILDERS = {
 }
 
 
-def melt_attributes(parsed: DataFrame, parent_cols: tuple[str, ...] = ("conv_id", "turn_idx"), attrs=None) -> DataFrame:
-    """parsed turns -> long attrs table (parent, key, type, str, int, double, bool).
+def melt_attributes(parsed: DataFrame) -> DataFrame:
+    """parsed turns -> long attrs table (conv_id, turn_idx, key, type, str,
+    int, double, bool, bytes, ser) of the ``default_attrs`` set.
 
     One explode, null values filtered by checking the type-appropriate value
     column — keeps the whole melt inside whole-stage codegen.
     """
-    if attrs is None:
-        attrs = default_attrs()
-    entries = F.array(*[_BUILDERS[t](k, v) for k, t, v in attrs])
+    entries = F.array(*[_BUILDERS[t](k, v) for k, t, v in default_attrs()])
     non_null = F.filter(
         entries,
         lambda a: a["str"].isNotNull()
@@ -134,6 +133,7 @@ def melt_attributes(parsed: DataFrame, parent_cols: tuple[str, ...] = ("conv_id"
         | a["bytes"].isNotNull()
         | a["ser"].isNotNull(),
     )
+    parent_cols = ("conv_id", "turn_idx")
     return parsed.select(
         *parent_cols, F.explode(non_null).alias("a")
     ).select(

@@ -58,6 +58,9 @@ DP_RECORDS = {
     "exp_hist_dps": "exp_hist_dp",
     "summary_dps": "summary_dp",
 }
+
+# the group key of every rollup over raw number points
+METRIC_KEYS = ("metric_name", "metric_unit")
 # exemplar trace linkage: hex string nested, binary in the record
 _EXEMPLAR_IDS = {"span_hex": "span_id", "trace_hex": "trace_id"}
 
@@ -71,12 +74,13 @@ def _grandchild_id(parent: Column, pos: Column) -> Column:
     return F.xxhash64(parent, pos)
 
 
-def encode_metrics(nested: DataFrame, id_key: tuple[str, ...] = ("gen_id",)) -> dict[str, DataFrame]:
-    """Nested metrics -> star schema of flat related records."""
+def encode_metrics(nested: DataFrame) -> dict[str, DataFrame]:
+    """Nested metrics -> star schema of flat related records; row ids come
+    from the row-unique ``gen_id``."""
     binary = {h: F.unhex(h).alias(b) for h, b in _EXEMPLAR_IDS.items()}
-    m = assign_row_ids(nested, id_key)
-    main = [c for c in nested.columns if c not in (*DP_RECORDS, *id_key)]
-    records = {"metrics": m.select("id", *main, *id_key)}
+    m = assign_row_ids(nested, ("gen_id",))
+    main = [c for c in nested.columns if c not in (*DP_RECORDS, "gen_id")]
+    records = {"metrics": m.select("id", *main, "gen_id")}
     for family, name in DP_RECORDS.items():
         dps = explode_children(m, family)
         records[name] = dps.drop("exemplars", "attrs")
@@ -117,24 +121,20 @@ def write_metrics_records(records: dict[str, DataFrame], out_dir: str, mode: str
 # Rollups over raw number points (the DP computations at pipeline scale)
 # ---------------------------------------------------------------------------
 
-def histogram_rollup(
-    points: DataFrame,
-    bounds: list[float],
-    value_col: str = "metric_value",
-    keys: tuple[str, ...] = ("metric_name", "metric_unit"),
-) -> DataFrame:
-    """Aggregate raw points into HistogramDP rows: count, sum, min, max,
+def histogram_rollup(points: DataFrame, bounds: list[float]) -> DataFrame:
+    """Aggregate ``metric_value`` per ``METRIC_KEYS`` into HistogramDP
+    rows: count, sum, min, max,
     bucket_counts (array<long>, len(bounds)+1) with OTLP bucket semantics
     (bucket i counts bounds[i-1] < v <= bounds[i]; last = overflow).
     Shape: one map-side-combined groupBy — no window, no second shuffle."""
-    v = F.col(value_col)
+    v = F.col("metric_value")
     in_bucket = []
     for i, b in enumerate(bounds):
         lo = F.lit(bounds[i - 1]) if i > 0 else None
         cond = (v <= F.lit(b)) if lo is None else ((v > lo) & (v <= F.lit(b)))
         in_bucket.append(F.sum(F.when(cond, 1).otherwise(0)).cast("long"))
     in_bucket.append(F.sum(F.when(v > F.lit(bounds[-1]), 1).otherwise(0)).cast("long"))
-    return points.groupBy(*keys).agg(
+    return points.groupBy(*METRIC_KEYS).agg(
         F.count(v).cast("long").alias("count"),
         F.sum(v).cast("double").alias("sum"),
         F.min(v).cast("double").alias("min"),
@@ -171,7 +171,7 @@ def exp_histogram_rollup(
     points: DataFrame,
     max_buckets: int = 18,
     value_col: str = "metric_value",
-    keys: tuple[str, ...] = ("metric_name", "metric_unit"),
+    keys: tuple[str, ...] = METRIC_KEYS,
     scale: int = 0,
     trim: bool = True,
 ) -> DataFrame:
@@ -259,7 +259,6 @@ def exp_histogram_rollup_pair(
     true_spec: tuple[int, int],
     false_spec: tuple[int, int],
     value_col: str = "metric_value",
-    keys: tuple[str, ...] = ("metric_name", "metric_unit"),
 ) -> DataFrame:
     """One-pass fusion of two ``exp_histogram_rollup`` calls over a boolean
     partition of ``points``: rows where ``gate`` holds roll up with
@@ -302,7 +301,7 @@ def exp_histogram_rollup_pair(
             points.withColumn("_gate", gate),
             max_buckets=mb_t,
             value_col=value_col,
-            keys=(*keys, "_gate"),
+            keys=(*METRIC_KEYS, "_gate"),
             scale=sc_t,
             trim=False,
         ))
@@ -315,7 +314,7 @@ def exp_histogram_rollup_pair(
             pos_off, pos_arr = trim_exp_buckets(pos)
             neg_off, neg_arr = trim_exp_buckets(neg)
             return dense.where(F.col("_gate") == is_true).select(
-                *keys,
+                *METRIC_KEYS,
                 "count",
                 "sum",
                 F.lit(sc_t if is_true else sc_f).cast("int").alias("scale"),
@@ -366,10 +365,7 @@ def downscale_exp_buckets(counts: Column, factor: Column) -> Column:
     )
 
 
-def merge_exp_histograms(
-    rollups: DataFrame,
-    keys: tuple[str, ...] = ("metric_name", "metric_unit"),
-) -> DataFrame:
+def merge_exp_histograms(rollups: DataFrame) -> DataFrame:
     """Merge ExpHistogramDP rows with HETEROGENEOUS scales — the aggregate
     a collector fan-in needs when sources report at different resolutions
     (the reference transports per-point int32 scale, ehistogram_dp.go:57;
@@ -388,11 +384,11 @@ def merge_exp_histograms(
     column expressions. Offset alignment means rows need NOT cover the
     same value range. Scalar fields merge as sum/min/max; the min-scale
     dimension join is broadcast (one row per key group)."""
-    gmin = rollups.groupBy(*keys).agg(F.min("scale").alias("_target_scale"))
-    j = rollups.join(F.broadcast(gmin), list(keys)).withColumn(
+    gmin = rollups.groupBy(*METRIC_KEYS).agg(F.min("scale").alias("_target_scale"))
+    j = rollups.join(F.broadcast(gmin), list(METRIC_KEYS)).withColumn(
         "_shift", F.col("scale") - F.col("_target_scale")
     )
-    scalars = j.groupBy(*keys).agg(
+    scalars = j.groupBy(*METRIC_KEYS).agg(
         F.sum("count").cast("long").alias("count"),
         F.sum("sum").cast("long").alias("sum"),
         F.min("scale").cast("int").alias("scale"),
@@ -407,21 +403,21 @@ def merge_exp_histograms(
         # integer '/' which truncates toward zero)
         per_idx = (
             j.select(
-                *keys,
+                *METRIC_KEYS,
                 "_shift",
                 F.coalesce(F.col(f"{side}_offset"), F.lit(0)).alias("_off"),
                 F.posexplode_outer(f"{side}_bucket_counts").alias("_i", "_c"),
             )
             .where(F.col("_c").isNotNull() & (F.col("_c") != 0))
             .select(
-                *keys,
+                *METRIC_KEYS,
                 F.expr("shiftright(_off + _i, _shift)").alias("_idx"),
                 F.col("_c"),
             )
-            .groupBy(*keys, "_idx")
+            .groupBy(*METRIC_KEYS, "_idx")
             .agg(F.sum("_c").alias("_c"))
         )
-        g = per_idx.groupBy(*keys).agg(
+        g = per_idx.groupBy(*METRIC_KEYS).agg(
             F.min("_idx").alias("_lo"),
             F.max("_idx").alias("_hi"),
             F.map_from_entries(
@@ -431,7 +427,7 @@ def merge_exp_histograms(
         # zero-fill interior gaps: look up each absolute index in the
         # (idx -> count) map, 0 where absent
         return g.select(
-            *keys,
+            *METRIC_KEYS,
             F.col("_lo").cast("int").alias(f"{side}_offset"),
             F.expr(
                 "transform(sequence(_lo, _hi), "
@@ -440,12 +436,12 @@ def merge_exp_histograms(
         )
 
     out = (
-        scalars.join(_ewise("positive"), list(keys), "left")
-        .join(_ewise("negative"), list(keys), "left")
+        scalars.join(_ewise("positive"), list(METRIC_KEYS), "left")
+        .join(_ewise("negative"), list(METRIC_KEYS), "left")
     )
     empty = F.array().cast("array<long>")
     return out.select(
-        *keys,
+        *METRIC_KEYS,
         "count",
         "sum",
         "scale",
@@ -462,7 +458,7 @@ def merge_exp_histograms(
 def exp_hist_quantiles(
     eh: DataFrame,
     qs: tuple[float, ...] = (0.5, 0.95, 0.99),
-    keys: tuple[str, ...] = ("metric_name", "metric_unit"),
+    keys: tuple[str, ...] = METRIC_KEYS,
     scale: int = 0,
     max_buckets: int = 18,
 ) -> DataFrame:
@@ -548,18 +544,14 @@ def exp_hist_quantiles(
     )
 
 
-def summary_rollup(
-    points: DataFrame,
-    quantiles: list[float] = (0.5, 0.9, 0.99),
-    value_col: str = "metric_value",
-    keys: tuple[str, ...] = ("metric_name", "metric_unit"),
-) -> DataFrame:
-    """SummaryDP rows: count, sum + exact quantile values (summary_dp.go:36
-    shape). Exact percentile so the DuckDB oracle matches bit-for-bit;
-    percentile_approx is the drop-in at 10^12 rows."""
-    v = F.col(value_col)
+def summary_rollup(points: DataFrame, quantiles: list[float] = (0.5, 0.9, 0.99)) -> DataFrame:
+    """SummaryDP rows of ``metric_value`` per ``METRIC_KEYS``: count, sum +
+    exact quantile values (summary_dp.go:36 shape). Exact percentile so
+    the DuckDB oracle matches bit-for-bit; percentile_approx is the
+    drop-in at 10^12 rows."""
+    v = F.col("metric_value")
     pct = F.percentile(v, F.array(*[F.lit(q) for q in quantiles]))
-    return points.groupBy(*keys).agg(
+    return points.groupBy(*METRIC_KEYS).agg(
         F.count(v).cast("long").alias("count"),
         F.sum(v).cast("double").alias("sum"),
         *[
@@ -569,24 +561,25 @@ def summary_rollup(
     )
 
 
-def top_exemplars(
-    points: DataFrame,
-    value_col: str = "metric_value",
-    keys: tuple[str, ...] = ("metric_name", "metric_unit"),
-    link_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-    k: int = 1,
-) -> DataFrame:
-    """Exemplar selection: the k max-value points per metric with their
-    source linkage (exemplar.go:36-44 carries span/trace ids; the transcript
-    analog links back to (conv_id, turn_idx)). Window partitioned by the
-    metric keys — parallel across metrics, never a global sort."""
-    w = Window.partitionBy(*keys).orderBy(
-        F.desc(value_col), *[F.asc(c) for c in link_cols]
+def top_exemplars(points: DataFrame, k: int = 1) -> DataFrame:
+    """Exemplar selection: the k max-``metric_value`` points per metric
+    with their source linkage (exemplar.go:36-44 carries span/trace ids;
+    the transcript analog links back to (conv_id, turn_idx)). Window
+    partitioned by ``METRIC_KEYS`` — parallel across metrics, never a
+    global sort."""
+    link_cols = ("conv_id", "turn_idx")
+    w = Window.partitionBy(*METRIC_KEYS).orderBy(
+        F.desc("metric_value"), *[F.asc(c) for c in link_cols]
     )
     return (
         points.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= k)
-        .select(*keys, F.col(value_col).alias("exemplar_value"), *link_cols, F.col("_rn").alias("rank"))
+        .select(
+            *METRIC_KEYS,
+            F.col("metric_value").alias("exemplar_value"),
+            *link_cols,
+            F.col("_rn").alias("rank"),
+        )
     )
 
 
@@ -596,29 +589,30 @@ def top_exemplars(
 # timestamp) share ONE attrs/timestamp row instead of repeating them)
 # ---------------------------------------------------------------------------
 
-def encode_multivariate(wide: DataFrame, value_cols: list[str] | None = None) -> dict[str, DataFrame]:
+def _value_cols(wide: DataFrame) -> list[str]:
+    """The K metric-value columns (``v_*``) of a wide multivariate frame."""
+    return [c for c in wide.columns if c.startswith("v_")]
+
+
+def encode_multivariate(wide: DataFrame) -> dict[str, DataFrame]:
     """Multivariate star schema: ONE main row per (resource, ts) carrying
     all K metric values as columns, plus ONE attrs row per resource —
     nothing repeated per value. The write path sorts by (res_id, ts_us)
     (delta-friendly timestamps, dictionary-friendly ids)."""
-    if value_cols is None:
-        value_cols = [c for c in wide.columns if c.startswith("v_")]
-    main = wide.select("res_id", "ts_us", *value_cols)
+    main = wide.select("res_id", "ts_us", *_value_cols(wide))
     attrs = wide.select("res_id", "host", "dc").distinct()
     return {"metrics_mv": main, "mv_resource_attrs": attrs}
 
 
-def explode_univariate(wide: DataFrame, value_cols: list[str] | None = None) -> DataFrame:
+def explode_univariate(wide: DataFrame) -> DataFrame:
     """The univariate layout of the same data: one row per metric value
     with the attrs AND timestamp repeated — what the OTLP univariate model
     stores and exactly what the multivariate encode saves. Used as the
     measured baseline for the compression-factor row in BENCH/BASELINE.md."""
-    if value_cols is None:
-        value_cols = [c for c in wide.columns if c.startswith("v_")]
     ms = F.array(
         *[
             F.struct(F.lit(c).alias("name"), F.col(c).alias("value"))
-            for c in value_cols
+            for c in _value_cols(wide)
         ]
     )
     return wide.select(
@@ -667,41 +661,29 @@ def write_multivariate_layouts(wide: DataFrame, out_dir: str) -> None:
 # family; aggregation_temporality is carried by the star schema above)
 # ---------------------------------------------------------------------------
 
-def cumulative_to_delta(
-    points: DataFrame,
-    series_cols: tuple[str, ...] = ("metric_name", "metric_unit", "conv_id"),
-    order_cols: tuple[str, ...] = ("turn_idx",),
-    value_col: str = "metric_value",
-    out_col: str = "delta",
-) -> DataFrame:
-    """OTLP cumulative -> delta temporality: per-series lag difference.
-    First point of a series keeps its value (delta from the implicit 0);
-    a counter RESET (value < previous) restarts the series (delta =
-    value) — the standard collector semantics. Window partitions by the
-    series key, so state is per-series and the transform parallelizes
-    across series (never a global window)."""
-    w = Window.partitionBy(*series_cols).orderBy(*order_cols)
-    prev = F.lag(value_col).over(w)
-    delta = (
-        F.when(prev.isNull(), F.col(value_col))
-        .when(F.col(value_col) < prev, F.col(value_col))
-        .otherwise(F.col(value_col) - prev)
-    )
-    return points.withColumn(out_col, delta)
+def _series():
+    """A metric series: the metric keys of one conversation, ordered by turn."""
+    return Window.partitionBy(*METRIC_KEYS, "conv_id").orderBy("turn_idx")
 
 
-def delta_to_cumulative(
-    points: DataFrame,
-    series_cols: tuple[str, ...] = ("metric_name", "metric_unit", "conv_id"),
-    order_cols: tuple[str, ...] = ("turn_idx",),
-    value_col: str = "delta",
-    out_col: str = "value",
-) -> DataFrame:
-    """Inverse for reset-free series: running sum per series (W2's
-    running-reconstruction idiom). cumulative_to_delta ∘ this == id on
-    nondecreasing inputs (pytest-gated); resets are inherently lossy."""
-    w = Window.partitionBy(*series_cols).orderBy(*order_cols)
-    return points.withColumn(
-        out_col,
-        F.sum(value_col).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-    )
+def cumulative_to_delta(points: DataFrame) -> DataFrame:
+    """OTLP cumulative -> delta temporality: per-series lag difference of
+    ``metric_value`` as ``delta``. First point of a series keeps its value
+    (delta from the implicit 0); a counter RESET (value < previous)
+    restarts the series (delta = value) — the standard collector
+    semantics. Window partitions by the series key, so state is
+    per-series and the transform parallelizes across series (never a
+    global window)."""
+    v = F.col("metric_value")
+    prev = F.lag(v).over(_series())
+    delta = F.when(prev.isNull(), v).when(v < prev, v).otherwise(v - prev)
+    return points.withColumn("delta", delta)
+
+
+def delta_to_cumulative(points: DataFrame) -> DataFrame:
+    """Inverse for reset-free series: running sum of ``delta`` per series
+    as ``value`` (W2's running-reconstruction idiom). cumulative_to_delta
+    ∘ this == id on nondecreasing inputs (pytest-gated); resets are
+    inherently lossy."""
+    running = _series().rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return points.withColumn("value", F.sum("delta").over(running))

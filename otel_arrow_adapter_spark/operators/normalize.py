@@ -76,26 +76,27 @@ def top_k(scored: DataFrame, score: str, key: str, k: int) -> DataFrame:
     return _rank(top, fields, (key, score), "rank", "int", 1)
 
 
-def assign_surrogate_ids(
-    df: DataFrame,
-    resource_cols: tuple[str, ...] = ("tool",),
-    scope_cols: tuple[str, ...] = ("role",),
-    mode: str = "dense",
-) -> DataFrame:
-    """Add res_id / scope_id surrogate key columns."""
+# the columns that identify a turn's resource and its scope
+RESOURCE_COLS = ("tool",)
+SCOPE_COLS = ("role",)
+
+
+def assign_surrogate_ids(df: DataFrame, mode: str = "dense") -> DataFrame:
+    """Add res_id / scope_id surrogate key columns over ``RESOURCE_COLS``
+    and ``SCOPE_COLS``."""
     if mode == "hash":
         return df.withColumn(
-            "res_id", F.xxhash64(*[F.coalesce(F.col(c), F.lit("")) for c in resource_cols])
+            "res_id", F.xxhash64(*[F.coalesce(F.col(c), F.lit("")) for c in RESOURCE_COLS])
         ).withColumn(
-            "scope_id", F.xxhash64(*[F.coalesce(F.col(c), F.lit("")) for c in scope_cols])
+            "scope_id", F.xxhash64(*[F.coalesce(F.col(c), F.lit("")) for c in SCOPE_COLS])
         )
 
     # One aggregation collects the distinct (resource, scope) keys; a key's
     # id in each dimension is its value's 1-based position among that
     # dimension's sorted distinct values (ranked_dim's order, null fields
     # first), worked out on the one-row side.
-    keys = list(dict.fromkeys(resource_cols + scope_cols))
-    ids = {"res_id": resource_cols, "scope_id": scope_cols}
+    keys = list(dict.fromkeys(RESOURCE_COLS + SCOPE_COLS))
+    ids = {"res_id": RESOURCE_COLS, "scope_id": SCOPE_COLS}
 
     def proj(s, cols):
         return F.struct(*[s[c].alias(c) for c in cols])

@@ -17,16 +17,15 @@ from pyspark.sql import functions as F
 
 
 def obfuscate_strings(
-    df: DataFrame,
-    cols: list[str],
-    mode: str = "hash",
-    key: str = "0123456789abcdef",
-    prefix_len: int = 16,
+    df: DataFrame, cols: list[str], mode: str = "hash", key: str = "0123456789abcdef"
 ) -> DataFrame:
+    """Replace each of ``cols`` by its token: the first 16 hex chars of its
+    sha2-256 (``hash``) or its base64 AES-ECB ciphertext under ``key``
+    (``aes``); nulls stay null."""
     out = df
     for c in cols:
         if mode == "hash":
-            tok = F.substring(F.sha2(F.col(c).cast("string"), 256), 1, prefix_len)
+            tok = F.substring(F.sha2(F.col(c).cast("string"), 256), 1, 16)
         elif mode == "aes":
             tok = F.base64(F.aes_encrypt(F.col(c).cast("binary"), F.lit(key), F.lit("ECB")))
         else:

@@ -375,22 +375,20 @@ def write_routed(
 _HEX = "0123456789abcdef"
 
 
-def weighted_split(
-    df: DataFrame,
-    weights: dict[str, int],
-    key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-) -> DataFrame:
+def weighted_split(df: DataFrame, weights: dict[str, int]) -> DataFrame:
     """R2: deterministic weighted traffic splitting (Envoy-style router,
     /root/reference/collector/processor/experimentprocessor/router.go).
 
     ``weights`` maps exporter-set name -> sixteenths of traffic (must sum
-    to 16). The bucket is the first hex digit of md5(key) — deterministic
+    to 16). The bucket is the first hex digit of md5(conv_id|turn_idx), a
+    per-turn key — deterministic
     (replayable routing, unlike the reference's RNG), uniform, and
     engine-portable (DuckDB md5 == Spark md5, so the split is
     oracle-checkable). Adds an ``exporter`` column; no shuffle."""
     if sum(weights.values()) != 16:
         raise ValueError("weights must sum to 16 (sixteenths of traffic)")
-    digit = F.substring(F.md5(F.concat_ws("|", *[F.col(c).cast("string") for c in key_cols])), 1, 1)
+    key = F.concat_ws("|", F.col("conv_id").cast("string"), F.col("turn_idx").cast("string"))
+    digit = F.substring(F.md5(key), 1, 1)
     names = list(weights)
     cum = 0
     expr = None
@@ -425,7 +423,6 @@ def compact_routed(
     out_dir: str,
     subdir: str = "routed",
     target_mb: int = 128,
-    sort_strategy: str = "shared_native",
 ) -> dict[str, tuple[int, int]]:
     """Small-files compaction — the Iceberg ``rewrite_data_files`` analog.
 
@@ -434,7 +431,8 @@ def compact_routed(
     (per-file open cost) and wrecks row-group compression. Rewrite each
     sink partition into ceil(bytes / target) files in the routed format
     (``_routed_writer``: zstd, v2 delta pages), restoring the sink's
-    sort-for-compression order inside each output file. The driver
+    ``shared_native`` sort-for-compression order (``write_routed``'s
+    default) inside each output file. The driver
     loop is over the 4 sinks; every rewrite is a distributed job. Returns
     {sink: (files_before, files_after)} so callers can ledger the win.
     Production target is Iceberg's own metadata-driven rewrite; this
@@ -469,7 +467,7 @@ def compact_routed(
         files = parquet_sizes(d)
         n = max(1, math.ceil(sum(files) / (target_mb * 1024 * 1024)))
         df = spark.read.parquet(d)
-        keys = [c for c in SORT_STRATEGIES[sort_strategy][sink] if c in df.columns]
+        keys = [c for c in SORT_STRATEGIES["shared_native"][sink] if c in df.columns]
         dest = f"{out_dir}/{subdir}_compacted/sink={sink}"
         sorted_sink = df.repartition(n).sortWithinPartitions(*keys)
         _routed_writer(sorted_sink).mode("overwrite").parquet(dest)

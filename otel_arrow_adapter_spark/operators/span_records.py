@@ -93,14 +93,15 @@ SPAN_CHILDREN = {
 }
 
 
-def encode_traces(nested: DataFrame, id_key: tuple[str, ...] = ("gen_id",)) -> dict[str, DataFrame]:
+def encode_traces(nested: DataFrame) -> dict[str, DataFrame]:
     """Nested spans -> star schema: SPANS main + SPAN_ATTRS + SPAN_EVENTS
     (+ event attrs) + SPAN_LINKS (+ link attrs), surrogate-keyed exactly
-    like the metrics family (traces/arrow/related_data.go registry;
-    event.go:46-52, link.go:47-55 schemas)."""
-    m = assign_row_ids(nested, id_key)
-    main = [c for c in nested.columns if c not in ("attrs", *SPAN_CHILDREN, *id_key)]
-    records = {"spans": m.select("id", *main, *id_key), "span_attrs": melt_attrs(m)}
+    like the metrics family from the row-unique ``gen_id``
+    (traces/arrow/related_data.go registry; event.go:46-52, link.go:47-55
+    schemas)."""
+    m = assign_row_ids(nested, ("gen_id",))
+    main = [c for c in nested.columns if c not in ("attrs", *SPAN_CHILDREN, "gen_id")]
+    records = {"spans": m.select("id", *main, "gen_id"), "span_attrs": melt_attrs(m)}
     for array_col, (name, attrs_name) in SPAN_CHILDREN.items():
         children = explode_children(m, array_col)
         records[name] = children.drop("attrs")

@@ -42,20 +42,18 @@ from .melt import ATTR_STR
 CHILD_POS_BITS = 16
 
 
-def assign_row_ids(
-    df: DataFrame, key_cols: tuple[str, ...], id_name: str = "id", n_buckets: int = 64
-) -> DataFrame:
-    """Deterministic unique row ids WITHOUT a global window.
+def assign_row_ids(df: DataFrame, key_cols: tuple[str, ...]) -> DataFrame:
+    """Deterministic unique row ids (column ``id``) WITHOUT a global window.
 
     The reference's ids are per-batch row counters (u16/u32 appended in
     walk order, metrics.go:42); a distributed table has no batch order, so
-    id = (key-hash bucket << 32) | row_number-within-bucket. key_cols must
-    be row-unique for determinism across runs."""
-    b = F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets)).cast("long")
+    id = (key-hash bucket << 32) | row_number-within-bucket, over 64
+    buckets. key_cols must be row-unique for determinism across runs."""
+    b = F.pmod(F.xxhash64(*key_cols), F.lit(64)).cast("long")
     w = Window.partitionBy("_idb").orderBy(*key_cols)
     return (
         df.withColumn("_idb", b)
-        .withColumn(id_name, F.shiftleft(F.col("_idb"), 32) + F.row_number().over(w))
+        .withColumn("id", F.shiftleft(F.col("_idb"), 32) + F.row_number().over(w))
         .drop("_idb")
     )
 
@@ -91,10 +89,11 @@ def explode_children(
     ).select(id_of(F.col("parent_id"), F.col("_pos")).alias("id"), "parent_id", "_c.*")
 
 
-def melt_attrs(parent: DataFrame, array_col: str = "attrs") -> DataFrame:
-    """Attrs melt: one (parent_id, key, type, str) row per attribute — the
-    same long shape as the main attrs record (attributes_16.go:41-51)."""
-    return parent.select(F.col("id").alias("parent_id"), F.explode(array_col).alias("a")).select(
+def melt_attrs(parent: DataFrame) -> DataFrame:
+    """Attrs melt: one (parent_id, key, type, str) row per element of the
+    ``attrs`` array — the same long shape as the main attrs record
+    (attributes_16.go:41-51)."""
+    return parent.select(F.col("id").alias("parent_id"), F.explode("attrs").alias("a")).select(
         "parent_id",
         F.col("a.key").alias("key"),
         F.lit(ATTR_STR).cast("tinyint").alias("type"),

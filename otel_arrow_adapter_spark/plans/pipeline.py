@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.parse import parse_turns
-from ..operators.parse_arrow import parse_turns_arrow
 from ..operators.normalize import assign_surrogate_ids
 from ..operators.enrich import enrich_with_catalog
 from ..operators.route import label_sinks, read_sinks, write_routed
@@ -34,7 +33,6 @@ def build_labeled(
     catalog: DataFrame | None = None,
     id_mode: str = "dense",
     salt_buckets: int = 0,
-    parse_impl: str = "sql",
 ) -> DataFrame:
     """The full logical plan, unexecuted: one wide DataFrame with a ``sink``
     label per row.
@@ -43,18 +41,16 @@ def build_labeled(
     conversations across tasks without breaking per-conv ordering (windows
     downstream re-sort within conv_id).
 
-    ``parse_impl``: "sql" = JVM expression tokenizer (operators/parse.py),
-    "arrow" = vectorized Arrow UDF (operators/parse_arrow.py). Both are
-    property-tested equal; "sql" measures ~2x faster end-to-end on this
-    sandbox (no Arrow transfer), "arrow" exists as the pandas/Arrow-UDF
-    scale path the north star names and sidesteps JVM-heap contention on
-    hosts with many real cores."""
+    Parsing is the JVM expression tokenizer (``operators/parse.py``). The
+    vectorized Arrow parser (``operators/parse_arrow.py``) is
+    property-tested equal to it and measured ~2x slower end-to-end (the
+    Arrow transfer); it serves the ``pipeline_parse_logs_arrow`` query."""
     df = transcripts
     if salt_buckets > 0:
         df = df.repartition(
             F.col("conv_id"), (F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(salt_buckets))).alias("salt")
         )
-    parsed = parse_turns_arrow(df) if parse_impl == "arrow" else parse_turns(df)
+    parsed = parse_turns(df)
     parsed = assign_surrogate_ids(parsed, mode=id_mode)
     if catalog is not None:
         parsed = enrich_with_catalog(parsed, catalog)
@@ -82,7 +78,6 @@ def run_pipeline(
     resume: bool = True,
     id_mode: str = "dense",
     salt_buckets: int = 0,
-    parse_impl: str = "sql",
     suppress_text: bool = True,
 ) -> DataFrame:
     """Execute the plan, write the routed table + counts, return counts.
@@ -101,7 +96,7 @@ def run_pipeline(
         + ([T.StructField("bucket", T.IntegerType())] if n_buckets > 0 else [])
     )
     if n_buckets <= 0:
-        labeled = build_labeled(transcripts, catalog, id_mode, salt_buckets, parse_impl)
+        labeled = build_labeled(transcripts, catalog, id_mode, salt_buckets)
         write_routed(labeled, out_dir, suppress_text=suppress_text)
     else:
         # Resumable mode: ONE pass over the input for ALL remaining buckets.
@@ -121,7 +116,7 @@ def run_pipeline(
             part = transcripts if len(todo) == n_buckets else transcripts.where(
                 bucket.isin([int(b) for b in todo])
             )
-            labeled = build_labeled(part, catalog, id_mode, salt_buckets, parse_impl)
+            labeled = build_labeled(part, catalog, id_mode, salt_buckets)
             labeled = labeled.withColumn("bucket", bucket)
             write_routed(
                 labeled, out_dir, extra_partition_cols=("bucket",), suppress_text=suppress_text

@@ -20,17 +20,16 @@ def write_bucketed(
     df: DataFrame,
     table: str,
     n_buckets: int = 8,
-    bucket_col: str = "conv_id",
-    sort_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
     path: str | None = None,
 ) -> None:
-    """Write ``df`` as a bucketed (+ per-file sorted) table. ``path`` makes
-    it external (tests pass a tmp dir); sorting within buckets gives the
-    same sort-for-compression benefit as the routed sinks."""
+    """Write ``df`` as a table bucketed on ``conv_id`` and sorted by
+    (conv_id, turn_idx) within each file. ``path`` makes it external
+    (tests pass a tmp dir); sorting within buckets gives the same
+    sort-for-compression benefit as the routed sinks."""
     w = (
         df.write.mode("overwrite")
-        .bucketBy(n_buckets, bucket_col)
-        .sortBy(*sort_cols)
+        .bucketBy(n_buckets, "conv_id")
+        .sortBy("conv_id", "turn_idx")
         .option("compression", "zstd")
     )
     if path is not None:

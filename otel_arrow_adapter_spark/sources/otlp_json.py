@@ -62,14 +62,14 @@ def _kv_map(a):
 _SCOPE_KEY = ("_res", "_scope", "_ver")
 
 
-def _keyed(df: DataFrame, res_col: str, scope_col: str | None, *cols) -> DataFrame:
-    """``df`` with its resource key as ``_res``, its scope name as
-    ``_scope`` (a null or absent scope is the empty scope) and the
-    ``scope_version`` column as ``_ver`` (null when empty or absent, so
-    the version is omitted from the JSON), plus ``cols``."""
+def _keyed(df: DataFrame, *cols) -> DataFrame:
+    """``df`` with its ``res_idx`` resource key as ``_res``, its
+    ``scope_name`` as ``_scope`` (a null or absent scope is the empty
+    scope) and the ``scope_version`` column as ``_ver`` (null when empty
+    or absent, so the version is omitted from the JSON), plus ``cols``."""
     scope = (
-        F.coalesce(F.col(scope_col), F.lit(""))
-        if scope_col and scope_col in df.columns
+        F.coalesce(F.col("scope_name"), F.lit(""))
+        if "scope_name" in df.columns
         else F.lit("")
     )
     version = (
@@ -78,7 +78,7 @@ def _keyed(df: DataFrame, res_col: str, scope_col: str | None, *cols) -> DataFra
         else F.lit(None).cast("string")
     )
     return df.select(
-        F.col(res_col).alias("_res"), scope.alias("_scope"), version.alias("_ver"), *cols
+        F.col("res_idx").alias("_res"), scope.alias("_scope"), version.alias("_ver"), *cols
     )
 
 
@@ -220,21 +220,14 @@ OTLP_JSON_LOG_SCHEMA = (
 )
 
 
-def write_otlp_json_logs(
-    df: DataFrame,
-    path: str,
-    res_col: str = "res_idx",
-    scope_col: str | None = "scope_name",
-    attrs_col: str | None = "attrs",
-    res_attrs_col: str | None = None,
-) -> None:
+def write_otlp_json_logs(df: DataFrame, path: str, res_attrs_col: str | None = None) -> None:
     """Flat log rows -> OTLP-JSON capture (one request line per resource).
 
-    Expected flat columns (nullable unless noted): ``res_col`` (grouping
-    key, required), optional ``scope_col`` and ``scope_version`` strings
+    Expected flat columns (nullable unless noted): ``res_idx`` (grouping
+    key, required), optional ``scope_name`` and ``scope_version`` strings
     (records group into one scope per name and version),
     ``time_unix_nano`` long, ``severity_number`` int,
-    ``severity_text``, ``body`` string, optional ``attrs_col``
+    ``severity_text``, ``body`` string, optional ``attrs``
     map<string,string>, optional ``trace_id``/``span_id`` hex strings,
     optional ``res_attrs_col`` map<string,string> (a resource's first)."""
     cols = set(df.columns)
@@ -245,14 +238,14 @@ def write_otlp_json_logs(
         *( [F.col("severity_text").alias("severityText")]
            if "severity_text" in cols else [] ),
         F.struct(F.col("body").alias("stringValue")).alias("body"),
-        *( [_kv_array(F.col(attrs_col)).alias("attributes")]
-           if attrs_col and attrs_col in cols else [] ),
+        *( [_kv_array(F.col("attrs")).alias("attributes")]
+           if "attrs" in cols else [] ),
         *( [F.col("trace_id").alias("traceId")] if "trace_id" in cols else [] ),
         *( [F.col("span_id").alias("spanId")] if "span_id" in cols else [] ),
     )
     has_res_attrs = bool(res_attrs_col) and res_attrs_col in cols
     ra = F.col(res_attrs_col) if has_res_attrs else F.lit(None).cast("map<string,string>")
-    keyed = _keyed(df, res_col, scope_col, rec.alias("_r"), ra.alias("_ra"))
+    keyed = _keyed(df, rec.alias("_r"), ra.alias("_ra"))
     _write_requests(keyed, path, "Logs", "logRecords", F.col("_r"), res_attrs=True)
 
 
@@ -309,18 +302,14 @@ OTLP_JSON_SPAN_SCHEMA = (
 )
 
 
-def write_otlp_json_spans(
-    df: DataFrame,
-    path: str,
-    res_col: str = "res_idx",
-    scope_col: str | None = "scope_name",
-) -> None:
+def write_otlp_json_spans(df: DataFrame, path: str) -> None:
     """Flat span rows -> OTLP-JSON trace capture (one
     ExportTraceServiceRequest line per resource) — the protojson sibling
     of otlp_pb.encode_export_trace_request, zero Python in the data path.
 
-    Expected flat columns (same surface read_pb_spans emits): ``res_col``
-    required; ``trace_id``/``span_id``/``parent_span_id`` hex strings,
+    Expected flat columns (same surface read_pb_spans emits): ``res_idx``
+    required, optional ``scope_name``/``scope_version``;
+    ``trace_id``/``span_id``/``parent_span_id`` hex strings,
     ``name``, ``kind`` int, ``start/end_time_unix_nano`` long,
     ``status_code`` int, optional ``attrs`` map<string,string>, optional
     ``events`` array<struct<time_unix_nano,name>>, optional ``links``
@@ -371,7 +360,7 @@ def write_otlp_json_spans(
                 ),
             ).alias("links")
         )
-    keyed = _keyed(df, res_col, scope_col, F.struct(*span_fields).alias("_s"))
+    keyed = _keyed(df, F.struct(*span_fields).alias("_s"))
     _write_requests(keyed, path, "Spans", "spans", F.col("_s"))
 
 
@@ -502,12 +491,7 @@ def _csv_strings(col):
     return F.split(F.nullif(col, F.lit("")), ",")
 
 
-def write_otlp_json_metrics(
-    df: DataFrame,
-    path: str,
-    res_col: str = "res_idx",
-    scope_col: str | None = "scope_name",
-) -> None:
+def write_otlp_json_metrics(df: DataFrame, path: str) -> None:
     """Flat metric-DP rows -> OTLP-JSON metrics capture (one
     ExportMetricsServiceRequest line per resource), all five families —
     the protojson sibling of otlp_pb.encode_export_metrics_request, zero
@@ -562,7 +546,7 @@ def write_otlp_json_metrics(
     )
     per_metric = (
         _keyed(
-            df, res_col, scope_col,
+            df,
             F.col("metric_name").alias("_name"),
             F.coalesce(F.col("metric_unit"), F.lit("")).alias("_unit"),
             F.col("metric_type").alias("_type"),

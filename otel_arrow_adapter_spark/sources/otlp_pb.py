@@ -60,8 +60,14 @@ def _read_varint(buf: bytes, i: int) -> tuple[int, int]:
 
 
 def _write_varint(val: int) -> bytes:
+    """Unsigned base-128 varint. Every varint field written here is
+    non-negative on the wire (tags, lengths, OTLP enums, bucket counts,
+    zigzag values), so a negative value — which the shift loop would walk
+    toward -1 forever — is rejected."""
     if 0 <= val < 0x80:  # one byte: every tag and most lengths
         return bytes((val,))
+    if val < 0:
+        raise ValueError(f"varint value {val} is negative; these OTLP fields are unsigned")
     out = bytearray()
     while True:
         b = val & 0x7F

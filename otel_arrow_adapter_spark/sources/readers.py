@@ -44,8 +44,8 @@ def write_capture(df: DataFrame, path: str, fmt: str = "json", compression: str 
         raise ValueError(f"unsupported capture format: {fmt}")
 
 
-def read_capture(spark: SparkSession, path: str, fmt: str = "json", schema: str | None = None) -> DataFrame:
-    """S6/S8 replay source: re-read captured telemetry (JSON lines / CSV,
+def read_capture(spark: SparkSession, path: str, schema: str | None = None) -> DataFrame:
+    """S6/S8 replay source: re-read captured telemetry (JSON lines,
     zstd transparent) with an explicit schema — schema inference on
     compressed captures is a full extra pass at scale
     (/root/reference/collector/receiver/filereceiver/file_reader.go:81-163;
@@ -55,8 +55,4 @@ def read_capture(spark: SparkSession, path: str, fmt: str = "json", schema: str 
     r = spark.read
     if schema:
         r = r.schema(schema)
-    if fmt == "json":
-        return r.json(path)
-    if fmt == "csv":
-        return r.option("header", True).csv(path)
-    raise ValueError(f"unsupported capture format: {fmt}")
+    return r.json(path)

@@ -41,15 +41,10 @@ def read_transcript_stream(spark: SparkSession, input_path: str, max_files: int 
     )
 
 
-def read_paced_replay(
-    spark: SparkSession,
-    input_path: str,
-    speed: float = 1.0,
-    ts_col: str = "ts",
-) -> DataFrame:
+def read_paced_replay(spark: SparkSession, input_path: str, speed: float = 1.0) -> DataFrame:
     """Timestamp-paced capture replay — the file receiver's replay timer
     (/root/reference/collector/receiver/filereceiver/replay_timer.go):
-    rows re-emit at their ORIGINAL inter-arrival spacing (divided by
+    rows re-emit at their ORIGINAL ``ts`` inter-arrival spacing (divided by
     ``speed``), not as fast as files can be listed.
 
     Spark-first shape: no sleeps, no state. Every capture row gets a
@@ -69,12 +64,12 @@ def read_paced_replay(
     # a Python-naive datetime's .timestamp() would re-interpret it in the
     # host-local zone and shift every tick by the tz offset
     base_us = static.agg(
-        F.min(F.unix_micros(F.col(ts_col).cast("timestamp")))
+        F.min(F.unix_micros(F.col("ts").cast("timestamp")))
     ).first()[0]
     ticked = static.withColumn(
         "replay_tick",
         F.floor(
-            (F.unix_micros(F.col(ts_col).cast("timestamp")) - F.lit(base_us))
+            (F.unix_micros(F.col("ts").cast("timestamp")) - F.lit(base_us))
             / (1_000_000.0 * speed)
         ).cast("long"),
     )
@@ -145,7 +140,7 @@ STATS_SCHEMA = (
 )
 
 
-def conversation_stats_stateful(labeled: DataFrame, timeout_minutes: int | None = None) -> DataFrame:
+def conversation_stats_stateful(labeled: DataFrame) -> DataFrame:
     """Custom stateful operator (applyInPandasWithState): per-conversation
     running stats carried ACROSS micro-batches — the streaming form of the
     reference's running decode state (``lastID += delta`` held per stream,
@@ -154,11 +149,10 @@ def conversation_stats_stateful(labeled: DataFrame, timeout_minutes: int | None 
 
     State per conv_id: turn count, quarantine count, last signal_type and
     signal-segment count (W3 change detection, stateful). Emits the updated
-    row per conversation per micro-batch. Pass ``timeout_minutes`` in
-    production so state expires after processing-time inactivity (bounded
-    state — the 10^12-turn requirement: memory scales with ACTIVE
-    conversations only); the default NoTimeout keeps batch-style runs
-    (processAllAvailable) from spinning timeout-only micro-batches forever.
+    row per conversation per micro-batch. State never times out: a
+    processing-time timeout would make batch-style runs
+    (processAllAvailable) spin timeout-only micro-batches forever, so a
+    conversation's state lives as long as the query.
     """
     import pandas as pd  # noqa: PLC0415 — worker-side import
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -176,8 +170,6 @@ def conversation_stats_stateful(labeled: DataFrame, timeout_minutes: int | None 
                     n_seg += 1
                     last_sig = sig
         state.update((n_turns, n_quar, last_sig, n_seg))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
         yield pd.DataFrame(
             {
                 "conv_id": [key[0]],
@@ -196,11 +188,7 @@ def conversation_stats_stateful(labeled: DataFrame, timeout_minutes: int | None 
             outputStructType=STATS_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="update",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_minutes is not None
-                else GroupStateTimeout.NoTimeout
-            ),
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
 
@@ -319,8 +307,7 @@ DEDUP_STATE_SCHEMA = "seen array<string>, last_seen array<double>"
 DEDUP_OUT_SCHEMA = "bucket int, doc_id long, fp string"
 
 
-def dedup_stream(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                 n_buckets: int = 16, ttl_minutes: float | None = None) -> DataFrame:
+def dedup_stream(docs: DataFrame, n_buckets: int = 16, ttl_minutes: float | None = None) -> DataFrame:
     """Cross-micro-batch EXACT dedup at ingestion — the streaming form of
     the batch keep-first rule (exact_duplicates / clean_corpus): only the
     FIRST occurrence of each text fingerprint ever passes; later copies are
@@ -332,7 +319,7 @@ def dedup_stream(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     ``dictionary_delta_stream``) = the fingerprints already admitted, so no
     task ever owns the whole seen-set and state is O(distinct docs) split
     ``n_buckets`` ways across executors. Within one micro-batch, ties break
-    to the smallest ``id_col`` (deterministic, matching the batch
+    to the smallest ``doc_id`` (deterministic, matching the batch
     groupBy(fp).min(struct) keep-first); across batches, arrival order
     wins — exactly the reference's first-seen dictionary semantics applied
     to whole payloads.
@@ -374,8 +361,8 @@ def dedup_stream(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
         out_ids: list[int] = []
         out_fps: list[str] = []
         for pdf in pdfs:
-            pdf = pdf.sort_values(id_col)
-            for i, fp in zip(pdf[id_col], pdf["fp"]):
+            pdf = pdf.sort_values("doc_id")
+            for i, fp in zip(pdf["doc_id"], pdf["fp"]):
                 if fp not in seen:
                     seen[fp] = now
                     out_ids.append(int(i))
@@ -390,8 +377,8 @@ def dedup_stream(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
         )
 
     bucketed = docs.select(
-        F.col(id_col).cast("long").alias(id_col),
-        fingerprint(F.col(text_col)).alias("fp"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        fingerprint(F.col("text")).alias("fp"),
     ).withColumn("bucket", F.pmod(F.xxhash64(F.col("fp")), F.lit(n_buckets)).cast("int"))
     return bucketed.groupBy("bucket").applyInPandasWithState(
         update,
@@ -437,15 +424,15 @@ def session_windowed_activity(
     )
 
 
-def cms_stream_sink(acc: dict, key_col: str = "tool", depth: int = 4, width: int = 256):
+def cms_stream_sink(acc: dict, key_col: str = "tool"):
     """Streaming heavy-hitter monitor: a ``foreachBatch`` callable that
-    builds a count-min sketch (functions/sketches.py) over each
-    micro-batch's ``key_col`` and MERGES it into ``acc`` ((row, col) ->
-    count) by plain addition — the CMS merge law means the accumulated
-    sketch is exactly the one a single batch pass over the whole stream
-    would build (pytest-asserted). Driver state is O(depth*width)
-    regardless of stream length or key cardinality; the per-batch
-    collect moves at most depth*width rows — control-plane, the same
+    builds a count-min sketch (functions/sketches.py, its default 4 x 256
+    shape) over each micro-batch's ``key_col`` and MERGES it into ``acc``
+    ((row, col) -> count) by plain addition — the CMS merge law means the
+    accumulated sketch is exactly the one a single batch pass over the
+    whole stream would build (pytest-asserted). Driver state is
+    O(depth*width) regardless of stream length or key cardinality; the
+    per-batch collect moves at most depth*width rows — control-plane, the same
     discipline as the ledger and dict_stream_stats_sink.
 
     foreachBatch is at-least-once: a recovered/retried micro-batch is
@@ -461,9 +448,7 @@ def cms_stream_sink(acc: dict, key_col: str = "tool", depth: int = 4, width: int
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_id in done:
             return
-        rows = count_min_sketch(
-            batch_df.select(key_col), key_col=key_col, depth=depth, width=width
-        ).collect()
+        rows = count_min_sketch(batch_df.select(key_col), key_col=key_col).collect()
         for r in rows:
             key = (r["row"], r["col"])
             acc[key] = acc.get(key, 0) + r["c"]

@@ -287,6 +287,22 @@ def test_pb_trace_roundtrip_pure_python():
     assert r1["res_idx"] == 1 and r1["parent_span_id"] is None
 
 
+def test_pb_writers_reject_negative_varints():
+    """A negative enum would loop forever in the varint writer (its shift
+    walks toward -1); every varint field is unsigned, so it raises."""
+    from otel_arrow_adapter_spark.sources import (
+        encode_export_logs_request,
+        encode_export_trace_request,
+    )
+
+    with pytest.raises(ValueError, match="-1 is negative"):
+        encode_export_logs_request([{"res_idx": 0, "severity_number": -1}])
+    with pytest.raises(ValueError, match="-2 is negative"):
+        encode_export_trace_request([{"kind": -2}])
+    with pytest.raises(ValueError, match="-3 is negative"):
+        encode_export_trace_request([{"status_code": -3}])
+
+
 def test_pb_trace_writer_validates_ids():
     from otel_arrow_adapter_spark.sources import encode_export_trace_request
 
